@@ -1,0 +1,11 @@
+package org.apache.spark.perfbenchshim
+
+import org.apache.spark.SparkContext
+
+/** Blocks until every event posted so far has reached the listeners, so
+  * counts read right after an action include all of its tasks. The bus
+  * is `private[spark]`, hence this package.
+  */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
