@@ -3,6 +3,7 @@ package graft.copy
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.model.PartitionId
 import graft.operators.Partitions
@@ -25,11 +26,15 @@ import graft.operators.Partitions
   *    validation gate, and the data always exists in at least one complete
   *    location (SURVEY.md §7.5 hard part 3).
   *
-  * Scale notes: the copy never moves rows through the driver; each
-  * partition copy is a distributed job whose input is pruned by the typed
-  * partition predicate (shows as PushedFilters/partition pruning in
-  * `.explain`). At 100 TB, per-partition jobs bound memory and make
-  * checkpoint granularity = partition, exactly like the reference.
+  * Scale notes: the copy never moves rows through the driver. The
+  * migrator copies a WAVE of consecutive partitions per job
+  * ([[copyWave]]: one dynamic-partition-overwrite write filtered to the
+  * wave's keys) and reads the wave back in one more job ([[readBack]]),
+  * so the job count follows data volume, not partition count. A wave
+  * holds about one task-round of scan input (see
+  * `Migrator.planWaves`), which bounds one job's work and the work a
+  * crash can lose; the checkpoint still records partitions, as in the
+  * reference. [[copyPartition]] is the one-partition form.
   */
 object CopyService {
 
@@ -74,6 +79,76 @@ object CopyService {
       .drop(keys.filter(src.columns.contains): _*)
       .write.mode("overwrite")
       .parquet(s"$destRoot/${partitionDir(keys, part)}")
+  }
+
+  /** Copy a wave of partitions of `src` (which carries the string key
+    * columns) into `destRoot` in ONE job: a dynamic-partition-overwrite
+    * [[writePartitioned]] filtered null-safely to the wave's keys, so
+    * each partition of the wave is replaced whole and every other
+    * partition under `destRoot` is left as it is.
+    */
+  def copyWave(
+      src: DataFrame,
+      keys: Seq[String],
+      wave: Seq[PartitionId],
+      destRoot: String): Unit = {
+    // Balanced OR: a wave may hold thousands of small partitions, and a
+    // left-deep chain that long is a deep recursion for every Catalyst rule.
+    def anyOf(cs: Seq[Column]): Column =
+      if (cs.size == 1) cs.head
+      else cs.splitAt(cs.size / 2) match { case (a, b) => anyOf(a) || anyOf(b) }
+    writePartitioned(
+      src.filter(anyOf(wave.map(Partitions.partitionPredicate(keys, _)))),
+      keys, destRoot)
+  }
+
+  /** Read a hive-layout root — or only the partition directories `dirs`
+    * under it — with the data columns of `schema` and the key columns
+    * pinned to STRING. Default partition-column type inference would
+    * re-parse a value like '01' or '1e3' as a number and re-render it as
+    * '1', diverging from the source-side keys.
+    */
+  def readHive(
+      spark: SparkSession,
+      root: String,
+      schema: StructType,
+      keys: Seq[String],
+      dirs: Seq[String] = Nil): DataFrame =
+    spark.read.option("basePath", root)
+      .schema(StructType(schema.fields.filterNot(f => keys.contains(f.name)) ++
+        keys.map(StructField(_, StringType))))
+      .parquet((if (dirs.isEmpty) Seq(root) else dirs.map(d => s"$root/$d")): _*)
+
+  /** Read back a copied wave in one job: `agg` over the wave's partition
+    * directories read by [[readHive]]. A partition whose directory is
+    * missing (it wrote no rows) is absent from the result, so the
+    * caller's gate sees it as 0 rows.
+    */
+  def readBack[T](
+      spark: SparkSession,
+      root: String,
+      schema: StructType,
+      keys: Seq[String],
+      wave: Seq[PartitionId])(
+      agg: DataFrame => Map[PartitionId, T]): Map[PartitionId, T] = {
+    val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = wave.map(partitionDir(keys, _))
+      .filter(d => fs.exists(new HPath(s"$root/$d")))
+    if (dirs.isEmpty) Map.empty else agg(readHive(spark, root, schema, keys, dirs))
+  }
+
+  /** Delete what a killed dynamic-partition-overwrite job leaves under
+    * `root`: its `.spark-staging-<jobId>` directory. Readers skip
+    * dot-directories, but a published table must not carry them. Call
+    * only while holding the table lock, so no live job owns one.
+    */
+  def dropAbortedWrites(spark: SparkSession, root: String): Unit = {
+    val p = new HPath(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p))
+      fs.listStatus(p).map(_.getPath)
+        .filter(_.getName.startsWith(".spark-staging-"))
+        .foreach(fs.delete(_, true))
   }
 
   /** Count rows in an already-copied partition directory. */

@@ -25,7 +25,7 @@ final case class TableRef(db: String, table: String) {
 final case class PartitionId(values: Seq[String]) {
   /** ClickHouse-compatible rendering for reports / DROP PARTITION
     * literals (reference: services/partition.py:77-102): numeric values
-    * unquoted, strings quoted, composites as tuple literals.
+    * unquoted, strings quoted, NULL bare, composites as tuple literals.
     */
   def render: String = PartitionId.renderValues(values)
 }
@@ -38,10 +38,13 @@ object PartitionId {
 
   /** Quote one value the way ClickHouse DROP PARTITION expects
     * (reference: services/partition.py:92-102): numeric → bare,
-    * already-quoted → as-is, else single-quoted.
+    * already-quoted → as-is, else single-quoted. A null key value (rows
+    * whose partition expression IS NULL) renders as the bare `NULL`
+    * literal; the string "NULL" renders quoted, so the two stay distinct.
     */
   def renderOne(v: String): String =
-    if (isNumeric(v)) v
+    if (v == null) "NULL"
+    else if (isNumeric(v)) v
     else if (v.length >= 2 && v.startsWith("'") && v.endsWith("'")) v
     else s"'$v'"
 
@@ -65,7 +68,8 @@ object PartitionId {
   }
 
   private def unquote(v: String): String =
-    if (v.length >= 2 && v.startsWith("'") && v.endsWith("'"))
+    if (v == "NULL") null
+    else if (v.length >= 2 && v.startsWith("'") && v.endsWith("'"))
       v.substring(1, v.length - 1)
     else v
 }

@@ -89,6 +89,18 @@ object Partitions {
       .toMap
   }
 
+  /** Enumeration and counting in ONE scan of the key columns: every
+    * partition with its row count, in [[enumeratePartitions]]' order
+    * (Spark sorts the ~N aggregated rows, so resume order is unchanged).
+    */
+  def countsInOrder(df: DataFrame, keys: Seq[String]): Seq[(PartitionId, Long)] =
+    df.groupBy(keys.map(k => col(k).cast("string").as(k)): _*)
+      .count()
+      .orderBy(keys.map(col): _*)
+      .collect()
+      .map(r => PartitionId(keys.indices.map(i => r.getString(i))) -> r.getLong(keys.size))
+      .toSeq
+
   /** Work-list difference for resume: live partitions minus checkpointed
     * ones, order-preserving (reference: services/resume.py:38 — a list
     * comprehension; SURVEY.md A25). Partition lists are driver-small by

@@ -14,8 +14,9 @@ import graft.resume.Checkpoint
   * cluster.
   *
   * Lifecycle per table (mirrors SURVEY.md §3.1):
-  *   lock → skip-check → enumerate partitions → resume-diff →
-  *   per-partition [copy → throttle → validate → checkpoint] →
+  *   lock → skip-check → enumerate + count partitions → resume-diff →
+  *   per-wave [copy → read back → validate each partition →
+  *   checkpoint → throttle] →
   *   full validation gate → publish (write-audit-publish) →
   *   optional source drop → report.
   *
@@ -29,11 +30,16 @@ import graft.resume.Checkpoint
   *    migration.py:498-503 — recoverable only via the backup table);
   *  - the lock is released in a finally (the reference leaks it, A39).
   *
-  * Scale design: the driver never holds row data — partition enumeration
-  * collects only distinct key tuples, validation uses one
-  * `groupBy(keys).count()` pass per side instead of the reference's 2N+3
-  * scalar counts, and each partition copy is an independent distributed
-  * job (bounded work unit = checkpoint unit, same as the reference).
+  * Scale design: the driver never holds row data — one
+  * `groupBy(keys).count()` pass enumerates and counts every partition,
+  * and validation aggregates per partition instead of the reference's
+  * 2N+3 scalar counts. Partitions are copied and verified in WAVES
+  * ([[Migrator.planWaves]]): consecutive work-list partitions packed up
+  * to one task-round of scan input, each wave one write job plus one
+  * read-back job, so the job count follows data volume rather than
+  * partition count. The budget bounds one job at about one round of
+  * tasks over the cluster and bounds what a crash loses to one wave;
+  * a partition is checkpointed only after its whole wave passes.
   */
 final class Migrator(
     spark: SparkSession,
@@ -41,9 +47,7 @@ final class Migrator(
     lockDir: String = "locks",
     insertIntervalSec: Double = 0.0,
     lockTimeoutSec: Double = 3600.0,
-    checksumValidation: Boolean = false,
-    maxConcurrentPartitions: Int = 1) {
-  require(maxConcurrentPartitions >= 1, "maxConcurrentPartitions must be >= 1")
+    checksumValidation: Boolean = false) {
 
   /** Migrate one source table.
     *
@@ -82,6 +86,60 @@ final class Migrator(
     } finally lock.release()
   }
 
+  /** `src` with each partition key materialized as a string column. */
+  private def withKeyColumns(src: DataFrame, keys: Seq[String],
+      keyExprs: Seq[Column]): DataFrame =
+    keys.zip(keyExprs).foldLeft(src) {
+      case (df, (k, e)) => df.withColumn(k, e.cast("string"))
+    }
+
+  /** Copy `work` from `withKeys` into `root` wave by wave
+    * ([[Migrator.planWaves]]): per wave one write job and one read-back
+    * job (`readBack` over the wave's directories), then every partition
+    * of the wave is gated on its read-back state equalling `srcState`,
+    * and the wave is checkpointed only if all of them passed. Stops at
+    * the first failing wave, leaving it and every later wave unmarked.
+    */
+  private def copyInWaves[T](
+      table: TableRef,
+      src: DataFrame,
+      withKeys: DataFrame,
+      keys: Seq[String],
+      root: String,
+      work: Seq[PartitionId],
+      srcState: Map[PartitionId, T],
+      rows: T => Long,
+      absent: T)(
+      readBack: DataFrame => Map[PartitionId, T]): Migrator.WaveRun[T] = {
+    var run = Migrator.WaveRun[T](Vector.empty, 0L, 0, None)
+    val waves = Migrator.planWaves(spark, src,
+      work.map(p => p -> rows(srcState(p))), srcState.values.map(rows).sum)
+    for (wave <- waves if run.failure.isEmpty) {
+      val t0 = System.nanoTime()
+      CopyService.copyWave(withKeys, keys, wave, root)
+      val dst = CopyService.readBack(spark, root, src.schema, keys, wave)(readBack)
+      // A wave's time is shared evenly by its partitions.
+      val cost = (System.nanoTime() - t0) / 1e9 / wave.size
+      val states = wave.map(p => (p, srcState(p), dst.getOrElse(p, absent)))
+      val checks = states.map { case (p, s, d) =>
+        PartitionCheck(p.render, rows(s), rows(d), s == d, cost)
+      }
+      run = run.copy(checks = run.checks ++ checks,
+        failure = states.find { case (_, s, d) => s != d })
+      if (run.failure.isEmpty) {
+        checkpoint.markPartitions(table.db, table.table, wave)
+        run = run.copy(rows = run.rows + checks.map(_.srcCount).sum,
+          marked = run.marked + wave.size)
+        // The reference throttles once per partition insert
+        // (migration.py:505-507); scaling the sleep by the wave size
+        // keeps the configured per-partition insert rate.
+        if (insertIntervalSec > 0)
+          Thread.sleep((insertIntervalSec * 1000 * wave.size).toLong)
+      }
+    }
+    run
+  }
+
   private def doMigrate(
       table: TableRef,
       src: DataFrame,
@@ -99,11 +157,12 @@ final class Migrator(
     val staging = destRoot + ".staging"
     // Materialize derived partition keys once; Catalyst prunes to the
     // needed source columns for enumeration/counting.
-    val withKeys = keys.zip(keyExprs).foldLeft(src) {
-      case (df, (k, e)) => df.withColumn(k, e.cast("string"))
-    }
+    val withKeys = withKeyColumns(src, keys, keyExprs)
 
-    val allParts = Partitions.enumeratePartitions(withKeys, keys)
+    // ONE pass enumerates and counts (replaces 2N scalar queries).
+    val partCounts = Partitions.countsInOrder(withKeys, keys)
+    val allParts = partCounts.map(_._1)
+    val srcCounts = partCounts.toMap
     checkpoint.initTable(table.db, table.table)
 
     // No-partition fast path (reference: migration.py:432-441).
@@ -114,83 +173,20 @@ final class Migrator(
       return TableResult(table, TableStatus.Completed, 0, 0, 0L, Nil)
     }
 
+    // Everything already checkpointed → no waves; fall through to the
+    // final gate + publish.
     val work = checkpoint.uncompleted(table.db, table.table, allParts)
-    if (work.isEmpty && allParts.nonEmpty) {
-      // Everything already checkpointed: fall through to final gate+publish.
+    val run = copyInWaves(table, src, withKeys, keys, staging, work,
+      srcCounts, identity[Long], 0L)(Partitions.countsByPartition(_, keys))
+    val (checks, migratedRows) = (run.checks, run.rows)
+    run.failure.foreach { case (part, srcCount, dstCount) =>
+      // Validation gate (A35): abort, do NOT checkpoint, source intact.
+      checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
+      return TableResult(table, TableStatus.Failed, allParts.size,
+        run.marked, migratedRows, checks,
+        Some(s"count mismatch for partition ${part.render}: " +
+          s"src=$srcCount dst=$dstCount"))
     }
-
-    // ONE-pass source counts for all partitions (replaces 2N scalar queries).
-    val srcCounts = Partitions.countsByPartition(withKeys.select(keys.map(col): _*), keys)
-
-    var migratedRows = 0L
-    var checks = Vector.empty[PartitionCheck]
-    val partCols = keys.map(col)
-
-    def copyAndCheck(part: graft.model.PartitionId): PartitionCheck = {
-      val t0 = System.nanoTime()
-      CopyService.copyPartition(withKeys, keys, part, partCols, staging)
-      val srcCount = srcCounts.getOrElse(part, 0L)
-      val dstCount = CopyService.countPartitionDir(spark, staging, keys, part)
-      val cost = (System.nanoTime() - t0) / 1e9
-      PartitionCheck(part.render, srcCount, dstCount, srcCount == dstCount, cost)
-    }
-
-    // Per-partition loop, K partitions in flight (reference is strictly
-    // sequential — migration.py:466-508; K>1 is the scale upgrade: each
-    // partition copy is an independent Spark job, so K concurrent jobs
-    // keep a large cluster busy while the driver-serialized loop would
-    // idle it). Work proceeds in groups of K; a failed check aborts
-    // before the next group is scheduled. Passed partitions are
-    // checkpointed in work-list order; a failed partition is never
-    // checkpointed (gate semantics A35 preserved).
-    val pool =
-      if (maxConcurrentPartitions > 1)
-        Some(java.util.concurrent.Executors.newFixedThreadPool(maxConcurrentPartitions))
-      else None
-    try {
-      val groups = work.grouped(maxConcurrentPartitions)
-      for (group <- groups) {
-        val groupChecks: Seq[PartitionCheck] = pool match {
-          case Some(p) if group.size > 1 =>
-            import scala.concurrent.{Await, ExecutionContext, Future}
-            import scala.concurrent.duration.Duration
-            implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(p)
-            // Each future is wrapped in Try so the Await completes only
-            // after EVERY sibling copy has finished (success or failure).
-            // Failing fast here would release the table lock while orphan
-            // copies were still writing into staging — a retrying process
-            // could then acquire the lock and race those writes in the
-            // same partition dirs. The first failure rethrows AFTER the
-            // whole wave has quiesced.
-            Await.result(
-              Future.sequence(group.map(part =>
-                Future(scala.util.Try(copyAndCheck(part))))),
-              Duration.Inf).map(_.get)
-          case _ => group.map(copyAndCheck)
-        }
-        checks ++= groupChecks
-        group.zip(groupChecks).foreach { case (part, chk) =>
-          if (chk.passed) {
-            migratedRows += chk.srcCount
-            checkpoint.markPartition(table.db, table.table, part)
-          }
-        }
-        groupChecks.find(!_.passed).foreach { bad =>
-          // Validation gate (A35): abort, do NOT checkpoint, source intact.
-          checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
-          return TableResult(table, TableStatus.Failed, allParts.size,
-            checks.count(_.passed), migratedRows, checks,
-            Some(s"count mismatch for partition ${bad.partition}: " +
-              s"src=${bad.srcCount} dst=${bad.dstCount}"))
-        }
-        // The reference throttles once per partition insert
-        // (migration.py:505-507). With K partitions per scheduling wave
-        // the sleep scales by the wave size, preserving the configured
-        // per-partition insert rate regardless of concurrency.
-        if (insertIntervalSec > 0)
-          Thread.sleep((insertIntervalSec * 1000 * group.size).toLong)
-      }
-    } finally pool.foreach(_.shutdown())
 
     // Full-table validation gate (migration.py:510-518) — one scan per side.
     val totalSrc = srcCounts.values.sum
@@ -211,16 +207,8 @@ final class Migrator(
       val dataCols = src.columns.toSeq.filterNot(keys.contains)
       val srcSums = graft.operators.Validate.checksumByPartition(
         withKeys, keys, dataCols)
-      // Explicit schema pins the partition key columns to STRING: default
-      // partition-column type inference would re-parse a value like '01'
-      // or '1e3' as numeric and re-render it as '1', diverging from the
-      // source-side keys and tripping a spurious checksum mismatch.
-      val dataFields = src.schema.fields.filterNot(f => keys.contains(f.name))
-      val stagingSchema = org.apache.spark.sql.types.StructType(
-        dataFields ++ keys.map(k =>
-          org.apache.spark.sql.types.StructField(k, org.apache.spark.sql.types.StringType)))
       val dstSums = graft.operators.Validate.checksumByPartition(
-        spark.read.option("basePath", staging).schema(stagingSchema).parquet(staging)
+        CopyService.readHive(spark, staging, src.schema, keys)
           .select((keys ++ dataCols).map(col): _*),
         keys, dataCols)
       if (!graft.operators.Validate.checksumsMatch(srcSums, dstSums)) {
@@ -233,7 +221,9 @@ final class Migrator(
       }
     }
 
-    // Audit passed → publish (the safe swap).
+    // Audit passed → publish (the safe swap), without the leftovers of
+    // any write job killed mid-wave in an earlier run.
+    CopyService.dropAbortedWrites(spark, staging)
     CopyService.publish(spark, staging, destRoot)
 
     if (dropSource) srcPathToDrop.foreach { p =>
@@ -276,11 +266,8 @@ final class Migrator(
       return TableResult(table, TableStatus.Locked, 0, 0, 0L, Nil,
         Some(s"timeout acquiring lock for ${table.qualified}"))
     try {
-      val withKeys = keys.zip(keyExprs).foldLeft(src) {
-        case (df, (k, e)) => df.withColumn(k, e.cast("string"))
-      }
+      val withKeys = withKeyColumns(src, keys, keyExprs)
       val dataCols = src.columns.toSeq.filterNot(keys.contains)
-      val dataFields = src.schema.fields.filterNot(f => keys.contains(f.name))
       val srcState = graft.operators.Validate.checksumByPartition(
         withKeys, keys, dataCols)
       val destPath = new org.apache.hadoop.fs.Path(destRoot)
@@ -328,66 +315,36 @@ final class Migrator(
               }.mkString("; ")))
         }
       }
+      // Data columns are read with the SOURCE fields — this is also what
+      // backfills a benignly-added column as NULL on the dest side.
+      def destSums(df: DataFrame) = graft.operators.Validate.checksumByPartition(
+        df.select((keys ++ dataCols).map(col): _*), keys, dataCols)
       val dstState: Map[PartitionId, (Long, Long)] =
         if (!destFs.exists(destPath)) Map.empty
-        else {
-          // Pin partition columns to STRING on read: type inference
-          // would re-render '01' as '1' and diverge from source keys
-          // (same pitfall as the checksum gate in doMigrate). Data
-          // columns are pinned to the SOURCE fields — this is also what
-          // backfills a benignly-added column as NULL on the dest side.
-          val destSchema = org.apache.spark.sql.types.StructType(
-            dataFields ++ keys.map(k => org.apache.spark.sql.types
-              .StructField(k, org.apache.spark.sql.types.StringType)))
-          graft.operators.Validate.checksumByPartition(
-            spark.read.option("basePath", destRoot).schema(destSchema)
-              .parquet(destRoot).select((keys ++ dataCols).map(col): _*),
-            keys, dataCols)
-        }
+        else destSums(CopyService.readHive(spark, destRoot, src.schema, keys))
       val drifted = srcState.keys.toSeq
         .filter(p => !dstState.get(p).contains(srcState(p)))
         .sortBy(_.render)
       val orphans = (dstState.keySet -- srcState.keySet).toSeq.sortBy(_.render)
       checkpoint.initTable(table.db, table.table)
-      val partCols = keys.map(col)
-      var migratedRows = 0L
-      var checks = Vector.empty[PartitionCheck]
-      for (part <- drifted) {
-        val t0 = System.nanoTime()
-        CopyService.copyPartition(withKeys, keys, part, partCols, destRoot)
-        val (srcCount, srcCk) = srcState(part)
-        // Validate the re-copied partition by CONTENT, not just count:
-        // recompute the same sorted-column xxhash64/bit_xor checksum on
-        // the freshly written partition dir and compare against the
-        // already-collected source state — a "changed" partition with
-        // equal counts whose overwrite silently failed would pass a
-        // count-only gate while still serving stale rows.
-        val (dstCount, dstCk) = graft.operators.Validate.checksumAll(
-          spark.read
-            .schema(org.apache.spark.sql.types.StructType(dataFields))
-            .parquet(s"$destRoot/${CopyService.partitionDir(keys, part)}"),
-          dataCols)
-        val chk = PartitionCheck(part.render, srcCount, dstCount,
-          srcCount == dstCount && srcCk == dstCk,
-          (System.nanoTime() - t0) / 1e9)
-        checks :+= chk
-        if (!chk.passed) {
-          checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
-          return TableResult(table, TableStatus.Failed, drifted.size,
-            checks.count(_.passed), migratedRows, checks,
-            Some(s"count/checksum mismatch for partition ${part.render}: " +
-              s"src=($srcCount, $srcCk) dst=($dstCount, $dstCk)"))
-        }
-        migratedRows += srcCount
-        checkpoint.markPartition(table.db, table.table, part)
-        if (insertIntervalSec > 0)
-          Thread.sleep((insertIntervalSec * 1000).toLong)
+      // Validate each re-copied partition by CONTENT, not just count: a
+      // "changed" partition with equal counts whose overwrite silently
+      // failed would pass a count-only gate while still serving stale rows.
+      val run = copyInWaves(table, src, withKeys, keys, destRoot, drifted,
+        srcState, (_: (Long, Long))._1, (0L, 0L))(destSums)
+      run.failure.foreach { case (part, srcSum, dstSum) =>
+        checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
+        return TableResult(table, TableStatus.Failed, drifted.size,
+          run.marked, run.rows, run.checks,
+          Some(s"count/checksum mismatch for partition ${part.render}: " +
+            s"src=$srcSum dst=$dstSum"))
       }
+      CopyService.dropAbortedWrites(spark, destRoot)
       if (dropOrphans) orphans.foreach(p =>
         CopyService.dropPartitionDir(spark, destRoot, keys, p))
       checkpoint.markStatus(table.db, table.table, TableStatus.Completed)
       TableResult(table, TableStatus.Completed, drifted.size,
-        checks.count(_.passed), migratedRows, checks)
+        run.marked, run.rows, run.checks)
     } catch {
       case e: Exception =>
         checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
@@ -432,5 +389,68 @@ final class Migrator(
       }
     }
     MigrationReport(mode, db, results)
+  }
+}
+
+object Migrator {
+
+  /** What a wave loop did: its checks, the rows and partitions it
+    * checkpointed, and the first partition that failed its gate with its
+    * source and read-back state.
+    */
+  private final case class WaveRun[T](
+      checks: Vector[PartitionCheck],
+      rows: Long,
+      marked: Int,
+      failure: Option[(PartitionId, T, T)])
+
+  /** The waves `src`'s work-list partitions are copied and verified in,
+    * under the session's settings: [[packWaves]] with one task-round of
+    * scan input (`spark.sql.files.maxPartitionBytes` ×
+    * `defaultParallelism`) as the budget. A partition's input estimate
+    * is its row count × the source's optimized-plan `sizeInBytes` /
+    * `totalRows`. A source whose size Spark does not know
+    * (`sizeInBytes >= spark.sql.defaultSizeInBytes`, e.g. a JDBC
+    * relation) gets a wave per partition.
+    */
+  def planWaves(
+      spark: SparkSession,
+      src: DataFrame,
+      parts: Seq[(PartitionId, Long)],
+      totalRows: Long): Seq[Seq[PartitionId]] = {
+    val conf = spark.sessionState.conf
+    val size = src.queryExecution.optimizedPlan.stats.sizeInBytes
+    val bytesPerRow =
+      if (size >= conf.defaultSizeInBytes || totalRows <= 0) None
+      else Some(size.toDouble / totalRows)
+    packWaves(parts, bytesPerRow,
+      conf.filesMaxPartitionBytes.toDouble * spark.sparkContext.defaultParallelism)
+  }
+
+  /** Pack consecutive partitions greedily into waves whose estimated
+    * input (rows × `bytesPerRow`) stays within `budget`, keeping the
+    * work-list order. A partition over the budget is a wave of its own;
+    * with no size estimate every partition is.
+    */
+  def packWaves(
+      parts: Seq[(PartitionId, Long)],
+      bytesPerRow: Option[Double],
+      budget: Double): Seq[Seq[PartitionId]] = bytesPerRow match {
+    case None => parts.map(p => Seq(p._1))
+    case Some(b) =>
+      val waves = Vector.newBuilder[Seq[PartitionId]]
+      var wave = Vector.empty[PartitionId]
+      var bytes = 0.0
+      for ((part, rows) <- parts) {
+        if (wave.nonEmpty && bytes + rows * b > budget) {
+          waves += wave
+          wave = Vector.empty
+          bytes = 0.0
+        }
+        wave :+= part
+        bytes += rows * b
+      }
+      if (wave.nonEmpty) waves += wave
+      waves.result()
   }
 }

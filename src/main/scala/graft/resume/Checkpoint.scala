@@ -62,10 +62,18 @@ final class Checkpoint(path: Path) {
     * services/resume.py:52-57 called at migration.py:505-506).
     */
   def markPartition(db: String, table: String, partition: PartitionId): Unit =
+    markPartitions(db, table, Seq(partition))
+
+  /** Record a wave of completed partitions with ONE atomic rewrite. The
+    * file ends up exactly as `parts.foreach(markPartition)` would leave
+    * it (same entries, same order, duplicates ignored), but a table of N
+    * partitions in W waves rewrites the file W times instead of N.
+    */
+  def markPartitions(db: String, table: String, parts: Seq[PartitionId]): Unit =
     update(db, table) { prev =>
-      val rendered = partition.render
-      if (prev.completedPartitions.contains(rendered)) prev
-      else prev.copy(completedPartitions = prev.completedPartitions :+ rendered)
+      val done = prev.completedPartitions.toSet
+      val fresh = parts.map(_.render).distinct.filterNot(done)
+      prev.copy(completedPartitions = prev.completedPartitions ++ fresh)
     }
 
   /** Mark a table's terminal status (reference: services/resume.py:59-69). */

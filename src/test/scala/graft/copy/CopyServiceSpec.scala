@@ -47,6 +47,19 @@ class CopyServiceSpec extends SparkFunSuite {
     assert(back.count() == nastyValues.size.toLong)
     val readBack = back.select("k").collect().map(_.getString(0)).toSet
     assert(readBack == nastyValues.toSet)
+    // the same values as ONE wave: one copy job, one read-back job
+    assert(copyAndReadWave(df, parts) == parts.map(_ -> 1L).toMap)
+  }
+
+  /** `parts` of `df` (keyed by string column `k`) copied as one wave
+    * into a fresh root, then read back as per-partition counts.
+    */
+  private def copyAndReadWave(df: org.apache.spark.sql.DataFrame,
+      parts: Seq[PartitionId]): Map[PartitionId, Long] = {
+    val root = tmpDir("wave") + "/t"
+    CopyService.copyWave(df, Seq("k"), parts, root)
+    CopyService.readBack(spark, root, df.schema, Seq("k"), parts)(
+      Partitions.countsByPartition(_, Seq("k")))
   }
 
   test("null partition value selects IS NULL rows, not an empty copy") {
@@ -64,5 +77,7 @@ class CopyServiceSpec extends SparkFunSuite {
     val back = spark.read.option("basePath", root).parquet(root)
     assert(back.count() == 3L)
     assert(back.filter(col("k").isNull).count() == 2L)
+    assert(copyAndReadWave(df, parts) ==
+      Map(PartitionId(Seq(null)) -> 2L, PartitionId.single("x") -> 1L))
   }
 }

@@ -53,7 +53,10 @@ class PartitionIdSpec extends AnyFunSuite {
       PartitionId(Seq("2024-01-01")),
       PartitionId(Seq("2024-01-01", "novel")),
       PartitionId(Seq("2024", "1")),
-      PartitionId(Seq("2024-01-01", "a,b")))
+      PartitionId(Seq("2024-01-01", "a,b")),
+      PartitionId(Seq(null)),
+      PartitionId(Seq("NULL")),
+      PartitionId(Seq("2024-01-01", null)))
     cases.foreach(p => assert(PartitionId.parse(p.render) == p))
   }
 

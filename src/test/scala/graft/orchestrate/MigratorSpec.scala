@@ -345,29 +345,70 @@ class MigratorSpec extends SparkFunSuite {
     } finally holder.release()
   }
 
-  test("concurrent partition copies (K=4): identical result, all checkpointed") {
-    val (dir, ckpt, _) = freshEnv()
-    val mig = new Migrator(spark, ckpt,
-      lockDir = dir.resolve("locks").toString, maxConcurrentPartitions = 4)
+  /** Runs `body` with `spark.sql.files.maxPartitionBytes` set to `bytes`,
+    * which shrinks the wave budget and so forces several waves.
+    */
+  private def withMaxPartitionBytes[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes.toString)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def sizeInBytes(df: org.apache.spark.sql.DataFrame): Long =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+
+  test("wave planner: order kept, each partition once, over-budget alone, unknown size singletons") {
+    val parts = Seq(3L, 4L, 10L, 1L, 1L, 2L, 30L, 5L).zipWithIndex
+      .map { case (rows, i) => PartitionId.single(f"p$i%02d") -> rows }
+    // 1 byte per row, budget 10: greedy packing in work-list order
+    val waves = Migrator.packWaves(parts, Some(1.0), 10.0)
+    assert(waves.map(_.map(_.values.head)) == Seq(
+      Seq("p00", "p01"), Seq("p02"), Seq("p03", "p04", "p05"), Seq("p06"), Seq("p07")))
+    assert(waves.flatten == parts.map(_._1)) // order kept, each exactly once
+    // p06 (30 bytes) is over budget and stands alone
+    assert(waves.contains(Seq(PartitionId.single("p06"))))
+    // no size estimate → one partition per wave (the reference's loop)
+    assert(Migrator.packWaves(parts, None, 10.0) == parts.map(p => Seq(p._1)))
+    // an RDD-backed relation has no size statistics: Spark reports
+    // spark.sql.defaultSizeInBytes, and the session planner falls back
+    val s = spark
+    import s.implicits._
+    val unsized = spark.sparkContext.parallelize(1 to 8).toDF("id")
+    assert(Migrator.planWaves(spark, unsized, parts, parts.map(_._2).sum)
+      == parts.map(p => Seq(p._1)))
+    // a sized source far under one task-round is a single wave
+    assert(Migrator.planWaves(spark, lineitem, parts, 6000L) == Seq(parts.map(_._1)))
+  }
+
+  test("several waves: identical result, every partition checkpointed in order") {
+    val (dir, ckpt, mig) = freshEnv()
     val dest = s"$dir/dest/lineitem"
-    val res = mig.migrateTable(
-      TableRef("testdb", "lineitem"), lineitem, keys, keyExprs, dest)
-    assert(res.status == TableStatus.Completed, res.error)
-    assert(res.migratedRows == lineitem.count())
-    assert(res.checkResults.forall(_.passed))
+    val withKey = lineitem.withColumn("l_month", keyExprs.head.cast("string"))
+    val allParts = graft.operators.Partitions.countsInOrder(withKey, keys)
+    withMaxPartitionBytes(sizeInBytes(lineitem) / 32) {
+      val waves = Migrator.planWaves(spark, lineitem, allParts, 6000L)
+      assert(waves.size > 2, s"expected several waves, got ${waves.size}")
+      val res = mig.migrateTable(
+        TableRef("testdb", "lineitem"), lineitem, keys, keyExprs, dest)
+      assert(res.status == TableStatus.Completed, res.error)
+      assert(res.migratedRows == lineitem.count())
+      assert(res.checkResults.map(_.partition) == allParts.map(_._1.render))
+      assert(res.checkResults.forall(_.passed))
+    }
     assert(spark.read.option("basePath", dest).parquet(dest).count() == lineitem.count())
     val prog = ckpt.tableProgress("testdb", "lineitem").get
     assert(prog.status == TableStatus.Completed)
+    assert(prog.completedPartitions == allParts.map(_._1.render))
   }
 
-  test("concurrent copies (K=4) with mid-flight failure: aborts, source intact") {
-    val (dir, ckpt, _) = freshEnv()
-    val mig = new Migrator(spark, ckpt,
-      lockDir = dir.resolve("locks").toString, maxConcurrentPartitions = 4)
+  test("failure inside a multi-partition wave: aborts, nothing of the wave checkpointed") {
+    val (dir, ckpt, mig) = freshEnv()
     val dest = s"$dir/dest/lineitem"
     // Poison one partition's PAYLOAD: enumeration and counting prune to
-    // the key columns, so only the copy of the poisoned partition throws
-    // — a genuine mid-flight failure inside the concurrent loop.
+    // the key columns, so only the copy job of the wave holding the
+    // poisoned partition throws. The whole table fits one wave.
     val poisoned = lineitem.withColumn("poison",
       when(date_format(col("l_shipdate"), "yyyy-MM") === "1995-06",
         raise_error(lit("injected copy failure"))).otherwise(lit(1)))
@@ -377,48 +418,142 @@ class MigratorSpec extends SparkFunSuite {
     // nothing published; source untouched
     assert(!Files.exists(Paths.get(dest)))
     assert(lineitem.count() == 6000)
-    assert(ckpt.tableProgress("testdb", "lineitem").get.status == TableStatus.Failed)
+    val prog = ckpt.tableProgress("testdb", "lineitem").get
+    assert(prog.status == TableStatus.Failed)
+    assert(prog.completedPartitions.isEmpty)
   }
 
-  test("width stress: 100 partitions at K=8, injected failure, checkpoint ordering holds") {
-    val (dir, ckpt, _) = freshEnv()
-    val mig = new Migrator(spark, ckpt,
-      lockDir = dir.resolve("locks").toString, maxConcurrentPartitions = 8)
+  test("width stress: 100 partitions in several waves, injected failure, checkpoint ordering holds") {
+    val (dir, ckpt, mig) = freshEnv()
     val dest = s"$dir/dest/wide"
     val ref = TableRef("testdb", "wide")
     val wideKeys = Seq("pid")
     val wideExprs = Seq(col("id") % 100)
     val src = spark.range(1000).toDF("id")
     // Poison ONE partition's payload: enumeration and counting prune to
-    // the key column, so only the copy of pid=42 throws, mid-wave.
+    // the key column, so only the copy of the wave holding pid=42 throws.
     val poisoned = src.withColumn("payload",
       when(col("id") % 100 === 42, raise_error(lit("injected width failure")))
         .otherwise(lit(1)))
-    val res = mig.migrateTable(ref, poisoned, wideKeys, wideExprs, dest)
-    assert(res.status == TableStatus.Failed)
-    assert(!Files.exists(Paths.get(dest)))
-
-    // Checkpoint ordering under concurrency: work proceeds in waves of 8
-    // over the enumerated order; a throw anywhere in a wave must leave
-    // that ENTIRE wave (and everything after it) unmarked, while every
-    // earlier wave is fully marked.
     val withKey = src.withColumn("pid", wideExprs.head.cast("string"))
-    val allParts = graft.operators.Partitions.enumeratePartitions(withKey, wideKeys)
+    val allParts = graft.operators.Partitions.countsInOrder(withKey, wideKeys)
     assert(allParts.size == 100)
-    val stillTodo = ckpt.uncompleted(ref.db, ref.table, allParts).toSet
-    val completed = allParts.filterNot(stillTodo)
-    val failIdx = allParts.indexOf(PartitionId.single("42"))
-    val waveStart = failIdx - failIdx % 8
-    assert(completed.toSet == allParts.take(waveStart).toSet,
-      s"expected exactly the $waveStart partitions before the failing wave")
+    // a budget of about eight 10-row partitions per wave
+    withMaxPartitionBytes(sizeInBytes(poisoned) / 100 * 8 /
+        spark.sparkContext.defaultParallelism) {
+      val waves = Migrator.planWaves(spark, poisoned, allParts, 1000L)
+      val failWave = waves.indexWhere(_.contains(PartitionId.single("42")))
+      assert(failWave > 0 && failWave < waves.size - 1,
+        s"pid=42 must sit in a middle wave: ${waves.map(_.size)}")
+      val waveStart = waves.take(failWave).map(_.size).sum
 
-    // Resume with a healed source: only the unmarked partitions re-copy,
-    // and the published table is complete.
-    val healed = src.withColumn("payload", lit(1))
-    val res2 = mig.migrateTable(ref, healed, wideKeys, wideExprs, dest)
-    assert(res2.status == TableStatus.Completed, res2.error)
-    assert(res2.checkResults.size == 100 - waveStart)
+      val res = mig.migrateTable(ref, poisoned, wideKeys, wideExprs, dest)
+      assert(res.status == TableStatus.Failed)
+      assert(!Files.exists(Paths.get(dest)))
+
+      // A throw anywhere in a wave leaves that ENTIRE wave (and
+      // everything after it) unmarked, while every earlier wave is fully
+      // marked, in work-list order.
+      assert(ckpt.tableProgress(ref.db, ref.table).get.completedPartitions ==
+        allParts.take(waveStart).map(_._1.render),
+        s"expected exactly the $waveStart partitions before the failing wave")
+
+      // Resume with a healed source: only the unmarked partitions re-copy,
+      // and the published table is complete.
+      val healed = src.withColumn("payload", lit(1))
+      val res2 = mig.migrateTable(ref, healed, wideKeys, wideExprs, dest)
+      assert(res2.status == TableStatus.Completed, res2.error)
+      assert(res2.checkResults.map(_.partition) ==
+        allParts.drop(waveStart).map(_._1.render))
+    }
     assert(spark.read.option("basePath", dest).parquet(dest).count() == 1000)
+  }
+
+  test("NULL partition key: migrate, fail mid-table, resume through the wave path") {
+    val (dir, ckpt, mig) = freshEnv()
+    val s = spark
+    import s.implicits._
+    val ref = TableRef("testdb", "nullkey")
+    val dest = s"$dir/dest/nullkey"
+    val path = s"$dir/src/nullkey.parquet"
+    (1 to 30).map(i => (i.toLong, Seq(Some("x"), Some("a/b"), None)(i % 3)))
+      .toDF("id", "k").write.parquet(path)
+    val table = spark.read.parquet(path)
+    val nkExprs = Seq(col("k"))
+    // partition order is NULL, 'a/b', 'x'; poison 'x' and give every
+    // partition its own wave, so the first run checkpoints NULL and 'a/b'
+    val poisoned = table.withColumn("payload",
+      when(col("k") === "x", raise_error(lit("injected"))).otherwise(lit(1)))
+    // every partition (a third of the rows) is twice the wave budget
+    withMaxPartitionBytes(sizeInBytes(poisoned) / 3 / 2 /
+        spark.sparkContext.defaultParallelism) {
+      val res = mig.migrateTable(ref, poisoned, Seq("k"), nkExprs, dest)
+      assert(res.status == TableStatus.Failed)
+      assert(ckpt.tableProgress(ref.db, ref.table).get.completedPartitions ==
+        Seq("NULL", "'a/b'"))
+      val healed = table.withColumn("payload", lit(1))
+      val res2 = mig.migrateTable(ref, healed, Seq("k"), nkExprs, dest)
+      assert(res2.status == TableStatus.Completed, res2.error)
+      assert(res2.checkResults.map(_.partition) == Seq("'x'"))
+    }
+    val back = spark.read.option("basePath", dest).parquet(dest)
+    assert(back.count() == 30L)
+    assert(back.filter(col("k").isNull).count() == 10L)
+    assert(back.filter(col("k") === "a/b").count() == 10L)
+  }
+
+  test("a killed wave's .spark-staging leftovers never reach the published table") {
+    val (dir, _, mig) = freshEnv()
+    val dest = s"$dir/dest/lineitem"
+    // what a JVM killed inside a dynamic-partition-overwrite job leaves
+    val leftover = Paths.get(s"$dest.staging/.spark-staging-0badc0de/l_month=1995-01")
+    Files.createDirectories(leftover)
+    Files.writeString(leftover.resolve("part-00000.parquet"), "torn")
+    val res = mig.migrateTable(
+      TableRef("testdb", "lineitem"), lineitem, keys, keyExprs, dest)
+    assert(res.status == TableStatus.Completed, res.error)
+    val names = Files.list(Paths.get(dest)).map(_.getFileName.toString)
+      .toArray.toSeq.map(_.toString)
+    assert(!names.exists(_.startsWith(".spark-staging-")), names)
+    assert(spark.read.option("basePath", dest).parquet(dest).count() == lineitem.count())
+  }
+
+  test("migrateTable runs as many jobs for 24 partitions as for 12 when both fit one wave") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def jobsToMigrate(parts: Int): Int = {
+      val (dir, _, mig) = freshEnv()
+      val path = s"$dir/src/t$parts.parquet"
+      spark.range(2400).toDF("id").write.parquet(path)
+      val src = spark.read.parquet(path)
+      val marker = "job-count marker"
+      @volatile var jobs = 0
+      @volatile var markerSeen = false
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          if (js.properties.getProperty("spark.job.description") == marker)
+            markerSeen = true
+          else jobs += 1
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val res = mig.migrateTable(TableRef("testdb", s"t$parts"), src,
+          Seq("p"), Seq(col("id") % parts), s"$dir/dest/t$parts")
+        assert(res.status == TableStatus.Completed, res.error)
+        assert(res.totalPartitions == parts)
+        // listener delivery is async but ordered: once the marker job
+        // arrives, every job migrateTable ran has too
+        spark.sparkContext.setJobDescription(marker)
+        try spark.range(1).count()
+        finally spark.sparkContext.setJobDescription(null)
+        val deadline = System.nanoTime() + 10_000_000_000L
+        while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(markerSeen)
+        jobs
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (twelve, twentyFour) = (jobsToMigrate(12), jobsToMigrate(24))
+    assert(twelve == twentyFour,
+      s"jobs must not grow with partitions: 12 → $twelve, 24 → $twentyFour")
   }
 
   test("dq drift gate: stable rerun exits 0, injected drifted column exits 1") {

@@ -25,6 +25,19 @@ class CheckpointSpec extends AnyFunSuite {
     assert(p.status == TableStatus.Running)
   }
 
+  test("markPartitions leaves the file a markPartition loop would") {
+    val wave = Seq("2024-01", "2024-02", "2024-01", "2024-03").map(PartitionId.single)
+    val one = fresh()
+    one.markPartition("db", "t", PartitionId.single("2024-02"))
+    wave.foreach(one.markPartition("db", "t", _))
+    val batched = fresh()
+    batched.markPartition("db", "t", PartitionId.single("2024-02"))
+    batched.markPartitions("db", "t", wave)
+    assert(batched.load() == one.load())
+    assert(batched.tableProgress("db", "t").get.completedPartitions ==
+      Seq("'2024-02'", "'2024-01'", "'2024-03'"))
+  }
+
   test("composite and numeric partitions render CH-style in the file") {
     val c = fresh()
     c.markPartition("db", "t", PartitionId(Seq("2024-01-01", "novel")))
