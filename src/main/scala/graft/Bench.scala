@@ -85,7 +85,7 @@ object Bench {
     * back through the child's SPARK_GRAFT_BENCH_OUT file, not stdout
     * (no log-interleaving risk).
     */
-  private def isolatedRun(name: String, sfDir: String, cpus: String): Option[Double] = {
+  private def isolatedRun(name: String, sfDir: String, cpus: Int): Option[Double] = {
     import scala.jdk.CollectionConverters._
     val out = java.nio.file.Files.createTempFile(s"graft_iso_$name", ".json")
     try {
@@ -99,7 +99,7 @@ object Bench {
         Seq("-cp", sys.props("java.class.path"), "graft.Bench")).asJava
       val pb = new ProcessBuilder(cmd)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
       pb.environment().put("SPARK_GRAFT_QUERIES", name)
       pb.environment().put("SPARK_GRAFT_BENCH_OUT", out.toString)
       pb.environment().remove("SPARK_GRAFT_ISOLATED")
@@ -121,21 +121,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER: run the same board under real multi-JVM
-    // executors (local-cluster[n,c,mem]) for the scaling harness;
-    // executors need the build's classes on their classpath.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster"))
-      b0.config("spark.executor.extraClassPath", SparkLaunch.executorClasspath)
-    else b0).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.build("graft-bench")
 
     // JVM/codegen warmup (not data-dependent): exercise scan, shuffle-agg,
     // join, and window codegen paths once so the first timed query does

@@ -67,21 +67,6 @@ import graft.resume.Checkpoint
   */
 object MigrateCli {
 
-  /** Master for CLI sessions: `SPARK_MASTER` env or local[4]. For a
-    * `local-cluster[...]` master the launching JVM's classpath is shipped
-    * to the executor processes (`spark.executor.extraClassPath`), the
-    * same plumbing Verify/Bench use — local-cluster workers launch
-    * executors with only the Spark jars, so without this every task
-    * fails deserializing the application's classes.
-    */
-  private def withMaster(b: SparkSession.Builder): SparkSession.Builder = {
-    val master = sys.env.getOrElse("SPARK_MASTER", "local[4]")
-    val withM = b.master(master)
-    if (master.startsWith("local-cluster"))
-      withM.config("spark.executor.extraClassPath", SparkLaunch.executorClasspath)
-    else withM
-  }
-
   /** JSON string escaper shared by the dq and curate report writers —
     * paths may contain quotes/backslashes, so every interpolated string
     * field must pass through here or the report file is malformed.
@@ -296,11 +281,7 @@ object MigrateCli {
       // only if a catalog root needs it.
       var created: SparkSession = null
       val code = try runVacuum(args, cfg, () => {
-        created = withMaster(SparkSession.builder())
-          .appName("graft-vacuum")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        created.sparkContext.setLogLevel("WARN")
+        created = GraftSession.build("graft-vacuum")
         created
       }) finally if (created != null) created.stop()
       if (code != 0) sys.exit(code)
@@ -309,14 +290,7 @@ object MigrateCli {
     // curate is destructive at --dest only (overwrite of the curated
     // corpus), never at --source.
 
-    val spark = withMaster(SparkSession.builder())
-      .appName("graft-migrate")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-migrate")
 
     val start = System.currentTimeMillis()
     try {

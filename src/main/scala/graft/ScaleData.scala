@@ -65,13 +65,7 @@ object ScaleData {
     val out = args.lift(1).getOrElse("/tmp/graft_scaled")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val tables = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-scaledata")
     generate(spark, src, out, factor, tables)
     println(s"""{"scaled":"$out","factor":$factor}""")
     spark.stop()

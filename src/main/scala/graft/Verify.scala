@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,7 @@ object Verify {
     // iteration aid; the driver passes two args and gets the full dump).
     val filter: String => Boolean =
       if (args.length > 2) args(2).split(",").toSet else (_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER lets the scaling harness run this same dump
-    // under real multi-JVM executors (local-cluster[n,c,mem]); executor
-    // processes then need the build's classes — ship the launching
-    // JVM's classpath (single-machine local-cluster only).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster"))
-      b.config("spark.executor.extraClassPath", SparkLaunch.executorClasspath)
-    else b).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => filter(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -809,10 +809,11 @@ object Dedup {
     // caller's per-JVM registry (the standing-model convention) — MUST
     // be the literal [[Similarity.trainCentroidsLiteral]] output for
     // the same (corpus, nlist, iters) or keep/prune decisions drift
-    // from the oracle replay. Re-training here per invocation was the
-    // operator's dominant cost on warm reruns.
-    val cents = centroids.getOrElse(
-      Similarity.trainCentroidsLiteral(emb, nlist, iters, idCol, vecCol))
+    // from the oracle replay (checkedCentroids rejects the detectable
+    // mismatches). Re-training here per invocation was the operator's
+    // dominant cost on warm reruns.
+    val cents = Similarity.checkedCentroids(centroids, emb, nlist, iters,
+      idCol, vecCol)
     val assigned = Similarity.assignCells(emb, cents, idCol, vecCol)
       .select(col("vid"), col("cell"), col("cvec"),
         sqrt(floatNorm2(col("cvec"))).as("nrm"))

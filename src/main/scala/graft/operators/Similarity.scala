@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ArrayType, DecimalType, FloatType, IntegerType,
+  StructField, StructType}
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -278,12 +279,44 @@ object Similarity {
     // caller's per-JVM registry (the semanticDedup convention) — MUST
     // be the literal [[trainCentroidsLiteral]] output for the same
     // (corpus, nlist, iters) or the cell structure drifts from the
-    // oracle replay. Without it every invocation re-runs the Lloyd
+    // oracle replay ([[checkedCentroids]] rejects the detectable
+    // mismatches). Without it every invocation re-runs the Lloyd
     // chain — the FAISS lifecycle trains once and searches many.
     ivfSearch(corpus, queries, k, nProbe,
-      centroids.getOrElse(
-        trainCentroidsLiteral(corpus, nlist, iters, idCol, vecCol)),
+      checkedCentroids(centroids, corpus, nlist, iters, idCol, vecCol),
       idCol, vecCol)
+
+  /** Caller-supplied trained centroids, checked before they drive a
+    * search — or, when absent, trained here via [[trainCentroidsLiteral]].
+    * Model state handed to an operator is validated, not trusted: the
+    * relation must have the [[CentroidSchema]] and be a collected local
+    * relation of 1 to `nlist` rows (training keeps at most `nlist`
+    * cells, fewer when the corpus has fewer seeds or a Lloyd cell
+    * empties) whose cell ids lie in [0, `nlist`). All checks read the
+    * plan, so no Spark job runs.
+    */
+  private[graft] def checkedCentroids(centroids: Option[DataFrame],
+      corpus: DataFrame, nlist: Int, iters: Int, idCol: String,
+      vecCol: String): DataFrame = centroids match {
+    case None => trainCentroidsLiteral(corpus, nlist, iters, idCol, vecCol)
+    case Some(c) =>
+      require(c.schema.map(f => f.name -> f.dataType) ==
+          CentroidSchema.map(f => f.name -> f.dataType),
+        s"centroids: schema ${c.schema.simpleString} is not the trained " +
+          s"centroid schema ${CentroidSchema.simpleString}")
+      val rows = c.queryExecution.analyzed match {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          l.data
+        case p => throw new IllegalArgumentException("centroids: expected " +
+          s"the collected local relation of trainCentroidsLiteral, got ${p.nodeName}")
+      }
+      require(rows.nonEmpty && rows.length <= nlist,
+        s"centroids: ${rows.length} rows for nlist = $nlist")
+      require(rows.forall(r => !r.isNullAt(0) &&
+          r.getInt(0) >= 0 && r.getInt(0) < nlist),
+        s"centroids: a cid outside [0, $nlist)")
+      c
+  }
 
   /** [[trainCentroids]] COLLECTED to a literal relation — nlist·dims
     * floats of MODEL STATE, the PQ-codebook treatment (see
@@ -372,7 +405,7 @@ object Similarity {
     * — pass `corpus.sample(...)` here; determinism then rides the
     * sample's seed.
     *
-    * Output: (cid, centvec float array) — feed to the probe/rerank via
+    * Output: [[CentroidSchema]] — feed to the probe/rerank via
     * [[ivfTopKTrained]].
     */
   def trainCentroids(corpus: DataFrame, nlist: Int, iters: Int,
@@ -406,6 +439,10 @@ object Similarity {
     }
     cents
   }
+
+  /** (cid, centvec) — the columns and types [[trainCentroids]] emits. */
+  val CentroidSchema: StructType = StructType(Seq(
+    StructField("cid", IntegerType), StructField("centvec", ArrayType(FloatType))))
 
   /** Search phase shared by the seeded and trained IVF variants:
     * assign → probe → exact rerank (see [[ivfTopK]]'s scale notes).

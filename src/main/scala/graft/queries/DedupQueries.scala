@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, TextAnalysis => TA}
-import graft.sources.Sources
+import graft.sources.{ArtifactRegistry, Sources}
+import graft.sources.ArtifactRegistry.Kind
 
 /** Deduplication queries over `documents` (north-star extension):
   * exact, n-gram Jaccard, MinHash+LSH, SimHash. Every oracle reproduces
@@ -28,30 +29,29 @@ object DedupQueries {
     * the minhash pipeline is the expensive half of each, so consumers
     * read the staged file instead of re-running band-join + verify.
     */
-  private val stagedPairs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val StagedPairs = new Kind[String]("staged d_minhash pairs")
   private[graft] def stagedMinhashPairs(s: SparkSession,
       dir: String): String =
-    stagedPairs.computeIfAbsent(dir, { _ =>
+    ArtifactRegistry(StagedPairs, dir) {
       val p = graft.sources.Scratch.dir("docpairs", dir)
       defs("d_minhash")(s, dir)
         .select(col("id_a"), col("id_b"), col("jac"))
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
 
   /** Standing corpus band index for `d_incremental_indexed`, built
-    * once per JVM per dataset (the builtShingleIndex pattern: atomic
-    * computeIfAbsent, nonce-scoped name, tracked warehouse files).
+    * once per JVM per dataset (nonce-scoped name, tracked warehouse
+    * files).
     * The index name is an epoch VIEW ([[graft.sources.CatalogOps
     * .publishEpoch]]); the live epoch TABLE owns the files Scratch
     * tracks — queries never compact, so e0 is this JVM's only epoch.
     */
-  private val bandIndexes = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.model.TableRef]()
+  private val BandIndex =
+    new Kind[graft.model.TableRef]("d_incremental_indexed band index")
   private[queries] def builtBandIndex(s: SparkSession,
       dir: String): graft.model.TableRef =
-    bandIndexes.computeIfAbsent(dir, { _ =>
+    ArtifactRegistry(BandIndex, dir) {
       s.sql("CREATE DATABASE IF NOT EXISTS graft_scratch")
       val t = graft.model.TableRef("graft_scratch",
         graft.sources.Scratch.name("bandidx", dir))
@@ -59,16 +59,13 @@ object DedupQueries {
       val cut = d.agg((max(col("doc_id")) - lit(99L)).as("cut"))
       val corpus = d.crossJoin(broadcast(cut))
         .filter(col("doc_id") < col("cut")).drop("cut")
-      val t0 = System.nanoTime()
       Dedup.writeBandIndex(corpus, "doc_id", "text", t)
       val et = graft.sources.CatalogOps.liveEpochTable(s, t)
       val loc = s.sql(s"DESC FORMATTED ${et.qualified}")
         .filter(col("col_name") === "Location").head().getString(1)
       graft.sources.Scratch.track(new java.net.URI(loc).getPath)
-      println(f"[graft] d_incremental_indexed: one-time band-index " +
-        f"build for $dir took ${(System.nanoTime() - t0) / 1e9}%.2f s")
       t
-    })
+    }
 
   /** The d_incremental oracle, shared verbatim by
     * `d_incremental_indexed` — the persisted-index path must reproduce

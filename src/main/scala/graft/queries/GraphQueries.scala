@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Graph
-import graft.sources.Sources
+import graft.sources.{ArtifactRegistry, Sources}
+import graft.sources.ArtifactRegistry.Kind
 
 /** Graph-analytics queries (SURVEY.md §2B — joins/iterative category):
   * link-analysis ranking over graphs derived from the relational
@@ -34,15 +35,14 @@ object GraphQueries {
   private val BroadcastNodeCap = 2000000L
 
   /** The part–supplier edge index, materialized once per JVM per
-    * dataset dir (the standing-index convention: build seconds logged
-    * separately, so the bench's min-of-2 reports the warm SEARCH path
-    * — the 5 rank iterations — exactly as production amortizes one
-    * graph build across rank/parameter reruns).
+    * dataset dir (the standing-index convention: the build is a
+    * one-time cost, so the bench's min-of-2 reports the warm SEARCH
+    * path — the 5 rank iterations — exactly as production amortizes
+    * one graph build across rank/parameter reruns).
     */
-  private val edgeIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, Graph.EdgeIndex]()
+  private val EdgeIndex = new Kind[Graph.EdgeIndex]("g_pagerank edge index")
   private def builtEdgeIndex(s: SparkSession, dir: String): Graph.EdgeIndex =
-    edgeIndexes.computeIfAbsent(dir, { _ =>
+    ArtifactRegistry(EdgeIndex, dir) {
       val e0 = t(s, dir, "lineitem")
         .select((col("l_partkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
@@ -51,14 +51,10 @@ object GraphQueries {
       // set, so plain unionAll symmetrizes without a dedup pass; every
       // node gains an out-edge, satisfying the no-dangling contract
       // (validation skipped — true by construction).
-      val t0 = System.nanoTime()
-      val idx = Graph.materializeEdges(e0, dir,
+      Graph.materializeEdges(e0, dir,
         validateDangling = false, symmetrize = true,
         bucketIfOver = BroadcastNodeCap)
-      println(f"[graft] g_pagerank: one-time edge materialization for " +
-        f"$dir took ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      idx
-    })
+    }
 
   /** The DOCUMENT near-dup edge indexes (uniform and weighted), built
     * once per JVM per dataset dir like the co-sourcing graph above:
@@ -67,31 +63,25 @@ object GraphQueries {
     * against the same standing bucketed edges. Corpus-derived |V| —
     * no broadcast assumption, always the bucketed layout.
     */
-  private val docIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, Graph.EdgeIndex]()
+  private val DocIndex = new Kind[Graph.EdgeIndex]("g_doc_rank doc-edge index")
   // the d_minhash pair relation is staged once per JVM per dataset in
   // DedupQueries.stagedMinhashPairs and shared with the per-source
   // audit; both index builds read that file
   private def builtDocIndex(s: SparkSession, dir: String,
       weighted: Boolean): Graph.EdgeIndex =
-    docIndexes.computeIfAbsent(s"${if (weighted) "w" else "u"}:$dir", { _ =>
+    ArtifactRegistry(DocIndex, dir, if (weighted) "weighted" else "uniform") {
       val pairs0 = s.read.parquet(DedupQueries.stagedMinhashPairs(s, dir))
       val pairs =
         if (weighted) pairs0.select(col("id_a").as("src"),
           col("id_b").as("dst"),
           round(col("jac") * 1000000).cast("long").as("w"))
         else pairs0.select(col("id_a").as("src"), col("id_b").as("dst"))
-      val t0 = System.nanoTime()
       // symmetrize INSIDE the build: the reverse direction derives
       // from the staged copy, so the pair relation reads once
-      val idx = Graph.materializeEdges(pairs,
+      Graph.materializeEdges(pairs,
         s"doc${if (weighted) "w" else ""}:$dir",
         validateDangling = false, symmetrize = true, weighted = weighted)
-      println(f"[graft] g_doc_rank: one-time ${if (weighted) "weighted "
-        else ""}doc-edge materialization for $dir took " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      idx
-    })
+    }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // PageRank over the part–supplier co-sourcing graph: nodes are

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{Multimodal, TextAnalysis => TA}
-import graft.sources.Sources
+import graft.sources.{ArtifactRegistry, Sources}
+import graft.sources.ArtifactRegistry.Kind
 
 /** Text-analysis + multimodal-plumbing queries over `documents`
   * (north-star extension; SURVEY.md §2B last row).
@@ -29,20 +30,18 @@ object TextQueries {
 
   /** Standing train-split shingle index for
     * `t_contamination_incremental`, built once per JVM per dataset
-    * (the builtIvfPqIndex pattern: atomic computeIfAbsent; the table
-    * name carries the dataset digest + JVM nonce because catalog
-    * tables share the warehouse dir across processes).
+    * (the table name carries the dataset digest + JVM nonce because
+    * catalog tables share the warehouse dir across processes).
     */
-  private val shingleIndexes = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.model.TableRef]()
+  private val ShingleIndex =
+    new Kind[graft.model.TableRef]("t_contamination_incremental shingle index")
   private[queries] def builtShingleIndex(s: SparkSession,
       dir: String): graft.model.TableRef =
-    shingleIndexes.computeIfAbsent(dir, { _ =>
+    ArtifactRegistry(ShingleIndex, dir) {
       s.sql("CREATE DATABASE IF NOT EXISTS graft_scratch")
       val t = graft.model.TableRef("graft_scratch",
         graft.sources.Scratch.name("shidx", dir))
       val d = docs(s, dir)
-      val t0 = System.nanoTime()
       graft.operators.Dedup.writeShingleIndex(
         d.filter(TA.hashSplit(col("doc_id")) === "train"),
         "doc_id", "text", t)
@@ -54,27 +53,20 @@ object TextQueries {
       val loc = s.sql(s"DESC FORMATTED ${et.qualified}")
         .filter(col("col_name") === "Location").head().getString(1)
       graft.sources.Scratch.track(new java.net.URI(loc).getPath)
-      println(f"[graft] t_contamination_incremental: one-time shingle " +
-        f"index build for $dir took ${(System.nanoTime() - t0) / 1e9}%.2f s")
       t
-    })
+    }
 
   /** 8-merge BPE model per dataset, trained once per JVM (model state
     * is 8 rows — the same O(model) driver footprint as the k-means
     * centroids); bench repeats then measure the encode path alone.
     */
   private val NBpeMerges = 8
-  private val bpeModels = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, String, String, Long)]]()
+  private val BpeModel =
+    new Kind[Seq[(Int, String, String, Long)]](s"$NBpeMerges-merge BPE model")
   private[queries] def trainedBpe(s: SparkSession,
       dir: String): Seq[(Int, String, String, Long)] =
-    bpeModels.computeIfAbsent(dir, { _ =>
-      val t0 = System.nanoTime()
-      val m = graft.operators.Bpe.trainMerges(docs(s, dir), "text", NBpeMerges)
-      println(f"[graft] t_bpe_train: one-time $NBpeMerges%d-merge training " +
-        f"for $dir took ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      m
-    })
+    ArtifactRegistry(BpeModel, dir)(
+      graft.operators.Bpe.trainMerges(docs(s, dir), "text", NBpeMerges))
 
   /** Unigram-LM tokenizer hyper-parameters, shared verbatim by the
     * Spark query and the DuckDB oracle replay: max piece length, seed
@@ -85,18 +77,12 @@ object TextQueries {
   private val NUniMax = 4
   private val NUniTopK = 64
   private val NUniRounds = 3
-  private val uniModels = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.operators.Unigram.Model]()
+  private val UnigramModel = new Kind[graft.operators.Unigram.Model](
+    s"$NUniRounds-round EM unigram model")
   private[queries] def trainedUnigram(s: SparkSession,
       dir: String): graft.operators.Unigram.Model =
-    uniModels.computeIfAbsent(dir, { _ =>
-      val t0 = System.nanoTime()
-      val m = graft.operators.Unigram.train(
-        docs(s, dir), "text", NUniTopK, NUniMax, NUniRounds)
-      println(f"[graft] t_unigram_train: one-time $NUniRounds%d-round EM " +
-        f"training for $dir took ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      m
-    })
+    ArtifactRegistry(UnigramModel, dir)(graft.operators.Unigram.train(
+      docs(s, dir), "text", NUniTopK, NUniMax, NUniRounds))
 
   private val StopList = TA.Stopwords.map(w => s"'$w'").mkString(", ")
 

@@ -53,17 +53,16 @@ object Sources {
       }
     } else spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Cached total byte size of a parquet path (a file-metadata stat
-    * memo — never data). Used by [[fannedTable]]'s split estimate.
+  /** Total byte size of a parquet table (a file-metadata stat memo —
+    * never data). Used by [[fannedTable]]'s split estimate.
     */
-  private val pathBytes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def bytesOf(spark: SparkSession, path: String): Long =
-    pathBytes.computeIfAbsent(path, { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
+  private val ScanBytes = new ArtifactRegistry.Kind[Long]("scan bytes")
+  private def bytesOf(spark: SparkSession, dir: String, name: String): Long =
+    ArtifactRegistry(ScanBytes, dir, name) {
+      val hp = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
       val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      java.lang.Long.valueOf(fs.getContentSummary(hp).getLength)
-    }).longValue()
+      fs.getContentSummary(hp).getLength
+    }
 
   /** Scale-adaptive scan FAN-OUT (optimization guide §2.5, "input
     * skew: one huge unsplittable file"): read `$dir/$name.parquet`
@@ -94,7 +93,7 @@ object Sources {
       .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
       .getOrElse(128L * 1024 * 1024)
     val estSplits =
-      math.max(1L, bytesOf(spark, s"$dir/$name.parquet") / maxSplit)
+      math.max(1L, bytesOf(spark, dir, name) / maxSplit)
     if (estSplits * 2 >= p) df
     else df.repartition(p, org.apache.spark.sql.functions.col(key))
   }

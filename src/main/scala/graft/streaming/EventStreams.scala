@@ -683,8 +683,8 @@ object EventStreams {
     * the difference between "state ∝ watermark window" (deployable at
     * 100 TB/day) and "state ∝ stream history" (an eventual OOM).
     * Spec-asserted for the stream-stream join under RocksDB
-    * (EventStreamsSpec); probed at 10× in SCALING.md (ScaleProbe
-    * r16adds).
+    * (EventStreamsSpec); probed at 10× in SCALING.md (the round-16
+    * entry).
     */
   def stateSizeProfile(spark: SparkSession, events: DataFrame, slices: Int,
       workDir: String, xform: DataFrame => DataFrame): Seq[(Long, Long)] = {

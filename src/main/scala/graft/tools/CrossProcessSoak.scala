@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Forked-JVM appender for the CROSS-PROCESS single-writer soak
@@ -30,23 +29,15 @@ object CrossProcessSoak {
     val pid = ProcessHandle.current().pid()
     // SPARK_GRAFT_MASTER lets the chaos harness run one of these under
     // real multi-JVM executors (local-cluster[n,c,mem]) and kill an
-    // executor mid-ingest; same classpath-shipping move as Verify/Bench
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]")
-    val b = SparkSession.builder()
-      .master(master)
-      .appName(s"graft-xsoak-$lo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.sources.IndexLock.LockDirConf, lockDir)
-      // contention is the POINT here: two processes' append/compact
-      // cycles overlap constantly, so waiting on the peer's flock is
-      // the expected steady state, not a stuck-writer signal
-      .config(graft.sources.IndexLock.TimeoutConf, "600")
-    val spark = (if (master.startsWith("local-cluster"))
-      b.config("spark.executor.extraClassPath", graft.SparkLaunch.executorClasspath)
-    else b).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // executor mid-ingest. cpus stays 4 whatever SPARK_GRAFT_CPUS says:
+    // the soak spec's parallelism is part of what it proves.
+    val spark = graft.GraftSession.build(s"graft-xsoak-$lo", 4,
+      graft.GraftSession.envMaster(4))
+    spark.conf.set(graft.sources.IndexLock.LockDirConf, lockDir)
+    // contention is the POINT here: two processes' append/compact
+    // cycles overlap constantly, so waiting on the peer's flock is
+    // the expected steady state, not a stuck-writer signal
+    spark.conf.set(graft.sources.IndexLock.TimeoutConf, "600")
     try {
       val emb = spark.read.parquet(embParquet)
       // standalone (chaos-harness) convenience: seed epoch 0 over

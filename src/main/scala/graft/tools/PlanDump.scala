@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
@@ -14,8 +13,9 @@ import java.util.concurrent.atomic.AtomicInteger
   * over tiny data) that per-query wall time alone cannot attribute.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> [q1,q2|all]
-  * Env:   SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PLAN_EXEC=off to
-  *        skip execution (explain only — no jobs run).
+  * Env:   SPARK_GRAFT_MASTER / SPARK_GRAFT_CPUS ([[graft.GraftSession]]),
+  *        SPARK_GRAFT_PLAN_EXEC=off to skip execution (explain only — no
+  *        jobs run).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,15 +26,7 @@ object PlanDump {
       case Some(csv) => csv.split(",").toSet
     }
     val runExec = !sys.env.get("SPARK_GRAFT_PLAN_EXEC").contains("off")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build("graft-plandump")
     Files.createDirectories(Paths.get(outDir))
 
     val jobs = new AtomicInteger(0)

@@ -1,0 +1,38 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps each piece of scaffolding at one implementation: sessions are
+  * built only by [[GraftSession]], and the query layer and the source
+  * layer cache standing artifacts only through
+  * [[graft.sources.ArtifactRegistry]].
+  */
+class MechanismCountSpec extends AnyFunSuite {
+
+  private val root = new java.io.File("src/main/scala")
+
+  private def sources: Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
+    walk(root)
+  }
+
+  private def rel(f: java.io.File): String =
+    root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+
+  private def mentioning(token: String): Seq[String] = sources
+    .filter(f => java.nio.file.Files.readString(f.toPath).contains(token))
+    .map(rel).sorted
+
+  test("SparkSession.builder appears only in GraftSession.scala") {
+    assert(mentioning("SparkSession.builder") == Seq("graft/GraftSession.scala"))
+  }
+
+  test("no computeIfAbsent under graft/queries/ or in sources/Sources.scala") {
+    val hits = mentioning("computeIfAbsent").filter(p =>
+      p.startsWith("graft/queries/") || p == "graft/sources/Sources.scala")
+    assert(hits.isEmpty, s"hand-rolled caches: $hits")
+  }
+}

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
@@ -90,26 +89,6 @@ class SimilarityQueriesSpec extends SparkFunSuite {
     assert(adc == brute)
   }
 
-  /** Jobs submitted while `build` runs, counted via an in-order
-    * listener: a marker job after `build` bounds the wait (listener
-    * delivery is async but ordered, so once the marker arrives every
-    * build-time job has too).
-    */
-  private def jobsDuring(build: => Unit): Int = {
-    @volatile var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      build
-      spark.range(1).count() // marker
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (jobs < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      jobs - 1
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("s_embed_neardup_scaled: no count job at plan-build (metadata-cached n)") {
     // chooseGeometry's n comes from parquet footer metadata cached per
     // dir — building the scaled query must submit no more jobs than
@@ -167,5 +146,61 @@ class SimilarityQueriesSpec extends SparkFunSuite {
     assert(inList.isDefined, s"no partition filter on cell:\n$onePlan")
     val probed = inList.get.group(1).split(",").count(_.trim.nonEmpty)
     assert(probed == 8, s"one query must probe exactly 8 cells, got $probed")
+  }
+
+  test("trained centroids handed to an operator are checked before any job runs") {
+    import graft.operators.{Dedup, Similarity}
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val q = e.filter(col("vec_id").isin(0L, 1L, 2L))
+    val good = SimilarityQueries.trainedCentsN(spark, sf0001, 16)
+    val rows = good.collect()
+    assert(rows.length == 16)
+    def rel(rs: Seq[org.apache.spark.sql.Row]) =
+      spark.createDataFrame(java.util.Arrays.asList(rs: _*), good.schema)
+    // the registry's own relation passes both operators, and so does a
+    // short one: training yields fewer than nlist cells on a small
+    // corpus or when a Lloyd cell empties
+    val short = rel(rows.take(15).toSeq)
+    for (c <- Seq(good, short)) {
+      Similarity.ivfTopKTrained(e, q, k = 5, centroids = Some(c))
+      Dedup.semanticDedup(e, tau = 0.4, centroids = Some(c))
+    }
+    val long = rel(rows.toSeq :+ rows(3))
+    val empty = rel(Nil)
+    val outOfRange = rel(rows.init.toSeq :+
+      org.apache.spark.sql.Row(16, rows.last.get(1)))
+    val renamed = good.withColumnRenamed("centvec", "vec")
+    val lazyPlan = good.filter(col("cid") >= 0)
+    for ((bad, why) <- Seq(long -> "17 rows for nlist = 16",
+        empty -> "0 rows", outOfRange -> "outside [0, 16)",
+        renamed -> "schema", lazyPlan -> "local relation")) {
+      var err: IllegalArgumentException = null
+      val jobs = jobsDuring {
+        err = intercept[IllegalArgumentException](Similarity.ivfTopKTrained(
+          e, q, k = 5, nlist = 16, centroids = Some(bad)))
+      }
+      assert(err.getMessage.contains(why), err.getMessage)
+      assert(jobs == 0, s"$jobs job(s) ran before the check failed")
+      intercept[IllegalArgumentException](
+        Dedup.semanticDedup(e, tau = 0.4, nlist = 16, centroids = Some(bad)))
+    }
+  }
+
+  test("d_semantic and d_semantic_auto on a corpus under nlist rows match the self-trained operator") {
+    // 10 vectors: the registry trains at most 10 of its 16 cells, which
+    // the operator must accept as it accepts its own training
+    val dir = tmpDir("graft_short_corpus_")
+    spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .filter(col("vec_id") < 10).write.parquet(s"$dir/embeddings.parquet")
+    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    assert(SimilarityQueries.trainedCentsN(spark, dir, 16).count() < 16)
+    val want = graft.operators.Dedup.semanticDedup(e, tau = 0.4)
+      .select(col("vid").as("vec_id"), col("cell"), col("witness"),
+        col("keep"))
+      .orderBy("vec_id").collect().toSeq
+    assert(want.length == 10)
+    for (name <- Seq("d_semantic", "d_semantic_auto"))
+      assert(SimilarityQueries.defs(name)(spark, dir).collect().toSeq == want,
+        name)
   }
 }
