@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -67,13 +69,6 @@ import graft.resume.Checkpoint
   */
 object MigrateCli {
 
-  /** JSON string escaper shared by the dq and curate report writers —
-    * paths may contain quotes/backslashes, so every interpolated string
-    * field must pass through here or the report file is malformed.
-    */
-  private def js(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   /** Data-quality mode body, exit code RETURNED instead of exited —
     * the unit the spec drives in-process (sys.exit would kill the
     * forked test JVM). One profiling pass, per-COLUMN output rows
@@ -123,29 +118,18 @@ object MigrateCli {
       .collectCategoryHistograms(src, catCols, topK = 10)
       .map(c => c.column -> c).toMap
     val body = profs.map { p =>
-      val histField = hists.get(p.column).fold("") { h =>
-        s""", "hist": {"lo": ${h.lo}, "hi": ${h.hi},
-           | "counts": ${h.counts.mkString("[", ", ", "]")}}"""
-          .stripMargin.replace("\n", "")
-      } + cats.get(p.column).fold("") { c =>
-        s""", "cats": {"categories": ${c.categories.map(js)
-            .mkString("[", ", ", "]")},
-           | "counts": ${c.counts.mkString("[", ", ", "]")},
-           | "other_count": ${c.otherCount}}"""
-          .stripMargin.replace("\n", "")
-      }
-      s"""{"column": ${js(p.column)}, "n_rows": ${p.nRows},
-         | "null_count": ${p.nullCount},
-         | "completeness": ${p.completeness},
-         | "approx_distinct": ${p.approxDistinct},
-         | "min": ${p.minValue.fold("null")(js)},
-         | "max": ${p.maxValue.fold("null")(js)}$histField}"""
-        .stripMargin.replace("\n", "")
-    }.mkString("[\n  ", ",\n  ", "\n]")
-    val dir = new java.io.File(args.getOrElse("report-dir", "reports"))
-    dir.mkdirs()
-    val out = new java.io.File(dir, s"dq_report_$start.json").toPath
-    java.nio.file.Files.writeString(out, body)
+      ListMap("column" -> p.column, "n_rows" -> p.nRows,
+        "null_count" -> p.nullCount, "completeness" -> p.completeness,
+        "approx_distinct" -> p.approxDistinct,
+        "min" -> p.minValue, "max" -> p.maxValue) ++
+        hists.get(p.column).map(h => "hist" ->
+          ListMap("lo" -> h.lo, "hi" -> h.hi, "counts" -> h.counts)) ++
+        cats.get(p.column).map(c => "cats" ->
+          ListMap("categories" -> c.categories, "counts" -> c.counts,
+            "other_count" -> c.otherCount))
+    }
+    val out = ReportService.writeJson(args.getOrElse("report-dir", "reports"),
+      s"dq_report_$start.json", body)
     profs.foreach { p =>
       println(s"[graft] dq column=${p.column} " +
         s"completeness=${p.completeness} distinct~${p.approxDistinct}")
@@ -240,14 +224,13 @@ object MigrateCli {
     entries.foreach(e => println(f"[graft] vacuum ${e.action}%-20s " +
       f"age=${e.ageHours}%.1fh ${e.path}"))
     val body = entries.map { e =>
-      s"""{"path": ${js(e.path)}, "age_hours": ${f"${e.ageHours}%.2f"},
-         | "action": ${js(e.action)}}""".stripMargin.replace("\n", "")
-    }.mkString("[\n  ", ",\n  ", "\n]")
-    val dir = new java.io.File(args.getOrElse("report-dir", "reports"))
-    dir.mkdirs()
-    val out = new java.io.File(dir,
-      s"vacuum_report_${System.currentTimeMillis()}.json").toPath
-    java.nio.file.Files.writeString(out, body)
+      ListMap("path" -> e.path,
+        "age_hours" -> java.math.BigDecimal.valueOf(e.ageHours)
+          .setScale(2, java.math.RoundingMode.HALF_UP),
+        "action" -> e.action)
+    }
+    val out = ReportService.writeJson(args.getOrElse("report-dir", "reports"),
+      s"vacuum_report_${System.currentTimeMillis()}.json", body)
     val deleted = entries.count(_.action == "deleted")
     val pending = entries.count(_.action == "would_delete")
     val failed = entries.count(_.action == "delete_failed")
@@ -361,23 +344,17 @@ object MigrateCli {
         val rep = graft.operators.Curation.curate(src, cfg.destPath,
           jaccard = jac, stopwords = stopwords, mixture = mixture,
           canonical = canonical)
-        val splits = rep.bySplit.toSeq.sorted
-          .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-        val mixtureField = rep.afterMixture
-          .fold("")(m => s""" "after_mixture": $m,""")
-        val body =
-          s"""{"mode": "curate", "source": ${js(cfg.sourcePath)},
-             | "dest": ${js(cfg.destPath)}, "jaccard": $jac,
-             | "canonical": ${js(canonical)},
-             | "input": ${rep.input}, "after_quality": ${rep.afterQuality},
-             | "after_exact_dedup": ${rep.afterExactDedup},
-             | "after_near_dup": ${rep.afterNearDup},$mixtureField
-             | "dropped": ${rep.dropped}, "by_split": $splits}"""
-            .stripMargin.replace("\n", "")
-        val dir = new java.io.File(args.getOrElse("report-dir", "reports"))
-        dir.mkdirs()
-        val out = new java.io.File(dir, s"curate_report_$start.json").toPath
-        java.nio.file.Files.writeString(out, body)
+        val body = ListMap("mode" -> "curate", "source" -> cfg.sourcePath,
+          "dest" -> cfg.destPath, "jaccard" -> jac, "canonical" -> canonical,
+          "input" -> rep.input, "after_quality" -> rep.afterQuality,
+          "after_exact_dedup" -> rep.afterExactDedup,
+          "after_near_dup" -> rep.afterNearDup) ++
+          rep.afterMixture.map("after_mixture" -> _) ++
+          ListMap("dropped" -> rep.dropped,
+            "by_split" -> ListMap(rep.bySplit.toSeq.sorted: _*))
+        val out = ReportService.writeJson(
+          args.getOrElse("report-dir", "reports"),
+          s"curate_report_$start.json", body)
         println(s"[graft] curate input=${rep.input} " +
           s"quality=${rep.afterQuality} exact=${rep.afterExactDedup} " +
           s"near_dup=${rep.afterNearDup} dest=${cfg.destPath} report=$out")

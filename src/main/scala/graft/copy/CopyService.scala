@@ -216,22 +216,4 @@ object CopyService {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(keys: _*)
       .parquet(destRoot)
-
-  /** Validate whole-table counts between two locations with one scan each
-    * (replaces the reference's 2N+3 scalar count queries, SURVEY.md §6).
-    */
-  def validateCounts(
-      src: DataFrame,
-      dst: DataFrame,
-      srcKeys: Seq[Column],
-      dstKeys: Seq[Column],
-      keyNames: Seq[String]): Map[PartitionId, (Long, Long)] = {
-    val s = Partitions.countsByPartition(
-      src.select(srcKeys.zip(keyNames).map { case (c, n) => c.as(n) }: _*), keyNames)
-    val d = Partitions.countsByPartition(
-      dst.select(dstKeys.zip(keyNames).map { case (c, n) => c.as(n) }: _*), keyNames)
-    (s.keySet ++ d.keySet).map { pid =>
-      pid -> (s.getOrElse(pid, 0L), d.getOrElse(pid, 0L))
-    }.toMap
-  }
 }

@@ -34,30 +34,9 @@ object PortableFns {
   /** Timestamp → 'yyyy-MM-dd' (DuckDB: strftime(ts, '%Y-%m-%d')). */
   def dateStr(c: Column): Column = date_format(c, "yyyy-MM-dd")
 
-  /** Cosine similarity between two float-array columns, computed
-    * sequentially in double precision (deterministic order — matches
-    * DuckDB's list_cosine_similarity evaluation), rounded for stable
-    * cross-engine hashing.
-    */
-  def cosineSim(a: Column, b: Column, scale: Int = 4): Column = {
-    val dot = aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-    val na = sqrt(aggregate(a, lit(0.0),
-      (acc, v) => acc + v.cast("double") * v.cast("double")))
-    val nb = sqrt(aggregate(b, lit(0.0),
-      (acc, v) => acc + v.cast("double") * v.cast("double")))
-    round(dot / (na * nb), scale)
-  }
-
   /** Dot product of two float-array columns in double precision. */
   def dot(a: Column, b: Column): Column =
     aggregate(
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
-
-  /** L2 norm of a float-array column in double precision. */
-  def l2norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0),
-      (acc, v) => acc + v.cast("double") * v.cast("double")))
 }

@@ -186,9 +186,7 @@ object Graph {
           tbl, bucketCols = Seq("src"), numBuckets = buckets,
           sortCols = Seq("src"))
         // nonce-scoped warehouse files die with the JVM like tmp scratch
-        val loc = spark.sql(s"DESC FORMATTED ${tbl.qualified}")
-          .filter(col("col_name") === "Location").head().getString(1)
-        graft.sources.Scratch.track(new java.net.URI(loc).getPath)
+        graft.sources.Scratch.trackTable(spark, tbl)
         tbl.qualified
       }
     val fs = new org.apache.hadoop.fs.Path(scratch)

@@ -58,14 +58,11 @@ object IndexMaintenance {
   /** Stats of a catalog bucketed index's live epoch (band/shingle). */
   def describeBucketed(spark: SparkSession, ref: TableRef): IndexStats = {
     val live = CatalogOps.liveEpochTable(spark, ref)
-    val desc = spark.sql(s"DESC FORMATTED ${live.qualified}").collect()
-      .map(r => r.getString(0).trim -> r.getString(1)).toMap
-    val loc = desc.getOrElse("Location",
-      throw new IllegalStateException(
-        s"DESC FORMATTED ${live.qualified} carries no Location"))
-    val buckets = desc.get("Num Buckets").map(_.trim.toLong)
-      .filter(_ > 0).getOrElse(1L)
-    val (files, bytes) = listData(spark, loc)
+    val storage = CatalogOps.storageOf(spark, live)
+    val loc = storage.location.getOrElse(throw new IllegalStateException(
+      s"${live.qualified} has no storage location"))
+    val buckets = storage.buckets.getOrElse(1).toLong
+    val (files, bytes) = listData(spark, loc.toString)
     val eps = CatalogOps.epochs(spark, ref)
     IndexStats(CatalogOps.currentEpoch(spark, ref).getOrElse(-1L), eps,
       files, bytes, buckets, files.toDouble / buckets)

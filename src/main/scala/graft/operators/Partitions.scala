@@ -108,7 +108,4 @@ object Partitions {
     */
   def uncompleted(all: Seq[PartitionId], completed: Set[PartitionId]): Seq[PartitionId] =
     all.filterNot(completed.contains)
-
-  /** Scalar filtered count (reference: services/validator.py:6-36). */
-  def countWhere(df: DataFrame, pred: Column): Long = df.filter(pred).count()
 }

@@ -1,5 +1,6 @@
 package graft.orchestrate
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -179,6 +180,14 @@ final class Migrator(
     val run = copyInWaves(table, src, withKeys, keys, staging, work,
       srcCounts, identity[Long], 0L)(Partitions.countsByPartition(_, keys))
     val (checks, migratedRows) = (run.checks, run.rows)
+    // A rerun after a crash between the publish and the Completed mark
+    // finds every partition checkpointed and staging already moved to
+    // destRoot: gate the published copy and skip the publish.
+    val fs = new Path(destRoot)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val published = work.isEmpty && !fs.exists(new Path(staging)) &&
+      fs.exists(new Path(destRoot))
+    val audited = if (published) destRoot else staging
     run.failure.foreach { case (part, srcCount, dstCount) =>
       // Validation gate (A35): abort, do NOT checkpoint, source intact.
       checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
@@ -191,7 +200,7 @@ final class Migrator(
     // Full-table validation gate (migration.py:510-518) — one scan per side.
     val totalSrc = srcCounts.values.sum
     val totalDst = spark.read
-      .option("basePath", staging).parquet(staging).count()
+      .option("basePath", audited).parquet(audited).count()
     if (totalDst != totalSrc) {
       checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
       return TableResult(table, TableStatus.Failed, allParts.size,
@@ -208,7 +217,7 @@ final class Migrator(
       val srcSums = graft.operators.Validate.checksumByPartition(
         withKeys, keys, dataCols)
       val dstSums = graft.operators.Validate.checksumByPartition(
-        CopyService.readHive(spark, staging, src.schema, keys)
+        CopyService.readHive(spark, audited, src.schema, keys)
           .select((keys ++ dataCols).map(col): _*),
         keys, dataCols)
       if (!graft.operators.Validate.checksumsMatch(srcSums, dstSums)) {
@@ -223,11 +232,13 @@ final class Migrator(
 
     // Audit passed → publish (the safe swap), without the leftovers of
     // any write job killed mid-wave in an earlier run.
-    CopyService.dropAbortedWrites(spark, staging)
-    CopyService.publish(spark, staging, destRoot)
+    if (!published) {
+      CopyService.dropAbortedWrites(spark, staging)
+      CopyService.publish(spark, staging, destRoot)
+    }
 
     if (dropSource) srcPathToDrop.foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
+      val hp = new Path(p)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
     }
 
@@ -270,7 +281,7 @@ final class Migrator(
       val dataCols = src.columns.toSeq.filterNot(keys.contains)
       val srcState = graft.operators.Validate.checksumByPartition(
         withKeys, keys, dataCols)
-      val destPath = new org.apache.hadoop.fs.Path(destRoot)
+      val destPath = new Path(destRoot)
       val destFs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // Schema gate BEFORE any data compare: a drifted data-column set
       // or type makes per-partition checksums meaningless (and a
@@ -372,23 +383,6 @@ final class Migrator(
       System.err.println(s"[graft] ${name.qualified} is a view over " +
         s"${base.qualified}; migrating the base table")
     migrateTable(base, spark.table(base.qualified), keys, keyExprs, destRoot)
-  }
-
-  /** Full-database mode (reference: migration.py:544-563): sequential
-    * per-table migration, log-and-continue on failure.
-    */
-  def migrateAll(
-      tables: Seq[(TableRef, DataFrame, Seq[String], Seq[Column], String)],
-      mode: String = "full",
-      db: String = ""): MigrationReport = {
-    val results = tables.map { case (ref, src, keys, exprs, dest) =>
-      try migrateTable(ref, src, keys, exprs, dest)
-      catch {
-        case e: Exception =>
-          TableResult(ref, TableStatus.Failed, 0, 0, 0L, Nil, Some(e.getMessage))
-      }
-    }
-    MigrationReport(mode, db, results)
   }
 }
 

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 import graft.model._
 
@@ -12,12 +13,36 @@ import graft.model._
   * + results incl. per-partition check_results + summary counts). The
   * reference's `start_time` quirk — report-generation time, not run start
   * (report.py:42) — is fixed by threading the real start time.
+  *
+  * Every JSON report the CLI writes (migration, dq, vacuum, curate)
+  * goes through this one mapper, so string values are escaped by the
+  * JSON writer, never by hand.
   */
 object ReportService {
 
-  private val mapper = new ObjectMapper()
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  def toJson(report: MigrationReport, startTimeMillis: Long): String = {
+  /** Pretty-printed JSON of Java or Scala maps, sequences and options
+    * (an option renders as its value or null; a `ListMap` keeps its
+    * field order).
+    */
+  private def json(value: Any): String =
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(value)
+
+  /** Write `json(value)` to `<reportDir>/<fileName>`. */
+  def writeJson(reportDir: String, fileName: String, value: Any): Path = {
+    val dir = Paths.get(reportDir)
+    Files.createDirectories(dir)
+    val path = dir.resolve(fileName)
+    Files.writeString(path, json(value))
+    path
+  }
+
+  def toJson(report: MigrationReport, startTimeMillis: Long): String =
+    json(tree(report, startTimeMillis))
+
+  private def tree(report: MigrationReport,
+      startTimeMillis: Long): java.util.Map[String, Object] = {
     val root = new java.util.LinkedHashMap[String, Object]()
 
     val info = new java.util.LinkedHashMap[String, Object]()
@@ -57,21 +82,17 @@ object ReportService {
     summary.put("failed", Int.box(report.failedCount))
     summary.put("skipped", Int.box(report.skippedCount))
     root.put("summary", summary)
-
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
+    root
   }
 
   /** Write `reports/…_migration_report_{ts}.json` (report.py:64-83). */
   def write(report: MigrationReport, reportDir: String,
       startTimeMillis: Long): Path = {
-    val dir = Paths.get(reportDir)
-    Files.createDirectories(dir)
     val ts = java.time.format.DateTimeFormatter
       .ofPattern("yyyyMMdd_HHmmss")
       .withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.now())
-    val path = dir.resolve(s"graft_migration_report_$ts.json")
-    Files.writeString(path, toJson(report, startTimeMillis))
-    path
+    writeJson(reportDir, s"graft_migration_report_$ts.json",
+      tree(report, startTimeMillis))
   }
 }

@@ -60,10 +60,8 @@ object DedupQueries {
       val corpus = d.crossJoin(broadcast(cut))
         .filter(col("doc_id") < col("cut")).drop("cut")
       Dedup.writeBandIndex(corpus, "doc_id", "text", t)
-      val et = graft.sources.CatalogOps.liveEpochTable(s, t)
-      val loc = s.sql(s"DESC FORMATTED ${et.qualified}")
-        .filter(col("col_name") === "Location").head().getString(1)
-      graft.sources.Scratch.track(new java.net.URI(loc).getPath)
+      graft.sources.Scratch.trackTable(s,
+        graft.sources.CatalogOps.liveEpochTable(s, t))
       t
     }
 

@@ -46,13 +46,11 @@ object TextQueries {
         d.filter(TA.hashSplit(col("doc_id")) === "train"),
         "doc_id", "text", t)
       // nonce-scoped warehouse files die with the JVM like tmp scratch
-      // (the index name is an epoch VIEW — DESC the live epoch TABLE,
+      // (the index name is an epoch VIEW — track the live epoch TABLE,
       // which owns the files; queries never compact, so e0 is the only
       // epoch this JVM creates)
-      val et = graft.sources.CatalogOps.liveEpochTable(s, t)
-      val loc = s.sql(s"DESC FORMATTED ${et.qualified}")
-        .filter(col("col_name") === "Location").head().getString(1)
-      graft.sources.Scratch.track(new java.net.URI(loc).getPath)
+      graft.sources.Scratch.trackTable(s,
+        graft.sources.CatalogOps.liveEpochTable(s, t))
       t
     }
 

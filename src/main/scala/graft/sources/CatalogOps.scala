@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.StructType
 
 import graft.model.{PartitionId, TableRef}
@@ -12,7 +13,7 @@ import graft.model.{PartitionId, TableRef}
   *    migration.py:424-426 queries system.tables) → [[tableExists]]
   *  - table enumeration excluding views (migration.py:548-550 `NOT IN
   *    ('View','MaterializedView')`) → [[listDataTables]]
-  *  - DDL introspection `SHOW CREATE TABLE` (migration.py:21-46; the
+  *  - DDL introspection `SHOW CREATE` (migration.py:21-46; the
   *    reference treats the DDL as an opaque string and regex-rewrites it,
   *    A27/A28) → [[schemaOf]] + [[createBackupTable]]: schema cloning is
   *    STRUCTURAL here — the storage-policy regex splice collapses to a
@@ -37,13 +38,13 @@ object CatalogOps {
   // which can never strand an in-flight reader the way the previous
   // rename-aside table swap could (a swap moves the files a planned
   // query is about to open). One superseded epoch is retained as grace
-  // for readers that resolved just before the flip; crash mid-write
-  // leaves an unreferenced epoch table the next publish overwrites.
+  // for readers that resolved just before the flip; a crash mid-write
+  // leaves an unreferenced epoch table the next publish drops and
+  // rewrites.
 
-  // matches the epoch table in the view's authored `FROM db.name__eN`.
   // The base index name must never carry the `__e<digits>` infix —
-  // [[publishEpoch]] enforces it, because a base named `foo__e2` would
-  // make the DDL-text epoch resolution ambiguous.
+  // [[publishEpoch]] enforces it, so an epoch table name parses back to
+  // exactly one (base, epoch) pair.
   private val EpochSuffix = "__e(\\d+)".r
 
   private def requireEpochSafeName(ref: TableRef): Unit =
@@ -55,34 +56,27 @@ object CatalogOps {
   def epochRef(ref: TableRef, n: Long): TableRef =
     TableRef(ref.db, s"${ref.table}__e$n")
 
-  /** True iff `ref` is bound to a plain TABLE (not the epoch VIEW) —
-    * an index persisted under the pre-epoch rename-swap layout.
+  /** Fails when `ref` is bound to a plain TABLE rather than the epoch
+    * VIEW — the pre-epoch layout, which no epoch reader or writer
+    * touches.
     */
-  private def isLegacyTable(spark: SparkSession, ref: TableRef): Boolean =
-    tableExists(spark, ref) &&
-      spark.catalog.getTable(ref.db, ref.table).tableType != "VIEW"
+  private def rejectPlainTable(spark: SparkSession, ref: TableRef): Unit =
+    if (spark.catalog.getTable(ref.db, ref.table).tableType != "VIEW")
+      throw new IllegalStateException(
+        s"index ${ref.qualified} exists as a plain TABLE — the " +
+          "pre-epoch layout; drop it and rebuild the index under the " +
+          "epoch-view layout")
 
   /** The epoch number the index view currently points at (None if the
-    * view does not exist — index never built). A name bound to a plain
-    * TABLE is the pre-epoch layout: fail with an explicit migration
-    * message instead of the misleading "view does not exist"
-    * ([[publishEpoch]] adopts it automatically).
+    * view does not exist — index never built), read off the epoch
+    * table the view's analyzed plan reads.
     */
   def currentEpoch(spark: SparkSession, ref: TableRef): Option[Long] =
     if (!tableExists(spark, ref)) None
-    else if (isLegacyTable(spark, ref))
-      throw new IllegalStateException(
-        s"index ${ref.qualified} exists as a plain TABLE — the " +
-          "pre-epoch layout. Run a publish (publishEpoch adopts it as " +
-          "epoch 0) or rebuild the index under the epoch-view layout.")
     else {
-      val ddl = spark.sql(s"SHOW CREATE TABLE ${ref.qualified}")
-        .head().getString(0)
-      // LAST match: the view body's `FROM db.name__eN` trails the view
-      // name in the DDL text, so even a (rejected going forward, but
-      // possibly pre-existing) base name containing `__e<digits>`
-      // resolves to the referenced epoch table, not itself.
-      EpochSuffix.findAllMatchIn(ddl).toSeq.lastOption.map(_.group(1).toLong)
+      rejectPlainTable(spark, ref)
+      EpochSuffix.findFirstMatchIn(resolveToBaseTable(spark, ref).table)
+        .map(_.group(1).toLong)
     }
 
   /** The live epoch TABLE behind the index view — for writers
@@ -101,101 +95,27 @@ object CatalogOps {
     * `retain` just-superseded ones are dropped (size `retain` to the
     * slowest concurrent reader; default ONE superseded epoch of
     * grace). Used by both the initial build (epoch 0) and every
-    * rebuild/compaction. An index persisted under the pre-epoch layout
-    * (the name bound to a plain TABLE) is ADOPTED first: the legacy
-    * table renames to `__e0` and the view is created over it, after
-    * which the new epoch publishes as `__e1` and the adopted table
-    * serves as the grace epoch. The adoption rename is the one-time
-    * migration move — run it quiesced like any OPTIMIZE.
+    * rebuild/compaction. A name bound to a plain TABLE is refused.
+    *
+    * Crash rule: a table already bound to the new epoch's name can only
+    * be left by a publish that died before its view flip, so it is
+    * dropped before the write.
     */
-  /** Provenance marker the adoption path stamps on the legacy table
-    * BEFORE the rename to `__e0`: crash recovery must distinguish an
-    * atomically-renamed adoption (complete legacy data — safe to
-    * rebind the view over) from a crashed first-epoch `saveAsTable`
-    * (possibly partial debris — drop it, never rebind it live). The
-    * property travels with the rename; a crash between SET and RENAME
-    * leaves a harmlessly-marked base table the next publish adopts
-    * normally.
-    */
-  private val AdoptedProp = "graft.epoch.adopted"
-
-  private def hasAdoptionMarker(spark: SparkSession, ref: TableRef): Boolean =
-    spark.sql(s"SHOW TBLPROPERTIES ${ref.qualified}")
-      .collect().exists(r =>
-        r.getString(0) == AdoptedProp && r.getString(1) == "true")
-
   def publishEpoch(spark: SparkSession, ref: TableRef, retain: Int = 1)
       (write: TableRef => Unit): Unit =
       IndexLock.withWriterLock(spark, ref.qualified) {
     require(retain >= 1, s"publishEpoch: retain must be >= 1 ($retain)")
     requireEpochSafeName(ref)
-    if (isLegacyTable(spark, ref)) {
-      spark.sql(s"ALTER TABLE ${ref.qualified} " +
-        s"SET TBLPROPERTIES ('$AdoptedProp'='true')")
-      renameTable(spark, ref, epochRef(ref, 0))
-      spark.sql(s"CREATE VIEW ${ref.qualified} AS " +
-        s"SELECT * FROM ${epochRef(ref, 0).qualified}")
-    } else if (!tableExists(spark, ref) &&
-        spark.catalog.databaseExists(ref.db)) {
-      // crash recovery: the base name is unbound but orphan epoch
-      // tables exist. Two indistinguishable-by-name causes, told apart
-      // by the adoption marker:
-      //  - a prior ADOPTION renamed the legacy table to __eN but died
-      //    before CREATE VIEW (marker present — the rename was atomic,
-      //    the data is the complete legacy index): rebind the view
-      //    over the HIGHEST marked orphan before computing `next`,
-      //    otherwise next would be 0 and the new epoch's write would
-      //    overwrite the adopted data instead of keeping it as grace;
-      //  - a first-epoch saveAsTable crashed mid-write before its
-      //    CREATE VIEW (marker absent — the data may be partial):
-      //    DROP it. Rebinding would publish possibly-torn data live
-      //    (or leave it pinnable as a grace epoch); the caller is
-      //    about to write this epoch fresh anyway.
-      val prefix = s"${ref.table}__e"
-      val orphans = spark.catalog.listTables(ref.db).collect()
-        .filter(t => t.tableType != "VIEW" && t.name.startsWith(prefix))
-        .map(_.name.stripPrefix(prefix))
-        .filter(n => n.nonEmpty && n.forall(_.isDigit))
-        .map(_.toLong)
-      val (adopted, debris) = orphans.partition(n =>
-        hasAdoptionMarker(spark, epochRef(ref, n)))
-      // an unmarked orphan ABOVE the highest marked one is not
-      // classifiable: it could be a torn write (drop it) or a complete
-      // newer epoch whose view binding was lost AFTER an earlier
-      // adoption (a partial dropEpochIndex crash, a manually dropped
-      // view) — auto-dropping the latter would silently regress the
-      // index to the stale adopted snapshot. No automatic flow
-      // produces this shape, so refuse loudly instead of guessing;
-      // unmarked orphans BELOW the adoption are provably older than
-      // its complete data and drop safely.
-      if (adopted.nonEmpty && debris.exists(_ > adopted.max))
-        throw new IllegalStateException(
-          s"publishEpoch recovery for ${ref.qualified}: unmarked orphan " +
-            s"epoch(s) ${debris.filter(_ > adopted.max).sorted.mkString(",")} " +
-            s"exist ABOVE adopted epoch ${adopted.max}; dropping them could " +
-            "regress the index to the older adopted snapshot. Inspect the " +
-            "orphans and either DROP the torn higher epochs or recreate " +
-            "the view over the newest complete one, then re-run.")
-      debris.foreach(n => dropTable(spark, epochRef(ref, n)))
-      if (adopted.nonEmpty)
-        spark.sql(s"CREATE VIEW ${ref.qualified} AS " +
-          s"SELECT * FROM ${epochRef(ref, adopted.max).qualified}")
-    }
     val next = currentEpoch(spark, ref).map(_ + 1).getOrElse(0L)
+    dropTable(spark, epochRef(ref, next))
     write(epochRef(ref, next))
     spark.sql(s"CREATE OR REPLACE VIEW ${ref.qualified} AS " +
       s"SELECT * FROM ${epochRef(ref, next).qualified}")
     // grace: keep `retain` superseded epochs for in-flight readers;
     // drop older ones (plus any crashed-write debris below the live
     // epoch)
-    val prefix = s"${ref.table}__e"
-    spark.catalog.listTables(ref.db).collect()
-      .filter(t => t.name.startsWith(prefix) && t.tableType != "VIEW")
-      .foreach { t =>
-        val n = t.name.stripPrefix(prefix)
-        if (n.forall(_.isDigit) && n.toLong < next - retain)
-          dropTable(spark, TableRef(ref.db, t.name))
-      }
+    epochs(spark, ref).filter(_ < next - retain)
+      .foreach(n => dropTable(spark, epochRef(ref, n)))
   }
 
   /** Committed epoch numbers of a catalog index (epoch tables still
@@ -237,20 +157,15 @@ object CatalogOps {
     * and returns the epoch number that was LIVE at entry — now
     * superseded, hence immutable. Read it back with [[tableAtEpoch]]
     * for the duration of the pinned run; it survives `retain` further
-    * publishes. A legacy plain-table index pins as the adopted
-    * epoch 0.
+    * publishes.
     */
   def pinSnapshot(spark: SparkSession, ref: TableRef)
       (publishRun: => Unit): Long =
       IndexLock.withWriterLock(spark, ref.qualified) {
-    val pre: Option[Long] =
-      if (!tableExists(spark, ref)) None
-      else if (isLegacyTable(spark, ref)) Some(-1L) // adopts as epoch 0
-      else currentEpoch(spark, ref)
-    require(pre.isDefined,
-      s"pinSnapshot: index ${ref.qualified} does not exist — nothing to pin")
+    val pin = currentEpoch(spark, ref).getOrElse(
+      throw new IllegalArgumentException(
+        s"pinSnapshot: index ${ref.qualified} does not exist — nothing to pin"))
     publishRun
-    val pin = if (pre.get == -1L) 0L else pre.get
     val now = currentEpoch(spark, ref)
     require(now.exists(_ > pin),
       s"pinSnapshot: publishRun did not publish a new epoch of " +
@@ -311,6 +226,18 @@ object CatalogOps {
     spark.catalog.listTables(db).collect()
       .filter(t => t.tableType != "VIEW")
       .map(_.name).toSeq
+
+  /** Where a catalog entry's files live (None for a view, which has no
+    * storage) and its bucket count (None when unbucketed), read from the
+    * session catalog's table metadata.
+    */
+  final case class Storage(location: Option[java.net.URI], buckets: Option[Int])
+
+  def storageOf(spark: SparkSession, ref: TableRef): Storage = {
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      TableIdentifier(ref.table, Some(ref.db)))
+    Storage(meta.storage.locationUri, meta.bucketSpec.map(_.numBuckets))
+  }
 
   /** Structural schema introspection (replaces SHOW CREATE + regex). */
   def schemaOf(spark: SparkSession, ref: TableRef): StructType =

@@ -27,15 +27,10 @@ import org.apache.spark.sql.SparkSession
   * pointer file to tear because the commit marker lives inside the
   * epoch itself.
   *
-  * Legacy layout: indexes persisted under the pre-epoch flat layout
-  * (parquet files + `_SUCCESS` directly under `base`, no `e<N>`
-  * subdirectory) stay READABLE — [[live]] resolves the base dir itself
-  * when no epoch exists but the flat commit marker does — and the
-  * first [[publish]] ADOPTS them: the flat files move into `e0`
-  * (same-filesystem renames) before the new epoch writes as `e1`, so
-  * the adopted content serves as the grace epoch exactly like a
-  * normally-published predecessor. The one-time adoption move is the
-  * only rename in the lifecycle; run it quiesced like any OPTIMIZE.
+  * A base holding parquet files and `_SUCCESS` directly (the flat
+  * layout no epoch-aware build writes) is rejected: [[live]] and
+  * [[publish]] fail on it and leave its files untouched — rebuild the
+  * index.
   *
   * Appends do NOT create epochs: batch growth lands new files inside
   * the live epoch (an append is already reader-safe — a concurrent
@@ -69,27 +64,27 @@ object EpochDir {
     }.flatten.sortBy(_._1)
   }
 
-  /** True iff `base` holds a committed PRE-EPOCH flat index: a
-    * `_SUCCESS` marker directly under base and no epoch subdirectory.
+  /** Fails when `base` holds a flat index — a `_SUCCESS` marker
+    * directly under it; callers check only when no epoch is committed.
     */
-  private def legacyFlat(spark: SparkSession, base: String): Boolean = {
-    val f = fs(spark, base)
-    f.exists(new Path(base, "_SUCCESS")) &&
-      committed(spark, base).isEmpty
-  }
+  private def rejectFlat(spark: SparkSession, base: String): Unit =
+    if (fs(spark, base).exists(new Path(base, "_SUCCESS")))
+      throw new IllegalStateException(
+        s"EpochDir: pre-epoch flat layout under $base (data files and " +
+          "_SUCCESS directly under it, no e<N> epoch) — rebuild the index")
 
   /** The live (highest committed) epoch path — what every reader and
-    * every in-place append opens. A committed legacy flat layout (no
-    * epoch yet) resolves to `base` itself, so pre-epoch indexes stay
-    * readable without migration.
+    * every in-place append opens.
     */
   def live(spark: SparkSession, base: String): String = {
     val cs = committed(spark, base)
-    if (cs.nonEmpty) cs.last._2.toString
-    else if (legacyFlat(spark, base)) base
-    else throw new IllegalArgumentException(
-      s"EpochDir: no committed epoch under $base " +
-        "(index missing or its initial write never finished)")
+    if (cs.isEmpty) {
+      rejectFlat(spark, base)
+      throw new IllegalArgumentException(
+        s"EpochDir: no committed epoch under $base " +
+          "(index missing or its initial write never finished)")
+    }
+    cs.last._2.toString
   }
 
   /** Committed epoch numbers under `base`, ascending — the snapshots a
@@ -123,28 +118,6 @@ object EpochDir {
           "slowest pinned run"))
   }
 
-  /** One-time adoption of a legacy flat index as epoch 0: every entry
-    * directly under base (files and non-epoch dirs, `_SUCCESS`
-    * included) moves into `base/e0` via same-filesystem renames, after
-    * which the normal resolver sees a committed epoch 0.
-    */
-  private def adoptLegacy(spark: SparkSession, base: String): Unit = {
-    val f = fs(spark, base)
-    val e0 = new Path(base, "e0")
-    f.mkdirs(e0)
-    f.listStatus(new Path(base)).foreach { st =>
-      if (st.getPath.getName != "e0") {
-        val dst = new Path(e0, st.getPath.getName)
-        // HDFS reports rename failure by RETURNING FALSE, not throwing;
-        // a silently-dropped file here would publish a grace epoch
-        // missing part of the legacy index, so fail loud instead.
-        require(f.rename(st.getPath, dst),
-          s"EpochDir.adoptLegacy: rename ${st.getPath} -> $dst failed; " +
-            "aborting adoption before any new epoch publishes")
-      }
-    }
-  }
-
   /** BIT-EXACT snapshot pin: runs `publishRun` (any OPTIMIZE that ends
     * in a [[publish]] of this base — e.g.
     * [[graft.operators.Similarity.compactIvfPqIndex]]) under the
@@ -158,17 +131,14 @@ object EpochDir {
     * which the OPTIMIZE cadence owes anyway; run pins at snapshot
     * boundaries (training-run starts) and the retired epoch doubles
     * as the run's reproducible corpus for `retain` further publishes
-    * (size `retain` to the longest pinned run). A legacy flat index
-    * pins as the adopted epoch 0.
+    * (size `retain` to the longest pinned run).
     */
   def pinSnapshot(spark: SparkSession, base: String)
       (publishRun: => Unit): Long = IndexLock.withWriterLock(spark, base) {
-    val pre = committed(spark, base).lastOption.map(_._1)
-    require(pre.isDefined || legacyFlat(spark, base),
-      s"pinSnapshot: no committed epoch or legacy index under $base — " +
-        "nothing to pin")
+    val pin = committed(spark, base).lastOption.map(_._1).getOrElse(
+      throw new IllegalArgumentException(
+        s"pinSnapshot: no committed epoch under $base — nothing to pin"))
     publishRun
-    val pin = pre.getOrElse(0L) // legacy flat adopts as epoch 0
     val now = committed(spark, base).lastOption.map(_._1)
     require(now.exists(_ > pin),
       s"pinSnapshot: publishRun did not publish a new epoch under " +
@@ -184,14 +154,13 @@ object EpochDir {
     * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` fails
     * loud instead of silently publishing invisible epochs), then purge
     * epochs older than the `retain` just-superseded ones. Used by both
-    * the initial build (epoch 0) and every rebuild/compaction; a
-    * legacy flat index is adopted as epoch 0 first (see class doc).
+    * the initial build (epoch 0) and every rebuild/compaction.
     */
   def publish(spark: SparkSession, base: String, retain: Int = 1)
       (write: String => Unit): Unit = IndexLock.withWriterLock(spark, base) {
     require(retain >= 1, s"EpochDir.publish: retain must be >= 1 ($retain)")
-    if (legacyFlat(spark, base)) adoptLegacy(spark, base)
     val before = committed(spark, base)
+    if (before.isEmpty) rejectFlat(spark, base)
     val next = before.lastOption.map(_._1 + 1).getOrElse(0L)
     write(s"$base/e$next")
     // commit check BEFORE the purge: if the writer is configured to

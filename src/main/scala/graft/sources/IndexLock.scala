@@ -25,8 +25,8 @@ import graft.orchestrate.TableLock
   * internally). The lock directory must be POSIX-visible to every
   * writer process — same contract as the migration lock; on object
   * stores point `spark.graft.index.lockDir` at a shared coordinator
-  * path. Lock files live OUTSIDE the index directories (an index-dir
-  * file would be swept up by legacy adoption's rename pass).
+  * path. Lock files live OUTSIDE the index directories, so an index
+  * directory holds only epochs.
   */
 object IndexLock {
 

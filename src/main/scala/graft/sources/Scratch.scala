@@ -77,6 +77,11 @@ object Scratch {
     path
   }
 
+  /** [[track]] the storage location of a nonce-named catalog TABLE. */
+  def trackTable(spark: org.apache.spark.sql.SparkSession,
+      ref: graft.model.TableRef): Unit =
+    CatalogOps.storageOf(spark, ref).location.foreach(l => track(l.getPath))
+
   /** Deterministic-within-JVM scratch NAME for (tag, key) — a valid
     * identifier, usable as a catalog table name as well as a path
     * segment (catalog tables land in the shared warehouse dir, so they
@@ -174,23 +179,20 @@ object Scratch {
     * S3 hiccup is not reproducible on a local warehouse).
     */
   private[sources] def statTableMtime(
-      spark: org.apache.spark.sql.SparkSession, qualified: String)
-      : Option[Long] = {
-    val loc = spark.sql(s"DESC FORMATTED $qualified").collect()
-      .find(_.getString(0).trim == "Location").map(_.getString(1))
-    loc.flatMap { l =>
+      spark: org.apache.spark.sql.SparkSession, ref: graft.model.TableRef)
+      : Option[Long] =
+    CatalogOps.storageOf(spark, ref).location.flatMap { l =>
       val p = new org.apache.hadoop.fs.Path(l)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) Some(fs.getFileStatus(p).getModificationTime)
       else None
     }
-  }
 
   def vacuumCatalog(spark: org.apache.spark.sql.SparkSession, db: String,
       olderThanHours: Double, apply: Boolean,
       nowMs: Long = System.currentTimeMillis(),
-      statMtime: (org.apache.spark.sql.SparkSession, String) => Option[Long]
-        = statTableMtime): Seq[VacuumEntry] = {
+      statMtime: (org.apache.spark.sql.SparkSession, graft.model.TableRef)
+        => Option[Long] = statTableMtime): Seq[VacuumEntry] = {
     require(olderThanHours >= 0, "olderThanHours must be >= 0")
     if (!spark.catalog.databaseExists(db)) return Nil
     val EpochSuffix = "__e\\d+$".r
@@ -204,7 +206,7 @@ object Scratch {
       // warehouse mtime through the HADOOP filesystem (a java.io.File
       // of an hdfs:/s3a: location would throw, get swallowed, and
       // misread a live remote table as infinitely old). 'Stat THREW'
-      // (S3 hiccup, permission error, DESC parse change) is NOT the
+      // (S3 hiccup, permission error, catalog lookup failure) is NOT the
       // same as 'location absent': a thrown stat contributes no age
       // sample but must never degrade to "expired" — if every member's
       // stat failed, the group could be another JVM's LIVE scratch
@@ -212,7 +214,7 @@ object Scratch {
       var statFailed = false
       val ages = members.flatMap { case (_, t) =>
         if (t.tableType == "VIEW") None
-        else scala.util.Try(statMtime(spark, s"$db.${t.name}")) match {
+        else scala.util.Try(statMtime(spark, graft.model.TableRef(db, t.name))) match {
           case scala.util.Success(a) => a
           case scala.util.Failure(_) => statFailed = true; None
         }

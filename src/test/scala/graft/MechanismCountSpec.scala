@@ -3,9 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps each piece of scaffolding at one implementation: sessions are
-  * built only by [[GraftSession]], and the query layer and the source
+  * built only by [[GraftSession]], the query layer and the source
   * layer cache standing artifacts only through
-  * [[graft.sources.ArtifactRegistry]].
+  * [[graft.sources.ArtifactRegistry]], and catalog metadata is read
+  * only through [[graft.sources.CatalogOps]] — with no pre-epoch
+  * adoption path left in either epoch store.
   */
 class MechanismCountSpec extends AnyFunSuite {
 
@@ -34,5 +36,18 @@ class MechanismCountSpec extends AnyFunSuite {
     val hits = mentioning("computeIfAbsent").filter(p =>
       p.startsWith("graft/queries/") || p == "graft/sources/Sources.scala")
     assert(hits.isEmpty, s"hand-rolled caches: $hits")
+  }
+
+  test("DESC FORMATTED appears only in sources/CatalogOps.scala") {
+    val hits = mentioning("DESC FORMATTED")
+    assert(hits.forall(_ == "graft/sources/CatalogOps.scala"),
+      s"hand-parsed DESC FORMATTED: $hits")
+  }
+
+  test("no SHOW CREATE TABLE or pre-epoch adoption code in src/main") {
+    Seq("SHOW CREATE TABLE", "legacyFlat", "adoptLegacy",
+        "hasAdoptionMarker", "graft.epoch.adopted").foreach { t =>
+      assert(mentioning(t).isEmpty, s"$t in ${mentioning(t)}")
+    }
   }
 }

@@ -43,6 +43,30 @@ class MigratorSpec extends SparkFunSuite {
     assert(ckpt.tableProgress("testdb", "lineitem").get.status == TableStatus.Completed)
   }
 
+  test("rerun after a crash between publish and the Completed mark converges") {
+    val (dir, ckpt, mig) = freshEnv()
+    val dest = s"$dir/dest/lineitem"
+    val ref = TableRef("testdb", "lineitem")
+    assert(mig.migrateTable(ref, lineitem, keys, keyExprs, dest).status
+      == TableStatus.Completed)
+    // the crash state: staging already published into dest and every
+    // partition checkpointed, but the table never marked Completed
+    ckpt.markStatus("testdb", "lineitem", TableStatus.Running)
+    assert(!Files.exists(Paths.get(s"$dest.staging")))
+    // the rerun gates the published copy (count and checksum) instead
+    // of the vanished staging dir
+    val rerun = new Migrator(spark, ckpt,
+      lockDir = dir.resolve("locks").toString, checksumValidation = true)
+    val res = rerun.migrateTable(ref, lineitem, keys, keyExprs, dest)
+    assert(res.status == TableStatus.Completed, res.error)
+    assert(ckpt.tableProgress("testdb", "lineitem").get.status
+      == TableStatus.Completed)
+    val back = spark.read.option("basePath", dest).parquet(dest)
+      .select(lineitem.columns.map(col).toIndexedSeq: _*)
+    assert(back.count() == lineitem.count())
+    assert(back.exceptAll(lineitem).isEmpty && lineitem.exceptAll(back).isEmpty)
+  }
+
   test("migrate through a view name: resolves to the base table (A8 analog)") {
     val (dir, ckpt, mig) = freshEnv()
     val s = spark
@@ -667,6 +691,27 @@ class MigratorSpec extends SparkFunSuite {
     assert(run(s"$dir/c.parquet",
       Map("baseline" -> baseline, "drift-tolerance" -> "1",
         "psi-threshold" -> "1000"), 4L) == 0)
+  }
+
+  test("dq report keeps control characters in string min/max: parses and round-trips") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("dqctl")
+    val reports = s"$dir/reports"
+    def run(extra: Map[String, String], at: Long): Int =
+      graft.MigrateCli.runDq(s, Map("report-dir" -> reports) ++ extra,
+        graft.model.MigrationConfig(mode = "dq",
+          sourcePath = s"$dir/t.parquet"), at)
+    Seq("a\nb", "c\td").toDF("txt").write.parquet(s"$dir/t.parquet")
+    assert(run(Map.empty, 1L) == 0)
+    val baseline = s"$reports/dq_report_1.json"
+    val profile = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(baseline)).get(0)
+    assert(profile.get("column").asText == "txt")
+    assert(profile.get("min").asText == "a\nb")
+    assert(profile.get("max").asText == "c\td")
+    // the report reads back as the next run's baseline: no drift
+    assert(run(Map("baseline" -> baseline), 2L) == 0)
   }
 
   test("report JSON carries reference field names") {

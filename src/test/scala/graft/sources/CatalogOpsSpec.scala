@@ -114,30 +114,38 @@ class CatalogOpsSpec extends SparkFunSuite {
     } finally CatalogOps.dropEpochIndex(s, ref)
   }
 
-  test("epoch views: a legacy plain-table index is adopted on first publish") {
+  test("publishEpoch refuses a name bound to a plain TABLE, table intact") {
     val s = spark
     import s.implicits._
     s.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    val ref = TableRef("graft_test", "epoch_legacy")
+    val ref = TableRef("graft_test", "epoch_plain")
+    def cleanup(): Unit = {
+      if (CatalogOps.tableExists(s, ref) &&
+          s.catalog.getTable(ref.db, ref.table).tableType != "VIEW")
+        CatalogOps.dropTable(s, ref)
+      CatalogOps.dropEpochIndex(s, ref)
+    }
     try {
       // pre-epoch layout: the index name bound to a plain TABLE
-      CatalogOps.dropEpochIndex(s, ref)
+      cleanup()
       Seq((1L, "old")).toDF("k", "v").write.saveAsTable(ref.qualified)
       // reads through currentEpoch/liveEpochTable fail with an explicit
       // migration message, not a misleading "view does not exist"
       val e = intercept[IllegalStateException](CatalogOps.currentEpoch(s, ref))
       assert(e.getMessage.contains("pre-epoch layout"))
-      // publish adopts: legacy table becomes __e0 (grace), new epoch
-      // publishes as __e1 and the view serves it
-      CatalogOps.publishEpoch(s, ref)(t =>
-        Seq((2L, "new")).toDF("k", "v").write.saveAsTable(t.qualified))
-      assert(CatalogOps.currentEpoch(s, ref).contains(1L))
+      var wrote = false
+      val p = intercept[IllegalStateException] {
+        CatalogOps.publishEpoch(s, ref) { t =>
+          wrote = true
+          Seq((2L, "new")).toDF("k", "v").write.saveAsTable(t.qualified)
+        }
+      }
+      assert(p.getMessage.contains("pre-epoch layout"), p.getMessage)
+      assert(!wrote && CatalogOps.epochs(s, ref).isEmpty)
+      assert(s.catalog.getTable(ref.db, ref.table).tableType != "VIEW")
       assert(s.table(ref.qualified).as[(Long, String)].collect().toSeq ==
-        Seq((2L, "new")))
-      assert(s.table(CatalogOps.epochRef(ref, 0).qualified)
-        .as[(Long, String)].collect().toSeq == Seq((1L, "old")),
-        "the adopted legacy table must survive as the grace epoch")
-    } finally CatalogOps.dropEpochIndex(s, ref)
+        Seq((1L, "old")), "the plain table must be left as it was")
+    } finally cleanup()
   }
 
   test("resolveToBaseTable: views (nested too) resolve to the single base; join views fail") {
@@ -175,36 +183,6 @@ class CatalogOpsSpec extends SparkFunSuite {
     }
   }
 
-  test("epoch views: an orphan __e0 from a crashed adoption is rebound, not overwritten") {
-    val s = spark
-    import s.implicits._
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    val ref = TableRef("graft_test", "epoch_orphan")
-    try {
-      CatalogOps.dropEpochIndex(s, ref)
-      // simulate a crash between renameTable(ref -> __e0) and CREATE
-      // VIEW during legacy adoption: the epoch table exists (carrying
-      // the adoption marker the rename path stamps BEFORE renaming),
-      // the base name is bound to NOTHING
-      Seq((1L, "adopted")).toDF("k", "v")
-        .write.saveAsTable(CatalogOps.epochRef(ref, 0).qualified)
-      s.sql(s"ALTER TABLE ${CatalogOps.epochRef(ref, 0).qualified} " +
-        "SET TBLPROPERTIES ('graft.epoch.adopted'='true')")
-      assert(!CatalogOps.tableExists(s, ref))
-      // the next publish must detect the orphan, rebind the view over
-      // it, and publish as __e1 — NOT compute next=0 and overwrite the
-      // adopted legacy data
-      CatalogOps.publishEpoch(s, ref)(t =>
-        Seq((2L, "new")).toDF("k", "v").write.saveAsTable(t.qualified))
-      assert(CatalogOps.currentEpoch(s, ref).contains(1L))
-      assert(s.table(ref.qualified).as[(Long, String)].collect().toSeq ==
-        Seq((2L, "new")))
-      assert(s.table(CatalogOps.epochRef(ref, 0).qualified)
-        .as[(Long, String)].collect().toSeq == Seq((1L, "adopted")),
-        "the orphaned adoption must survive as the grace epoch")
-    } finally CatalogOps.dropEpochIndex(s, ref)
-  }
-
   test("epoch views: UNMARKED orphan debris is dropped, never rebound live (ADVICE r18)") {
     val s = spark
     import s.implicits._
@@ -226,46 +204,6 @@ class CatalogOpsSpec extends SparkFunSuite {
         "debris must not advance the epoch counter")
       assert(s.table(ref.qualified).as[(Long, String)].collect().toSeq ==
         Seq((2L, "fresh")), "the torn write must never be served")
-    } finally CatalogOps.dropEpochIndex(s, ref)
-  }
-
-  test("epoch views: recovery REFUSES when unmarked orphans sit ABOVE an adopted epoch (ADVICE r19)") {
-    val s = spark
-    import s.implicits._
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    val ref = TableRef("graft_test", "epoch_coexist")
-    try {
-      CatalogOps.dropEpochIndex(s, ref)
-      // marked __e0 (a completed adoption) AND an unmarked __e2 ABOVE
-      // it, view unbound — a partial dropEpochIndex crash or a
-      // manually dropped view. __e2 could be a COMPLETE newer epoch
-      // whose binding was lost; auto-dropping it would silently
-      // regress the index to the stale adopted snapshot. Recovery must
-      // refuse loudly, leaving both orphans for the operator.
-      Seq((1L, "adopted")).toDF("k", "v")
-        .write.saveAsTable(CatalogOps.epochRef(ref, 0).qualified)
-      s.sql(s"ALTER TABLE ${CatalogOps.epochRef(ref, 0).qualified} " +
-        "SET TBLPROPERTIES ('graft.epoch.adopted'='true')")
-      Seq((2L, "newer")).toDF("k", "v")
-        .write.saveAsTable(CatalogOps.epochRef(ref, 2).qualified)
-      val e = intercept[IllegalStateException] {
-        CatalogOps.publishEpoch(s, ref)(t =>
-          Seq((3L, "x")).toDF("k", "v").write.saveAsTable(t.qualified))
-      }
-      assert(e.getMessage.contains("ABOVE adopted epoch 0"), e.getMessage)
-      assert(CatalogOps.tableExists(s, CatalogOps.epochRef(ref, 0)) &&
-        CatalogOps.tableExists(s, CatalogOps.epochRef(ref, 2)),
-        "refusal must not drop either orphan")
-      assert(!CatalogOps.tableExists(s, ref), "refusal must not rebind")
-      // after the operator resolves the ambiguity (here: drops the
-      // higher orphan as torn), recovery proceeds normally — rebind
-      // over the adoption, publish as the next epoch
-      CatalogOps.dropTable(s, CatalogOps.epochRef(ref, 2))
-      CatalogOps.publishEpoch(s, ref)(t =>
-        Seq((4L, "fresh")).toDF("k", "v").write.saveAsTable(t.qualified))
-      assert(CatalogOps.currentEpoch(s, ref).contains(1L))
-      assert(s.table(ref.qualified).as[(Long, String)].collect().toSeq ==
-        Seq((4L, "fresh")))
     } finally CatalogOps.dropEpochIndex(s, ref)
   }
 

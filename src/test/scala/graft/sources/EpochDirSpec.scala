@@ -3,7 +3,7 @@ package graft.sources
 import graft.SparkFunSuite
 
 /** EpochDir lifecycle edges beyond CompactionSpec's happy path: the
-  * legacy flat-layout read + adoption, the `_SUCCESS` commit-record
+  * rejected pre-epoch flat layout, the `_SUCCESS` commit-record
   * verification (the marksuccessfuljobs=false failure mode), and the
   * configurable grace retention.
   */
@@ -21,24 +21,24 @@ class EpochDirSpec extends SparkFunSuite {
       .filter(f => f.isDirectory && f.getName.matches("e\\d+"))
       .map(_.getName).toSet
 
-  test("legacy flat index stays readable and the first publish adopts it as e0") {
-    val base = tmpDir("epoch_legacy") + "/idx"
+  test("flat layout is rejected by live and publish, files untouched") {
+    val base = tmpDir("epoch_flat") + "/idx"
     // pre-epoch layout: parquet files + _SUCCESS directly under base
     writeEpoch(base, Seq(1L, 2L, 3L))
-    assert(new java.io.File(base, "_SUCCESS").exists())
-    // readers resolve the flat dir itself — no migration required
-    assert(EpochDir.live(spark, base) == base)
-    assert(readIds(EpochDir.live(spark, base)) == Set(1L, 2L, 3L))
-    // first publish adopts: legacy content becomes e0 (the grace
-    // epoch), the new write lands as e1 and is live
-    EpochDir.publish(spark, base)(t => writeEpoch(t, Seq(4L, 5L)))
-    assert(EpochDir.live(spark, base).endsWith("/e1"))
-    assert(readIds(EpochDir.live(spark, base)) == Set(4L, 5L))
-    assert(epochDirs(base) == Set("e0", "e1"))
-    assert(readIds(s"$base/e0") == Set(1L, 2L, 3L),
-      "the adopted legacy content must serve as the grace epoch")
-    assert(!new java.io.File(base, "_SUCCESS").exists(),
-      "the flat commit marker must move into e0 with the data")
+    def listing = new java.io.File(base).list().toSet
+    val before = listing
+    assert(before.contains("_SUCCESS"))
+    val onLive = intercept[IllegalStateException](EpochDir.live(spark, base))
+    assert(onLive.getMessage.contains("pre-epoch flat layout"), onLive.getMessage)
+    var wrote = false
+    val onPublish = intercept[IllegalStateException] {
+      EpochDir.publish(spark, base) { t => wrote = true; writeEpoch(t, Seq(4L)) }
+    }
+    assert(onPublish.getMessage.contains("pre-epoch flat layout"),
+      onPublish.getMessage)
+    assert(!wrote, "publish must not write an e0 that shadows the flat files")
+    assert(listing == before && epochDirs(base).isEmpty)
+    assert(readIds(base) == Set(1L, 2L, 3L))
   }
 
   test("epoch-pinned reads: epochs() lists snapshots, at() resolves them, purged pins fail loud") {
