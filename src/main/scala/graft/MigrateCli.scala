@@ -245,6 +245,147 @@ object MigrateCli {
     } else 0
   }
 
+  /** Migration modes (`single`, `full`, `resync`), exit code RETURNED
+    * instead of exited (spec-drivable in-process). The sink is probed
+    * before any source scan ([[probeDest]]); a failed probe returns 1
+    * before the checkpoint or any destination file is written.
+    */
+  private[graft] def runMigrate(
+      spark: SparkSession,
+      args: Map[String, String],
+      cfg: graft.model.MigrationConfig,
+      start: Long): Int = {
+    probeDest(spark, cfg.destPath).foreach { err =>
+      System.err.println(s"[graft] sink probe failed: $err")
+      return 1
+    }
+    /** Partition expr for one table; tables lacking the named column
+      * fall back to a single constant partition (the no-partition fast
+      * path, reference: migration.py:432-441).
+      */
+    def keyFor(df: org.apache.spark.sql.DataFrame): (String, org.apache.spark.sql.Column) =
+      args.getOrElse("partition-expr", "") match {
+        case s if s.startsWith("month:") =>
+          val c = s.stripPrefix("month:")
+          if (df.columns.contains(c)) (s"${c}_month", date_format(col(c), "yyyy-MM"))
+          else ("part", lit("all"))
+        case s if s.startsWith("date:") =>
+          val c = s.stripPrefix("date:")
+          if (df.columns.contains(c)) (s"${c}_date", date_format(col(c), "yyyy-MM-dd"))
+          else ("part", lit("all"))
+        case "" => throw new IllegalArgumentException("--partition-expr is required")
+        case plain =>
+          if (df.columns.contains(plain)) (plain, col(plain))
+          else ("part", lit("all"))
+      }
+
+    val ckpt = new Checkpoint(cfg.checkpointPath)
+    val mig = new Migrator(spark, ckpt, cfg.lockDir, cfg.insertIntervalSec)
+
+    val results = cfg.mode match {
+      case "single" if cfg.sourcePath.startsWith("table:") =>
+        // catalog-named source: `--source table:<db.name>` (or a bare
+        // name, resolved in --db). A name bound to a VIEW resolves to
+        // its single base table before migrating — the reference's
+        // Distributed→local dispatch (A8) in catalog terms.
+        val parts = cfg.sourcePath.stripPrefix("table:").split("\\.", 2)
+        val srcRef =
+          if (parts.length == 2) TableRef(parts(0), parts(1))
+          else TableRef(cfg.db, parts(0))
+        // the partition key derives from the RESOLVED BASE table's
+        // schema, not the view's: migration runs on the base, so a
+        // view that projects away (silent single-partition fallback)
+        // or renames (late AnalysisException) the --partition-expr
+        // column must not decide the key
+        val baseRef = graft.sources.CatalogOps.resolveToBaseTable(
+          spark, srcRef)
+        val (k, e) = keyFor(spark.table(baseRef.qualified))
+        Seq(mig.migrateCatalogTable(srcRef, Seq(k), Seq(e), cfg.destPath))
+      case "single" =>
+        val f = new java.io.File(cfg.sourcePath)
+        val src = graft.sources.Sources.table(
+          spark, f.getParent, f.getName.stripSuffix(".parquet"))
+        val (k, e) = keyFor(src)
+        Seq(mig.migrateTable(
+          TableRef(cfg.db, cfg.table), src, Seq(k), Seq(e), cfg.destPath))
+      case "resync" =>
+        // Incremental re-sync of an already-published destination:
+        // re-copies only partitions whose count/checksum drifted
+        // (Migrator.resyncTable); `--drop-orphans` also removes
+        // destination-only partitions.
+        val f = new java.io.File(cfg.sourcePath)
+        val src = graft.sources.Sources.table(
+          spark, f.getParent, f.getName.stripSuffix(".parquet"))
+        val (k, e) = keyFor(src)
+        // Destructive flag: only the literal "true" enables it — any
+        // other value ("no", "0", a typo) is rejected rather than
+        // silently enabling deletion of destination-only partitions.
+        val dropOrphans = args.get("drop-orphans") match {
+          case None | Some("false") => false
+          case Some("true") => true
+          case Some(other) => throw new IllegalArgumentException(
+            s"--drop-orphans expects 'true' or 'false', got '$other'")
+        }
+        Seq(mig.resyncTable(
+          TableRef(cfg.db, cfg.table), src, Seq(k), Seq(e), cfg.destPath,
+          dropOrphans = dropOrphans))
+      case "full" =>
+        // full-database mode (reference: migration.py:544-563):
+        // sequential per-table migration, log-and-continue on failure.
+        val dir = new java.io.File(cfg.sourcePath)
+        val tables = dir.listFiles().toSeq
+          .filter(_.getName.endsWith(".parquet"))
+          .map(_.getName.stripSuffix(".parquet")).sorted
+        tables.map { t =>
+          try {
+            val src = graft.sources.Sources.table(spark, cfg.sourcePath, t)
+            val (k, e) = keyFor(src)
+            mig.migrateTable(TableRef(cfg.db, t), src, Seq(k), Seq(e),
+              s"${cfg.destPath}/$t")
+          } catch {
+            case ex: Exception =>
+              System.err.println(s"[graft] table $t failed: ${ex.getMessage}")
+              graft.model.TableResult(TableRef(cfg.db, t),
+                graft.model.TableStatus.Failed, 0, 0, 0L, Nil,
+                Some(ex.getMessage))
+          }
+        }
+      case other => throw new IllegalArgumentException(s"unknown mode: $other")
+    }
+
+    val report = graft.model.MigrationReport(cfg.mode, cfg.db, results)
+    val reportPath = ReportService.write(
+      report, args.getOrElse("report-dir", "reports"), start)
+    // console summary (reference: report.py:85-124)
+    results.foreach { r =>
+      println(s"[graft] table=${r.table.qualified} status=${r.status.name} " +
+        s"partitions=${r.completedPartitions}/${r.totalPartitions} " +
+        s"rows=${r.migratedRows}")
+      r.error.foreach(e => System.err.println(s"[graft] error: $e"))
+    }
+    println(s"[graft] report=$reportPath completed=${report.completedCount} " +
+      s"failed=${report.failedCount} skipped=${report.skippedCount}")
+    if (report.anyFailed) 1 else 0
+  }
+
+  /** The reference's sink preflight (reference: clients/ch_client.py:43-57
+    * round-trips a tmp table on the S3 policy before migrating): write,
+    * read back and delete a one-row probe under a per-run unique name in
+    * the PARENT of `dest`. Probing inside a not-yet-published `dest`
+    * would create it, and the publish would then stash it as an existing
+    * destination. None when the sink is writable, else the error.
+    */
+  private[graft] def probeDest(spark: SparkSession,
+      dest: String): Option[String] = {
+    val d = new org.apache.hadoop.fs.Path(dest)
+    val q = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(d)
+    val parent = Option(q.getParent).getOrElse(q).toString
+    if (graft.sources.Sources.probeSink(spark, parent)) None
+    else Some(s"cannot write, read back and delete a probe under $parent " +
+      s"(the parent of --dest $dest)")
+  }
+
   def main(argv: Array[String]): Unit = {
     val args = ConfigResolver.parseArgs(argv)
     val cfg = ConfigResolver.resolve(args)
@@ -277,32 +418,6 @@ object MigrateCli {
 
     val start = System.currentTimeMillis()
     try {
-      /** Partition expr for one table; tables lacking the named column
-        * fall back to a single constant partition (the no-partition fast
-        * path, reference: migration.py:432-441).
-        */
-      def keyFor(df: org.apache.spark.sql.DataFrame): (String, org.apache.spark.sql.Column) =
-        args.getOrElse("partition-expr", "") match {
-          case s if s.startsWith("month:") =>
-            val c = s.stripPrefix("month:")
-            if (df.columns.contains(c)) (s"${c}_month", date_format(col(c), "yyyy-MM"))
-            else ("part", lit("all"))
-          case s if s.startsWith("date:") =>
-            val c = s.stripPrefix("date:")
-            if (df.columns.contains(c)) (s"${c}_date", date_format(col(c), "yyyy-MM-dd"))
-            else ("part", lit("all"))
-          case "" => throw new IllegalArgumentException("--partition-expr is required")
-          case plain =>
-            if (df.columns.contains(plain)) (plain, col(plain))
-            else ("part", lit("all"))
-        }
-
-      /** Read a source table via Sources so either events.ts timestamp
-        * flavor normalizes instead of failing the vectorized reader.
-        */
-      def readTable(dir: String, name: String) =
-        graft.sources.Sources.table(spark, dir, name)
-
       if (cfg.mode == "dq") {
         val code = runDq(spark, args, cfg, start)
         spark.stop()
@@ -312,7 +427,8 @@ object MigrateCli {
 
       if (cfg.mode == "curate") {
         val f = new java.io.File(cfg.sourcePath)
-        val src = readTable(f.getParent, f.getName.stripSuffix(".parquet"))
+        val src = graft.sources.Sources.table(
+          spark, f.getParent, f.getName.stripSuffix(".parquet"))
         val jac = args.get("jaccard").map(_.toDouble).getOrElse(0.5)
         // --mixture en:0.4,de:0.15,... → target per-language token
         // shares; the mixture stage runs after near-dup collapse
@@ -362,92 +478,9 @@ object MigrateCli {
         return
       }
 
-      val ckpt = new Checkpoint(cfg.checkpointPath)
-      val mig = new Migrator(spark, ckpt, cfg.lockDir, cfg.insertIntervalSec)
-
-      val results = cfg.mode match {
-        case "single" if cfg.sourcePath.startsWith("table:") =>
-          // catalog-named source: `--source table:<db.name>` (or a bare
-          // name, resolved in --db). A name bound to a VIEW resolves to
-          // its single base table before migrating — the reference's
-          // Distributed→local dispatch (A8) in catalog terms.
-          val parts = cfg.sourcePath.stripPrefix("table:").split("\\.", 2)
-          val srcRef =
-            if (parts.length == 2) TableRef(parts(0), parts(1))
-            else TableRef(cfg.db, parts(0))
-          // the partition key derives from the RESOLVED BASE table's
-          // schema, not the view's: migration runs on the base, so a
-          // view that projects away (silent single-partition fallback)
-          // or renames (late AnalysisException) the --partition-expr
-          // column must not decide the key
-          val baseRef = graft.sources.CatalogOps.resolveToBaseTable(
-            spark, srcRef)
-          val (k, e) = keyFor(spark.table(baseRef.qualified))
-          Seq(mig.migrateCatalogTable(srcRef, Seq(k), Seq(e), cfg.destPath))
-        case "single" =>
-          val f = new java.io.File(cfg.sourcePath)
-          val src = readTable(f.getParent, f.getName.stripSuffix(".parquet"))
-          val (k, e) = keyFor(src)
-          Seq(mig.migrateTable(
-            TableRef(cfg.db, cfg.table), src, Seq(k), Seq(e), cfg.destPath))
-        case "resync" =>
-          // Incremental re-sync of an already-published destination:
-          // re-copies only partitions whose count/checksum drifted
-          // (Migrator.resyncTable); `--drop-orphans` also removes
-          // destination-only partitions.
-          val f = new java.io.File(cfg.sourcePath)
-          val src = readTable(f.getParent, f.getName.stripSuffix(".parquet"))
-          val (k, e) = keyFor(src)
-          // Destructive flag: only the literal "true" enables it — any
-          // other value ("no", "0", a typo) is rejected rather than
-          // silently enabling deletion of destination-only partitions.
-          val dropOrphans = args.get("drop-orphans") match {
-            case None | Some("false") => false
-            case Some("true") => true
-            case Some(other) => throw new IllegalArgumentException(
-              s"--drop-orphans expects 'true' or 'false', got '$other'")
-          }
-          Seq(mig.resyncTable(
-            TableRef(cfg.db, cfg.table), src, Seq(k), Seq(e), cfg.destPath,
-            dropOrphans = dropOrphans))
-        case "full" =>
-          // full-database mode (reference: migration.py:544-563):
-          // sequential per-table migration, log-and-continue on failure.
-          val dir = new java.io.File(cfg.sourcePath)
-          val tables = dir.listFiles().toSeq
-            .filter(_.getName.endsWith(".parquet"))
-            .map(_.getName.stripSuffix(".parquet")).sorted
-          tables.map { t =>
-            try {
-              val src = readTable(cfg.sourcePath, t)
-              val (k, e) = keyFor(src)
-              mig.migrateTable(TableRef(cfg.db, t), src, Seq(k), Seq(e),
-                s"${cfg.destPath}/$t")
-            } catch {
-              case ex: Exception =>
-                System.err.println(s"[graft] table $t failed: ${ex.getMessage}")
-                graft.model.TableResult(TableRef(cfg.db, t),
-                  graft.model.TableStatus.Failed, 0, 0, 0L, Nil,
-                  Some(ex.getMessage))
-            }
-          }
-        case other => throw new IllegalArgumentException(s"unknown mode: $other")
-      }
-
-      val report = graft.model.MigrationReport(cfg.mode, cfg.db, results)
-      val reportPath = ReportService.write(
-        report, args.getOrElse("report-dir", "reports"), start)
-      // console summary (reference: report.py:85-124)
-      results.foreach { r =>
-        println(s"[graft] table=${r.table.qualified} status=${r.status.name} " +
-          s"partitions=${r.completedPartitions}/${r.totalPartitions} " +
-          s"rows=${r.migratedRows}")
-        r.error.foreach(e => System.err.println(s"[graft] error: $e"))
-      }
-      println(s"[graft] report=$reportPath completed=${report.completedCount} " +
-        s"failed=${report.failedCount} skipped=${report.skippedCount}")
+      val code = runMigrate(spark, args, cfg, start)
       spark.stop()
-      if (report.anyFailed) sys.exit(1)
+      if (code != 0) sys.exit(code)
     } catch {
       case e: Exception =>
         System.err.println(s"[graft] fatal: ${e.getMessage}")

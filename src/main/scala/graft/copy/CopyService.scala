@@ -179,7 +179,10 @@ object CopyService {
     * object stores this maps to a catalog location re-point — the key
     * property either way is that `audit` ran BEFORE anything is exposed
     * or destroyed (unlike the reference's DROP-then-RENAME window,
-    * migration.py:522-523).
+    * migration.py:522-523). An existing destination is stashed as
+    * `<finalRoot>.replaced.<nanos>` for the swap; once the swap has
+    * landed, every such stash is deleted — this publish's own and any a
+    * killed earlier publish left behind ([[dropReplacedStashes]]).
     */
   def publish(spark: SparkSession, stagingRoot: String, finalRoot: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -194,12 +197,31 @@ object CopyService {
         fs.rename(trash, dest) // roll back
         throw new IllegalStateException(s"cannot publish $stagingRoot → $finalRoot")
       }
-      fs.delete(trash, true)
     } else {
       val parent = dest.getParent
       if (parent != null) fs.mkdirs(parent)
       if (!fs.rename(staging, dest))
         throw new IllegalStateException(s"cannot publish $stagingRoot → $finalRoot")
+    }
+    dropReplacedStashes(spark, finalRoot)
+  }
+
+  /** Delete every sibling of `finalRoot` named exactly
+    * `<name>.replaced.<digits>` — the superseded copies [[publish]]
+    * stashes, which outlive a process killed between its swap and its
+    * delete. Only safe once `finalRoot` holds the published data; call
+    * it under the table lock.
+    */
+  def dropReplacedStashes(spark: SparkSession, finalRoot: String): Unit = {
+    val dest = new HPath(finalRoot)
+    val parent = dest.getParent
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (parent != null && fs.exists(parent)) {
+      val stash = (java.util.regex.Pattern.quote(dest.getName + ".replaced.") +
+        "\\d+").r
+      fs.listStatus(parent)
+        .filter(st => stash.matches(st.getPath.getName))
+        .foreach(st => fs.delete(st.getPath, true))
     }
   }
 

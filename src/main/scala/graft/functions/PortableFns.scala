@@ -33,10 +33,4 @@ object PortableFns {
 
   /** Timestamp → 'yyyy-MM-dd' (DuckDB: strftime(ts, '%Y-%m-%d')). */
   def dateStr(c: Column): Column = date_format(c, "yyyy-MM-dd")
-
-  /** Dot product of two float-array columns in double precision. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 }

@@ -59,14 +59,6 @@ object DataQuality {
         col("e.max_value").as("max_value"))
   }
 
-  /** Columns whose completeness falls below `minCompleteness` — the
-    * gate a pipeline fails on (empty = healthy).
-    */
-  def completenessViolations(profiled: DataFrame,
-      minCompleteness: Double): DataFrame =
-    profiled.filter(col("completeness") < minCompleteness)
-      .select("column", "completeness", "null_count", "n_rows")
-
   /** One [[profile]] row as a value — the unit the drift gate compares
     * and the dq report serializes (bounded by schema width, never row
     * data).
@@ -249,9 +241,9 @@ object DataQuality {
     val aggs = profiles.zipWithIndex.flatMap { case (p, i) =>
       val bkt = bucketOf(c0(p.column), p.lo, p.hi, bins)
       (0 until bins).map { k =>
-        // coalesce: sum over an EMPTY input (a quiet micro-batch in
-        // the streaming monitor) is null, and a null cell would NPE
-        // the collect — an empty relation has zero mass in every bin
+        // coalesce: sum over an EMPTY input is null, and a null cell
+        // would NPE the collect — an empty relation has zero mass in
+        // every bin
         coalesce(
           sum(when(c0(p.column).isNotNull && bkt === k, 1L).otherwise(0L)),
           lit(0L)).cast("long").as(s"__h_${i}_$k")

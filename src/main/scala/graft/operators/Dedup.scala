@@ -23,17 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Word 3-gram shingles, distinct, as an array column. Assumes ≥3
-    * tokens (the corpus guarantees ≥10).
-    */
-  def shingles(text: Column, n: Int = 3): Column = {
-    val toks = split(text, " ")
-    array_distinct(
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ",
-          (0 until n).map(off => element_at(toks, i + off)): _*)))
-  }
-
   /** Exploded (id, shingle) pairs — the inverted-index relation.
     *
     * Tokenization is materialized as its own projection first: inlining
@@ -138,59 +127,6 @@ object Dedup {
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  /** Per-ROW band keys — the ZERO-SHUFFLE twin of [[bandsFromRelation]]:
-    * a document's MinHash signature depends only on its own shingle
-    * set, so it can be computed entirely inside one row with
-    * higher-order array functions (`transform` + `array_min`) instead
-    * of explode + groupBy. Emits exactly the same (id, band, key) rows.
-    *
-    * Two uses: (1) STREAMING — a streaming plan cannot groupBy before a
-    * stream-static join without update-mode/state, but map-only
-    * projections pass through untouched, so this is what lets arriving
-    * documents band themselves on the fly; (2) batch corpora whose
-    * documents are long enough that the per-doc shingle array stays
-    * cache-friendly — no exchange at all vs the relation path's one.
-    * Each intermediate (tokens, shingles, hash structs) is its own
-    * projection: Catalyst does not CSE inside lambdas, and the k=12
-    * min-folds each reference the hash array once — inlining would
-    * recompute the md5 per fold.
-    */
-  def mapOnlyBands(df: DataFrame, idCol: String, textCol: String,
-      bands: Int = 6, rowsPerBand: Int = 2, n: Int = 3): DataFrame = {
-    val k = bands * rowsPerBand
-    val toks = col("__toks")
-    val staged = df
-      .select(col(idCol).as("id"), split(col(textCol), " ").as("__toks"))
-      // Guard like duplicatedSpans: a doc with < n tokens has no
-      // n-grams — without the `when`, sequence(1, size-2) descends and
-      // element_at(toks, 0) throws, killing the whole micro-batch on
-      // the streaming ingest path where corpus guarantees are weakest.
-      // Short docs emit no bands (filtered below) instead of failing.
-      .select(col("id"), array_distinct(
-        when(size(toks) >= n,
-          transform(sequence(lit(1), size(toks) - (n - 1)),
-            i => concat_ws(" ",
-              (0 until n).map(off => element_at(toks, i + off)): _*)))
-          .otherwise(array().cast("array<string>")))
-        .as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      // Fused md5 pair: higher-order-function lambdas evaluate
-      // INTERPRETED (no codegen, no common-subexpression elimination),
-      // so the chain form here paid TWO full DigestUtils walks plus
-      // conv string round-trips per shingle; Md5HashPair digests once.
-      .select(col("id"), transform(col("__sh"),
-        s => graft.plans.HashOps.md5Pair(s)).as("__hs"))
-    val mins = staged.select(col("id") +: (0 until k).map(i =>
-      array_min(transform(col("__hs"), p =>
-        p.getField("h1") + lit(i.toLong) * p.getField("h2"))).as(s"m$i")): _*)
-    val bandStructs = (0 until bands).map { b =>
-      val keyCols = (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), concat_ws("|", keyCols: _*).as("key"))
-    }
-    mins.select(col("id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
-
   /** LSH candidate pairs: ids sharing any band bucket (id_a < id_b). */
   def lshCandidates(bandsDf: DataFrame): DataFrame =
     bandsDf.as("x").join(bandsDf.as("y"),
@@ -283,7 +219,6 @@ object Dedup {
     * is the expensive stage), then every arriving batch's band join
     * reads it with ZERO exchange on the index side: the bucket layout
     * IS the join partitioning, so only the (small) batch shuffles.
-    * Append each ingested batch's bands to keep the index current.
     */
   def writeBandIndex(df: DataFrame, idCol: String, textCol: String,
       table: graft.model.TableRef, bands: Int = 6, rowsPerBand: Int = 2,
@@ -294,94 +229,6 @@ object Dedup {
         eRef, bucketCols = Seq("band", "key"), numBuckets = buckets,
         sortCols = Seq("band", "key"))
     }
-
-  /** Grow a [[writeBandIndex]] index by an ingested batch: append the
-    * batch's OWN band rows (the batch-sized signature pass only — the
-    * standing corpus is never re-signed) with the same bucket spec, so
-    * the index stays bucket-joinable over old and new rows alike. Call
-    * after the batch's near-dup check admits it to the corpus.
-    */
-  def appendToBandIndex(batch: DataFrame, idCol: String, textCol: String,
-      table: graft.model.TableRef, bands: Int = 6, rowsPerBand: Int = 2,
-      buckets: Int = 8): Unit =
-    // single-writer lock across resolve+append: serializes concurrent
-    // appenders (two uncoordinated saveAsTable appends may interleave)
-    // AND excludes a compaction from reading the epoch mid-append
-    graft.sources.IndexLock.withWriterLock(
-        batch.sparkSession, table.qualified) {
-      // batches land INSIDE the live epoch table — appends never create
-      // epochs (a concurrent reader sees pre- or post-append rows, both
-      // valid corpus states); resolving the epoch also fails fast when
-      // the index was never built (appendBucketed would otherwise CREATE
-      // a batch-sized table under the epoch name)
-      graft.sources.CatalogOps.appendBucketed(
-        minhashBands(batch, idCol, textCol, bands, rowsPerBand),
-        graft.sources.CatalogOps.liveEpochTable(batch.sparkSession, table),
-        bucketCols = Seq("band", "key"), numBuckets = buckets,
-        sortCols = Seq("band", "key"))
-    }
-
-  /** OPTIMIZE for the standing band index: [[appendToBandIndex]] lands
-    * one file per bucket per ingested batch, so after B batches every
-    * bucket join opens B files per bucket — at 100 TB with
-    * minute-level ingest that is the classic small-files death spiral
-    * (open/seek overhead dwarfs scan bytes). Rewrites the table to ONE
-    * file per bucket while PRESERVING the (band, key) bucket spec —
-    * the repartition uses the same hash the bucket layout does, so
-    * each writer task holds exactly one bucket — and compaction
-    * therefore changes file counts, never join partitioning: the
-    * compacted index still band-joins with zero index-side exchange
-    * (spec-asserted in CompactionSpec). Publish is a NEW EPOCH table
-    * behind the index VIEW ([[graft.sources.CatalogOps.publishEpoch]]):
-    * the compacted copy materializes fully, then the view re-points in
-    * one atomic catalog op — no table is ever renamed, so CONCURRENT
-    * READERS are safe: a probe planned against epoch N keeps its files
-    * while N+1 publishes (one superseded epoch is retained as grace)
-    * and returns the pre-compaction result; the next probe resolves
-    * N+1. Spec-asserted under a live probe loop across ≥20 compaction
-    * cycles in SoakSpec.
-    */
-  def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
-      table: graft.model.TableRef, buckets: Int = 8,
-      retain: Int = 1): Unit =
-    compactBucketedIndex(spark, table, Seq("band", "key"), buckets, retain)
-
-  /** The [[compactBandIndex]] mechanics for ANY bucketed standing index
-    * (band index, shingle index): one file per bucket, bucket spec —
-    * and therefore the exchange-free join property — preserved,
-    * epoch-view publish (atomic, concurrent-reader-safe). `retain`
-    * sizes the grace window: the number of superseded epochs kept for
-    * in-flight readers (choose ≥ ceil(slowest-query / OPTIMIZE
-    * cadence); default 1 — a reader strands only if it lags two
-    * publishes).
-    */
-  def compactBucketedIndex(spark: org.apache.spark.sql.SparkSession,
-      table: graft.model.TableRef, bucketCols: Seq[String],
-      buckets: Int, retain: Int = 1): Unit =
-      graft.sources.IndexLock.withWriterLock(spark, table.qualified) {
-    // writer lock spans resolve+rewrite+publish: an append landing
-    // inside the live epoch AFTER the compaction's read would vanish
-    // from the compacted successor — the lock makes read-to-publish
-    // atomic against other writers (readers stay lock-free on epochs).
-    // read the CURRENT epoch's rows, not the view: the view would
-    // re-resolve during the write and must keep serving readers anyway
-    val live = spark.table(
-      graft.sources.CatalogOps.liveEpochTable(spark, table).qualified)
-    graft.sources.CatalogOps.publishEpoch(spark, table, retain) { eRef =>
-      // Repartition on the COMPUTED bucket id (pmod(murmur3, n) — the
-      // bucket formula itself), not on the raw columns: an exchange on
-      // the raw columns is ELIMINATED because the bucketed scan already
-      // satisfies that distribution, leaving the accreted file grouping
-      // in charge of output file count. The bucket-id key can't be
-      // elided, keeps every bucket whole within one writer task, and so
-      // yields exactly one file per bucket.
-      graft.sources.CatalogOps.writeBucketed(
-        live.repartition(buckets, pmod(hash(bucketCols.map(col): _*),
-          lit(buckets))),
-        eRef, bucketCols = bucketCols, numBuckets = buckets,
-        sortCols = bucketCols)
-    }
-  }
 
   /** Incremental near-dups of `batch` against a PERSISTED band index
     * (written by [[writeBandIndex]]) — the production shape of
@@ -397,7 +244,7 @@ object Dedup {
       bands: Int = 6, rowsPerBand: Int = 2): DataFrame = {
     val spark = batch.sparkSession
     // the index name is an epoch VIEW: analysis resolves it to an
-    // immutable epoch table, so a concurrent compaction cannot tear
+    // immutable epoch table, so a concurrent rebuild cannot tear
     // this probe (it publishes a NEW epoch and re-points the view)
     val relB = shingleRelation(batch, idCol, textCol)
     val cand = bandsFromRelation(relB, bands, rowsPerBand).as("x")
@@ -415,9 +262,7 @@ object Dedup {
     * against (the `t_contamination` semantics with the train-side
     * shingle pass already paid). Bucketing makes the contamination
     * join exchange-free on the index side: only the (small) arriving
-    * eval batch shuffles. Built once per train-corpus generation;
-    * growth is [[appendToShingleIndex]], OPTIMIZE is
-    * [[compactBucketedIndex]] with `Seq("shingle")`.
+    * eval batch shuffles. Built once per train-corpus generation.
     */
   def writeShingleIndex(train: DataFrame, idCol: String, textCol: String,
       table: graft.model.TableRef, buckets: Int = 8): Unit =
@@ -428,27 +273,6 @@ object Dedup {
             .select("shingle").distinct(),
           eRef, bucketCols = Seq("shingle"), numBuckets = buckets,
           sortCols = Seq("shingle"))
-    }
-
-  /** Grow a [[writeShingleIndex]] index by newly-admitted train
-    * documents: append the batch's own distinct shingles with the same
-    * bucket spec. Cross-batch duplicate shingles are tolerated — the
-    * read path re-distincts over the bucketed scan, which the bucket
-    * layout makes exchange-free — so appends never need to probe the
-    * standing index.
-    */
-  def appendToShingleIndex(batch: DataFrame, idCol: String,
-      textCol: String, table: graft.model.TableRef,
-      buckets: Int = 8): Unit =
-    graft.sources.IndexLock.withWriterLock(
-        batch.sparkSession, table.qualified) {
-      // batches land INSIDE the live epoch table (same contract as the
-      // band index; resolution fails fast if the index was never built)
-      graft.sources.CatalogOps.appendBucketed(
-        shingleRelation(batch, idCol, textCol).select("shingle").distinct(),
-        graft.sources.CatalogOps.liveEpochTable(batch.sparkSession, table),
-        bucketCols = Seq("shingle"), numBuckets = buckets,
-        sortCols = Seq("shingle"))
     }
 
   /** Benchmark-contamination of an arriving batch against the PERSISTED
@@ -467,8 +291,8 @@ object Dedup {
     val spark = batch.sparkSession
     // ONE pass over the batch shingles: the left join carries a hit
     // marker for the misses, so total and shared come out of the same
-    // rollup (the shape the streaming twin uses) instead of scanning
-    // and re-shingling the batch once per aggregate.
+    // rollup instead of scanning and re-shingling the batch once per
+    // aggregate.
     val rel = shingleRelation(batch, idCol, textCol)
     val train = spark.table(table.qualified).select("shingle").distinct()
       .withColumn("hit", lit(1))
@@ -728,8 +552,8 @@ object Dedup {
     * Banding is LOSSLESS for `maxDist < bands` (pigeonhole: fewer
     * differing bits than bands forces some band to differ in none), so
     * the default 8 bands × 4 bits reproduces the all-pairs result
-    * bit-for-bit up to maxDist = 7 — [[simhashPairs]] remains as the
-    * verification oracle at small n. At 100 TB the candidate join
+    * bit-for-bit up to maxDist = 7 (LlmOpsSpec holds it to an
+    * all-pairs oracle at small n). At 100 TB the candidate join
     * shuffles only (id, 4-char chunk) tuples and pairwise work is
     * bounded by bucket collisions, not n².
     */
@@ -754,20 +578,6 @@ object Dedup {
     // calls per candidate pair.
     cand.select(col("id_a"), col("id_b"),
         graft.plans.StringOps.hammingDist(col("sig_a"), col("sig_b")).as("dist"))
-      .filter(col("dist") <= maxDist)
-  }
-
-  /** All-pairs Hamming-distance pairs (verification-scale oracle for
-    * [[simhashBandedPairs]]; O(n²), never the production path).
-    */
-  def simhashPairs(sigs: DataFrame, maxDist: Int): DataFrame = {
-    val positions = sigs.select(col("id"), col("simhash"),
-      explode(sequence(lit(1), lit(32))).as("p"),
-      expr("substring(simhash, p, 1)").as("c"))
-    positions.as("a").join(positions.as("b"),
-        col("a.p") === col("b.p") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(sum(when(col("a.c") =!= col("b.c"), 1).otherwise(0)).as("dist"))
       .filter(col("dist") <= maxDist)
   }
 
@@ -836,7 +646,7 @@ object Dedup {
         col("witness").isNull.as("keep"))
   }
 
-  /** Cell count for [[semanticDedupAuto]]: `⌈√(n·r/2)⌉` clamped to
+  /** Cell count for `d_semantic_auto`: `⌈√(n·r/2)⌉` clamped to
     * `[minNlist, maxNlist]`, with `r` = the cost of verifying one
     * in-cell pair relative to one assignment cosine.
     *
@@ -847,13 +657,10 @@ object Dedup {
     * 1.25G cell pairs, exactly 100× per decade, which at the third
     * decade turned an 11 s query into 407 s). Minimizing
     * `n·nlist + r·n²/(2·nlist)` gives `nlist* = √(n·r/2)`, so the
-    * total grows as `n^1.5` — the best a flat centroid list can do;
-    * truly linear ingest belongs to the persisted-index incremental
-    * path ([[semanticDedupAgainstIndex]]), whose per-batch cost rides
-    * the batch, not the corpus. The floor keeps small corpora on the
-    * oracle-replayed 16-cell recipe ([[semanticDedup]]'s default); the
-    * cap bounds the collected centroid literal (4096·dim floats ≈ 1 MB
-    * broadcast).
+    * total grows as `n^1.5` — the best a flat centroid list can do.
+    * The floor keeps small corpora on the oracle-replayed 16-cell
+    * recipe ([[semanticDedup]]'s default); the cap bounds the collected
+    * centroid literal (4096·dim floats ≈ 1 MB broadcast).
     */
   def chooseNlist(n: Long, verifyCostRatio: Double = 0.5,
       minNlist: Int = 16, maxNlist: Int = 4096): Int = {
@@ -862,20 +669,6 @@ object Dedup {
     math.min(maxNlist, math.max(minNlist,
       math.ceil(math.sqrt(n.toDouble * verifyCostRatio / 2.0)).toInt))
   }
-
-  /** [[semanticDedup]] with the cell count CHOSEN FOR THE CORPUS
-    * ([[chooseNlist]]) instead of the fixed teaching default. EAGER at
-    * plan-build time twice over: the corpus is counted here (the
-    * cell-count input), and Lloyd training then runs inside
-    * [[Similarity.trainCentroidsLiteral]] — the same
-    * train-then-search contract, so don't build these speculatively.
-    * At the oracle SF the count resolves `nlist` to the same 16 cells
-    * as [[semanticDedup]]'s default, which is what keeps this variant
-    * hash-checkable against the identical DuckDB replay.
-    */
-  def semanticDedupAuto(emb: DataFrame, tau: Double, iters: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    semanticDedup(emb, tau, chooseNlist(emb.count()), iters, idCol, vecCol)
 
   /** INCREMENTAL [[semanticDedup]]: an arriving batch checked against a
     * standing corpus — the semantic twin of [[minhashNearDupsAgainst]].
@@ -899,28 +692,6 @@ object Dedup {
     semanticWitness(
       Similarity.assignCells(corpus, cents, idCol, vecCol),
       Similarity.assignCells(batch, cents, idCol, vecCol), tau)
-  }
-
-  /** [[semanticDedupAgainst]] over a PERSISTED [[Similarity
-    * .writeIvfIndex]] index: the corpus-side scan partition-prunes to
-    * the cells the batch actually occupies (the batch's distinct cell
-    * ids are collected at plan-build time — ≤ nlist small ints, index
-    * metadata, never row data — exactly [[Similarity.ivfTopKIndexed]]'s
-    * probe-cell collect). At 100 TB this is the difference between
-    * re-reading the whole corpus assignment per ingested batch and
-    * reading only the touched inverted lists.
-    */
-  def semanticDedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, tau: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val bAss = Similarity.assignCells(batch, cents, idCol, vecCol)
-    val cells = bAss.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val cAss = spark.read.parquet(
-      graft.sources.EpochDir.live(spark, s"$path/cells"))
-      .filter(col("cell").isin(cells: _*))
-    semanticWitness(cAss, bAss, tau)
   }
 
   /** Shared pair-search of the incremental semantic-dedup variants:

@@ -172,9 +172,9 @@ object Graph {
         val tbl = graft.model.TableRef("graft_scratch",
           graft.sources.Scratch.name(s"${tag}_edges", key))
         // Repartition on the COMPUTED bucket id before the bucketed
-        // write (the compactBucketedIndex trick): without it the
-        // files-per-bucket count rides the STAGED layout's partition
-        // count, so a 10× input leaves ~10× more files per bucket and
+        // write: without it the files-per-bucket count rides the
+        // STAGED layout's partition count, so a 10× input leaves ~10×
+        // more files per bucket and
         // every rank round pays ~10× the scan tasks and partial-agg
         // fan over an IDENTICAL edge table (measured: 3 rounds
         // 2.7 s → 10.7 s and 2.6× the shuffled records at the sf1
@@ -347,35 +347,10 @@ object Graph {
     require(idx.weighted,
       "pageRankWeightedIndexed needs materializeEdges(weighted = true)")
     require(idx.maxW > 0 && scale <= Long.MaxValue / idx.maxW,
-      s"pageRankWeighted: scale·max(w) overflows a long " +
+      s"pageRankWeightedIndexed: scale·max(w) overflows a long " +
         s"(max w = ${idx.maxW})")
     dampedLoop(spark, idx, iters, scale, broadcastRanks, allNodesReceive,
       checkpointEvery, tolL1, "(r * w) div ws")
-  }
-
-  /** One-shot weighted convenience: materialize (weighted) + rank.
-    * Routes through [[materializeEdges]], so the staging discipline,
-    * bucketed standing-edge layout, positivity fail-fast, and — unlike
-    * the pre-r15 cut — the DANGLING-NODE validation all apply: a
-    * directed edge list with a sink node fails fast instead of
-    * silently leaking the sink's received mass every round
-    * (`validateDangling`; symmetrized graphs satisfy the contract by
-    * construction and may skip it). Prefer materializing once per
-    * graph generation and reusing the [[EdgeIndex]] across
-    * searches/parameter sweeps (the build is the expensive half).
-    */
-  def pageRankWeighted(edges: DataFrame, iters: Int = 5,
-      scale: Long = 1000000000000L,
-      allNodesReceive: Boolean = false,
-      symmetrize: Boolean = false,
-      validateDangling: Boolean = true,
-      buckets: Int = 32): DataFrame = {
-    val idx = materializeEdges(edges,
-      java.util.UUID.randomUUID().toString,
-      validateDangling = validateDangling && !symmetrize,
-      bucketed = true, buckets, symmetrize, weighted = true)
-    pageRankWeightedIndexed(edges.sparkSession, idx, iters, scale,
-      allNodesReceive = allNodesReceive)
   }
 
   /** Multi-source BFS hop distance from a seed set over a

@@ -67,9 +67,7 @@ object TextAnalysis {
       .otherwise("tail")
 
   /** Per-bucket deterministic 256-band keep decision (all of head, half
-    * of middle, an eighth of tail) — no RNG, growth-stable fate, shared
-    * by the batch query and the streaming gate so both provably keep
-    * the same documents.
+    * of middle, an eighth of tail) — no RNG, growth-stable fate.
     */
   def qualityKeep(id: Column, bucket: Column): Column =
     hashBand256(id, "qb:") <
@@ -295,11 +293,10 @@ object TextAnalysis {
     * document vanishes. Entirely map-only and STATELESS: each
     * document's chunk boundaries derive from its own token count (the
     * window count is 1 + ceil((n-win)/stride), exact arithmetic both
-    * engines truncate identically), so the same projection serves the
-    * batch query and the streaming stage unchanged, and a replayed
-    * document reproduces identical chunks. The per-chunk md5
-    * fingerprint keeps outputs slim while hash-proving the exact token
-    * spans. Returns (id, chunk_id, start, len, chunk_fp).
+    * engines truncate identically), so a replayed document reproduces
+    * identical chunks. The per-chunk md5 fingerprint keeps outputs slim
+    * while hash-proving the exact token spans. Returns (id, chunk_id,
+    * start, len, chunk_fp).
     */
   def chunkWindows(df: DataFrame, idCol: String, textCol: String,
       win: Int = 64, stride: Int = 48, minTail: Int = 32): DataFrame = {
@@ -357,28 +354,11 @@ object TextAnalysis {
       .otherwise(lit(0.0))
 
   /** DSIR hashed-feature bucket for one word bigram: 16 md5 bits mod
-    * 64 — shared by the batch `t_dsir` weight training and the
-    * streaming importance gate so the feature space can never drift.
+    * 64 — the `t_dsir` feature space.
     */
   def dsirBucket(bigram: Column): Column =
     // fused md5-prefix — same value as the conv/substring chain
     pmod(graft.plans.HashOps
       .md5PrefixLong(concat(lit("dsir:"), bigram), 1, 4)
       .cast("int"), lit(64))
-
-  /** Per-row DSIR feature-weight array: each word bigram looked up in
-    * the trained 64-bucket weight table (micro-units; model state, a
-    * broadcast-literal map). A bucket the training corpus never
-    * produced defaults to the Laplace prior (0+1)·1e6 div (0+1) = 1e6.
-    * The caller folds sum/size to the integer mean — value-identical
-    * to the distributed explode+join formulation in t_dsir, so a
-    * stateless stream can score rows without touching the corpus.
-    */
-  def dsirWeights(text: Column, weights: Map[Int, Long]): Column = {
-    val entries = weights.toSeq.sortBy(_._1)
-      .flatMap { case (k, v) => Seq(lit(k), lit(v)) }
-    val wMap = map(entries: _*)
-    transform(wordBigrams(text),
-      b => coalesce(element_at(wMap, dsirBucket(b)), lit(1000000L)))
-  }
 }

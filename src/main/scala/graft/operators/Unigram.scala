@@ -106,8 +106,8 @@ object Unigram {
     * model's Laplace floor, [[Model.unkProb]]): training always seeds
     * every length-1 substring of its own corpus, so `unk` never fires
     * during training or same-corpus encoding — it exists so APPLYING a
-    * trained model to unseen text (the streaming twin) segments OOV
-    * characters as floor-scored singletons instead of folding the
+    * trained model to unseen text segments OOV characters as
+    * floor-scored singletons instead of folding the
     * whole word to null (all candidates null at the OOV position, and
     * a null prev poisons the rest of the DP).
     */

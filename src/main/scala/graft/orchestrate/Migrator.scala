@@ -231,11 +231,13 @@ final class Migrator(
     }
 
     // Audit passed → publish (the safe swap), without the leftovers of
-    // any write job killed mid-wave in an earlier run.
+    // any write job killed mid-wave in an earlier run. An already
+    // published rerun still sweeps the stash a publish killed before
+    // its delete left behind.
     if (!published) {
       CopyService.dropAbortedWrites(spark, staging)
       CopyService.publish(spark, staging, destRoot)
-    }
+    } else CopyService.dropReplacedStashes(spark, destRoot)
 
     if (dropSource) srcPathToDrop.foreach { p =>
       val hp = new Path(p)

@@ -223,7 +223,7 @@ object DedupQueries {
     // pass once per generation (standing per-JVM build, logged), and
     // each arriving batch probes it with ZERO index-side exchange (the
     // bucketed layout IS the join partitioning). The index name is an
-    // epoch VIEW, so OPTIMIZE can run concurrently with these probes.
+    // epoch VIEW, so a republish can run concurrently with these probes.
     // Oracle: identical to d_incremental — the index path must
     // reproduce the inline computation bit-for-bit, now checked by the
     // driver gate and not just the spec.

@@ -7,11 +7,9 @@ import org.apache.spark.sql.types.DecimalType
 import graft.functions.PortableFns._
 import graft.sources.Sources
 
-/** Event-time analytics over the `events` table — the batch-equivalent
-  * faces of the streaming surface (SURVEY.md §2B "Streaming" row): the
-  * same windowing semantics are exposed over `readStream` in
-  * [[graft.streaming.EventStreams]]; these batch twins keep the logic
-  * DuckDB-checkable (SURVEY.md §7.5 hard part 6).
+/** Event-time analytics over the `events` table — the windowing
+  * semantics of SURVEY.md §2B's "Streaming" row as batch queries, which
+  * keep the logic DuckDB-checkable (SURVEY.md §7.5 hard part 6).
   */
 object EventQueries {
 
@@ -271,10 +269,8 @@ object EventQueries {
         .orderBy("user_id", "event_type")
     }),
 
-    // Stream-static enrichment batch twin: left-join events to the
-    // customer dimension (broadcast), aggregate by market segment.
-    // Streaming face: EventStreams.enrichWithDim (stateless per-batch
-    // broadcast join — proven stream ≡ batch in EventStreamsSpec).
+    // Stream-static enrichment as a batch query: left-join events to
+    // the customer dimension (broadcast), aggregate by market segment.
     "e_enrich" -> ((s, dir) => {
       val c = Sources.table(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
@@ -444,11 +440,10 @@ object EventQueries {
         .orderBy("event_type", "rn")
     }),
 
-    // Batch twin of the stream-stream join
-    // ([[graft.streaming.EventStreams.clickPurchaseJoin]]): same-user
+    // The stream-stream join as a batch query: same-user
     // click→purchase pairs within 30 minutes, aggregated per user. The
-    // time-bound condition is what lets the streaming variant expire
-    // state; the batch plan is one shuffle on user_id with the range
+    // time-bound condition is what would let a stream expire state;
+    // the batch plan is one shuffle on user_id with the range
     // condition as a residual.
     "e_stream_join" -> ((s, dir) => {
       val e = ev(s, dir)

@@ -76,15 +76,11 @@ object SimilarityQueries {
   }
 
   /** Standing prefix-16 IVF index for `s_mrl_ivf`'s stage 1, built
-    * once per JVM per dataset at a Scratch-keyed path.
+    * once per JVM per dataset at a Scratch-keyed path (package-visible:
+    * the spec asserts per-query pruning against this same artifact).
     */
   private val MrlIndex = new Kind[String]("s_mrl_ivf prefix-IVF index")
-  /** Test-visible accessor for the standing prefix index (the spec
-    * asserts per-query pruning against the same artifact the query
-    * searches). */
-  private[queries] def mrlIndexFor(s: SparkSession, dir: String): String =
-    builtMrlIndex(s, dir)
-  private def builtMrlIndex(s: SparkSession, dir: String): String =
+  private[queries] def builtMrlIndex(s: SparkSession, dir: String): String =
     ArtifactRegistry(MrlIndex, dir) {
       val path = graft.sources.Scratch.dir("mrlivf", dir)
       Similarity.writeIvfIndex(prefix16(emb(s, dir)), path, nlist = 16)
@@ -288,10 +284,9 @@ object SimilarityQueries {
     // the right nlist for that n (23 at sf0.1, 71 at sf1, 224 at the
     // 100× corpus) and total work rides n^1.5, not n².
     "d_semantic_auto" -> ((s, dir) => {
-      // Same computation as Dedup.semanticDedupAuto (chooseNlist over
-      // the corpus count, then semanticDedup at that nlist) with the
-      // trained model drawn from the per-JVM registry — embCount is
-      // the same parquet row count the operator's emb.count() reads.
+      // chooseNlist over the corpus count, then semanticDedup at that
+      // nlist, with the trained model drawn from the per-JVM registry —
+      // embCount is the parquet footer row count of the embeddings.
       val nl = graft.operators.Dedup.chooseNlist(embCount(s, dir))
       graft.operators.Dedup.semanticDedup(emb(s, dir), tau = 0.4,
           nlist = nl, centroids = Some(trainedCentsN(s, dir, nl)))

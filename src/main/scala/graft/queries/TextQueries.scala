@@ -744,10 +744,9 @@ object TextQueries {
     // 48 (16-token overlap), trailing partial window kept at ≥ 32
     // tokens (with this stride the tail always holds ≥ 17, so the rule
     // genuinely prunes). Semantics and the stateless-map-only scale
-    // shape documented on [[graft.operators.TextAnalysis.chunkWindows]];
-    // `DocStreams.chunked` runs the SAME projection continuously,
-    // spec-proven equal to this batch query. Chunks scale with corpus
-    // tokens; no shuffle before the presentation sort.
+    // shape documented on [[graft.operators.TextAnalysis.chunkWindows]].
+    // Chunks scale with corpus tokens; no shuffle before the
+    // presentation sort.
     "t_chunk" -> ((s, dir) =>
       TA.chunkWindows(docs(s, dir), "doc_id", "text")
         .withColumnRenamed("id", "doc_id")

@@ -14,10 +14,7 @@ import graft.model.{PartitionId, TableStatus}
   */
 final case class TableProgress(
     completedPartitions: Seq[String],
-    status: TableStatus) {
-  def completedSet: Set[PartitionId] =
-    completedPartitions.map(PartitionId.parse).toSet
-}
+    status: TableStatus)
 
 /** Write-through JSON checkpoint with atomic replace.
   *

@@ -173,17 +173,18 @@ object Sources {
 
   /** Probe the sink the way the reference probes the S3 policy
     * (reference: clients/ch_client.py:43-57 round-trips a tmp table):
-    * write a 1-row parquet under the prefix, read it back, delete.
+    * write a 1-row parquet under the prefix as `_graft_probe_<nonce>`
+    * (unique per call, so concurrent runs never share one), read it
+    * back, delete it. True only if all three succeed.
     */
   def probeSink(spark: SparkSession, prefix: String): Boolean = {
-    val probePath = s"$prefix/_graft_probe"
+    val probePath = s"$prefix/_graft_probe_${java.util.UUID.randomUUID()}"
     try {
-      spark.range(1).write.mode("overwrite").parquet(probePath)
+      spark.range(1).write.parquet(probePath)
       val ok = spark.read.parquet(probePath).count() == 1L
       val hPath = new org.apache.hadoop.fs.Path(probePath)
       val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(hPath, true)
-      ok
+      fs.delete(hPath, true) && ok
     } catch { case _: Exception => false }
   }
 }

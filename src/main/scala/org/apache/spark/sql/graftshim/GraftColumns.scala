@@ -13,23 +13,3 @@ object GraftColumns {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
-
-/** Runtime temp-function registration (sessionState is private[sql]). */
-object GraftFunctionRegistry {
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot",
-      exprs => {
-        require(exprs.length == 2, "float_dot takes exactly 2 arguments")
-        graft.plans.FloatVecDot(exprs.head, exprs(1))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_dist",
-      exprs => {
-        require(exprs.length == 2, "hamming_dist takes exactly 2 arguments")
-        graft.plans.HammingDist(exprs.head, exprs(1))
-      },
-      "scala_udf")
-  }
-}

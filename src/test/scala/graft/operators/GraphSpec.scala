@@ -12,6 +12,17 @@ class GraphSpec extends SparkFunSuite {
 
   private val Scale = 1000000000000L
 
+  /** One-shot weighted rank: materialize a weighted bucketed edge index
+    * (with its positivity and dangling-node checks), then rank it. */
+  private def pageRankWeighted(edges: org.apache.spark.sql.DataFrame,
+      iters: Int, allNodesReceive: Boolean = false,
+      symmetrize: Boolean = false) =
+    Graph.pageRankWeightedIndexed(spark,
+      Graph.materializeEdges(edges, java.util.UUID.randomUUID().toString,
+        validateDangling = !symmetrize, bucketed = true, buckets = 32,
+        symmetrize = symmetrize, weighted = true),
+      iters, allNodesReceive = allNodesReceive)
+
   test("symmetric cycle: all ranks equal and mass ≈ scale") {
     // 3-cycle a→b→c→a symmetrized: every node indistinguishable.
     val e0 = Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
@@ -88,7 +99,7 @@ class GraphSpec extends SparkFunSuite {
     // one weakly attached to both) must fall behind
     val e0 = Seq((0L, 1L, 900000L), (1L, 2L, 100000L), (0L, 2L, 100000L))
       .toDF("src", "dst", "w")
-    val got = Graph.pageRankWeighted(e0, iters = 5,
+    val got = pageRankWeighted(e0, iters = 5,
         allNodesReceive = true, symmetrize = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // Scala replay of the documented integer recurrence
@@ -121,12 +132,12 @@ class GraphSpec extends SparkFunSuite {
   test("pageRankWeighted: guards reject nonpositive weights and overflow") {
     val e = Seq((0L, 1L, 0L)).toDF("src", "dst", "w")
     val err1 = intercept[IllegalArgumentException] {
-      Graph.pageRankWeighted(e, iters = 1, symmetrize = true)
+      pageRankWeighted(e, iters = 1, symmetrize = true)
     }
     assert(err1.getMessage.contains("positive"))
     val big = Seq((0L, 1L, Long.MaxValue / 2)).toDF("src", "dst", "w")
     val err2 = intercept[IllegalArgumentException] {
-      Graph.pageRankWeighted(big, iters = 1, symmetrize = true)
+      pageRankWeighted(big, iters = 1, symmetrize = true)
     }
     assert(err2.getMessage.contains("overflow"))
   }
@@ -164,7 +175,7 @@ class GraphSpec extends SparkFunSuite {
     // edges with no dangling check, silently dropping the sink's mass
     val directed = Seq((0L, 1L, 5L)).toDF("src", "dst", "w")
     val err = intercept[IllegalArgumentException] {
-      Graph.pageRankWeighted(directed, iters = 1)
+      pageRankWeighted(directed, iters = 1)
     }
     assert(err.getMessage.contains("out-edge"))
   }

@@ -164,12 +164,12 @@ class JoinsSpec extends SparkFunSuite {
     assert(res.getAs[String]("b_asof") == "y2")
   }
 
-  test("hamming_dist: codegen, interpreted, and SQL paths agree") {
+  test("hamming_dist: codegen and interpreted paths agree") {
     val s = graft.SparkTestBase.spark
-    graft.GraftExtensions.register(s)
     import org.apache.spark.sql.functions._
-    // SQL registration
-    assert(s.sql("SELECT hamming_dist('10110', '10011') AS d")
+    import graft.plans.StringOps.hammingDist
+    // literal operands constant-fold through the interpreted eval path
+    assert(s.range(1).select(hammingDist(lit("10110"), lit("10011")))
       .head().getLong(0) == 2L)
     // Column API over real rows (codegen path) vs the HOF formulation
     val sigs = graft.operators.Dedup.simhashBits(
@@ -186,19 +186,19 @@ class JoinsSpec extends SparkFunSuite {
       .filter(col("fast") =!= col("slow")).count()
     assert(mismatches == 0L)
     // null propagation (interpreted eval path)
-    assert(s.sql("SELECT hamming_dist(CAST(NULL AS STRING), '1') IS NULL")
-      .head().getBoolean(0))
+    assert(s.range(1)
+      .select(hammingDist(lit(null).cast("string"), lit("1")))
+      .head().isNullAt(0))
   }
 
-  test("float_dot is SQL-registered and matches the Column API") {
+  test("float_dot: the Column API gives the exact dot, interpreted and codegen") {
     val s = graft.SparkTestBase.spark
-    graft.GraftExtensions.register(s)
-    val viaSql = s.sql(
-      "SELECT float_dot(array(CAST(1.5 AS FLOAT), CAST(2 AS FLOAT)), " +
-        "array(CAST(3 AS FLOAT), CAST(0.5 AS FLOAT))) AS d")
-      .head().getDouble(0)
-    assert(viaSql == 1.5 * 3 + 2 * 0.5)
     import org.apache.spark.sql.functions._
+    // literal operands constant-fold through the interpreted eval path
+    val viaLit = s.range(1).select(graft.plans.FloatVecOps.floatDot(
+        array(lit(1.5f), lit(2f)), array(lit(3f), lit(0.5f))))
+      .head().getDouble(0)
+    assert(viaLit == 1.5 * 3 + 2 * 0.5)
     val emb = s.read.parquet(s"$sf0001/embeddings.parquet").limit(5)
     val rows = emb.select(
       graft.plans.FloatVecOps.floatDot(col("embedding"), col("embedding")).as("a"))

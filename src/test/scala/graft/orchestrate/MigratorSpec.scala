@@ -67,6 +67,67 @@ class MigratorSpec extends SparkFunSuite {
     assert(back.exceptAll(lineitem).isEmpty && lineitem.exceptAll(back).isEmpty)
   }
 
+  test("rerun of a published table sweeps a stash a killed publish leaked") {
+    val (dir, ckpt, mig) = freshEnv()
+    val dest = s"$dir/dest/lineitem"
+    val ref = TableRef("testdb", "lineitem")
+    assert(mig.migrateTable(ref, lineitem, keys, keyExprs, dest).status
+      == TableStatus.Completed)
+    // the crash state of a publish killed between its swap and its
+    // stash delete, on a table never marked Completed
+    ckpt.markStatus("testdb", "lineitem", TableStatus.Running)
+    val stash = Paths.get(s"$dest.replaced.123")
+    Files.createDirectories(stash)
+    Files.writeString(stash.resolve("part-00000.parquet"), "superseded")
+    // near-miss names are not stashes and must survive the sweep
+    val keep = Seq(Paths.get(s"$dest.replaced.123x"),
+      Paths.get(s"$dest.replaced."), Paths.get(s"${dest}x.replaced.1"))
+    keep.foreach(Files.createDirectories(_))
+    val res = mig.migrateTable(ref, lineitem, keys, keyExprs, dest)
+    assert(res.status == TableStatus.Completed, res.error)
+    assert(!Files.exists(stash), "the leaked stash must be swept")
+    keep.foreach(p => assert(Files.exists(p), s"$p is not a stash"))
+    val back = spark.read.option("basePath", dest).parquet(dest)
+      .select(lineitem.columns.map(col).toIndexedSeq: _*)
+    assert(back.exceptAll(lineitem).isEmpty && lineitem.exceptAll(back).isEmpty)
+  }
+
+  private def cliConfig(dir: java.nio.file.Path, mode: String,
+      dest: String) = graft.model.MigrationConfig(mode = mode,
+    db = "testdb", table = "lineitem",
+    sourcePath = if (mode == "full") sf0001 else s"$sf0001/lineitem.parquet",
+    destPath = dest, checkpointPath = dir.resolve("progress.json").toString,
+    lockDir = dir.resolve("locks").toString)
+
+  test("MigrateCli: an unwritable --dest parent fails the sink probe before any checkpoint write") {
+    val dir = Files.createTempDirectory("probe_bad")
+    // a regular file where the destination's parent directory should be
+    val blocker = dir.resolve("sink")
+    Files.writeString(blocker, "not a directory")
+    val args = Map("partition-expr" -> "month:l_shipdate",
+      "report-dir" -> s"$dir/reports")
+    Seq("single", "full", "resync").foreach { mode =>
+      assert(graft.MigrateCli.runMigrate(spark, args,
+        cliConfig(dir, mode, s"$blocker/lineitem"), 1L) == 1, mode)
+    }
+    assert(!Files.exists(dir.resolve("progress.json")),
+      "the probe must fail before the checkpoint is written")
+    assert(!Files.exists(dir.resolve("reports")))
+    assert(Files.readString(blocker) == "not a directory")
+  }
+
+  test("MigrateCli: a normal run leaves no _graft_probe entry behind") {
+    val dir = Files.createTempDirectory("probe_ok")
+    val args = Map("partition-expr" -> "month:l_shipdate",
+      "report-dir" -> s"$dir/reports")
+    val out = dir.resolve("out")
+    assert(graft.MigrateCli.runMigrate(spark, args,
+      cliConfig(dir, "single", s"$out/lineitem"), 1L) == 0)
+    assert(out.toFile.list().toSeq == Seq("lineitem"),
+      s"left behind: ${out.toFile.list().toSeq}")
+    assert(spark.read.parquet(s"$out/lineitem").count() == lineitem.count())
+  }
+
   test("migrate through a view name: resolves to the base table (A8 analog)") {
     val (dir, ckpt, mig) = freshEnv()
     val s = spark

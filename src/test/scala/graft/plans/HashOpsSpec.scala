@@ -115,13 +115,17 @@ class HashOpsSpec extends SparkFunSuite {
         1 + rnd.nextInt(5000)))
     val df = rows.toDF("s", "pos")
     val flip = lit(Long.MinValue)
-    val keyed = df.select(
-      concat(md5(col("s")), lit("#"),
-        lpad((lit(big) - col("pos")).cast("string"), 8, "0")).as("skey"),
-      struct(
-        HashOps.md5FullPair(col("s")).getField("h1").bitwiseXOR(flip).as("a"),
-        HashOps.md5FullPair(col("s")).getField("h2").bitwiseXOR(flip).as("b"),
-        (lit(big) - col("pos")).as("ip")).as("nkey"))
+    // one md5FullPair alias selected once, then read as .h1/.h2 — the
+    // operator's plan shape
+    val keyed = df
+      .select(col("s"), col("pos"), HashOps.md5FullPair(col("s")).as("hp"))
+      .select(
+        concat(md5(col("s")), lit("#"),
+          lpad((lit(big) - col("pos")).cast("string"), 8, "0")).as("skey"),
+        struct(
+          col("hp.h1").bitwiseXOR(flip).as("a"),
+          col("hp.h2").bitwiseXOR(flip).as("b"),
+          (lit(big) - col("pos")).as("ip")).as("nkey"))
     val byString = keyed.orderBy(col("skey")).select("skey").collect().map(_.getString(0))
     val byStruct = keyed.orderBy(col("nkey")).select("skey").collect().map(_.getString(0))
     assert(byString.sameElements(byStruct))

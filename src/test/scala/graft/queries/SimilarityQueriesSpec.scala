@@ -133,7 +133,7 @@ class SimilarityQueriesSpec extends SparkFunSuite {
       .findFirstIn(plan).isDefined, s"no partition filter on cell:\n$plan")
     val e01 = spark.read.parquet(s"$sf001/embeddings.parquet")
     val oneQ = graft.operators.Similarity.ivfTopKIndexed(spark,
-      SimilarityQueries.mrlIndexFor(spark, sf001),
+      SimilarityQueries.builtMrlIndex(spark, sf001),
       e01.filter(col("vec_id") === 0L)
         .select(col("vec_id"), slice(col("embedding"), 1, 16).as("embedding")),
       k = 50, nProbe = 8)

@@ -45,7 +45,7 @@ class CheckpointSpec extends AnyFunSuite {
     val p = c.tableProgress("db", "t").get
     assert(p.completedPartitions == Seq("('2024-01-01','novel')", "20240101"))
     // parses back to the same ids
-    assert(p.completedSet == Set(
+    assert(p.completedPartitions.map(PartitionId.parse).toSet == Set(
       PartitionId(Seq("2024-01-01", "novel")), PartitionId(Seq("20240101"))))
   }
 

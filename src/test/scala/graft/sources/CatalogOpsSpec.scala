@@ -1,62 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkFunSuite
-import graft.model.{PartitionId, TableRef}
+import graft.model.TableRef
 
-/** Exercises the catalog DDL surface end-to-end against spark_catalog:
-  * create → insert partitions → enumerate → drop partition → rename →
-  * drop (the reference's A5-A14 lifecycle on a real catalog table).
+/** Exercises the catalog surface end-to-end against spark_catalog:
+  * schema drift, view resolution and the epoch-view lifecycle (publish,
+  * grace retention, crash debris, snapshot pins).
   */
 class CatalogOpsSpec extends SparkFunSuite {
-
-  test("catalog lifecycle: create/insert/enumerate/drop-partition/rename/drop") {
-    val s = spark
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    val src = TableRef("graft_test", "li_src")
-    val bak = TableRef("graft_test", "li_bak")
-    val renamed = TableRef("graft_test", "li_final")
-    try {
-      // source: a managed partitioned table from testdata
-      val li = s.read.parquet(s"$sf0001/lineitem.parquet")
-        .withColumn("l_month", date_format(col("l_shipdate"), "yyyy-MM"))
-        .filter(col("l_month") < "1995-04") // 3 partitions
-      CatalogOps.dropTable(s, src); CatalogOps.dropTable(s, bak)
-      CatalogOps.dropTable(s, renamed)
-      li.write.partitionBy("l_month").saveAsTable(src.qualified)
-
-      assert(CatalogOps.tableExists(s, src))
-      assert(!CatalogOps.tableExists(s, TableRef("graft_test", "nope")))
-      assert(CatalogOps.listDataTables(s, "graft_test").contains("li_src"))
-      assert(CatalogOps.schemaOf(s, src).fieldNames.contains("l_month"))
-
-      // backup table clone (empty, same structure)
-      CatalogOps.createBackupTable(s, src, bak, partitionKeys = Seq("l_month"))
-      assert(CatalogOps.schemaOf(s, bak).fieldNames.sorted.sameElements(
-        CatalogOps.schemaOf(s, src).fieldNames.sorted))
-
-      // partition-wise copy with dynamic overwrite (idempotent: run twice)
-      val parts = CatalogOps.listPartitions(s, src, Seq("l_month"))
-      assert(parts.size == 3)
-      CatalogOps.insertPartition(s, bak, s.table(src.qualified))
-      CatalogOps.insertPartition(s, bak, s.table(src.qualified)) // retry
-      assert(s.table(bak.qualified).count() == li.count())
-
-      // drop one partition from the backup
-      CatalogOps.dropPartition(s, bak, Seq("l_month"), PartitionId.single("1995-01"))
-      val after = CatalogOps.listPartitions(s, bak, Seq("l_month"))
-      assert(after.map(_.values.head) == Seq("1995-02", "1995-03"))
-
-      // swap: rename backup into place
-      CatalogOps.dropTable(s, src)
-      CatalogOps.renameTable(s, bak, renamed)
-      assert(CatalogOps.tableExists(s, renamed))
-      assert(!CatalogOps.tableExists(s, bak))
-    } finally {
-      Seq(src, bak, renamed).foreach(CatalogOps.dropTable(s, _))
-    }
-  }
 
   test("schemaDiff: added/removed/changed columns, order-insensitive") {
     import org.apache.spark.sql.types._
@@ -262,6 +213,69 @@ class CatalogOpsSpec extends SparkFunSuite {
       // a reader lagging two publishes still resolves its epoch table
       assert(s.table(CatalogOps.epochRef(ref, 1).qualified)
         .as[Long].head() == 1L)
+    } finally CatalogOps.dropEpochIndex(s, ref)
+  }
+
+  test("epoch views: a crashed epoch publish is invisible and heals itself") {
+    // Crash model: the next epoch TABLE materialized fully but the view
+    // flip never ran. Readers keep answering from the referenced epoch;
+    // the next publish drops the debris, rewrites it and flips.
+    val s = spark
+    import s.implicits._
+    s.sql("CREATE DATABASE IF NOT EXISTS graft_test")
+    val ref = TableRef("graft_test", "epoch_crash")
+    try {
+      CatalogOps.dropEpochIndex(s, ref)
+      CatalogOps.publishEpoch(s, ref)(t =>
+        Seq(1L, 2L).toDF("k").write.saveAsTable(t.qualified))
+      Seq(99L).toDF("k").write
+        .saveAsTable(CatalogOps.epochRef(ref, 1).qualified)
+      assert(CatalogOps.currentEpoch(s, ref).contains(0L))
+      assert(s.table(ref.qualified).as[Long].collect().toSet == Set(1L, 2L),
+        "debris epoch must be invisible to readers")
+      CatalogOps.publishEpoch(s, ref)(t =>
+        Seq(1L, 2L, 3L).toDF("k").write.saveAsTable(t.qualified))
+      assert(CatalogOps.currentEpoch(s, ref).contains(1L))
+      assert(s.table(ref.qualified).as[Long].collect().toSet ==
+        Set(1L, 2L, 3L), "the debris rows must never be served")
+    } finally CatalogOps.dropEpochIndex(s, ref)
+  }
+
+  test("epoch views: pinSnapshot reads stay bit-identical while publishes land") {
+    val s = spark
+    import s.implicits._
+    s.sql("CREATE DATABASE IF NOT EXISTS graft_test")
+    val ref = TableRef("graft_test", "epoch_pin_live")
+    def publish(n: Long): Unit = CatalogOps.publishEpoch(s, ref, retain = 4)(
+      t => (0L until n).toDF("k").write.saveAsTable(t.qualified))
+    try {
+      CatalogOps.dropEpochIndex(s, ref)
+      publish(50L)
+      val pin = CatalogOps.pinSnapshot(s, ref)(publish(60L))
+      assert(pin == 0L && CatalogOps.currentEpoch(s, ref).contains(1L))
+      def pinned(): Seq[Long] = CatalogOps.tableAtEpoch(s, ref, pin)
+        .as[Long].collect().toSeq.sorted
+      val expect = pinned()
+      assert(expect == (0L until 50L))
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val publisher = new Thread(() =>
+        try Seq(70L, 80L, 90L).foreach(publish)
+        catch { case t: Throwable => errs.add(t) })
+      @volatile var stop = false
+      val reads = new java.util.concurrent.atomic.AtomicInteger
+      val reader = new Thread(() =>
+        try while (!stop) {
+          assert(pinned() == expect, "pinned read saw another snapshot")
+          reads.incrementAndGet()
+        } catch { case t: Throwable => errs.add(t) })
+      reader.start(); publisher.start()
+      publisher.join()
+      stop = true; reader.join()
+      assert(errs.isEmpty, s"pinned-read race errored: ${errs.peek()}")
+      assert(reads.get() > 0, "the reader must have read during the publishes")
+      assert(pinned() == expect, "pinned epoch changed after the publishes")
+      assert(s.table(ref.qualified).count() == 90L,
+        "the view moves on; the pin froze only the snapshot")
     } finally CatalogOps.dropEpochIndex(s, ref)
   }
 }
