@@ -12,6 +12,9 @@ package graft.model
   */
 final case class TableRef(db: String, table: String) {
   def qualified: String = s"$db.$table"
+  /** Backup-name derivation (reference: services/migration.py:48-51). */
+  def backup(suffix: String = "_backup_s3"): TableRef =
+    TableRef(db, table + suffix)
 }
 
 /** One partition of a table: the values of the partition-key columns, in

@@ -59,6 +59,14 @@ object DataQuality {
         col("e.max_value").as("max_value"))
   }
 
+  /** Columns whose completeness falls below `minCompleteness` — the
+    * gate a pipeline fails on (empty = healthy).
+    */
+  def completenessViolations(profiled: DataFrame,
+      minCompleteness: Double): DataFrame =
+    profiled.filter(col("completeness") < minCompleteness)
+      .select("column", "completeness", "null_count", "n_rows")
+
   /** One [[profile]] row as a value — the unit the drift gate compares
     * and the dq report serializes (bounded by schema width, never row
     * data).

@@ -219,6 +219,7 @@ object Dedup {
     * is the expensive stage), then every arriving batch's band join
     * reads it with ZERO exchange on the index side: the bucket layout
     * IS the join partitioning, so only the (small) batch shuffles.
+    * Append each ingested batch's bands to keep the index current.
     */
   def writeBandIndex(df: DataFrame, idCol: String, textCol: String,
       table: graft.model.TableRef, bands: Int = 6, rowsPerBand: Int = 2,
@@ -229,6 +230,94 @@ object Dedup {
         eRef, bucketCols = Seq("band", "key"), numBuckets = buckets,
         sortCols = Seq("band", "key"))
     }
+
+  /** Grow a [[writeBandIndex]] index by an ingested batch: append the
+    * batch's OWN band rows (the batch-sized signature pass only — the
+    * standing corpus is never re-signed) with the same bucket spec, so
+    * the index stays bucket-joinable over old and new rows alike. Call
+    * after the batch's near-dup check admits it to the corpus.
+    */
+  def appendToBandIndex(batch: DataFrame, idCol: String, textCol: String,
+      table: graft.model.TableRef, bands: Int = 6, rowsPerBand: Int = 2,
+      buckets: Int = 8): Unit =
+    // single-writer lock across resolve+append: serializes concurrent
+    // appenders (two uncoordinated saveAsTable appends may interleave)
+    // AND excludes a compaction from reading the epoch mid-append
+    graft.sources.IndexLock.withWriterLock(
+        batch.sparkSession, table.qualified) {
+      // batches land INSIDE the live epoch table — appends never create
+      // epochs (a concurrent reader sees pre- or post-append rows, both
+      // valid corpus states); resolving the epoch also fails fast when
+      // the index was never built (appendBucketed would otherwise CREATE
+      // a batch-sized table under the epoch name)
+      graft.sources.CatalogOps.appendBucketed(
+        minhashBands(batch, idCol, textCol, bands, rowsPerBand),
+        graft.sources.CatalogOps.liveEpochTable(batch.sparkSession, table),
+        bucketCols = Seq("band", "key"), numBuckets = buckets,
+        sortCols = Seq("band", "key"))
+    }
+
+  /** OPTIMIZE for the standing band index: [[appendToBandIndex]] lands
+    * one file per bucket per ingested batch, so after B batches every
+    * bucket join opens B files per bucket — at 100 TB with
+    * minute-level ingest that is the classic small-files death spiral
+    * (open/seek overhead dwarfs scan bytes). Rewrites the table to ONE
+    * file per bucket while PRESERVING the (band, key) bucket spec —
+    * the repartition uses the same hash the bucket layout does, so
+    * each writer task holds exactly one bucket — and compaction
+    * therefore changes file counts, never join partitioning: the
+    * compacted index still band-joins with zero index-side exchange
+    * (spec-asserted in CompactionSpec). Publish is a NEW EPOCH table
+    * behind the index VIEW ([[graft.sources.CatalogOps.publishEpoch]]):
+    * the compacted copy materializes fully, then the view re-points in
+    * one atomic catalog op — no table is ever renamed, so CONCURRENT
+    * READERS are safe: a probe planned against epoch N keeps its files
+    * while N+1 publishes (one superseded epoch is retained as grace)
+    * and returns the pre-compaction result; the next probe resolves
+    * N+1. Spec-asserted under a live probe loop across ≥20 compaction
+    * cycles in SoakSpec.
+    */
+  def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
+      table: graft.model.TableRef, buckets: Int = 8,
+      retain: Int = 1): Unit =
+    compactBucketedIndex(spark, table, Seq("band", "key"), buckets, retain)
+
+  /** The [[compactBandIndex]] mechanics for ANY bucketed standing index
+    * (band index, shingle index): one file per bucket, bucket spec —
+    * and therefore the exchange-free join property — preserved,
+    * epoch-view publish (atomic, concurrent-reader-safe). `retain`
+    * sizes the grace window: the number of superseded epochs kept for
+    * in-flight readers (choose ≥ ceil(slowest-query / OPTIMIZE
+    * cadence); default 1 — a reader strands only if it lags two
+    * publishes).
+    */
+  def compactBucketedIndex(spark: org.apache.spark.sql.SparkSession,
+      table: graft.model.TableRef, bucketCols: Seq[String],
+      buckets: Int, retain: Int = 1): Unit =
+      graft.sources.IndexLock.withWriterLock(spark, table.qualified) {
+    // writer lock spans resolve+rewrite+publish: an append landing
+    // inside the live epoch AFTER the compaction's read would vanish
+    // from the compacted successor — the lock makes read-to-publish
+    // atomic against other writers (readers stay lock-free on epochs).
+    // read the CURRENT epoch's rows, not the view: the view would
+    // re-resolve during the write and must keep serving readers anyway
+    val live = spark.table(
+      graft.sources.CatalogOps.liveEpochTable(spark, table).qualified)
+    graft.sources.CatalogOps.publishEpoch(spark, table, retain) { eRef =>
+      // Repartition on the COMPUTED bucket id (pmod(murmur3, n) — the
+      // bucket formula itself), not on the raw columns: an exchange on
+      // the raw columns is ELIMINATED because the bucketed scan already
+      // satisfies that distribution, leaving the accreted file grouping
+      // in charge of output file count. The bucket-id key can't be
+      // elided, keeps every bucket whole within one writer task, and so
+      // yields exactly one file per bucket.
+      graft.sources.CatalogOps.writeBucketed(
+        live.repartition(buckets, pmod(hash(bucketCols.map(col): _*),
+          lit(buckets))),
+        eRef, bucketCols = bucketCols, numBuckets = buckets,
+        sortCols = bucketCols)
+    }
+  }
 
   /** Incremental near-dups of `batch` against a PERSISTED band index
     * (written by [[writeBandIndex]]) — the production shape of
@@ -244,7 +333,7 @@ object Dedup {
       bands: Int = 6, rowsPerBand: Int = 2): DataFrame = {
     val spark = batch.sparkSession
     // the index name is an epoch VIEW: analysis resolves it to an
-    // immutable epoch table, so a concurrent rebuild cannot tear
+    // immutable epoch table, so a concurrent compaction cannot tear
     // this probe (it publishes a NEW epoch and re-points the view)
     val relB = shingleRelation(batch, idCol, textCol)
     val cand = bandsFromRelation(relB, bands, rowsPerBand).as("x")
@@ -262,7 +351,9 @@ object Dedup {
     * against (the `t_contamination` semantics with the train-side
     * shingle pass already paid). Bucketing makes the contamination
     * join exchange-free on the index side: only the (small) arriving
-    * eval batch shuffles. Built once per train-corpus generation.
+    * eval batch shuffles. Built once per train-corpus generation;
+    * growth is [[appendToShingleIndex]], OPTIMIZE is
+    * [[compactBucketedIndex]] with `Seq("shingle")`.
     */
   def writeShingleIndex(train: DataFrame, idCol: String, textCol: String,
       table: graft.model.TableRef, buckets: Int = 8): Unit =
@@ -273,6 +364,27 @@ object Dedup {
             .select("shingle").distinct(),
           eRef, bucketCols = Seq("shingle"), numBuckets = buckets,
           sortCols = Seq("shingle"))
+    }
+
+  /** Grow a [[writeShingleIndex]] index by newly-admitted train
+    * documents: append the batch's own distinct shingles with the same
+    * bucket spec. Cross-batch duplicate shingles are tolerated — the
+    * read path re-distincts over the bucketed scan, which the bucket
+    * layout makes exchange-free — so appends never need to probe the
+    * standing index.
+    */
+  def appendToShingleIndex(batch: DataFrame, idCol: String,
+      textCol: String, table: graft.model.TableRef,
+      buckets: Int = 8): Unit =
+    graft.sources.IndexLock.withWriterLock(
+        batch.sparkSession, table.qualified) {
+      // batches land INSIDE the live epoch table (same contract as the
+      // band index; resolution fails fast if the index was never built)
+      graft.sources.CatalogOps.appendBucketed(
+        shingleRelation(batch, idCol, textCol).select("shingle").distinct(),
+        graft.sources.CatalogOps.liveEpochTable(batch.sparkSession, table),
+        bucketCols = Seq("shingle"), numBuckets = buckets,
+        sortCols = Seq("shingle"))
     }
 
   /** Benchmark-contamination of an arriving batch against the PERSISTED
@@ -646,7 +758,7 @@ object Dedup {
         col("witness").isNull.as("keep"))
   }
 
-  /** Cell count for `d_semantic_auto`: `⌈√(n·r/2)⌉` clamped to
+  /** Cell count for [[semanticDedupAuto]]: `⌈√(n·r/2)⌉` clamped to
     * `[minNlist, maxNlist]`, with `r` = the cost of verifying one
     * in-cell pair relative to one assignment cosine.
     *
@@ -657,10 +769,13 @@ object Dedup {
     * 1.25G cell pairs, exactly 100× per decade, which at the third
     * decade turned an 11 s query into 407 s). Minimizing
     * `n·nlist + r·n²/(2·nlist)` gives `nlist* = √(n·r/2)`, so the
-    * total grows as `n^1.5` — the best a flat centroid list can do.
-    * The floor keeps small corpora on the oracle-replayed 16-cell
-    * recipe ([[semanticDedup]]'s default); the cap bounds the collected
-    * centroid literal (4096·dim floats ≈ 1 MB broadcast).
+    * total grows as `n^1.5` — the best a flat centroid list can do;
+    * truly linear ingest belongs to the persisted-index incremental
+    * path ([[semanticDedupAgainstIndex]]), whose per-batch cost rides
+    * the batch, not the corpus. The floor keeps small corpora on the
+    * oracle-replayed 16-cell recipe ([[semanticDedup]]'s default); the
+    * cap bounds the collected centroid literal (4096·dim floats ≈ 1 MB
+    * broadcast).
     */
   def chooseNlist(n: Long, verifyCostRatio: Double = 0.5,
       minNlist: Int = 16, maxNlist: Int = 4096): Int = {
@@ -669,6 +784,20 @@ object Dedup {
     math.min(maxNlist, math.max(minNlist,
       math.ceil(math.sqrt(n.toDouble * verifyCostRatio / 2.0)).toInt))
   }
+
+  /** [[semanticDedup]] with the cell count CHOSEN FOR THE CORPUS
+    * ([[chooseNlist]]) instead of the fixed teaching default. EAGER at
+    * plan-build time twice over: the corpus is counted here (the
+    * cell-count input), and Lloyd training then runs inside
+    * [[Similarity.trainCentroidsLiteral]] — the same
+    * train-then-search contract, so don't build these speculatively.
+    * At the oracle SF the count resolves `nlist` to the same 16 cells
+    * as [[semanticDedup]]'s default, which is what keeps this variant
+    * hash-checkable against the identical DuckDB replay.
+    */
+  def semanticDedupAuto(emb: DataFrame, tau: Double, iters: Int = 2,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    semanticDedup(emb, tau, chooseNlist(emb.count()), iters, idCol, vecCol)
 
   /** INCREMENTAL [[semanticDedup]]: an arriving batch checked against a
     * standing corpus — the semantic twin of [[minhashNearDupsAgainst]].
@@ -692,6 +821,28 @@ object Dedup {
     semanticWitness(
       Similarity.assignCells(corpus, cents, idCol, vecCol),
       Similarity.assignCells(batch, cents, idCol, vecCol), tau)
+  }
+
+  /** [[semanticDedupAgainst]] over a PERSISTED [[Similarity
+    * .writeIvfIndex]] index: the corpus-side scan partition-prunes to
+    * the cells the batch actually occupies (the batch's distinct cell
+    * ids are collected at plan-build time — ≤ nlist small ints, index
+    * metadata, never row data — exactly [[Similarity.ivfTopKIndexed]]'s
+    * probe-cell collect). At 100 TB this is the difference between
+    * re-reading the whole corpus assignment per ingested batch and
+    * reading only the touched inverted lists.
+    */
+  def semanticDedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String, batch: DataFrame, tau: Double,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val cents = spark.read.parquet(s"$path/centroids")
+    val bAss = Similarity.assignCells(batch, cents, idCol, vecCol)
+    val cells = bAss.select("cell").distinct()
+      .collect().map(_.getInt(0)).toSeq
+    val cAss = spark.read.parquet(
+      graft.sources.EpochDir.live(spark, s"$path/cells"))
+      .filter(col("cell").isin(cells: _*))
+    semanticWitness(cAss, bAss, tau)
   }
 
   /** Shared pair-search of the incremental semantic-dedup variants:

@@ -27,6 +27,20 @@ import graft.model.PartitionId
   */
 object Partitions {
 
+  /** Normalize a partition-key expression: `(dt, channel)` → Seq(dt, channel)
+    * (reference: services/partition.py:22-25, 49).
+    */
+  def parsePartitionKey(raw: String): Seq[String] = {
+    val trimmed = raw.trim
+    if (trimmed.isEmpty)
+      throw new IllegalArgumentException("table has no partition key configured")
+    val inner =
+      if (trimmed.startsWith("(") && trimmed.endsWith(")"))
+        trimmed.substring(1, trimmed.length - 1)
+      else trimmed
+    inner.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+  }
+
   /** Typed partition predicate: keys zip values, AND-folded
     * (reference: services/partition.py:29-75 builds the same predicate as
     * a SQL string). The arity check is preserved as a real error

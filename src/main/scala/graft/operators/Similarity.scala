@@ -524,6 +524,32 @@ object Similarity {
     }
   }
 
+  /** Grow a [[writeIvfIndex]] index by an ingested batch: assign the
+    * batch's vectors against the index's STORED centroids (cells must
+    * not move on ingest, or every inverted list would need rebuilding)
+    * and append them into the partitionBy(cell) layout — each batch
+    * row lands in its cell's directory, so probed searches and the
+    * incremental dedup path partition-prune over old and new rows
+    * alike. The batch pays only its own assignment pass.
+    */
+  def appendToIvfIndex(batch: DataFrame, path: String,
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+    val spark = batch.sparkSession
+    // single-writer lock across resolve+append (keyed on the cells
+    // store, same key compaction publishes under): serializes
+    // concurrent appenders and keeps a compaction from reading the
+    // epoch mid-append
+    graft.sources.IndexLock.withWriterLock(spark, s"$path/cells") {
+      // batches land INSIDE the live epoch — appends never create
+      // epochs (a concurrent reader sees pre- or post-append listing,
+      // both valid corpus states)
+      val live = graft.sources.EpochDir.live(spark, s"$path/cells")
+      val cents = spark.read.parquet(s"$path/centroids")
+      assignCells(batch, cents, idCol, vecCol)
+        .write.mode("append").partitionBy("cell").parquet(live)
+    }
+  }
+
   /** ANN over a PERSISTED [[writeIvfIndex]] index: probe cells come
     * from the stored centroids, and the cell scan is partition-pruned
     * to the probed cell ids. The probe-cell list is collected at
@@ -536,7 +562,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       atEpoch: Option[Long] = None): DataFrame = {
     // resolve the live epoch ONCE: the whole search plans against its
-    // immutable file paths, so a concurrent rebuild (which publishes
+    // immutable file paths, so a concurrent compaction (which publishes
     // a NEW epoch and never touches this one) cannot tear the read.
     // `atEpoch` pins the read to a SPECIFIC committed snapshot instead
     // (EpochDir.at) — the reproducible-run protocol: results are
@@ -749,7 +775,8 @@ object Similarity {
     * staged (64×-compressed) rows instead of re-evaluating the lazy
     * encode plan per consumer — at 100 TB one extra write+read of the
     * compressed codes beats three map passes over the float corpus.
-    * Build is once per corpus generation.
+    * Build is once per corpus generation; growth is
+    * [[appendToIvfPqIndex]].
     */
   def writeIvfPqIndex(codes: DataFrame, cents: DataFrame,
       path: String, nlist: Int = 16,
@@ -764,7 +791,9 @@ object Similarity {
     cents.write.mode("overwrite").parquet(s"$path/codebooks")
     val assigned = assignCells(recon, coarse, "vid", vecCol)
       .select(col("vid"), col("cell"))
-    // `_batch = -1` is a constant second partition level: it changes
+    // `_batch = -1` marks base-build rows; an ingest with a batch id
+    // writes its own `_batch=<id>` leaf so replays are idempotent
+    // (see [[appendToIvfPqIndex]]). The second partition level changes
     // directory depth only — cell pruning is untouched (cell stays the
     // first level) and search reads ignore the column.
     graft.sources.EpochDir.publish(spark, s"$path/codes") { target =>
@@ -780,7 +809,7 @@ object Similarity {
 
   /** PQ geometry (mm subspaces × dd dims) read off stored codebooks —
     * the codebooks are the single source of truth, so callers can
-    * never hand the search path a geometry that disagrees
+    * never hand the append/search paths a geometry that disagrees
     * with the codes already in the index (wrong values would silently
     * mix codes over a different subspace split into the same layout).
     */
@@ -789,6 +818,139 @@ object Similarity {
       max(size(col("cv"))).as("dd")).head()
     (r.getInt(0) + 1, r.getInt(1))
   }
+
+  /** Grow a [[writeIvfPqIndex]] index by an ingested batch: encode the
+    * batch against the STORED codebooks (codebooks must not move on
+    * ingest, or every stored code would decode differently) and assign
+    * cells from the batch's RECONSTRUCTION against the STORED coarse
+    * centroids (cells must not move, or every inverted list would need
+    * rebuilding) — the same invariants as [[appendToIvfIndex]], now
+    * for both quantizer levels. Each batch row lands in its cell's
+    * directory; the batch pays one encode pass + one assignment pass,
+    * and the standing index never rewrites. Spec-proven equal to a
+    * full rebuild over the combined corpus (IvfIndexSpec).
+    *
+    * Geometry comes from the STORED codebooks ([[pqGeometryOf]]), never
+    * the caller, and the batch's lowest id must clear the stored nlist:
+    * [[seedCentroidsLiteral]] seeds the coarse quantizer from the
+    * LOWEST ids, so an appended id below nlist would make a later full
+    * rebuild pick different seeds than the grown index — voiding the
+    * spec-proven rebuild equivalence. The guard costs one min() over
+    * the batch (O(batch), map-side).
+    *
+    * Delivery: pass `batchId` (e.g. the Structured Streaming batch id)
+    * to make the write IDEMPOTENT — rows land under
+    * `cell=<c>/_batch=<id>/` via dynamic partition overwrite, so a
+    * replayed micro-batch OVERWRITES its own leaf directories instead
+    * of appending duplicates (deterministic encode ⇒ identical rows).
+    * Without a batchId, rows land under `_batch=-1` with plain append
+    * semantics (one-off batch growth; caller owns retry hygiene).
+    */
+  def appendToIvfPqIndex(batch: DataFrame, path: String,
+      batchId: Option[Long] = None,
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+      graft.sources.IndexLock.withWriterLock(
+        batch.sparkSession, s"$path/codes") {
+    val spark = batch.sparkSession
+    // batches land INSIDE the live epoch (appends never create epochs)
+    val live = graft.sources.EpochDir.live(spark, s"$path/codes")
+    val coarse = spark.read.parquet(s"$path/coarse")
+    val cbooks = spark.read.parquet(s"$path/codebooks")
+    val (mm, dd) = pqGeometryOf(cbooks)
+    val minIdRow = batch.agg(min(col(idCol).cast("long"))).head()
+    if (minIdRow.isNullAt(0)) return // empty batch (idle micro-batch)
+    val nlist = coarse.count()
+    require(minIdRow.getLong(0) >= nlist,
+      s"appendToIvfPqIndex: batch min $idCol ${minIdRow.getLong(0)} is " +
+        s"below the stored nlist ($nlist) — appended ids must not enter " +
+        "the lowest-id coarse-seed set, or a full rebuild would choose " +
+        "different seeds than the grown index")
+    val codes = pqEncode(batch, cbooks, mm, dd, idCol, vecCol)
+    val recon = pqReconstruct(codes, cbooks, idCol, vecCol)
+    val assigned = assignCells(recon, coarse, idCol, vecCol)
+      .select(col("vid"), col("cell"))
+    val rows = codes.select(col(idCol).as("vid"), col("m"), col("cid"))
+      .join(assigned, "vid")
+      .withColumn("_batch", lit(batchId.getOrElse(-1L)))
+    batchId match {
+      case Some(_) =>
+        rows.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("cell", "_batch").parquet(live)
+      case None =>
+        rows.write.mode("append")
+          .partitionBy("cell", "_batch").parquet(live)
+    }
+  }
+
+  /** OPTIMIZE for the cell-partitioned vector indexes: each
+    * [[appendToIvfIndex]] / [[appendToIvfPqIndex]] batch lands its own
+    * small files inside every cell directory it touches, so after B
+    * batches a probed search opens O(B) files per probed cell — the
+    * small-files spiral that eventually dominates open/seek time at
+    * 100 TB ingest cadence. Rewrites the cell data to FEW, SIZE-BOUNDED
+    * files per cell, PRESERVING the partitionBy(cell) layout:
+    *  - the repartitionByRange on (cell, vid) keeps each cell's rows on
+    *    as few tasks as the size budget allows (cold cells share a
+    *    task → one file each) while a HOT cell spans several vid
+    *    ranges — so compaction output scales with data, never "one
+    *    arbitrarily large task and file per hot cell";
+    *  - `maxRecordsPerFile` caps every emitted file, hot or cold —
+    *    spec-asserted over a deliberately skewed cell in
+    *    CompactionSpec, together with the preserved pruning.
+    * A `_batch` ingest level (IVFPQ codes) is collapsed to `-1`:
+    * compaction is the batch-history horizon, so it requires quiesced
+    * WRITERS as well as readers.
+    *
+    * Publish is a NEW EPOCH ([[graft.sources.EpochDir]]): the
+    * compacted copy lands beside the live epoch and commits via its
+    * `_SUCCESS` marker; no live file ever moves, so CONCURRENT READERS
+    * are safe — a search planned against epoch N keeps its files while
+    * N+1 publishes (one superseded epoch is retained as grace) and
+    * returns the pre-compaction result; the next open resolves N+1.
+    * Spec-asserted under a live search loop across ≥20 compaction
+    * cycles in SoakSpec. A crash mid-write leaves an uncommitted epoch
+    * the resolver never sees and the next publish overwrites. (On
+    * object stores this is also rename-free — pure write + delete —
+    * so raw S3A needs no rename-capable layer anymore.)
+    */
+  def compactCellIndex(spark: SparkSession, dir: String,
+      maxRecordsPerFile: Long = 4L * 1024 * 1024,
+      retain: Int = 1): Unit =
+      graft.sources.IndexLock.withWriterLock(spark, dir) {
+    // writer lock spans resolve+rewrite+publish: an append landing in
+    // the live epoch after this read would vanish from the compacted
+    // successor — the lock makes read-to-publish atomic against other
+    // writers (readers stay lock-free on epochs)
+    val live = spark.read.parquet(graft.sources.EpochDir.live(spark, dir))
+    val total = live.count()
+    val nParts = math.max(1L,
+      math.ceil(total.toDouble / maxRecordsPerFile).toLong).toInt
+    val hasBatch = live.columns.contains("_batch")
+    val ranged = live.repartitionByRange(nParts, col("cell"), col("vid"))
+    val (out, partCols) =
+      if (hasBatch) (ranged.withColumn("_batch", lit(-1L)),
+        Seq("cell", "_batch"))
+      else (ranged, Seq("cell"))
+    graft.sources.EpochDir.publish(spark, dir, retain) { target =>
+      out.write.mode("overwrite")
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+        .partitionBy(partCols: _*).parquet(target)
+    }
+  }
+
+  /** [[compactCellIndex]] over a [[writeIvfIndex]] index. `retain`
+    * sizes the grace window (superseded epochs kept for in-flight
+    * readers; default 1).
+    */
+  def compactIvfIndex(spark: SparkSession, path: String,
+      retain: Int = 1): Unit =
+    compactCellIndex(spark, s"$path/cells", retain = retain)
+
+  /** [[compactCellIndex]] over a [[writeIvfPqIndex]] index. */
+  def compactIvfPqIndex(spark: SparkSession, path: String,
+      retain: Int = 1): Unit =
+    compactCellIndex(spark, s"$path/codes", retain = retain)
 
   /** ANN over a PERSISTED [[writeIvfPqIndex]] index — the full FAISS
     * IndexIVFPQ read path: probe cells come from the stored coarse
@@ -808,7 +970,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       atEpoch: Option[Long] = None): DataFrame = {
     // resolve the live epoch ONCE: the whole search plans against its
-    // immutable file paths, so a concurrent rebuild (which publishes
+    // immutable file paths, so a concurrent compaction (which publishes
     // a NEW epoch and never touches this one) cannot tear the read.
     // `atEpoch` pins the read to a SPECIFIC committed snapshot
     // (EpochDir.at — the reproducible-run protocol; coarse/codebooks

@@ -67,3 +67,53 @@ object Validate {
       dst: Map[PartitionId, (Long, Long)]): Boolean =
     (src.keySet ++ dst.keySet).forall(p => src.get(p) == dst.get(p))
 }
+
+/** Skew mitigation for hot-key aggregation: two-phase salted aggregate.
+  * At 100 TB a handful of hot keys (one language, one event_type) can
+  * pin a single reducer; salting fans each key across `saltBuckets`
+  * partial aggregates, then combines — trading one extra (tiny) shuffle
+  * for bounded per-task input. AQE's skew handling covers joins; this
+  * covers aggregation.
+  */
+object Salting {
+
+  /** Salted count: exactly `df.groupBy(key).count()` but skew-proof. */
+  def saltedCount(df: DataFrame, key: String, saltBuckets: Int = 32): DataFrame =
+    df.withColumn("_salt", (rand(seed = 7) * saltBuckets).cast("int"))
+      .groupBy(col(key), col("_salt"))
+      .agg(count(lit(1)).as("partial"))
+      .groupBy(col(key))
+      .agg(sum(col("partial")).as("count"))
+
+  /** Salted sum of an arbitrary (associative) aggregate expression pair:
+    * partial then final — generic two-phase shape.
+    */
+  def saltedSum(df: DataFrame, key: String, value: Column,
+      saltBuckets: Int = 32): DataFrame =
+    df.withColumn("_salt", (rand(seed = 7) * saltBuckets).cast("int"))
+      .groupBy(col(key), col("_salt"))
+      .agg(sum(value).as("partial"))
+      .groupBy(col(key))
+      .agg(sum(col("partial")).as("sum"))
+
+  /** Salted equi-join for a skewed big side: the big side gets a random
+    * salt in [0, saltBuckets), the small side is replicated once per
+    * salt value (explode of a literal range), and the join key becomes
+    * (key, salt) — a hot key's rows now spread across `saltBuckets`
+    * shuffle partitions instead of hammering one task. Result is
+    * row-identical to the plain inner join (every big-side row still
+    * meets every matching small-side row exactly once, through its one
+    * salt). Use when a specific key set is known-hot and AQE's
+    * skew-splitting is unavailable (e.g. the join feeds an operator AQE
+    * won't split under). Cost: small side × saltBuckets, so size the
+    * bucket count to the skew, not higher.
+    */
+  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
+      saltBuckets: Int = 32): DataFrame = {
+    val salted = big.withColumn("_salt",
+      (rand(seed = 7) * saltBuckets).cast("int"))
+    val replicated = small.withColumn("_salt",
+      explode(sequence(lit(0), lit(saltBuckets - 1))))
+    salted.join(replicated, Seq(key, "_salt")).drop("_salt")
+  }
+}

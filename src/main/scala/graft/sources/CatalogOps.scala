@@ -4,18 +4,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.StructType
 
-import graft.model.TableRef
+import graft.model.{PartitionId, TableRef}
 
-/** Catalog-table operations on `spark.catalog` / Spark SQL:
+/** Catalog-table operations — the reference's DDL/introspection surface
+  * re-expressed on `spark.catalog` / Spark SQL:
   *
   *  - existence check (reference: clickhouse_migrator/services/
   *    migration.py:424-426 queries system.tables) → [[tableExists]]
-  *  - Distributed-table resolution (migration.py:277-306) →
-  *    [[resolveToBaseTable]]
-  *  - schema drift before a re-sync → [[schemaDiff]] (structural, where
-  *    the reference would diff two `SHOW CREATE` strings)
-  *  - catalog metadata → [[storageOf]]; bucketed standing indexes →
-  *    [[writeBucketed]] published behind epoch views ([[publishEpoch]])
+  *  - table enumeration excluding views (migration.py:548-550 `NOT IN
+  *    ('View','MaterializedView')`) → [[listDataTables]]
+  *  - DDL introspection `SHOW CREATE` (migration.py:21-46; the
+  *    reference treats the DDL as an opaque string and regex-rewrites it,
+  *    A27/A28) → [[schemaOf]] + [[createBackupTable]]: schema cloning is
+  *    STRUCTURAL here — the storage-policy regex splice collapses to a
+  *    location/format option
+  *  - CREATE/DROP/RENAME (migration.py:420-421, 520-524) →
+  *    [[createBackupTable]] / [[dropTable]] / [[renameTable]]
+  *  - ALTER … DROP PARTITION (migration.py:498-503) → [[dropPartition]]
   */
 object CatalogOps {
 
@@ -28,7 +33,7 @@ object CatalogOps {
   // as a VIEW named `ref` over an immutable epoch TABLE `ref__e<N>`.
   // Readers keep using `spark.table(ref)` — view resolution happens at
   // analysis time, so every query plans against an epoch table whose
-  // files never move; a rebuild writes `__e<N+1>` and atomically
+  // files never move; compaction writes `__e<N+1>` and atomically
   // re-points the view (CREATE OR REPLACE VIEW is one catalog op),
   // which can never strand an in-flight reader the way the previous
   // rename-aside table swap could (a swap moves the files a planned
@@ -90,7 +95,7 @@ object CatalogOps {
     * `retain` just-superseded ones are dropped (size `retain` to the
     * slowest concurrent reader; default ONE superseded epoch of
     * grace). Used by both the initial build (epoch 0) and every
-    * rebuild. A name bound to a plain TABLE is refused.
+    * rebuild/compaction. A name bound to a plain TABLE is refused.
     *
     * Crash rule: a table already bound to the new epoch's name can only
     * be left by a publish that died before its view flip, so it is
@@ -146,8 +151,9 @@ object CatalogOps {
   }
 
   /** BIT-EXACT snapshot pin for a catalog epoch-view index — the
-    * [[EpochDir.pinSnapshot]] twin: runs `publishRun` (a rebuild that
-    * ends in [[publishEpoch]] of this ref) under the writer lock
+    * [[EpochDir.pinSnapshot]] twin: runs `publishRun` (an OPTIMIZE that
+    * ends in [[publishEpoch]] of this ref, e.g.
+    * [[graft.operators.Dedup.compactBandIndex]]) under the writer lock
     * and returns the epoch number that was LIVE at entry — now
     * superseded, hence immutable. Read it back with [[tableAtEpoch]]
     * for the duration of the pinned run; it survives `retain` further
@@ -164,7 +170,7 @@ object CatalogOps {
     require(now.exists(_ > pin),
       s"pinSnapshot: publishRun did not publish a new epoch of " +
         s"${ref.qualified} (live ${now.orNull} after, pin $pin) — pass " +
-        "a rebuild that calls publishEpoch on this index")
+        "an OPTIMIZE that calls publishEpoch on this index")
     pin
   }
 
@@ -215,6 +221,12 @@ object CatalogOps {
     }
   }
 
+  /** All non-view tables in a database (A9). */
+  def listDataTables(spark: SparkSession, db: String): Seq[String] =
+    spark.catalog.listTables(db).collect()
+      .filter(t => t.tableType != "VIEW")
+      .map(_.name).toSeq
+
   /** Where a catalog entry's files live (None for a view, which has no
     * storage) and its bucket count (None when unbucketed), read from the
     * session catalog's table metadata.
@@ -226,6 +238,10 @@ object CatalogOps {
       TableIdentifier(ref.table, Some(ref.db)))
     Storage(meta.storage.locationUri, meta.bucketSpec.map(_.numBuckets))
   }
+
+  /** Structural schema introspection (replaces SHOW CREATE + regex). */
+  def schemaOf(spark: SparkSession, ref: TableRef): StructType =
+    spark.table(ref.qualified).schema
 
   /** Structural schema drift between a source and an existing target —
     * the introspection an INCREMENTAL re-sync runs before copying data
@@ -255,8 +271,69 @@ object CatalogOps {
     (added ++ removed ++ changed).sortBy(_._1)
   }
 
+  /** Create the backup table: same structure, parquet format, optionally
+    * partitioned and at an explicit location — the structural equivalent
+    * of the reference's DDL rewrite to an S3 storage policy (A27/A28).
+    */
+  def createBackupTable(
+      spark: SparkSession,
+      src: TableRef,
+      backup: TableRef,
+      partitionKeys: Seq[String] = Nil,
+      location: Option[String] = None): Unit = {
+    val locClause = location.map(l => s" LOCATION '$l'").getOrElse("")
+    val partClause =
+      if (partitionKeys.nonEmpty) s" PARTITIONED BY (${partitionKeys.mkString(", ")})"
+      else ""
+    spark.sql(s"DROP TABLE IF EXISTS ${backup.qualified}")
+    spark.sql(
+      s"CREATE TABLE ${backup.qualified} USING parquet$partClause$locClause " +
+        s"AS SELECT * FROM ${src.qualified} WHERE 1=0")
+  }
+
   def dropTable(spark: SparkSession, ref: TableRef): Unit =
     spark.sql(s"DROP TABLE IF EXISTS ${ref.qualified}")
+
+  /** RENAME — paired with drop it reproduces the reference's swap
+    * (migration.py:520-524); prefer CopyService.publish for path tables.
+    */
+  def renameTable(spark: SparkSession, from: TableRef, to: TableRef): Unit =
+    spark.sql(s"ALTER TABLE ${from.qualified} RENAME TO ${to.table}")
+
+  /** ALTER TABLE … DROP PARTITION with a typed partition spec (A14/A31 —
+    * the reference's quoting heuristic becomes structural rendering).
+    */
+  def dropPartition(spark: SparkSession, ref: TableRef,
+      keys: Seq[String], part: PartitionId): Unit = {
+    val spec = keys.zip(part.values)
+      .map { case (k, v) => s"$k = '${v.replace("'", "''")}'" }
+      .mkString(", ")
+    spark.sql(s"ALTER TABLE ${ref.qualified} DROP IF EXISTS PARTITION ($spec)")
+  }
+
+  /** SHOW PARTITIONS → typed ids (catalog twin of
+    * Partitions.enumeratePartitions).
+    */
+  def listPartitions(spark: SparkSession, ref: TableRef,
+      keys: Seq[String]): Seq[PartitionId] =
+    spark.sql(s"SHOW PARTITIONS ${ref.qualified}")
+      .collect()
+      .map { r =>
+        val spec = r.getString(0) // k1=v1/k2=v2
+        val values = spec.split("/").map(_.split("=", 2)(1))
+        PartitionId(values.toSeq)
+      }.toSeq.sortBy(_.render)
+
+  /** Insert one partition of data into a catalog table with dynamic
+    * partition overwrite (idempotent retry — the catalog twin of
+    * CopyService.copyPartition).
+    */
+  def insertPartition(spark: SparkSession, target: TableRef,
+      data: DataFrame): Unit =
+    data.write
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .insertInto(target.qualified)
 
   /** Write a bucketed (optionally sort-within-bucket) catalog table:
     * rows hash-cluster into `numBuckets` files by `bucketCols`. Two
@@ -273,6 +350,24 @@ object CatalogOps {
       sortCols: Seq[String] = Nil): Unit = {
     require(bucketCols.nonEmpty, "bucketCols must be non-empty")
     val w = df.write.mode("overwrite")
+      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
+    val ws =
+      if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
+    ws.format("parquet").saveAsTable(table.qualified)
+  }
+
+  /** Append to an existing [[writeBucketed]] table with the SAME bucket
+    * spec (Spark validates the spec against the catalog and rejects a
+    * mismatch — the appended files land bucketed, so downstream
+    * bucket-joins keep their zero-exchange property over old AND new
+    * data). The growth path of a standing index: each ingested batch
+    * appends its own rows instead of recomputing the corpus.
+    */
+  def appendBucketed(df: DataFrame, table: TableRef,
+      bucketCols: Seq[String], numBuckets: Int,
+      sortCols: Seq[String] = Nil): Unit = {
+    require(bucketCols.nonEmpty, "bucketCols must be non-empty")
+    val w = df.write.mode("append")
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
     val ws =
       if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * cell and code stores): data lives in immutable-path epoch
   * subdirectories `<base>/e<N>` and readers always open the HIGHEST
   * COMMITTED epoch (the parquet `_SUCCESS` marker is the commit
-  * record). Rebuilds write a NEW epoch beside the live
+  * record). Rebuilds and compactions write a NEW epoch beside the live
   * one and never move or delete a file a concurrent reader could have
   * planned against — the fix for the rename-swap publish, whose
   * live-dir rename invalidated every file path an in-flight search had
@@ -16,12 +16,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Visibility contract: a search that opened epoch N keeps reading
   * epoch N's files even while epoch N+1 publishes — it returns the
-  * pre-publish result; the next open resolves N+1. [[publish]]
+  * pre-compaction result; the next open resolves N+1. [[publish]]
   * retains `retain` superseded epochs as grace (default ONE — deletes
   * only ≤ N−retain−1), so a reader is stranded only if it lags
-  * retain+1 publishes — at 100 TB run a publish cadence longer than
+  * retain+1 publishes — at 100 TB run an OPTIMIZE cadence longer than
   * your slowest query, or size `retain` to the slowest query instead
-  * (retain ≥ ceil(slowest-query / publish-cadence)). Crash safety is
+  * (retain ≥ ceil(slowest-query / OPTIMIZE-cadence)). Crash safety is
   * free: an epoch missing `_SUCCESS` (died mid-write) is invisible to
   * the resolver and overwritten by the next publish; there is no
   * pointer file to tear because the commit marker lives inside the
@@ -32,11 +32,13 @@ import org.apache.spark.sql.SparkSession
   * [[publish]] fail on it and leave its files untouched — rebuild the
   * index.
   *
-  * Nothing writes into a committed epoch, so every committed epoch is
-  * immutable. Publish/publish races — two writers picking the same
-  * next epoch number — are excluded by the [[IndexLock]] single-writer
-  * mutex [[publish]] takes, keyed on this base dir (in-process and
-  * across processes: CrossProcessSoakSpec) — readers never take it.
+  * Appends do NOT create epochs: batch growth lands new files inside
+  * the live epoch (an append is already reader-safe — a concurrent
+  * plan sees pre- or post-append listing, both valid corpus states).
+  * WRITER-vs-writer races (append/append, append/compact,
+  * publish/publish) are excluded by the [[IndexLock]] single-writer
+  * mutex every writer entry point takes, keyed on this base dir —
+  * readers never take it.
   */
 object EpochDir {
 
@@ -97,8 +99,14 @@ object EpochDir {
     * starts, pass it to every index read, and the run replays against
     * the exact corpus snapshot no matter how many publishes land
     * meanwhile (as long as it finishes inside the retain window).
-    * Fails loud when the epoch was purged or never committed, naming
-    * the window fix.
+    * Caveat: an epoch is frozen only once SUPERSEDED — appends land
+    * inside the LIVE epoch, so a pin taken on the live epoch sees
+    * batch growth until the next publish (the same pre-/post-append
+    * ambiguity any reader has). For bit-exact replay, publish
+    * (OPTIMIZE) at snapshot boundaries: every retired epoch is then
+    * immutable — [[pinSnapshot]] packages exactly that and returns the
+    * frozen epoch number. Fails loud when the epoch was purged or
+    * never committed, naming the window fix.
     */
   def at(spark: SparkSession, base: String, epoch: Long): String = {
     val cs = committed(spark, base)
@@ -110,12 +118,20 @@ object EpochDir {
           "slowest pinned run"))
   }
 
-  /** Snapshot pin across a publish: runs `publishRun` (anything that
-    * ends in a [[publish]] of this base) under the writer lock and
-    * returns the epoch number that was LIVE at entry — now superseded.
-    * Run pins at snapshot boundaries (training-run starts): the retired
-    * epoch doubles as the run's reproducible corpus for `retain`
-    * further publishes (size `retain` to the longest pinned run).
+  /** BIT-EXACT snapshot pin: runs `publishRun` (any OPTIMIZE that ends
+    * in a [[publish]] of this base — e.g.
+    * [[graft.operators.Similarity.compactIvfPqIndex]]) under the
+    * writer lock and returns the epoch number that was LIVE at entry —
+    * now SUPERSEDED, hence immutable. This closes the [[at]] caveat:
+    * appends mutate the live epoch, so a pin taken on it sees batch
+    * growth; a pin taken through here is frozen, because any
+    * concurrent append either completed before the lock (included in
+    * the pinned epoch AND the new one) or serializes after the publish
+    * (lands only in the new live epoch). Cost is one compaction —
+    * which the OPTIMIZE cadence owes anyway; run pins at snapshot
+    * boundaries (training-run starts) and the retired epoch doubles
+    * as the run's reproducible corpus for `retain` further publishes
+    * (size `retain` to the longest pinned run).
     */
   def pinSnapshot(spark: SparkSession, base: String)
       (publishRun: => Unit): Long = IndexLock.withWriterLock(spark, base) {
@@ -126,7 +142,7 @@ object EpochDir {
     val now = committed(spark, base).lastOption.map(_._1)
     require(now.exists(_ > pin),
       s"pinSnapshot: publishRun did not publish a new epoch under " +
-        s"$base (live ${now.orNull} after, pin $pin) — pass a rebuild " +
+        s"$base (live ${now.orNull} after, pin $pin) — pass an OPTIMIZE " +
         "that calls EpochDir.publish on this base")
     pin
   }
@@ -138,7 +154,7 @@ object EpochDir {
     * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` fails
     * loud instead of silently publishing invisible epochs), then purge
     * epochs older than the `retain` just-superseded ones. Used by both
-    * the initial build (epoch 0) and every rebuild.
+    * the initial build (epoch 0) and every rebuild/compaction.
     */
   def publish(spark: SparkSession, base: String, retain: Int = 1)
       (write: String => Unit): Unit = IndexLock.withWriterLock(spark, base) {

@@ -7,12 +7,13 @@ import graft.orchestrate.TableLock
 /** Single-writer mutex for standing indexes (band/shingle tables, IVF /
   * IVFPQ cell and code stores).
   *
-  * The publish paths assume ONE writer: two concurrent publishers
-  * could pick the same next epoch number, and one would overwrite the
-  * other's epoch or purge the epoch the other just committed. Every
-  * writer entry point therefore takes this lock, keyed on the index
-  * identity (the catalog name for epoch-view indexes, the cells/codes
-  * directory for path-backed ones). READERS never take it: epoch resolution already
+  * The append/compact/publish paths assume ONE writer: two concurrent
+  * appenders could interleave epoch numbers, double-publish, or (worst)
+  * have a compaction read epoch N while an append lands rows inside it
+  * — rows silently missing from the compacted N+1. Every writer entry
+  * point therefore takes this lock, keyed on the index identity (the
+  * catalog name for epoch-view indexes, the cells/codes directory for
+  * path-backed ones). READERS never take it: epoch resolution already
   * gives them immutable files.
   *
   * Machinery is [[graft.orchestrate.TableLock]] — the same flock
@@ -20,7 +21,7 @@ import graft.orchestrate.TableLock
   * (reference: clickhouse_migrator/utils/lock.py:27-101): processes
   * serialize on the flock, same-JVM threads serialize through the
   * acquire retry loop, and the lock is REENTRANT per thread (a
-  * snapshot pin that holds the index lock calls the locking publish
+  * compaction that holds the index lock may call the locking publish
   * internally). The lock directory must be POSIX-visible to every
   * writer process — same contract as the migration lock; on object
   * stores point `spark.graft.index.lockDir` at a shared coordinator
@@ -78,7 +79,8 @@ object IndexLock {
     * `file:/abs/idx` all hash to ONE lock file. Without this, two
     * writers addressing the same physical index via different
     * spellings would each hold "the" lock — re-admitting the
-    * double-publish corruption the lock exists to exclude. The reentrancy set keys on the canonical form too, so a
+    * append-lost-during-compaction corruption the lock exists to
+    * exclude. The reentrancy set keys on the canonical form too, so a
     * nested acquire under a different spelling is recognized instead
     * of flock-deadlocking against itself.
     *
@@ -86,7 +88,8 @@ object IndexLock {
     * pre-r19 builds (and r20 changes them again for bare
     * single-segment dir keys). Mixed-version writer processes on one
     * machine do not exclude each other across that boundary — quiesce
-    * standing-index writers when rolling versions.
+    * standing-index writers when rolling versions, exactly as for an
+    * OPTIMIZE.
     */
   private[sources] def canonicalKey(spark: SparkSession, key: String): String =
     if (CatalogKey.findFirstIn(key).isDefined)

@@ -38,7 +38,45 @@ class ReachabilitySpec extends AnyFunSuite {
     "Sources.clickhouseJdbc" ->
       "JDBC reader for the reference's source system; no CLI mode reads JDBC",
     "SparkEntry.entry" ->
-      "SparkEntry's flagship query, part of its entry contract (rows > 0)")
+      "SparkEntry's flagship query, part of its entry contract (rows > 0)",
+    "Dedup.appendToBandIndex" ->
+      "band-index growth, kept with its soak and rebuild-equivalence specs",
+    "Dedup.appendToShingleIndex" ->
+      "shingle-index growth, kept with the band-index growth path",
+    "Dedup.compactBandIndex" ->
+      "band-index compaction, kept with the band-index growth path",
+    "Similarity.appendToIvfPqIndex" ->
+      "IVFPQ growth, kept with the IVF growth CrossProcessSoak runs",
+    "Similarity.compactIvfPqIndex" ->
+      "IVFPQ compaction, kept with the IVF compaction CrossProcessSoak runs",
+    "Dedup.semanticDedupAgainstIndex" ->
+      "incremental semantic dedup over a persisted (growable) IVF index",
+    "Dedup.semanticDedupAuto" ->
+      "semanticDedup at chooseNlist cells; d_semantic_auto inlines the same",
+    "CatalogOps.createBackupTable" ->
+      "catalog-table twin of the reference's DDL lifecycle (A5-A14)",
+    "CatalogOps.insertPartition" ->
+      "catalog-table twin of CopyService.copyPartition",
+    "CatalogOps.listPartitions" ->
+      "catalog-table twin of Partitions.enumeratePartitions",
+    "CatalogOps.dropPartition" ->
+      "catalog-table twin of the reference's DROP PARTITION (A14)",
+    "CatalogOps.renameTable" ->
+      "catalog-table twin of the reference's rename swap",
+    "CatalogOps.listDataTables" ->
+      "catalog-table enumeration excluding views (A9)",
+    "CatalogOps.schemaOf" ->
+      "structural schema introspection, the reference's SHOW CREATE",
+    "Partitions.parsePartitionKey" ->
+      "the reference's partition-key normalizer; the CLI takes split keys",
+    "DataQuality.completenessViolations" ->
+      "the dq completeness gate over a profile; no main gates on dq yet",
+    "Multimodal.resizeImages" ->
+      "batched image resize before vision features; no query resizes yet",
+    "Salting.saltedCount" ->
+      "two-phase salted count for hot-key aggregation",
+    "Salting.saltedSum" ->
+      "two-phase salted sum for hot-key aggregation")
 
   private val mainRoot = new File("src/main/scala")
   private val benchRoot = new File("perfbench/src")

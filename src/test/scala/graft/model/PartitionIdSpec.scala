@@ -59,4 +59,8 @@ class PartitionIdSpec extends AnyFunSuite {
       PartitionId(Seq("2024-01-01", null)))
     cases.foreach(p => assert(PartitionId.parse(p.render) == p))
   }
+
+  test("backup name derivation") {
+    assert(TableRef("db", "t").backup() == TableRef("db", "t_backup_s3"))
+  }
 }

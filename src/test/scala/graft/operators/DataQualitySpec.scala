@@ -30,6 +30,14 @@ class DataQualitySpec extends SparkFunSuite {
     assert(p("score") == ((4L, 1L, 0.75, "10.0", "40.0")))
   }
 
+  test("completeness gate flags only columns under the threshold") {
+    val prof = DataQuality.profile(frame)
+    val bad = DataQuality.completenessViolations(prof, 0.9)
+      .collect().map(_.getString(0)).toSet
+    assert(bad == Set("tag", "score"))
+    assert(DataQuality.completenessViolations(prof, 0.5).collect().isEmpty)
+  }
+
   test("profile survives exotic column names and empty tables (ADVICE r11)") {
     val s = spark
     import s.implicits._

@@ -36,23 +36,23 @@ class IvfIndexSpec extends SparkFunSuite {
     assert(probed <= 12 && probed < 16, s"probed $probed cells")
   }
 
-  test("atEpoch pins a search to its snapshot across a republish (reproducible runs)") {
+  test("atEpoch pins a search to its snapshot across publish+append (reproducible runs)") {
     val path = tmpDir("ivf_pin")
     Similarity.writeIvfIndex(emb.filter(col("vec_id") < 300), path,
       nlist = 16)
     val e0 = graft.sources.EpochDir.epochs(spark, s"$path/cells").last
     val want = rows(Similarity.ivfTopKIndexed(spark, path, queries,
       k = 5, nProbe = 4, atEpoch = Some(e0)))
-    // a rebuild over the grown corpus publishes the next epoch (same
-    // lowest-id seed centroids); e0 stays committed as grace
-    Similarity.writeIvfIndex(emb, path, nlist = 16)
-    assert(graft.sources.EpochDir.epochs(spark, s"$path/cells") ==
-      Seq(e0, e0 + 1))
+    // a compaction publishes the next epoch (freezing e0 — epochs are
+    // immutable once superseded), then batch growth lands in the NEW
+    // live epoch
+    Similarity.compactIvfIndex(spark, path)
+    Similarity.appendToIvfIndex(emb.filter(col("vec_id") >= 300), path)
     // the pinned search replays EXACTLY; the live search sees the
     // grown corpus (different result set at the same k)
     assert(rows(Similarity.ivfTopKIndexed(spark, path, queries,
       k = 5, nProbe = 4, atEpoch = Some(e0))) == want,
-      "the pinned snapshot must replay identically after a republish")
+      "the pinned snapshot must replay identically after publish+append")
     assert(rows(Similarity.ivfTopKIndexed(spark, path, queries,
       k = 5, nProbe = 4)) != want,
       "the live search must see the grown corpus")
@@ -98,5 +98,49 @@ class IvfIndexSpec extends SparkFunSuite {
     assert(inList.isDefined, s"no partition filter on cell:\n$plan")
     val probed = inList.get.group(1).split(",").count(_.trim.nonEmpty)
     assert(probed <= 12 && probed < 16, s"probed $probed cells")
+  }
+
+  test("appendToIvfPqIndex: grown index equals a full rebuild") {
+    // Split so the low ids (coarse seeds + codebook seeds) are in the
+    // base: seeds then agree between base-build and full-rebuild, and
+    // equality isolates the GROWTH mechanics (encode + assign against
+    // STORED model state) as the thing under test.
+    val base = emb.filter(col("vec_id") < 400)
+    val wave = emb.filter(col("vec_id") >= 400)
+
+    val grown = tmpDir("ivfpq_grown")
+    val baseCodes = Similarity.pqEncode(base, cbooks)
+    Similarity.writeIvfPqIndex(baseCodes, cbooks, grown)
+    Similarity.appendToIvfPqIndex(wave, grown)
+
+    val rebuilt = tmpDir("ivfpq_rebuilt")
+    val allCodes = Similarity.pqEncode(emb, cbooks)
+    Similarity.writeIvfPqIndex(allCodes, cbooks, rebuilt)
+
+    val a = Similarity.adcIvfTopKIndexed(spark, grown, queries, k = 5)
+    val b = Similarity.adcIvfTopKIndexed(spark, rebuilt, queries, k = 5)
+    assert(rows(a).nonEmpty && rows(a) == rows(b))
+    // the grown index must actually contain the appended wave
+    val grownVids = spark.read.parquet(
+      graft.sources.EpochDir.live(spark, s"$grown/codes"))
+      .select("vid").distinct().count()
+    assert(grownVids == emb.count(), s"grown index holds $grownVids vids")
+  }
+
+  test("appendToIvfPqIndex: rejects ids that would invade the coarse-seed set") {
+    // The coarse quantizer seeds from the LOWEST ids; appending an id
+    // below the stored nlist would make a later full rebuild choose
+    // different seeds than the grown index, silently voiding rebuild
+    // equivalence — the append must fail fast instead.
+    val path = tmpDir("ivfpq_guard")
+    val base = emb.filter(col("vec_id") < 400)
+    Similarity.writeIvfPqIndex(Similarity.pqEncode(base, cbooks), cbooks, path)
+    val invader = emb.filter(col("vec_id") < 16)
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.appendToIvfPqIndex(invader, path)
+    }
+    assert(ex.getMessage.contains("coarse-seed"), ex.getMessage)
+    // an empty batch is a quiet no-op (idle streaming micro-batch)
+    Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") < 0), path)
   }
 }

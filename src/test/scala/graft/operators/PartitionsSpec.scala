@@ -10,6 +10,13 @@ class PartitionsSpec extends SparkFunSuite {
 
   lazy val lineitem = spark.read.parquet(s"$sf0001/lineitem.parquet")
 
+  test("parsePartitionKey normalizes parens and splits composites") {
+    assert(Partitions.parsePartitionKey("idate") == Seq("idate"))
+    assert(Partitions.parsePartitionKey("(dt, channel)") == Seq("dt", "channel"))
+    assert(Partitions.parsePartitionKey("dt, channel") == Seq("dt", "channel"))
+    assertThrows[IllegalArgumentException](Partitions.parsePartitionKey(""))
+  }
+
   test("partitionPredicate arity mismatch is an error") {
     assertThrows[IllegalArgumentException](
       Partitions.partitionPredicate(Seq("dt", "channel"), PartitionId.single("x")))

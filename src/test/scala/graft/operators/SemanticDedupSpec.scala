@@ -129,6 +129,55 @@ class SemanticDedupSpec extends SparkFunSuite {
       emb.filter(col("vec_id") < 8L), tau = 0.4).count() > 0)
   }
 
+  test("index-backed incremental == inline; corpus scan partition-prunes to batch cells") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val corpus = emb.filter(col("vec_id") < 400)
+    // a deliberately narrow batch so it cannot occupy every cell
+    val batch = emb.filter(col("vec_id") >= 490)
+    val path = tmpDir("sem_idx")
+    Similarity.writeIvfIndex(corpus, path, nlist = 16)
+    val indexed = Dedup.semanticDedupAgainstIndex(spark, path, batch, tau = 0.4)
+    val inline = Dedup.semanticDedupAgainst(corpus, batch, tau = 0.4)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getAs[Long]("vid"), r.getAs[Int]("cell"),
+        Option(r.getAs[java.lang.Long]("witness")),
+        r.getAs[Boolean]("keep"))).toSet
+    assert(rows(indexed).nonEmpty && rows(indexed) == rows(inline))
+    // partition pruning: the cells scan carries an IN/INSET on cell
+    // (Spark prints `IN (…)` for short lists, `INSET …` for long ones)
+    indexed.collect()
+    val plan = indexed.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    val inList = "PartitionFilters: \\[cell#\\d+ IN(?:SET)? ?\\(?([0-9, ]+)".r
+      .findFirstMatchIn(plan)
+    assert(inList.isDefined, s"no partition filter on cell:\n$plan")
+    val touched = inList.get.group(1).split(",").count(_.trim.nonEmpty)
+    assert(touched < 16, s"batch of 10 vectors touched all $touched cells")
+  }
+
+  test("appendToIvfIndex: grown index equals inline against the combined corpus") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val corpus = emb.filter(col("vec_id") < 300)
+    val wave1 = emb.filter(col("vec_id") >= 300 && col("vec_id") < 400)
+    val wave2 = emb.filter(col("vec_id") >= 400)
+    val path = tmpDir("sem_idx_grow")
+    Similarity.writeIvfIndex(corpus, path, nlist = 16)
+    Similarity.appendToIvfIndex(wave1, path)
+    val grown = corpus.unionByName(wave1)
+    val viaIndex = Dedup.semanticDedupAgainstIndex(spark, path, wave2, tau = 0.4)
+    val inline = Dedup.semanticDedupAgainst(grown, wave2, tau = 0.4)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getAs[Long]("vid"), r.getAs[Int]("cell"),
+        Option(r.getAs[java.lang.Long]("witness")),
+        r.getAs[Boolean]("keep"))).toSet
+    assert(rows(viaIndex).nonEmpty && rows(viaIndex) == rows(inline))
+    // a witness from the appended wave must be reachable, or the
+    // growth path wasn't exercised (witness < 300 would also match the
+    // pre-append index)
+    assert(rows(viaIndex).exists(_._3.exists(w => w >= 300 && w < 400)),
+      s"no witness from the appended wave in ${rows(viaIndex)}")
+  }
+
   test("chooseNlist: √n growth, clamps, and the oracle anchor") {
     // at the oracle corpus sizes the choice collapses onto the
     // 16-cell teaching recipe — what lets d_semantic_auto share
@@ -144,6 +193,14 @@ class SemanticDedupSpec extends SparkFunSuite {
     // cap bounds the collected centroid literal
     assert(Dedup.chooseNlist(100000000000L) == 4096)
     assertThrows[IllegalArgumentException] { Dedup.chooseNlist(-1L) }
+  }
+
+  test("semanticDedupAuto == semanticDedup(16) at the oracle corpus size") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("vid").collect().map(_.toString).toSeq
+    assert(rows(Dedup.semanticDedupAuto(emb, tau = 0.4)) ==
+      rows(Dedup.semanticDedup(emb, tau = 0.4)))
   }
 
   test("plan shape: pair search shuffles on cell, no cartesian product") {

