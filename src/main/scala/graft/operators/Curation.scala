@@ -181,8 +181,7 @@ object Curation {
       else {
         val rank = Graph.pageRank(
           pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
-          iters = 3, validateDangling = false, allNodesReceive = true,
-          symmetrize = true)
+          iters = 3, symmetrize = true)
         val wc = Window.partitionBy(col("cluster"))
           .orderBy(col("r").desc, col("id"))
         comp.join(rank.withColumnRenamed("node", "id"), "id")

@@ -530,21 +530,12 @@ object Dedup {
     * default `maxIter = 15` covers diameters beyond 65 000, and a fixed
     * point of the combined step is exactly the hash-min fixpoint (the
     * shortcut is the identity once labels stop changing), so labels are
-    * identical to plain hash-min's. Lineage is cut per round —
-    * iterative plans otherwise grow exponentially. The default cut is
-    * `localCheckpoint` (executor block storage: no extra I/O, but an
-    * executor loss makes the truncated lineage unrecoverable mid-job);
-    * pass `checkpointDir` to switch to RELIABLE `checkpoint()` into that
-    * fault-tolerant path (HDFS/S3 on a cluster) — the setting a
-    * 1000-executor multi-round job wants, where losing one executor is
-    * routine, at the price of one durable write per round. Reliable
-    * mode is self-cleaning: round N-1's checkpoint files are deleted
-    * once round N materializes (Spark itself only GCs checkpoints under
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`), the
-    * caller's SparkContext checkpoint dir is saved/restored around the
-    * job, and only the edges + final-round files remain on return (the
-    * final round backs the returned DataFrame — remove `checkpointDir`
-    * after consuming it).
+    * identical to plain hash-min's. Lineage is cut per round with
+    * `localCheckpoint` — iterative plans otherwise grow exponentially.
+    * The cut lives in executor block storage: no extra I/O (landing
+    * each round on scratch parquet would add a write and a read per
+    * cut), but an executor loss makes the truncated lineage
+    * unrecoverable mid-job.
     * Throws if `maxIter` rounds don't reach the fixpoint (a truncated
     * result would silently mislabel clusters).
     *
@@ -552,78 +543,44 @@ object Dedup {
     * are trivially their own singleton cluster and are not re-emitted.
     * Output: (id, cluster) with cluster = min id reachable from id.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 15,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // Reliable mode housekeeping. Spark only GCs checkpoint files itself
-    // under spark.cleaner.referenceTracking.cleanCheckpoints=true, so a
-    // long multi-round job would otherwise accumulate one durable copy
-    // of the labels per round. Each cut therefore gets its own subdir
-    // of `checkpointDir`, and round N-1's subdir is deleted as soon as
-    // round N has materialized (checkpoint() is eager). The edges
-    // checkpoint (cut 0) lives for the whole job; the FINAL round's
-    // subdir backs the returned DataFrame and is left for the caller —
-    // delete it only after the result is consumed. A caller-configured
-    // SparkContext checkpoint dir is saved and restored in `finally`
-    // rather than clobbered (setCheckpointDir is application-global).
-    val savedCheckpointDir: Option[String] = sc.getCheckpointDir
-    var cutId = 0
-    var prevRoundDir: Option[String] = None
-    def deleteDir(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(sc.hadoopConfiguration).delete(hp, true)
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 15): DataFrame = {
+    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .localCheckpoint()
+    var labels = edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("cluster")).localCheckpoint()
+    var iter = 0
+    while (iter < maxIter) {
+      val nbrMin = edges
+        .join(labels.withColumnRenamed("id", "dst2"), col("dst") === col("dst2"))
+        .groupBy(col("src")).agg(min(col("cluster")).as("nbr"))
+      // step 1, hash-min: min label over the closed neighborhood. Cut
+      // here so the doubling self-join below reads a materialized
+      // table instead of recomputing the join+aggregate twice.
+      val hashMin = least(col("cluster"), coalesce(col("nbr"), col("cluster")))
+      val stepped = labels
+        .join(nbrMin.withColumnRenamed("src", "id2"), col("id") === col("id2"), "left")
+        .select(col("id"), hashMin.as("mid"), col("cluster").as("old"))
+        .localCheckpoint()
+      // step 2, pointer doubling: label ← label(label). `mid` is always
+      // a vertex id present in the table, so the left join only misses
+      // when mid is the vertex's own root-so-far.
+      val shortcut = coalesce(col("t.mid"), col("s.mid"))
+      val updated = stepped.as("s")
+        .join(stepped.as("t"), col("s.mid") === col("t.id"), "left")
+        .select(col("s.id").as("id"),
+          least(col("s.mid"), shortcut).as("new_cluster"),
+          (least(col("s.mid"), shortcut) < col("s.old")).as("changed"))
+        .localCheckpoint()
+      // the changed flag rides the same projection, so convergence is a
+      // filter over the already-materialized checkpoint — no extra join
+      val done = updated.filter(col("changed")).isEmpty
+      labels = updated.select(col("id"), col("new_cluster").as("cluster"))
+      iter += 1
+      if (done) return labels
     }
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        df => {
-          val sub = s"$dir/cc-cut-$cutId"
-          sc.setCheckpointDir(sub)
-          val out = df.checkpoint() // eager: materialized before any GC below
-          if (cutId >= 2) prevRoundDir.foreach(deleteDir) // cut 0 = edges: kept
-          if (cutId >= 1) prevRoundDir = Some(sub)
-          cutId += 1
-          out
-        }
-      case None => df => df.localCheckpoint()
-    }
-    try {
-      val edges = cut(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
-      var labels = cut(edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("cluster")))
-      var iter = 0
-      while (iter < maxIter) {
-        val nbrMin = edges
-          .join(labels.withColumnRenamed("id", "dst2"), col("dst") === col("dst2"))
-          .groupBy(col("src")).agg(min(col("cluster")).as("nbr"))
-        // step 1, hash-min: min label over the closed neighborhood. Cut
-        // here so the doubling self-join below reads a materialized
-        // table instead of recomputing the join+aggregate twice.
-        val hashMin = least(col("cluster"), coalesce(col("nbr"), col("cluster")))
-        val stepped = cut(labels
-          .join(nbrMin.withColumnRenamed("src", "id2"), col("id") === col("id2"), "left")
-          .select(col("id"), hashMin.as("mid"), col("cluster").as("old")))
-        // step 2, pointer doubling: label ← label(label). `mid` is always
-        // a vertex id present in the table, so the left join only misses
-        // when mid is the vertex's own root-so-far.
-        val shortcut = coalesce(col("t.mid"), col("s.mid"))
-        val updated = cut(stepped.as("s")
-          .join(stepped.as("t"), col("s.mid") === col("t.id"), "left")
-          .select(col("s.id").as("id"),
-            least(col("s.mid"), shortcut).as("new_cluster"),
-            (least(col("s.mid"), shortcut) < col("s.old")).as("changed")))
-        // the changed flag rides the same projection, so convergence is a
-        // filter over the already-materialized checkpoint — no extra join
-        val done = updated.filter(col("changed")).isEmpty
-        labels = updated.select(col("id"), col("new_cluster").as("cluster"))
-        iter += 1
-        if (done) return labels
-      }
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds")
-    } finally {
-      if (checkpointDir.isDefined) sc.setCheckpointDir(savedCheckpointDir.orNull)
-    }
+    throw new IllegalStateException(
+      s"connectedComponents did not converge in $maxIter rounds")
   }
 
   /** 32-bit SimHash over the distinct-word set, as a '0'/'1' bit string.

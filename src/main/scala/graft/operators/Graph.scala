@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge-list DataFrames — the numeric
@@ -15,15 +15,34 @@ import org.apache.spark.sql.functions._
   * training.
   *
   * Arithmetic is FIXED-POINT INTEGER end to end: ranks are micro-units
-  * of `scale` (default 1e12), every division is a trunc division of
+  * of `Scale` (1e12), every division is a trunc division of
   * non-negative longs, and every per-node update is a sum of exact
   * integers — no float appears anywhere, so the result is
   * bit-reproducible across engines and partitionings (float summation
   * order would otherwise make a hash-checked oracle impossible). The
   * floor steps drop ≤3 micro-units of mass per node per iteration —
   * deterministic, documented, and irrelevant at 1e12 scale.
+  *
+  * Every loop takes its layout from the [[EdgeIndex]] it runs over:
+  * the per-round rank/frontier/score side is broadcast iff the index
+  * is not bucketed, and a symmetrized index certifies in-degree ≥ 1
+  * everywhere. Every loop runs exactly its `iters`/`maxHops` rounds —
+  * 3 to 5 at every caller.
   */
 object Graph {
+
+  /** Fixed-point unit of the rank loops (the oracle SQL's 1e12). */
+  private val Scale = 1000000000000L
+
+  /** Fixed-point unit of [[hits]] (the oracle SQL's 1e6): small enough
+    * that Σ-then-rescale stays far from long overflow at any degree.
+    */
+  private val HitsScale = 1000000L
+
+  /** Bucket count of the bucketed layout, and the file fan-out of the
+    * plain-parquet one.
+    */
+  private val Buckets = 32
 
   /** Handle to a materialized loop relation: the degree-denormalized
     * edge table (a parquet path, or a bucketed catalog table when
@@ -32,46 +51,56 @@ object Graph {
     * to later sessions/queries — the same contract as the persisted
     * IVF/IVFPQ index paths.
     *
+    * `symmetric` records a `symmetrize = true` build: every node then
+    * has in-degree ≥ 1, which the rank loops rely on to skip their
+    * zero-in-degree re-add join.
+    *
     * `weighted` indexes additionally denormalize the per-source weight
     * sum `ws` onto the edge rows and carry `maxW`, the build-measured
     * weight ceiling the rank-time overflow guard checks against
-    * (scale·maxW must fit a long — rank·weight products appear in the
+    * (Scale·maxW must fit a long — rank·weight products appear in the
     * weighted recurrence).
     */
   final case class EdgeIndex(edgesRef: String, nodesPath: String,
-      bucketed: Boolean, weighted: Boolean = false, maxW: Long = 0L) {
+      bucketed: Boolean, symmetric: Boolean, weighted: Boolean, maxW: Long) {
     def edges(spark: SparkSession): DataFrame =
       if (bucketed) spark.table(edgesRef) else spark.read.parquet(edgesRef)
     def nodes(spark: SparkSession): DataFrame =
       spark.read.parquet(nodesPath)
   }
 
+  /** The per-round side a loop joins against the standing edges:
+    * broadcast over a plain-parquet index (its |V| is under the build's
+    * node cap), shuffled into the bucket layout otherwise.
+    */
+  private def roundSide(idx: EdgeIndex, side: DataFrame): DataFrame =
+    if (idx.bucketed) side else broadcast(side)
+
   /** Materialize the loop-INVARIANT relation the iterative algorithms
-    * consume once per round (the q_recursive / reliable-checkpoint
-    * shape: lineage roots at a file, executor loss re-reads instead of
-    * failing; a per-round re-execution of the caller's distinct/union
-    * lineage would multiply its shuffles by the iteration count).
+    * consume once per round (lineage roots at a file, executor loss
+    * re-reads instead of failing; a per-round re-execution of the
+    * caller's distinct/union lineage would multiply its shuffles by the
+    * iteration count).
     *
     * The raw edges are STAGED to parquet first; degree, validation,
     * and the final degree-denormalized table all derive from the
     * staged copy, so the caller's plan executes exactly once (the
     * writeIvfPqIndex staging rationale: one extra write+read of a slim
     * 2-3 column table beats re-running the upstream shuffles per
-    * consumer). Layout by who is big:
-    *  - `bucketed = true` (default — nothing assumed small): the edge
-    *    table lands BUCKETED on `src`, so each iteration's join
-    *    shuffles ONLY the |V|-row rank table into the bucket layout —
-    *    the |E| side is never exchanged again after this one write
-    *    (the standing band-index trick, [[Dedup.writeBandIndex]]).
-    *  - `bucketed = false` (for DOMAIN-BOUNDED graphs whose rank table
-    *    will broadcast): plain parquet, scanned map-side per round.
-    *  - `bucketIfOver ≥ 0` makes the choice DATA-DRIVEN, overriding
-    *    `bucketed`: the staged node count decides (|V| ≤ bucketIfOver
-    *    → plain parquet, rank rows will broadcast; above → bucketed).
-    *    Callers who claim "this domain broadcasts at any SF" should
-    *    pass a cap instead — TPC-H part/supplier vocabularies grow
-    *    linearly with SF, so an unconditional broadcast eventually
-    *    hits the driver-memory / 8 GB broadcast wall.
+    * consumer). Layout by who is big, decided by `nodeCap`:
+    *  - bucketed (the default `nodeCap = 0`, nothing assumed small, no
+    *    count job): the edge table lands BUCKETED on `src`, so each
+    *    iteration's join shuffles ONLY the |V|-row rank table into the
+    *    bucket layout — the |E| side is never exchanged again after
+    *    this one write (the standing band-index trick,
+    *    [[Dedup.writeBandIndex]]).
+    *  - `nodeCap > 0` makes the choice DATA-DRIVEN: the staged node
+    *    count decides (|V| ≤ nodeCap → plain parquet, scanned map-side
+    *    per round with the rank rows broadcast; above → bucketed). A
+    *    domain that "broadcasts at any SF" still passes a cap — TPC-H
+    *    part/supplier vocabularies grow linearly with SF, so an
+    *    unconditional broadcast eventually hits the driver-memory /
+    *    8 GB broadcast wall.
     *
     * `weighted = true` expects a positive long `w` column on the
     * edges: the build denormalizes Σw per source onto the edge rows
@@ -80,20 +109,15 @@ object Graph {
     * overflow guard.
     *
     * Contract: every node must appear as a `src` (out-degree ≥ 1).
-    * Symmetrized (undirected) graphs satisfy this by construction; a
-    * dangling node would silently LEAK its mass each iteration, so by
-    * default the build fails fast on one (`validateDangling` is a
-    * one-time anti-join over the staged copy — one |E| shuffle,
-    * amortized over every later search; disable for graphs known
-    * symmetric).
+    * `symmetrize = true` satisfies this by construction; otherwise a
+    * dangling node would silently LEAK its mass each iteration, so the
+    * build fails fast on one (a one-time anti-join over the staged
+    * copy — one |E| shuffle, amortized over every later search).
     */
   def materializeEdges(edges: DataFrame, key: String,
-      validateDangling: Boolean = true,
-      bucketed: Boolean = true,
-      buckets: Int = 32,
       symmetrize: Boolean = false,
       weighted: Boolean = false,
-      bucketIfOver: Long = -1L): EdgeIndex = {
+      nodeCap: Long = 0L): EdgeIndex = {
     val spark = edges.sparkSession
     val tag = if (weighted) "pagerank_w" else "pagerank"
     val scratch = graft.sources.Scratch.dir(tag, key)
@@ -125,7 +149,7 @@ object Graph {
     // the slim node table): positivity is a BUILD contract (a zero
     // weight would divide mass into nothing; a negative one breaks the
     // non-negative-longs arithmetic), max(w) feeds the rank-time
-    // scale·w overflow guard.
+    // Scale·w overflow guard.
     val maxW =
       if (!weighted) 0L
       else {
@@ -134,15 +158,14 @@ object Graph {
           "materializeEdges: edge weights must be positive")
         ext.getLong(0)
       }
-    if (validateDangling) {
+    if (!symmetrize) {
       val dangling = staged.select(col("dst")).distinct()
         .join(nodes, col("dst") === col("node"), "left_anti")
       require(dangling.isEmpty,
         "pageRank contract: every node needs an out-edge — " +
           "symmetrize the graph or drop dangling sinks first")
     }
-    val useBucketed =
-      if (bucketIfOver >= 0L) nodes.count() > bucketIfOver else bucketed
+    val bucketed = nodeCap <= 0L || nodes.count() > nodeCap
     // Degree (and for weighted graphs the weight sum) rides
     // DENORMALIZED on the edge table (one |E| write), so each
     // iteration is exactly one join + one map-combined sum, with no
@@ -152,18 +175,18 @@ object Graph {
       else nodes.select(col("node").as("src"), col("deg"))
     val withDeg = staged.join(denorm, "src")
     val ref =
-      if (!useBucketed) {
+      if (!bucketed) {
         // Scale-adaptive fan-out of the STANDING artifact (guide §2.5
         // input skew): the broadcast-ranks path scans this file once
         // per rank round with the join+partial-agg fused map-side, so
         // a single-file landing (tiny |E|, AQE-coalesced write) makes
-        // EVERY round single-task. Landing ≥ `buckets` hash-split
+        // EVERY round single-task. Landing ≥ `Buckets` hash-split
         // files makes each round's map work parallel for free —
         // condition on the plan's own partitioning so a large |E|
         // (already many partitions) never repartitions downward.
         val fanned =
-          if (withDeg.rdd.getNumPartitions < buckets)
-            withDeg.repartition(buckets, col("src"))
+          if (withDeg.rdd.getNumPartitions < Buckets)
+            withDeg.repartition(Buckets, col("src"))
           else withDeg
         fanned.write.mode("overwrite").parquet(s"$scratch/edges")
         s"$scratch/edges"
@@ -181,9 +204,9 @@ object Graph {
         // probe, same |V|/|E|). One extra |E| exchange at build time
         // buys a permanently one-file-per-bucket standing index.
         graft.sources.CatalogOps.writeBucketed(
-          withDeg.repartition(buckets,
-            pmod(hash(col("src")), lit(buckets))),
-          tbl, bucketCols = Seq("src"), numBuckets = buckets,
+          withDeg.repartition(Buckets,
+            pmod(hash(col("src")), lit(Buckets))),
+          tbl, bucketCols = Seq("src"), numBuckets = Buckets,
           sortCols = Seq("src"))
         // nonce-scoped warehouse files die with the JVM like tmp scratch
         graft.sources.Scratch.trackTable(spark, tbl)
@@ -192,35 +215,19 @@ object Graph {
     val fs = new org.apache.hadoop.fs.Path(scratch)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$scratch/staging"), true)
-    EdgeIndex(ref, s"$scratch/nodes", useBucketed, weighted, maxW)
+    EdgeIndex(ref, s"$scratch/nodes", bucketed, symmetrize, weighted, maxW)
   }
 
   /** The shared damped-propagation loop of [[pageRankIndexed]] and
     * [[pageRankWeightedIndexed]] — one join (edges ⋈ ranks on src) and
     * one map-combined sum to dst per round, with the per-edge
     * contribution expression as the only difference between the
-    * uniform and weighted recurrences.
-    *
-    * `checkpointEvery > 0` MATERIALIZES the rank table to scratch
-    * parquet every that-many rounds (the bfsHops shape): lineage
-    * re-roots at a file, so plan depth stays bounded in the
-    * tens-of-rounds regime instead of growing one join/agg layer per
-    * round, and an executor loss replays at most `checkpointEvery`
-    * rounds. Identical integers either way — materialization commutes
-    * with the exact arithmetic.
-    *
-    * `tolL1 > 0` adds CONVERGENCE-aware early stopping: every round
-    * materializes (piggybacking the checkpoint machinery) and the L1
-    * rank delta Σ|r_i − r_{i−1}| — one |V|-bounded join + 1-row agg,
-    * O(1) driver state per round — ends the loop once it drops below
-    * `tolL1` micro-units. Absent-node rank is taken as 0 in the delta
-    * (only reachable when `allNodesReceive` drops isolated receivers).
-    * Leave 0 for the oracle-checked queries: fixed `iters` keeps the
-    * replay bit-reproducible.
+    * uniform and weighted recurrences. Lineage grows one join/agg
+    * layer per round; at the 3–5 rounds every caller runs, the plan
+    * stays small and no round is materialized.
     */
   private def dampedLoop(spark: SparkSession, idx: EdgeIndex, iters: Int,
-      scale: Long, broadcastRanks: Boolean, allNodesReceive: Boolean,
-      checkpointEvery: Int, tolL1: Long, contrib: String): DataFrame = {
+      contrib: String): DataFrame = {
     require(iters >= 1, "pageRank needs at least one iteration")
     val ed = idx.edges(spark)
     val nodes = idx.nodes(spark)
@@ -228,61 +235,23 @@ object Graph {
     // the collected centroid seeds in Similarity.trainCentroidsLiteral.
     val n = nodes.count()
     require(n > 0, "pageRank over an empty graph")
-    val r0 = scale / n
+    val r0 = Scale / n
     val base = (15L * r0) / 100L
-    val ck =
-      if (checkpointEvery > 0 || tolL1 > 0)
-        graft.sources.Scratch.dir("pagerank_ck",
-          java.util.UUID.randomUUID().toString)
-      else null
-    var rank: DataFrame = null
-    // Round files already landed, newest first. Only the two newest are
-    // ever read again (round i, plus i-1 solely by round i's L1 delta),
-    // so older rounds purge as soon as a new one lands — a long
-    // convergence run would otherwise accrete a |V|-sized parquet
-    // directory per round until JVM shutdown.
-    var landed = List.empty[Int]
-    var i = 1
-    var stop = false
-    while (i <= iters && !stop) {
-      val bySrc =
-        if (i == 1) nodes.select(col("node").as("src"), lit(r0).as("r"))
-        else rank.withColumnRenamed("node", "src")
-      val joined =
-        if (broadcastRanks) ed.join(broadcast(bySrc), "src")
-        else ed.join(bySrc, "src")
-      val sums = joined
+    var rank = nodes.select(col("node"), lit(r0).as("r"))
+    for (_ <- 1 to iters) {
+      val sums = ed.join(roundSide(idx, rank.withColumnRenamed("node", "src")), "src")
         .select(col("dst"), expr(contrib).as("c"))
         .groupBy("dst").agg(sum(col("c")).as("sc"))
         .select(col("dst").as("node"),
           (lit(base) + expr("(85 * sc) div 100")).as("r"))
       // Zero-in-degree nodes drop out of the sum — re-add them at the
-      // teleport base unless the caller certifies a symmetrized graph
-      // (in-degree ≥ 1 everywhere), which skips a |V| join per round.
-      val next =
-        if (allNodesReceive) sums
+      // teleport base unless the index is symmetrized (in-degree ≥ 1
+      // everywhere), which skips a |V| join per round.
+      rank =
+        if (idx.symmetric) sums
         else nodes.select("node")
           .join(sums, Seq("node"), "left")
           .select(col("node"), coalesce(col("r"), lit(base)).as("r"))
-      rank =
-        if (tolL1 > 0 ||
-            (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)) {
-          next.write.mode("overwrite").parquet(s"$ck/r$i")
-          landed = i :: landed
-          landed.drop(2).foreach(j => graft.sources.Scratch.purge(s"$ck/r$j"))
-          landed = landed.take(2)
-          spark.read.parquet(s"$ck/r$i")
-        } else next
-      if (tolL1 > 0 && i > 1) {
-        val prev = spark.read.parquet(s"$ck/r${i - 1}")
-          .select(col("node"), col("r").as("rp"))
-        val delta = rank.join(prev, Seq("node"), "full")
-          .agg(sum(abs(coalesce(col("r"), lit(0L)) -
-            coalesce(col("rp"), lit(0L)))).as("d"))
-          .head().getLong(0)
-        if (delta < tolL1) stop = true
-      }
-      i += 1
     }
     rank
   }
@@ -292,36 +261,25 @@ object Graph {
     * Execution shape (the Pregel loop, declaratively): each iteration
     * is one join (edges ⋈ ranks on src) and one map-combined sum to
     * dst. With a bucketed index the join shuffles only the |V| rank
-    * rows; with `broadcastRanks` (DOMAIN-BOUNDED graphs — |V| is a
-    * dimension vocabulary, not corpus-derived) even that exchange goes
-    * away and the only shuffle per round is the |V|-bounded
-    * partial-agg exchange of the sum. Ranks never collect: the rank
-    * table is a DataFrame of |V| rows throughout, so the loop works at
-    * any |V| a cluster can shuffle. Lineage grows linearly with
-    * `iters`; for the tens-of-rounds regime pass `checkpointEvery`
-    * (≈10) and the loop re-roots at scratch parquet on that cadence,
-    * exactly as [[Dedup.connectedComponents]] documents for pointer
-    * doubling. `tolL1` opts into convergence-aware early stop (see
-    * [[dampedLoop]]).
+    * rows; over a plain-parquet index (|V| under the build's node cap)
+    * the rank rows broadcast and the only shuffle per round is the
+    * |V|-bounded partial-agg exchange of the sum. Ranks never collect:
+    * the rank table is a DataFrame of |V| rows throughout, so the loop
+    * works at any |V| a cluster can shuffle.
     *
     * Per-iteration update, all in longs:
     *   contrib(u→v) = r(u) div outdeg(u)
     *   r'(v) = base + (85 · Σ contrib) div 100,   base = (15·r₀) div 100
-    * with r₀ = scale div |V| — i.e. damping 0.85 with the uniform
+    * with r₀ = Scale div |V| — i.e. damping 0.85 with the uniform
     * teleport term frozen at its initial-mass value (rank mass then
-    * stays ≈ scale without needing a global re-normalization pass per
+    * stays ≈ Scale without needing a global re-normalization pass per
     * round).
     *
-    * @return (node, r) — r in micro-units of `scale`.
+    * @return (node, r) — r in micro-units of 1e12.
     */
   def pageRankIndexed(spark: SparkSession, idx: EdgeIndex,
-      iters: Int = 5, scale: Long = 1000000000000L,
-      broadcastRanks: Boolean = false,
-      allNodesReceive: Boolean = false,
-      checkpointEvery: Int = 0,
-      tolL1: Long = 0L): DataFrame =
-    dampedLoop(spark, idx, iters, scale, broadcastRanks, allNodesReceive,
-      checkpointEvery, tolL1, "r div deg")
+      iters: Int = 5): DataFrame =
+    dampedLoop(spark, idx, iters, "r div deg")
 
   /** WEIGHTED PageRank over a `materializeEdges(weighted = true)`
     * artifact: each node pushes rank proportional to edge weight,
@@ -331,26 +289,20 @@ object Graph {
     * ignores. Same fixed-point integer recurrence, same execution
     * shape (bucketed index → per-round joins exchange only the |V|
     * rank rows — the |E| weighted edge table is never re-shuffled
-    * after the one build write), same checkpoint/convergence options.
-    * Overflow is a REAL constraint here — r·w must fit a long — so
-    * the guard checks scale · maxW < 2⁶³ against the build-measured
-    * weight ceiling (defaults: 1e12 · 1e6 = 1e18 ✓).
+    * after the one build write). Overflow is a REAL constraint here —
+    * r·w must fit a long — so the guard checks Scale · maxW < 2⁶³
+    * against the build-measured weight ceiling (1e12 · 1e6 = 1e18 ✓).
     *
-    * @return (node, r) — r in micro-units of `scale`.
+    * @return (node, r) — r in micro-units of 1e12.
     */
   def pageRankWeightedIndexed(spark: SparkSession, idx: EdgeIndex,
-      iters: Int = 5, scale: Long = 1000000000000L,
-      broadcastRanks: Boolean = false,
-      allNodesReceive: Boolean = false,
-      checkpointEvery: Int = 0,
-      tolL1: Long = 0L): DataFrame = {
+      iters: Int = 5): DataFrame = {
     require(idx.weighted,
       "pageRankWeightedIndexed needs materializeEdges(weighted = true)")
-    require(idx.maxW > 0 && scale <= Long.MaxValue / idx.maxW,
+    require(idx.maxW > 0 && Scale <= Long.MaxValue / idx.maxW,
       s"pageRankWeightedIndexed: scale·max(w) overflows a long " +
         s"(max w = ${idx.maxW})")
-    dampedLoop(spark, idx, iters, scale, broadcastRanks, allNodesReceive,
-      checkpointEvery, tolL1, "(r * w) div ws")
+    dampedLoop(spark, idx, iters, "(r * w) div ws")
   }
 
   /** Multi-source BFS hop distance from a seed set over a
@@ -365,10 +317,10 @@ object Graph {
     * against the visited set — O(|E_frontier|) work per round, and
     * min-hop semantics fall out of visiting each node once (the
     * anti-join), which a UnionLoop recursive CTE cannot express over a
-    * cyclic graph without re-walking. Frontiers never collect; with
-    * `broadcastFrontier` (domain-bounded graphs) the per-round join is
-    * map-side over the standing edge scan. `maxHops` bounds rounds the
-    * way q_recursive's depth cap does.
+    * cyclic graph without re-walking. Frontiers never collect; over a
+    * plain-parquet index the frontier broadcasts and the per-round join
+    * is map-side over the standing edge scan. `maxHops` bounds rounds
+    * the way q_recursive's depth cap does.
     *
     * @param seeds one `node` column; rows outside the graph are
     *              dropped (intersected with the node table).
@@ -377,7 +329,7 @@ object Graph {
     *         node table and coalesce to -1 for a full census.
     */
   def bfsHops(spark: SparkSession, idx: EdgeIndex, seeds: DataFrame,
-      maxHops: Int = 4, broadcastFrontier: Boolean = false): DataFrame = {
+      maxHops: Int = 4): DataFrame = {
     require(maxHops >= 1, "bfsHops needs at least one round")
     val ed = idx.edges(spark).select("src", "dst")
     // Each round's frontier MATERIALIZES to scratch (|level| rows —
@@ -386,7 +338,7 @@ object Graph {
     // subplan into the next one — the plan tree doubles per level and
     // early rounds re-execute ~2^maxHops times (measured 26 s → 2 s at
     // sf0.1 for this 4-level census). Files also root the lineage, the
-    // q_recursive / reliable-checkpoint shape.
+    // q_recursive shape.
     val scratch = graft.sources.Scratch.dir("bfs",
       java.util.UUID.randomUUID().toString)
     seeds.select("node").distinct()
@@ -397,8 +349,7 @@ object Graph {
       val frontier = spark.read.parquet(s"$scratch/r${i - 1}")
       val visited = spark.read
         .parquet((0 until i).map(j => s"$scratch/r$j"): _*)
-      val bySrc = frontier.select(col("node").as("src"))
-      ed.join(if (broadcastFrontier) broadcast(bySrc) else bySrc, "src")
+      ed.join(roundSide(idx, frontier.select(col("node").as("src"))), "src")
         .select(col("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
         .select(col("node"), lit(i).as("hop"))
@@ -414,27 +365,22 @@ object Graph {
     * half of the seed prior whose cheap census half is [[bfsHops]].
     *
     * Same fixed-point integer recurrence and execution shape as
-    * [[pageRankIndexed]] with two deltas: r₀ = scale div |S| on seeds
+    * [[pageRankIndexed]] with two deltas: r₀ = Scale div |S| on seeds
     * (0 elsewhere), and the per-round teleport lands on seeds only —
     * a broadcast |S|-row join per round (seed sets are small by
     * definition: that is what makes them trustable).
     *   r'(v) = [v ∈ S]·base + (85 · Σ contrib) div 100,
-    *   base = (15·(scale div |S|)) div 100
+    *   base = (15·(Scale div |S|)) div 100
     * Non-seed nodes that receive nothing simply stay off the rank
     * table (their trust is 0 — the TrustRank semantics), so no
     * zero-in-degree re-add join is ever needed.
     *
-    * `checkpointEvery` re-roots the trust table at scratch parquet on
-    * that cadence, as [[dampedLoop]] documents for the rank loops.
-    *
-    * @return (node, r) — trust in micro-units of `scale`; nodes with
+    * @return (node, r) — trust in micro-units of 1e12; nodes with
     *         zero trust are ABSENT (left-join the node table and
     *         coalesce to 0 for a census).
     */
   def trustRank(spark: SparkSession, idx: EdgeIndex, seeds: DataFrame,
-      iters: Int = 5, scale: Long = 1000000000000L,
-      broadcastRanks: Boolean = false,
-      checkpointEvery: Int = 0): DataFrame = {
+      iters: Int = 5): DataFrame = {
     require(iters >= 1, "trustRank needs at least one iteration")
     val ed = idx.edges(spark)
     val seeds0 = seeds.select("node").distinct()
@@ -442,21 +388,12 @@ object Graph {
     // |S| is O(1) driver model state, like |V| in pageRankIndexed.
     val nSeeds = seeds0.count()
     require(nSeeds > 0, "trustRank needs at least one in-graph seed")
-    val r0 = scale / nSeeds
+    val r0 = Scale / nSeeds
     val base = (15L * r0) / 100L
     val seedBase = broadcast(seeds0.withColumn("b", lit(base)))
-    val ck =
-      if (checkpointEvery > 0)
-        graft.sources.Scratch.dir("trustrank_ck",
-          java.util.UUID.randomUUID().toString)
-      else null
     var rank = seeds0.select(col("node"), lit(r0).as("r"))
-    for (i <- 1 to iters) {
-      val bySrc = rank.withColumnRenamed("node", "src")
-      val joined =
-        if (broadcastRanks) ed.join(broadcast(bySrc), "src")
-        else ed.join(bySrc, "src")
-      rank = joined
+    for (_ <- 1 to iters) {
+      rank = ed.join(roundSide(idx, rank.withColumnRenamed("node", "src")), "src")
         .select(col("dst"), expr("r div deg").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("sc"))
         .select(col("dst").as("node"), expr("(85 * sc) div 100").as("dr"))
@@ -467,10 +404,6 @@ object Graph {
         .select(col("node"),
           (coalesce(col("b"), lit(0L)) + coalesce(col("dr"), lit(0L)))
             .as("r"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
-        rank.write.mode("overwrite").parquet(s"$ck/r$i")
-        rank = spark.read.parquet(s"$ck/r$i")
-      }
     }
     rank
   }
@@ -516,41 +449,6 @@ object Graph {
         expr("(2 * tri * 1000000) div (deg * (deg - 1))").as("coeff_e6"))
   }
 
-  /** HITS hubs & authorities (Kleinberg 1999, "Authoritative sources
-    * in a hyperlinked environment") over a DIRECTED hub→authority
-    * edge list `(src, dst)` — src rows are hubs, dst rows
-    * authorities. The mutual-reinforcement recurrence
-    *   a(v) = Σ_{u→v} h(u),   h(u) = Σ_{u→v} a(v)
-    * runs `iters` rounds with MAX-normalization each half-step, all
-    * in fixed-point integer `scale` units: the max-norm is one 1-row
-    * agg broadcast plus a trunc division of non-negative longs, where
-    * the textbook L2 norm would need engine-divergent sqrt — so
-    * scores are bit-reproducible. Each half-round is one join + one
-    * map-combined sum (the pageRank execution shape with a
-    * normalization join instead of a teleport); keep `scale` modest
-    * (default 1e6) so Σ-then-rescale stays far from long overflow at
-    * any degree a cluster can hold.
-    *
-    * Every half-round MATERIALIZES its raw sums to scratch
-    * (|V|-bounded rows — the bfsHops shape): unlike the damped rank
-    * loops, each half-round here is consumed TWICE (its max-normalizer
-    * plus the next half-round's join), so lazy chaining re-executes
-    * every prior round's joins once per consumer — the plan tree grows
-    * multiplicatively with `iters` and the first cut measured 7.5 s
-    * for 3 rounds at sf0.1 where the materialized loop is ~1.5 s.
-    * Files also root the lineage, executor-loss safe. The
-    * max-normalizer itself stays FUSED: the rescale is a lazy
-    * projection over the landed file with max(sum) folded in as a
-    * broadcast 1-row agg of that same file, so it executes inside
-    * whichever job consumes the half-round — one write job per
-    * half-round total, where the first materialized cut spent three
-    * (raw write, driver max collect, rescaled write) and local mode
-    * pays ~0.2 s launch overhead per job (12 jobs ≈ 4.5-5.6 s wall at
-    * sf0.1 measured in r15; fusing to 2·iters+1 roughly halves it).
-    *
-    * @return (hubs, authorities): ((src, h), (dst, a)) in `scale`
-    *         units; the best hub/authority scores exactly `scale`.
-    */
   /** Exact max of an INT64 column read from parquet footer statistics —
     * driver-side ranged reads, one per part file, no Spark job. Returns
     * None (caller falls back to an agg job) if any footer lacks
@@ -592,12 +490,46 @@ object Graph {
     } catch { case _: Exception => None }
   }
 
-  def hits(edges: DataFrame, iters: Int = 3,
-      scale: Long = 1000000L,
-      broadcastScores: Boolean = false): (DataFrame, DataFrame) = {
+  /** HITS hubs & authorities (Kleinberg 1999, "Authoritative sources
+    * in a hyperlinked environment") over the DIRECTED hub→authority
+    * edges of a [[materializeEdges]] artifact — the `(src, dst)` rows
+    * whose `src` satisfies `hubs`; src rows are hubs, dst rows
+    * authorities. The mutual-reinforcement recurrence
+    *   a(v) = Σ_{u→v} h(u),   h(u) = Σ_{u→v} a(v)
+    * runs `iters` rounds with MAX-normalization each half-step, all
+    * in fixed-point integer 1e6 units: the max-norm is one 1-row
+    * agg broadcast plus a trunc division of non-negative longs, where
+    * the textbook L2 norm would need engine-divergent sqrt — so
+    * scores are bit-reproducible. Each half-round is one join + one
+    * map-combined sum (the pageRank execution shape with a
+    * normalization join instead of a teleport); over a plain-parquet
+    * index the score side broadcasts, so the |E| side scans map-side
+    * per half-round instead of being hash-exchanged 2·iters times.
+    *
+    * Every half-round MATERIALIZES its raw sums to scratch
+    * (|V|-bounded rows — the bfsHops shape): unlike the damped rank
+    * loops, each half-round here is consumed TWICE (its max-normalizer
+    * plus the next half-round's join), so lazy chaining re-executes
+    * every prior round's joins once per consumer — the plan tree grows
+    * multiplicatively with `iters` and the first cut measured 7.5 s
+    * for 3 rounds at sf0.1 where the materialized loop is ~1.5 s.
+    * Files also root the lineage, executor-loss safe. The
+    * max-normalizer itself stays FUSED: the rescale is a lazy
+    * projection over the landed file with max(sum) folded in as a
+    * broadcast 1-row agg of that same file, so it executes inside
+    * whichever job consumes the half-round — one write job per
+    * half-round total, where the first materialized cut spent three
+    * (raw write, driver max collect, rescaled write) and local mode
+    * pays ~0.2 s launch overhead per job (12 jobs ≈ 4.5-5.6 s wall at
+    * sf0.1 measured in r15; fusing to 2·iters+1 roughly halves it).
+    *
+    * @return (hubs, authorities): ((src, h), (dst, a)) in 1e6 units;
+    *         the best hub/authority scores exactly 1e6.
+    */
+  def hits(spark: SparkSession, idx: EdgeIndex, hubs: Column,
+      iters: Int = 3): (DataFrame, DataFrame) = {
     require(iters >= 1, "hits needs at least one iteration")
-    val spark = edges.sparkSession
-    val ed = edges.select("src", "dst")
+    val ed = idx.edges(spark).select("src", "dst").filter(hubs)
     // Mirrors pageRank's empty-graph require: on an empty edge set the
     // max normalizer aggregates to a null row and every score divides
     // by 0 — fail loud instead.
@@ -609,15 +541,10 @@ object Graph {
     // at 2 landings per round those launches are pure overhead on
     // |V|-bounded files.
     val h0Init = ed.select("src").distinct()
-      .select(col("src"), lit(scale).as("h"))
+      .select(col("src"), lit(HitsScale).as("h"))
     h0Init.write.mode("overwrite").parquet(s"$ck/h0")
     var hub = spark.read.schema(h0Init.schema).parquet(s"$ck/h0")
     var auth: DataFrame = null
-    // `broadcastScores` (DOMAIN-BOUNDED graphs — hub/authority tables
-    // are vocabulary-sized): the |E| side then scans map-side per
-    // half-round instead of being hash-exchanged 2·iters times — the
-    // broadcastRanks analogue, and the same |V|-growth caveat applies.
-    def side(df: DataFrame) = if (broadcastScores) broadcast(df) else df
     // Max-norm rescale as a lazy LITERAL projection over the landed raw
     // sums: the max comes straight from the parquet FOOTER statistics of
     // the file just written (driver-side ranged reads, one per part file
@@ -628,15 +555,15 @@ object Graph {
         out: String, path: String) = {
       val mx = footerLongMax(spark, path, rawCol).getOrElse(
         raw.agg(max(col(rawCol))).head().getLong(0))
-      raw.select(col(key), expr(s"($rawCol * ${scale}L) div ${mx}L").as(out))
+      raw.select(col(key), expr(s"($rawCol * ${HitsScale}L) div ${mx}L").as(out))
     }
     for (i <- 1 to iters) {
-      val a0 = ed.join(side(hub), "src").groupBy("dst")
+      val a0 = ed.join(roundSide(idx, hub), "src").groupBy("dst")
         .agg(sum(col("h")).as("a0"))
       a0.write.mode("overwrite").parquet(s"$ck/a0_$i")
       auth = rescale(spark.read.schema(a0.schema).parquet(s"$ck/a0_$i"),
         "a0", "dst", "a", s"$ck/a0_$i")
-      val h0 = ed.join(side(auth), "dst").groupBy("src")
+      val h0 = ed.join(roundSide(idx, auth), "dst").groupBy("src")
         .agg(sum(col("a")).as("h0"))
       h0.write.mode("overwrite").parquet(s"$ck/h0_$i")
       hub = rescale(spark.read.schema(h0.schema).parquet(s"$ck/h0_$i"),
@@ -656,16 +583,7 @@ object Graph {
     * searches/parameter sweeps (the build is the expensive half).
     */
   def pageRank(edges: DataFrame, iters: Int = 5,
-      scale: Long = 1000000000000L,
-      validateDangling: Boolean = true,
-      broadcastRanks: Boolean = false,
-      allNodesReceive: Boolean = false,
-      buckets: Int = 32,
-      symmetrize: Boolean = false): DataFrame = {
-    val idx = materializeEdges(edges,
-      java.util.UUID.randomUUID().toString, validateDangling,
-      bucketed = !broadcastRanks, buckets, symmetrize)
-    pageRankIndexed(edges.sparkSession, idx, iters, scale,
-      broadcastRanks, allNodesReceive)
-  }
+      symmetrize: Boolean = false): DataFrame =
+    pageRankIndexed(edges.sparkSession, materializeEdges(edges,
+      java.util.UUID.randomUUID().toString, symmetrize), iters)
 }

@@ -100,12 +100,4 @@ object Partitions {
       .collect()
       .map(r => PartitionId(keys.indices.map(i => r.getString(i))) -> r.getLong(keys.size))
       .toSeq
-
-  /** Work-list difference for resume: live partitions minus checkpointed
-    * ones, order-preserving (reference: services/resume.py:38 — a list
-    * comprehension; SURVEY.md A25). Partition lists are driver-small by
-    * construction; at catalog scale this becomes a left_anti join.
-    */
-  def uncompleted(all: Seq[PartitionId], completed: Set[PartitionId]): Seq[PartitionId] =
-    all.filterNot(completed.contains)
 }

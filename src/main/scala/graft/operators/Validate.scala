@@ -95,25 +95,4 @@ object Salting {
       .agg(sum(value).as("partial"))
       .groupBy(col(key))
       .agg(sum(col("partial")).as("sum"))
-
-  /** Salted equi-join for a skewed big side: the big side gets a random
-    * salt in [0, saltBuckets), the small side is replicated once per
-    * salt value (explode of a literal range), and the join key becomes
-    * (key, salt) — a hot key's rows now spread across `saltBuckets`
-    * shuffle partitions instead of hammering one task. Result is
-    * row-identical to the plain inner join (every big-side row still
-    * meets every matching small-side row exactly once, through its one
-    * salt). Use when a specific key set is known-hot and AQE's
-    * skew-splitting is unavailable (e.g. the join feeds an operator AQE
-    * won't split under). Cost: small side × saltBuckets, so size the
-    * bucket count to the skew, not higher.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      saltBuckets: Int = 32): DataFrame = {
-    val salted = big.withColumn("_salt",
-      (rand(seed = 7) * saltBuckets).cast("int"))
-    val replicated = small.withColumn("_salt",
-      explode(sequence(lit(0), lit(saltBuckets - 1))))
-    salted.join(replicated, Seq(key, "_salt")).drop("_salt")
-  }
 }

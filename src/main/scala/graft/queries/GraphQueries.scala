@@ -27,7 +27,7 @@ object GraphQueries {
     * vocabularies still grow linearly with SF (200k·SF parts), so an
     * unconditional broadcast would eventually hit the driver-memory /
     * 8 GB broadcast wall — the layout choice is therefore DATA-DRIVEN
-    * at index-build time (materializeEdges' `bucketIfOver`): ≤ 2M
+    * at index-build time (materializeEdges' `nodeCap`): ≤ 2M
     * nodes (~32 MB of (node, r) rows) broadcast comfortably; above
     * that the standing bucketed layout takes over and each round
     * exchanges only the |V| rank rows.
@@ -51,9 +51,8 @@ object GraphQueries {
       // set, so plain unionAll symmetrizes without a dedup pass; every
       // node gains an out-edge, satisfying the no-dangling contract
       // (validation skipped — true by construction).
-      Graph.materializeEdges(e0, dir,
-        validateDangling = false, symmetrize = true,
-        bucketIfOver = BroadcastNodeCap)
+      Graph.materializeEdges(e0, dir, symmetrize = true,
+        nodeCap = BroadcastNodeCap)
     }
 
   /** The DOCUMENT near-dup edge indexes (uniform and weighted), built
@@ -80,7 +79,7 @@ object GraphQueries {
       // from the staged copy, so the pair relation reads once
       Graph.materializeEdges(pairs,
         s"doc${if (weighted) "w" else ""}:$dir",
-        validateDangling = false, symmetrize = true, weighted = weighted)
+        symmetrize = true, weighted = weighted)
     }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -97,16 +96,14 @@ object GraphQueries {
     // at every SF while the rank computation itself touches the whole
     // graph.
     "g_pagerank" -> ((s, dir) => {
-      // broadcastRanks rides the index's DATA-DRIVEN layout choice
+      // The rank side rides the index's DATA-DRIVEN layout choice
       // (BroadcastNodeCap): below the cap the rank vector broadcasts
       // and each iteration's only shuffle is the |V|-bounded
       // partial-agg exchange; above it the standing bucketed edges
-      // absorb the join and only the rank rows exchange.
-      // allNodesReceive: symmetry gives every node an in-edge, so the
-      // per-round zero-in-degree re-add join is skipped too.
-      val idx = builtEdgeIndex(s, dir)
-      Graph.pageRankIndexed(s, idx, iters = PrIters,
-        broadcastRanks = !idx.bucketed, allNodesReceive = true)
+      // absorb the join and only the rank rows exchange. Symmetry
+      // gives every node an in-edge, so the per-round zero-in-degree
+      // re-add join is skipped too.
+      Graph.pageRankIndexed(s, builtEdgeIndex(s, dir), iters = PrIters)
         .select(
           kindOf(col("node")).as("kind"),
           expr("node div 2").as("key"),
@@ -125,8 +122,7 @@ object GraphQueries {
       val idx = builtEdgeIndex(s, dir)
       val seeds = idx.nodes(s)
         .filter(col("node").isin(1L, 3L, 5L, 7L, 9L)).select("node")
-      Graph.trustRank(s, idx, seeds, iters = PrIters,
-        broadcastRanks = !idx.bucketed)
+      Graph.trustRank(s, idx, seeds, iters = PrIters)
         .select(kindOf(col("node")).as("kind"),
           expr("node div 2").as("key"),
           col("r").as("trust_e12"))
@@ -145,7 +141,7 @@ object GraphQueries {
     // into the 3-round integer rank replay.
     "g_doc_rank" -> ((s, dir) => {
       Graph.pageRankIndexed(s, builtDocIndex(s, dir, weighted = false),
-        iters = DocRankIters, allNodesReceive = true)
+        iters = DocRankIters)
         .select(col("node").as("doc_id"), col("r").as("rank_e12"))
         .orderBy(col("rank_e12").desc, col("doc_id"))
     }),
@@ -165,8 +161,7 @@ object GraphQueries {
     // weighted 3-round replay.
     "g_rank_weighted" -> ((s, dir) => {
       Graph.pageRankWeightedIndexed(s,
-        builtDocIndex(s, dir, weighted = true),
-        iters = DocRankIters, allNodesReceive = true)
+        builtDocIndex(s, dir, weighted = true), iters = DocRankIters)
         .select(col("node").as("doc_id"), col("r").as("rank_e12"))
         .orderBy(col("rank_e12").desc, col("doc_id"))
     }),
@@ -186,12 +181,9 @@ object GraphQueries {
     // the pageRank execution shape with a normalization join instead
     // of a teleport; rides the standing co-sourcing edge index.
     "g_hits" -> ((s, dir) => {
-      val idx = builtEdgeIndex(s, dir)
       // directed supplier→part half of the symmetrized edge table
-      val ed = idx.edges(s).select("src", "dst")
-        .filter(col("src") % 2 === 1)
-      val (hub, auth) = Graph.hits(ed, iters = 3,
-        broadcastScores = !idx.bucketed)
+      val (hub, auth) = Graph.hits(s, builtEdgeIndex(s, dir),
+        col("src") % 2 === 1, iters = 3)
       auth.select(lit("part").as("kind"), expr("dst div 2").as("key"),
           col("a").as("score_e6"))
         .unionByName(hub.select(lit("supplier").as("kind"),
@@ -276,8 +268,7 @@ object GraphQueries {
       val idx = builtEdgeIndex(s, dir)
       val seeds = idx.nodes(s)
         .filter(col("node").isin(1L, 3L, 5L, 7L, 9L)).select("node")
-      val d = Graph.bfsHops(s, idx, seeds, maxHops = 4,
-        broadcastFrontier = !idx.bucketed)
+      val d = Graph.bfsHops(s, idx, seeds, maxHops = 4)
       idx.nodes(s).select("node")
         .join(d, Seq("node"), "left")
         .select(kindOf(col("node")).as("kind"),

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * layer cache standing artifacts only through
   * [[graft.sources.ArtifactRegistry]], and catalog metadata is read
   * only through [[graft.sources.CatalogOps]] — with no pre-epoch
-  * adoption path left in either epoch store.
+  * adoption path left in either epoch store, and no reliable-checkpoint
+  * or early-stop mode in the iterative loops.
   */
 class MechanismCountSpec extends AnyFunSuite {
 
@@ -49,5 +50,10 @@ class MechanismCountSpec extends AnyFunSuite {
         "hasAdoptionMarker", "graft.epoch.adopted").foreach { t =>
       assert(mentioning(t).isEmpty, s"$t in ${mentioning(t)}")
     }
+  }
+
+  test("no reliable checkpoint, checkpoint cadence or early stop in src/main") {
+    Seq("setCheckpointDir", ".checkpoint(", "checkpointEvery", "tolL1")
+      .foreach(t => assert(mentioning(t).isEmpty, s"$t in ${mentioning(t)}"))
   }
 }

@@ -16,15 +16,25 @@ import org.scalatest.funsuite.AnyFunSuite
   *    followed transitively. An unreached file fails.
   *  - Def check: in a reached file, a non-private, non-`override` `def`
   *    fails when its name appears nowhere in reached main code or
-  *    perfbench except at `def` sites of that name.
+  *    perfbench except at `def` sites of that name. When more than one
+  *    top-level owner (object, class or trait) defines the name, a use
+  *    counts for an owner only if it is qualified with the owner's name
+  *    (`Owner.name`), sits in the owner's own file, or sits in a file
+  *    that imports the owner's members — so a dead def cannot hide
+  *    behind a live one of the same name. A class or trait member is
+  *    called on instances whose type the text does not show, so for
+  *    those owners any `.name` selection counts as well.
   *  - Allowlist: defs kept for a stated reason although only specs call
   *    them. An entry that no longer needs the allowlist fails too.
   */
 class ReachabilitySpec extends AnyFunSuite {
+  import ReachabilitySpec.Def
 
   private val allowlist: Map[String, String] = Map(
     "EpochDir.pinSnapshot" ->
       "multi-epoch pin kept for migration publish on epoch stores",
+    "EpochDir.epochs" ->
+      "committed-epoch listing a pinned reader records its snapshot from",
     "CatalogOps.pinSnapshot" ->
       "catalog twin of the epoch pin, kept with the epoch views",
     "CatalogOps.tableAtEpoch" ->
@@ -146,7 +156,7 @@ class ReachabilitySpec extends AnyFunSuite {
     mainRoot.toPath.relativize(f.toPath).toString.replace('\\', '/')
 
   private val TopLevel = ("(?m)^(?:(?:final|sealed|case|abstract|implicit|" +
-    "private(?:\\[\\w+\\])?)\\s+)*(?:object|class|trait)\\s+" +
+    "private(?:\\[\\w+\\])?)\\s+)*(object|class|trait)\\s+" +
     "([A-Za-z_][A-Za-z0-9_]*)").r
   private val Ident = "[A-Za-z_][A-Za-z0-9_]*".r
   private def words(text: String): Set[String] = Ident.findAllIn(text).toSet
@@ -154,7 +164,7 @@ class ReachabilitySpec extends AnyFunSuite {
   /** Files reached from the roots, following top-level type names. */
   private lazy val reached: Set[File] = {
     val declared = mainSrc.map { case (f, t) =>
-      f -> TopLevel.findAllMatchIn(t).map(_.group(1)).toSet }
+      f -> TopLevel.findAllMatchIn(t).map(_.group(2)).toSet }
     val roots = mainSrc.collect {
       case (f, t) if "\\bdef\\s+main\\s*\\(".r.findFirstIn(t).isDefined => f
     }.toSet
@@ -174,28 +184,55 @@ class ReachabilitySpec extends AnyFunSuite {
   private val DefSite = ("(?m)^([ \\t]*(?:[a-z]+(?:\\[\\w+\\])?\\s+|@\\w+\\s+)*)" +
     "def\\s+([A-Za-z_][A-Za-z0-9_]*)").r
 
-  /** `Owner.def` of every public def in reached main code whose name is
-    * used nowhere in reached main code or perfbench; `apply`/`unapply`/
-    * `update` are called by syntax, `main` is a root.
+  private lazy val defs: Seq[Def] = reached.toSeq.flatMap { f =>
+    val t = mainSrc(f)
+    val owners = TopLevel.findAllMatchIn(t).toSeq
+    DefSite.findAllMatchIn(t).map { m =>
+      val owner = owners.takeWhile(_.start < m.start).lastOption
+      Def(owner.map(_.group(2)).getOrElse(rel(f)), m.group(2), t,
+        public = !m.group(1).contains("private") &&
+          !m.group(1).contains("override"),
+        onInstances = owner.exists(_.group(1) != "object"))
+    }
+  }
+
+  /** Uses of `name` in `text` that are not `def` sites of it. */
+  private def usesIn(text: String, name: String): Int =
+    Ident.findAllIn(text).count(_ == name) -
+      DefSite.findAllMatchIn(text).count(_.group(2) == name)
+
+  /** Uses of `d.name` that count for `d.owner`: qualified with the owner
+    * (any `.name` selection for a class or trait owner), in the owner's
+    * own file, or in a file importing the owner's members.
+    */
+  private def ownerUses(d: Def, texts: Seq[String]): Int = {
+    val o = java.util.regex.Pattern.quote(d.owner)
+    val n = java.util.regex.Pattern.quote(d.name)
+    val qualified = s"\\b$o\\s*\\.\\s*$n\\b".r
+    val imports = s"\\bimport\\s+(?:[\\w.]*\\.)?$o\\.(?:_|\\{|$n\\b)".r
+    val selected = s"\\.\\s*$n\\b".r
+    texts.map { t =>
+      if ((t eq d.fileText) || imports.findFirstIn(t).isDefined)
+        usesIn(t, d.name)
+      else (if (d.onInstances) selected else qualified).findAllIn(t).size
+    }.sum
+  }
+
+  /** `Owner.def` of every public def in reached main code with no use in
+    * reached main code or perfbench (per owner when several owners
+    * define the name); `apply`/`unapply`/`update` are called by syntax,
+    * `main` is a root.
     */
   private lazy val unused: Set[String] = {
-    val corpus = (reached.toSeq.map(mainSrc) ++ bench).mkString("\n")
-    val uses = Ident.findAllIn(corpus).toSeq
-      .groupBy(identity).view.mapValues(_.size).toMap
-    val defSites = DefSite.findAllMatchIn(corpus).map(_.group(2)).toSeq
-      .groupBy(identity).view.mapValues(_.size).toMap
-    reached.toSeq.flatMap { f =>
-      val t = mainSrc(f)
-      val owners = TopLevel.findAllMatchIn(t).map(m => m.start -> m.group(1)).toSeq
-      DefSite.findAllMatchIn(t).collect {
-        case m if !m.group(1).contains("private") &&
-            !m.group(1).contains("override") &&
-            !Set("main", "apply", "unapply", "update")(m.group(2)) &&
-            uses.getOrElse(m.group(2), 0) <= defSites.getOrElse(m.group(2), 0) =>
-          val owner = owners.takeWhile(_._1 < m.start).lastOption
-            .map(_._2).getOrElse(rel(f))
-          s"$owner.${m.group(2)}"
-      }
+    val texts = reached.toSeq.map(mainSrc) ++ bench
+    val corpus = texts.mkString("\n")
+    val owners = defs.groupBy(_.name).view.mapValues(_.map(_.owner).toSet).toMap
+    defs.collect {
+      case d if d.public &&
+          !Set("main", "apply", "unapply", "update")(d.name) &&
+          (if (owners(d.name).size > 1) ownerUses(d, texts) <= 0
+           else usesIn(corpus, d.name) <= 0) =>
+        s"${d.owner}.${d.name}"
     }.toSet
   }
 
@@ -225,4 +262,14 @@ class ReachabilitySpec extends AnyFunSuite {
     assert(stale.isEmpty, s"allowlisted defs that no longer need it: $stale")
     assert(allowlist.values.forall(_.trim.nonEmpty))
   }
+}
+
+object ReachabilitySpec {
+
+  /** A `def` site in reached main code: its top-level owner, the owner
+    * file's stripped text, whether the def is public, and whether its
+    * owner is a class or trait (members called on instances).
+    */
+  private final case class Def(owner: String, name: String, fileText: String,
+      public: Boolean, onInstances: Boolean)
 }

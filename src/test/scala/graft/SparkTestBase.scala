@@ -18,31 +18,47 @@ abstract class SparkFunSuite extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Jobs submitted while `build` runs, counted via an in-order
-    * listener: a marker job after `build` bounds the wait (listener
-    * delivery is async but ordered, so once the marker arrives every
-    * build-time job has too).
+  private val DrainMarker = "drain-listeners-marker-"
+  private def description(js: SparkListenerJobStart): String =
+    if (js.properties == null) null
+    else js.properties.getProperty("spark.job.description")
+
+  /** Returns once every listener event posted before the call has been
+    * delivered: delivery is async but ordered on the shared queue, so
+    * once a marker job's start arrives every earlier event has too.
     */
-  def jobsDuring(build: => Unit): Int = {
-    val marker = s"jobsDuring-marker-${System.nanoTime()}"
-    @volatile var jobs = 0
+  def drainListeners(): Unit = {
+    val marker = s"$DrainMarker${System.nanoTime()}"
     @volatile var markerSeen = false
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.job.description") == marker)
-          markerSeen = true
-        else jobs += 1
+        if (description(js) == marker) markerSeen = true
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      build
       spark.sparkContext.setJobDescription(marker)
       try spark.range(1).count()
       finally spark.sparkContext.setJobDescription(null)
       val deadline = System.nanoTime() + 10_000_000_000L
       while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
       assert(markerSeen, "marker job never reached the listener")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Jobs submitted while `build` runs, counted via a listener and
+    * bounded by [[drainListeners]].
+    */
+  def jobsDuring(build: => Unit): Int = {
+    @volatile var jobs = 0
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (!Option(description(js)).exists(_.startsWith(DrainMarker)))
+          jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      build
+      drainListeners()
       jobs
     } finally spark.sparkContext.removeSparkListener(listener)
   }

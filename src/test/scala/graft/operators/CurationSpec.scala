@@ -213,8 +213,7 @@ class CurationSpec extends SparkFunSuite {
       pairs.toDF("id_a", "id_b")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val rank = Graph.pageRank(
-      pairs.toDF("src", "dst"), iters = 3,
-      validateDangling = false, allNodesReceive = true, symmetrize = true)
+      pairs.toDF("src", "dst"), iters = 3, symmetrize = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expectedKeep = comp.groupBy(_._2).map { case (_, members) =>
       members.keys.toSeq.sortBy(id => (-rank(id), id)).head

@@ -1,10 +1,16 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkFunSuite
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, ResolvedHint}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Graph.pageRank invariants on handcrafted graphs where the answer is
-  * known analytically, plus the fail-fast dangling contract.
+  * known analytically, the fail-fast dangling contract, and the layout
+  * every loop derives from its edge index.
   */
 class GraphSpec extends SparkFunSuite {
 
@@ -15,13 +21,40 @@ class GraphSpec extends SparkFunSuite {
   /** One-shot weighted rank: materialize a weighted bucketed edge index
     * (with its positivity and dangling-node checks), then rank it. */
   private def pageRankWeighted(edges: org.apache.spark.sql.DataFrame,
-      iters: Int, allNodesReceive: Boolean = false,
-      symmetrize: Boolean = false) =
+      iters: Int, symmetrize: Boolean = false) =
     Graph.pageRankWeightedIndexed(spark,
       Graph.materializeEdges(edges, java.util.UUID.randomUUID().toString,
-        validateDangling = !symmetrize, bucketed = true, buckets = 32,
         symmetrize = symmetrize, weighted = true),
-      iters, allNodesReceive = allNodesReceive)
+      iters)
+
+  /** Analyzed plans of every query `body` runs, from a query-execution
+    * listener: bfsHops and hits land their rounds on scratch files, so
+    * their joins live only in the plans of those writes.
+    */
+  private def analyzedDuring(body: => Unit): Seq[LogicalPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.analyzed)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; drainListeners() }
+    finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  /** Whether a plan broadcasts a per-round side: a broadcast hint over a
+    * relation keyed by `src` or `dst` (trustRank's seed-teleport table,
+    * keyed by `node`, broadcasts at every layout).
+    */
+  private def broadcastsRoundSide(plans: Seq[LogicalPlan]): Boolean =
+    plans.exists(_.exists {
+      case h: ResolvedHint => h.hints.strategy.contains(BROADCAST) &&
+        h.output.exists(a => a.name == "src" || a.name == "dst")
+      case _ => false
+    })
 
   test("symmetric cycle: all ranks equal and mass ≈ scale") {
     // 3-cycle a→b→c→a symmetrized: every node indistinguishable.
@@ -66,8 +99,7 @@ class GraphSpec extends SparkFunSuite {
     val e0 = Seq((0L, 1L), (0L, 2L), (0L, 3L), (10L, 11L))
       .toDF("src", "dst")
     val und = e0.union(e0.select($"dst".as("src"), $"src".as("dst")))
-    val idx = Graph.materializeEdges(und, "tr-spec",
-      validateDangling = false, bucketed = false)
+    val idx = Graph.materializeEdges(und, "tr-spec", nodeCap = 100L)
     val got = Graph.trustRank(spark, idx, Seq(0L).toDF("node"), iters = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // replay the documented integer recurrence in plain Scala
@@ -99,8 +131,7 @@ class GraphSpec extends SparkFunSuite {
     // one weakly attached to both) must fall behind
     val e0 = Seq((0L, 1L, 900000L), (1L, 2L, 100000L), (0L, 2L, 100000L))
       .toDF("src", "dst", "w")
-    val got = pageRankWeighted(e0, iters = 5,
-        allNodesReceive = true, symmetrize = true)
+    val got = pageRankWeighted(e0, iters = 5, symmetrize = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // Scala replay of the documented integer recurrence
     val edges = Seq((0L, 1L, 900000L), (1L, 2L, 100000L),
@@ -121,7 +152,6 @@ class GraphSpec extends SparkFunSuite {
       "the weakly-linked node must rank last")
     // and it genuinely differs from the uniform split on this graph
     val uni = Graph.pageRank(e0.select("src", "dst"), iters = 5,
-        validateDangling = false, allNodesReceive = true,
         symmetrize = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(uni(0L) == uni(1L) && uni(1L) == uni(2L),
@@ -147,8 +177,7 @@ class GraphSpec extends SparkFunSuite {
     val e0 = Seq((0L, 1L), (1L, 2L), (2L, 3L), (10L, 11L))
       .toDF("src", "dst")
     val und = e0.union(e0.select($"dst".as("src"), $"src".as("dst")))
-    val idx = Graph.materializeEdges(und, "bfs-spec",
-      validateDangling = false, bucketed = false)
+    val idx = Graph.materializeEdges(und, "bfs-spec", nodeCap = 100L)
     val seeds = Seq(0L).toDF("node")
     def hops(maxHops: Int) =
       Graph.bfsHops(spark, idx, seeds, maxHops).collect()
@@ -163,6 +192,7 @@ class GraphSpec extends SparkFunSuite {
   }
 
   test("dangling node fails fast when validation is on") {
+    // an unsymmetrized build validates
     val directed = Seq((0L, 1L)).toDF("src", "dst") // 1 has no out-edge
     val err = intercept[IllegalArgumentException] {
       Graph.pageRank(directed, iters = 1)
@@ -180,72 +210,6 @@ class GraphSpec extends SparkFunSuite {
     assert(err.getMessage.contains("out-edge"))
   }
 
-  test("checkpointEvery: 20-round run matches the unchecked run; plan bounded") {
-    val e0 = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L)).toDF("src", "dst")
-    val idx = Graph.materializeEdges(e0, "ck-spec",
-      validateDangling = false, bucketed = false, symmetrize = true)
-    val plain = Graph.pageRankIndexed(spark, idx, iters = 20)
-    val checked = Graph.pageRankIndexed(spark, idx, iters = 20,
-      checkpointEvery = 5)
-    val a = plain.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = checked.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == b, "checkpointing must not change a single micro-unit")
-    // lineage re-roots at the round-15 scratch file: the checked plan
-    // carries ≤5 join/agg layers, the unchecked one all 20
-    val pa = plain.queryExecution.optimizedPlan.treeString
-    val pb = checked.queryExecution.optimizedPlan.treeString
-    assert(pb.length < pa.length / 2,
-      s"checkpointed lineage must be a fraction of the unchecked one " +
-        s"(${pb.length} vs ${pa.length})")
-    // same contract on the weighted loop
-    val ew = Seq((0L, 1L, 3L), (0L, 2L, 1L), (1L, 2L, 2L))
-      .toDF("src", "dst", "w")
-    val widx = Graph.materializeEdges(ew, "ck-spec-w",
-      validateDangling = false, bucketed = false, symmetrize = true,
-      weighted = true)
-    val wa = Graph.pageRankWeightedIndexed(spark, widx, iters = 12)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val wb = Graph.pageRankWeightedIndexed(spark, widx, iters = 12,
-      checkpointEvery = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(wa == wb)
-    // and on trustRank
-    val ta = Graph.trustRank(spark, idx, Seq(0L).toDF("node"), iters = 12)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val tb = Graph.trustRank(spark, idx, Seq(0L).toDF("node"), iters = 12,
-      checkpointEvery = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ta == tb)
-  }
-
-  test("tolL1: fast-converging graph stops early with the full run's ranking") {
-    // symmetric 3-cycle converges immediately (every round is the
-    // fixed point up to floor jitter): a loose tolerance must stop the
-    // loop well before 50 rounds yet agree with the full run's order
-    val e0 = Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
-    val idx = Graph.materializeEdges(e0, "tol-spec",
-      validateDangling = false, bucketed = false, symmetrize = true)
-    val t0 = System.nanoTime()
-    val early = Graph.pageRankIndexed(spark, idx, iters = 50,
-      tolL1 = 1000000L)
-    val got = early.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = Graph.pageRankIndexed(spark, idx, iters = 50,
-      checkpointEvery = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // identical top-k ORDER (all tied here) and near-identical values
-    assert(got.keySet == full.keySet)
-    assert(got.values.toSet.size == 1 && full.values.toSet.size == 1,
-      "symmetric nodes must tie under both runs")
-    got.foreach { case (k, v) =>
-      assert(math.abs(v - full(k)) <= 1000000L, s"node $k drifted")
-    }
-    // the early-stop plan must be rooted at a scratch file from an
-    // early round, not 50 join layers deep
-    val depth = early.queryExecution.optimizedPlan.treeString
-    assert(depth.length < 4000,
-      s"early stop must leave a shallow file-rooted plan:\n$depth")
-  }
-
   test("triangles: K4 counts and coefficients are analytic; stars have none") {
     // K4 ∪ a star center 10 with leaves 11..13: K4 has C(4,3)=4
     // triangles, each node in C(3,2)=3 of them, deg 3 → coeff
@@ -254,8 +218,7 @@ class GraphSpec extends SparkFunSuite {
     val k4 = for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b)
     val star = Seq((10L, 11L), (10L, 12L), (10L, 13L))
     val idx = Graph.materializeEdges((k4 ++ star).toDF("src", "dst"),
-      "tri-spec", validateDangling = false, bucketed = false,
-      symmetrize = true)
+      "tri-spec", symmetrize = true, nodeCap = 100L)
     val got = Graph.triangles(spark, idx).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
@@ -282,8 +245,7 @@ class GraphSpec extends SparkFunSuite {
     val prop = Prop.forAll(edgeGen) { pairs =>
       draw += 1
       val idx = Graph.materializeEdges(pairs.toDF("src", "dst"),
-        s"tri-prop-$draw", validateDangling = false, bucketed = false,
-        symmetrize = true)
+        s"tri-prop-$draw", symmetrize = true, nodeCap = 100L)
       val got = Graph.triangles(spark, idx).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val es = pairs.toSet
@@ -306,8 +268,12 @@ class GraphSpec extends SparkFunSuite {
     // hubs {1, 3}, authorities {0, 2}: 1→{0,2}, 3→{2}. Authority 2 is
     // endorsed by both hubs → top authority; hub 1 covers both
     // authorities → top hub.
-    val ed = Seq((1L, 0L), (1L, 2L), (3L, 2L)).toDF("src", "dst")
-    val (hubDf, authDf) = Graph.hits(ed, iters = 3)
+    // the odd-source half of the symmetrized index is the input
+    val idx = Graph.materializeEdges(
+      Seq((1L, 0L), (1L, 2L), (3L, 2L)).toDF("src", "dst"), "hits-spec",
+      symmetrize = true)
+    val (hubDf, authDf) = Graph.hits(spark, idx, col("src") % 2 === 1,
+      iters = 3)
     val hub = hubDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val auth = authDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // replay the documented integer recurrence
@@ -335,21 +301,21 @@ class GraphSpec extends SparkFunSuite {
 
   test("hits: empty edge set fails loud, mirroring pageRank") {
     // Without the guard the max normalizer aggregates to a null row
-    // and every score divides by zero.
-    val ed = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val e = intercept[IllegalArgumentException](Graph.hits(ed))
+    // and every score divides by zero. No edge passes the hub filter.
+    val idx = Graph.materializeEdges(Seq((0L, 1L)).toDF("src", "dst"),
+      "hits-empty", symmetrize = true)
+    val e = intercept[IllegalArgumentException](
+      Graph.hits(spark, idx, lit(false)))
     assert(e.getMessage.contains("empty edge set"))
   }
 
-  test("bucketIfOver: layout choice is data-driven at build time") {
+  test("nodeCap: layout choice is data-driven at build time") {
     val e0 = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
     // 2 nodes ≤ cap → plain parquet (broadcastable regime)
-    val small = Graph.materializeEdges(e0, "cap-small",
-      validateDangling = false, bucketIfOver = 10L)
+    val small = Graph.materializeEdges(e0, "cap-small", nodeCap = 10L)
     assert(!small.bucketed)
     // 2 nodes > cap 1 → bucketed standing layout
-    val big = Graph.materializeEdges(e0, "cap-big",
-      validateDangling = false, bucketIfOver = 1L)
+    val big = Graph.materializeEdges(e0, "cap-big", nodeCap = 1L)
     assert(big.bucketed)
     // both produce identical ranks
     val a = Graph.pageRankIndexed(spark, small, iters = 3)
@@ -365,20 +331,53 @@ class GraphSpec extends SparkFunSuite {
     // so the build must pin it to the bucket count — a write straight
     // off the staged join leaves files ∝ input partitions (measured
     // 10× the loop tasks at the sf1 probe on an identical table).
-    val e0 = spark.range(2000).selectExpr(
-      "id % 50 AS src", "(id * 7) % 50 AS dst")
+    // 500 sources fill all 32 buckets
+    val e0 = spark.range(4000).selectExpr(
+      "id % 500 AS src", "(id * 7) % 500 AS dst")
       .filter($"src" =!= $"dst")
       .repartition(13) // deliberately awkward input split
-    val idx = Graph.materializeEdges(e0, "bucketfile-spec",
-      validateDangling = false, symmetrize = true,
-      bucketIfOver = 0L, buckets = 4)
+    val idx = Graph.materializeEdges(e0, "bucketfile-spec", symmetrize = true)
     assert(idx.bucketed)
     val loc = spark.sql(s"DESC FORMATTED ${idx.edgesRef}")
       .filter($"col_name" === "Location").head().getString(1)
     val dataFiles = new java.io.File(new java.net.URI(loc).getPath)
       .listFiles().filter(f => f.getName.endsWith(".parquet"))
-    assert(dataFiles.length == 4,
-      s"expected one file per bucket (4), got ${dataFiles.length}: " +
+    assert(dataFiles.length == 32,
+      s"expected one file per bucket (32), got ${dataFiles.length}: " +
         dataFiles.map(_.getName).mkString(", "))
+  }
+
+  test("round sides broadcast iff the index is not bucketed; symmetric builds skip the node join") {
+    // path 0-1-2-3 plus chord 1-3; odd sources are the hits hubs
+    val e0 = Seq((0L, 1L), (1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
+    val seeds = Seq(0L).toDF("node")
+    for (cap <- Seq(0L, 100L)) {
+      val idx = Graph.materializeEdges(e0, s"hint-$cap", symmetrize = true,
+        nodeCap = cap)
+      val widx = Graph.materializeEdges(e0.withColumn("w", lit(2L)),
+        s"hint-w-$cap", symmetrize = true, weighted = true, nodeCap = cap)
+      assert(idx.bucketed == (cap == 0L) && widx.bucketed == idx.bucketed)
+      val loops: Seq[(String, () => Unit)] = Seq(
+        "pageRankIndexed" -> (() => Graph.pageRankIndexed(spark, idx, 2).collect()),
+        "pageRankWeightedIndexed" ->
+          (() => Graph.pageRankWeightedIndexed(spark, widx, 2).collect()),
+        "trustRank" -> (() => Graph.trustRank(spark, idx, seeds, 2).collect()),
+        "bfsHops" -> (() => Graph.bfsHops(spark, idx, seeds, 2).collect()),
+        "hits" -> { () =>
+          val (hub, auth) = Graph.hits(spark, idx, col("src") % 2 === 1, 2)
+          hub.collect(); auth.collect()
+        })
+      loops.foreach { case (name, run) =>
+        assert(broadcastsRoundSide(analyzedDuring(run())) == !idx.bucketed,
+          s"$name over nodeCap $cap (bucketed = ${idx.bucketed})")
+      }
+    }
+    // a symmetrized index certifies in-degree ≥ 1: one join per round;
+    // the same edges built unsymmetrized add the node re-add join
+    val und = e0.union(e0.select($"dst".as("src"), $"src".as("dst")))
+    def joins(idx: Graph.EdgeIndex) = Graph.pageRankIndexed(spark, idx, 3)
+      .queryExecution.analyzed.collect { case j: Join => j }.size
+    assert(joins(Graph.materializeEdges(e0, "join-sym", symmetrize = true)) == 3)
+    assert(joins(Graph.materializeEdges(und, "join-dir")) == 6)
   }
 }

@@ -168,48 +168,6 @@ class LlmOpsSpec extends SparkFunSuite {
       10L -> 10L, 11L -> 10L))
   }
 
-  test("connectedComponents: reliable checkpoint dir gives identical labels on a 50-node chain") {
-    val s = graft.SparkTestBase.spark
-    import s.implicits._
-    // A 50-node path has diameter 49 — enough propagation rounds that a
-    // per-round lineage cut is load-bearing, not decorative.
-    val chain = (1L to 50L).sliding(2).map(p => (p(0), p(1))).toSeq
-      .toDF("id_a", "id_b")
-    val dir = tmpDir("cc-checkpoint")
-    val got = Dedup.connectedComponents(chain, maxIter = 60,
-        checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (1L to 50L).map(_ -> 1L).toMap)
-    // the reliable path actually wrote RDD checkpoints into the dir
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .anyMatch(p => p.getFileName.toString.startsWith("rdd-"))
-    assert(wrote, s"no rdd-* checkpoint dirs under $dir")
-    // ...and is self-cleaning: a ~50-round job leaves only the edges
-    // cut plus the final round that backs the returned DataFrame, not
-    // one durable labels copy per round.
-    val cutDirs = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cc-cut-")).map(_.getName)
-    assert(cutDirs.length == 2, s"expected 2 surviving cut dirs, got: ${cutDirs.sorted.mkString(", ")}")
-    assert(cutDirs.contains("cc-cut-0"), "edges checkpoint (cut 0) must survive the job")
-  }
-
-  test("connectedComponents: caller's SparkContext checkpoint dir is restored") {
-    val s = graft.SparkTestBase.spark
-    import s.implicits._
-    val sc = s.sparkContext
-    val callerDir = tmpDir("caller-checkpoint")
-    val saved = sc.getCheckpointDir
-    sc.setCheckpointDir(callerDir)
-    try {
-      val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-      Dedup.connectedComponents(pairs, checkpointDir = Some(tmpDir("cc-other")))
-        .collect()
-      // reliable mode must not leave its own subdir as the global setting
-      assert(sc.getCheckpointDir.exists(_.contains("caller-checkpoint")),
-        s"checkpoint dir not restored: ${sc.getCheckpointDir}")
-    } finally sc.setCheckpointDir(saved.orNull)
-  }
-
   test("connectedComponents: 1200-deep path converges within default maxIter (pointer doubling)") {
     val s = graft.SparkTestBase.spark
     import s.implicits._

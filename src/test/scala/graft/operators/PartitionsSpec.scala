@@ -50,13 +50,6 @@ class PartitionsSpec extends SparkFunSuite {
     assert(counts.values.forall(_ > 0))
   }
 
-  test("uncompleted preserves order and removes checkpointed") {
-    val all = Seq("a", "b", "c", "d").map(PartitionId.single)
-    val done = Set(PartitionId.single("b"), PartitionId.single("d"))
-    assert(Partitions.uncompleted(all, done) ==
-      Seq("a", "c").map(PartitionId.single))
-  }
-
   test("property: composite predicate round-trips generated partitions") {
     val s = graft.SparkTestBase.spark
     import s.implicits._

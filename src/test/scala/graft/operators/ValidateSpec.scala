@@ -54,21 +54,4 @@ class ValidateSpec extends SparkFunSuite {
       .collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
     assert(salted == plain)
   }
-
-  test("saltedJoin is row-identical to the plain inner join") {
-    // events.user_id is the (potentially hot) big-side key; customer is
-    // the replicated small side.
-    val events = graft.sources.Sources.table(spark, sf0001, "events")
-      .select(col("event_id"), col("user_id"))
-    val cust = spark.read.parquet(s"$sf0001/customer.parquet")
-      .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-    val plain = events.join(cust, Seq("user_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      .sortBy(t => (t._1, t._2))
-    val salted = Salting.saltedJoin(events, cust, "user_id", saltBuckets = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      .sortBy(t => (t._1, t._2))
-    assert(salted.length == plain.length)
-    assert(salted.sameElements(plain))
-  }
 }
