@@ -83,7 +83,8 @@ object CopyService {
 
   /** Copy a wave of partitions of `src` (which carries the string key
     * columns) into `destRoot` in ONE job: a dynamic-partition-overwrite
-    * [[writePartitioned]] filtered null-safely to the wave's keys, so
+    * [[writePartitioned]] filtered null-safely to the wave's keys (one
+    * set lookup per row, [[Partitions.partitionPredicate]]), so
     * each partition of the wave is replaced whole and every other
     * partition under `destRoot` is left as it is.
     */
@@ -92,13 +93,7 @@ object CopyService {
       keys: Seq[String],
       wave: Seq[PartitionId],
       destRoot: String): Unit = {
-    // Balanced OR: a wave may hold thousands of small partitions, and a
-    // left-deep chain that long is a deep recursion for every Catalyst rule.
-    def anyOf(cs: Seq[Column]): Column =
-      if (cs.size == 1) cs.head
-      else cs.splitAt(cs.size / 2) match { case (a, b) => anyOf(a) || anyOf(b) }
-    writePartitioned(
-      src.filter(anyOf(wave.map(Partitions.partitionPredicate(keys, _)))),
+    writePartitioned(src.filter(Partitions.partitionPredicate(keys, wave)),
       keys, destRoot)
   }
 

@@ -367,8 +367,9 @@ object Graph {
     * Same fixed-point integer recurrence and execution shape as
     * [[pageRankIndexed]] with two deltas: r₀ = Scale div |S| on seeds
     * (0 elsewhere), and the per-round teleport lands on seeds only —
-    * a broadcast |S|-row join per round (seed sets are small by
-    * definition: that is what makes them trustable).
+    * the |S| seed rows join each round's contributions in its one
+    * aggregate (seed sets are small by definition: that is what makes
+    * them trustable).
     *   r'(v) = [v ∈ S]·base + (85 · Σ contrib) div 100,
     *   base = (15·(Scale div |S|)) div 100
     * Non-seed nodes that receive nothing simply stay off the rank
@@ -383,27 +384,30 @@ object Graph {
       iters: Int = 5): DataFrame = {
     require(iters >= 1, "trustRank needs at least one iteration")
     val ed = idx.edges(spark)
-    val seeds0 = seeds.select("node").distinct()
+    val inGraph = seeds.select("node").distinct()
       .join(idx.nodes(spark).select("node"), "node")
-    // |S| is O(1) driver model state, like |V| in pageRankIndexed.
-    val nSeeds = seeds0.count()
+    // The |S| seeds are O(1) driver model state, like |V| in
+    // pageRankIndexed: held as a local relation, no round re-derives them.
+    val seedRows = inGraph.collect()
+    val seeds0 = spark.createDataFrame(
+      java.util.Arrays.asList(seedRows: _*), inGraph.schema)
+    val nSeeds = seedRows.length.toLong
     require(nSeeds > 0, "trustRank needs at least one in-graph seed")
     val r0 = Scale / nSeeds
     val base = (15L * r0) / 100L
-    val seedBase = broadcast(seeds0.withColumn("b", lit(base)))
+    // Seeds ride in the round's aggregate as (c = 0, b = base) rows, so
+    // a seed that receives no in-flow this round still keeps its
+    // teleport base, with no join against the seed set.
+    val seedBase = seeds0.select(col("node"), lit(0L).as("c"), lit(base).as("b"))
     var rank = seeds0.select(col("node"), lit(r0).as("r"))
     for (_ <- 1 to iters) {
       rank = ed.join(roundSide(idx, rank.withColumnRenamed("node", "src")), "src")
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("sc"))
-        .select(col("dst").as("node"), expr("(85 * sc) div 100").as("dr"))
-        // FULL join: a seed that receives no in-flow this round still
-        // keeps its teleport base (it would vanish from a left join of
-        // the receiver side)
-        .join(seedBase, Seq("node"), "full")
+        .select(col("dst").as("node"), expr("r div deg").as("c"),
+          lit(null).cast("long").as("b"))
+        .unionByName(seedBase)
+        .groupBy("node").agg(sum(col("c")).as("sc"), max(col("b")).as("b"))
         .select(col("node"),
-          (coalesce(col("b"), lit(0L)) + coalesce(col("dr"), lit(0L)))
-            .as("r"))
+          (coalesce(col("b"), lit(0L)) + expr("(85 * sc) div 100")).as("r"))
     }
     rank
   }

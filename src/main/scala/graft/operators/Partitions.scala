@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model.PartitionId
 
 /** Partition enumeration, predicate synthesis, and per-partition counting.
@@ -13,8 +14,9 @@ import graft.model.PartitionId
   *  - Enumeration: the reference issues
   *    `SELECT DISTINCT partition FROM system.parts … ORDER BY partition`
   *    (partition.py:107-114). Here the partition list is computed from the
-  *    data itself with `select(keys).distinct().orderBy(keys)` — at scale
-  *    this is one shuffle over only the key columns (column-pruned scan).
+  *    data itself with one `groupBy(keys).count()` — at scale one
+  *    shuffle over only the key columns (column-pruned scan) — and the
+  *    O(partitions) result is sorted on the driver.
   *  - Predicate synthesis: the reference builds a WHERE *string* with a
   *    quoting heuristic (partition.py:60-75). Here predicates are typed
   *    `Column`s — `lit()` carries the type, so the heuristic disappears,
@@ -41,38 +43,42 @@ object Partitions {
     inner.split(",").map(_.trim).filter(_.nonEmpty).toSeq
   }
 
-  /** Typed partition predicate: keys zip values, AND-folded
-    * (reference: services/partition.py:29-75 builds the same predicate as
-    * a SQL string). The arity check is preserved as a real error
-    * (partition.py:52-57).
+  /** Typed predicate selecting exactly the rows of `parts` with one set
+    * lookup per row (reference: services/partition.py:29-75 builds one
+    * partition's predicate as a SQL string; its arity check stays a real
+    * error, partition.py:52-57): `k IN (values)`, `OR k IS NULL` when
+    * `parts` holds NULL, for one key, which can reach the parquet reader;
+    * `struct(keys) IN (tuples)`, null-safe per field, for several.
     */
-  def partitionPredicate(keys: Seq[String], part: PartitionId): Column = {
+  def partitionPredicate(keys: Seq[String], parts: Seq[PartitionId]): Column = {
     require(keys.nonEmpty, "no partition keys")
-    if (keys.size != part.values.size)
+    parts.find(_.values.size != keys.size).foreach(p =>
       throw new IllegalArgumentException(
-        s"partition key count ${keys.size} != value count ${part.values.size} " +
-          s"(keys=$keys, values=${part.values})")
-    keys.zip(part.values)
-      .map { case (k, v) => if (v == null) col(k).isNull else col(k) === lit(v) }
-      .reduce(_ && _)
+        s"partition key count ${keys.size} != value count ${p.values.size} " +
+          s"(keys=$keys, values=${p.values})"))
+    if (keys.size == 1) {
+      val (nulls, values) = parts.map(_.values.head).partition(_ == null)
+      val in = col(keys.head).isin(values: _*)
+      if (nulls.isEmpty) in else in || col(keys.head).isNull
+    } else
+      struct(keys.map(col): _*).isin(parts.map(p => struct(
+        keys.zip(p.values).map { case (k, v) => lit(v).cast("string").as(k) }: _*)): _*)
   }
 
-  /** Enumerate a table's partitions from its data, deterministically
-    * ordered (the reference's ORDER BY makes resume deterministic —
-    * partition.py:113; preserved here).
-    *
-    * Scale note: scans only the key columns (column pruning), exchanges
-    * distinct values (small), sorts on the driver only the final ~N-row
-    * list.
+  /** `orderBy`'s order of string key tuples: per key NULL first, then
+    * UTF-8 byte order, which differs from `String.compareTo` outside the
+    * Basic Multilingual Plane.
     */
-  def enumeratePartitions(df: DataFrame, keys: Seq[String]): Seq[PartitionId] = {
-    val rows = df
-      .select(keys.map(k => col(k).cast("string")): _*)
-      .distinct()
-      .orderBy(keys.map(col): _*)
-      .collect() // N partitions, not N rows of data — driver-safe by design
-    rows.map(r => PartitionId(keys.indices.map(i => r.getString(i)))).toSeq
-  }
+  private val sparkOrder: Ordering[PartitionId] = Ordering.Implicits
+    .seqOrdering(Ordering.Option(Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0)))
+    .on[PartitionId](_.values.map(v => Option(v).map(UTF8String.fromString)))
+
+  /** A table's partitions from its data, deterministically ordered (the
+    * reference's ORDER BY makes resume deterministic — partition.py:113;
+    * preserved here): the keys of [[countsInOrder]].
+    */
+  def enumeratePartitions(df: DataFrame, keys: Seq[String]): Seq[PartitionId] =
+    countsInOrder(df, keys).map(_._1)
 
   /** All partition counts in one scan (replaces the reference's 2 count
     * queries per partition — services/validator.py:24-31 invoked at
@@ -90,14 +96,9 @@ object Partitions {
   }
 
   /** Enumeration and counting in ONE scan of the key columns: every
-    * partition with its row count, in [[enumeratePartitions]]' order
-    * (Spark sorts the ~N aggregated rows, so resume order is unchanged).
+    * partition with its row count, the O(partitions) list sorted on the
+    * driver (no sampling job, no second shuffle).
     */
   def countsInOrder(df: DataFrame, keys: Seq[String]): Seq[(PartitionId, Long)] =
-    df.groupBy(keys.map(k => col(k).cast("string").as(k)): _*)
-      .count()
-      .orderBy(keys.map(col): _*)
-      .collect()
-      .map(r => PartitionId(keys.indices.map(i => r.getString(i))) -> r.getLong(keys.size))
-      .toSeq
+    countsByPartition(df, keys).toSeq.sortBy(_._1)(sparkOrder)
 }

@@ -67,23 +67,33 @@ final class Migrator(
       keyExprs: Seq[Column],
       destRoot: String,
       srcPathToDrop: Option[String] = None,
-      dropSource: Boolean = false): TableResult = {
+      dropSource: Boolean = false): TableResult =
+    underLock(table)(
+      doMigrate(table, src, keys, keyExprs, destRoot, srcPathToDrop, dropSource))
+
+  /** Run `body` holding `table`'s lock, the one exit of both lifecycles.
+    * A lock timeout is NOT a migration failure: another process owns
+    * this table, and its checkpoint entries are live. Writing Failed
+    * there would race the owner's markPartitions/markStatus (the
+    * checkpoint file is only lock-holder-serialized), so it reports
+    * Locked and leaves the checkpoint alone. Anything `body` throws is
+    * thrown while HOLDING the lock, so it is safe to stamp Failed: a
+    * failed gate ([[Migrator.GateFailed]]) reports the result it
+    * carries, any other exception its message.
+    */
+  private def underLock(table: TableRef)(body: => TableResult): TableResult = {
     val lock = new TableLock(lockDir, table.db, table.table, lockTimeoutSec)
-    // Lock-timeout is NOT a migration failure: another process owns this
-    // table, and its checkpoint entries are live. Writing Failed here
-    // would race the owner's markPartition/markStatus (the checkpoint
-    // file is only lock-holder-serialized), so report Locked and leave
-    // the checkpoint alone.
     if (!lock.acquire())
-      return TableResult(table, TableStatus.Locked, 0, 0, 0L, Nil,
+      TableResult(table, TableStatus.Locked, 0, 0, 0L, Nil,
         Some(s"timeout acquiring lock for ${table.qualified}"))
-    try {
-      doMigrate(table, src, keys, keyExprs, destRoot, srcPathToDrop, dropSource)
-    } catch {
+    else try body catch {
       case e: Exception =>
-        // Thrown while HOLDING the lock → safe to stamp Failed.
         checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
-        TableResult(table, TableStatus.Failed, 0, 0, 0L, Nil, Some(e.getMessage))
+        e match {
+          case Migrator.GateFailed(result) => result
+          case _ => TableResult(table, TableStatus.Failed, 0, 0, 0L, Nil,
+            Some(e.getMessage))
+        }
     } finally lock.release()
   }
 
@@ -179,7 +189,6 @@ final class Migrator(
     val work = checkpoint.uncompleted(table.db, table.table, allParts)
     val run = copyInWaves(table, src, withKeys, keys, staging, work,
       srcCounts, identity[Long], 0L)(Partitions.countsByPartition(_, keys))
-    val (checks, migratedRows) = (run.checks, run.rows)
     // A rerun after a crash between the publish and the Completed mark
     // finds every partition checkpointed and staging already moved to
     // destRoot: gate the published copy and skip the publish.
@@ -188,25 +197,20 @@ final class Migrator(
     val published = work.isEmpty && !fs.exists(new Path(staging)) &&
       fs.exists(new Path(destRoot))
     val audited = if (published) destRoot else staging
-    run.failure.foreach { case (part, srcCount, dstCount) =>
-      // Validation gate (A35): abort, do NOT checkpoint, source intact.
-      checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
-      return TableResult(table, TableStatus.Failed, allParts.size,
-        run.marked, migratedRows, checks,
-        Some(s"count mismatch for partition ${part.render}: " +
-          s"src=$srcCount dst=$dstCount"))
-    }
+    // Validation gate (A35): abort, do NOT checkpoint, source intact.
+    def fail(error: String): Nothing = throw Migrator.GateFailed(TableResult(
+      table, TableStatus.Failed, allParts.size, run.marked, run.rows,
+      run.checks, Some(error)))
+    for ((part, srcCount, dstCount) <- run.failure)
+      fail(s"count mismatch for partition ${part.render}: " +
+        s"src=$srcCount dst=$dstCount")
 
-    // Full-table validation gate (migration.py:510-518) — one scan per side.
+    // Full-table validation gate (migration.py:510-518): the staged copy
+    // counted through the checksum gate's reader, so no schema inference.
     val totalSrc = srcCounts.values.sum
-    val totalDst = spark.read
-      .option("basePath", audited).parquet(audited).count()
-    if (totalDst != totalSrc) {
-      checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
-      return TableResult(table, TableStatus.Failed, allParts.size,
-        checks.count(_.passed), migratedRows, checks,
-        Some(s"full-table count mismatch: src=$totalSrc dst=$totalDst"))
-    }
+    val totalDst = CopyService.readHive(spark, audited, src.schema, keys).count()
+    if (totalDst != totalSrc)
+      fail(s"full-table count mismatch: src=$totalSrc dst=$totalDst")
 
     // Optional content-checksum gate (upgrade of the count-only A35 —
     // SURVEY.md §7.4): per-partition bit_xor(xxhash64(row)) on both
@@ -221,12 +225,9 @@ final class Migrator(
           .select((keys ++ dataCols).map(col): _*),
         keys, dataCols)
       if (!graft.operators.Validate.checksumsMatch(srcSums, dstSums)) {
-        checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
         val bad = (srcSums.keySet ++ dstSums.keySet)
           .filter(p => srcSums.get(p) != dstSums.get(p)).map(_.render)
-        return TableResult(table, TableStatus.Failed, allParts.size,
-          checks.count(_.passed), migratedRows, checks,
-          Some(s"checksum mismatch for partitions: ${bad.mkString(", ")}"))
+        fail(s"checksum mismatch for partitions: ${bad.mkString(", ")}")
       }
     }
 
@@ -246,7 +247,7 @@ final class Migrator(
 
     checkpoint.markStatus(table.db, table.table, TableStatus.Completed)
     TableResult(table, TableStatus.Completed, allParts.size,
-      allParts.size, migratedRows, checks)
+      allParts.size, run.rows, run.checks)
   }
 
   /** Incremental re-sync of an already-published destination: detect the
@@ -273,96 +274,82 @@ final class Migrator(
       keys: Seq[String],
       keyExprs: Seq[Column],
       destRoot: String,
-      dropOrphans: Boolean = false): TableResult = {
-    val lock = new TableLock(lockDir, table.db, table.table, lockTimeoutSec)
-    if (!lock.acquire())
-      return TableResult(table, TableStatus.Locked, 0, 0, 0L, Nil,
-        Some(s"timeout acquiring lock for ${table.qualified}"))
-    try {
-      val withKeys = withKeyColumns(src, keys, keyExprs)
-      val dataCols = src.columns.toSeq.filterNot(keys.contains)
-      val srcState = graft.operators.Validate.checksumByPartition(
-        withKeys, keys, dataCols)
-      val destPath = new Path(destRoot)
-      val destFs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // Schema gate BEFORE any data compare: a drifted data-column set
-      // or type makes per-partition checksums meaningless (and a
-      // partial re-copy would leave a mixed-schema destination), so
-      // structural drift fails fast with the diff instead of surfacing
-      // as a confusing read/checksum error. Partition key columns are
-      // excluded — they are strings in the hive layout by design.
-      //
-      // EXCEPT benign evolution: a column ADDED at the source
-      // auto-migrates. The destination is read with the SOURCE schema,
-      // so untouched partitions surface the new column as NULL (parquet
-      // schema projection backfills missing columns — file-source reads
-      // force nullability regardless of the declared field), the
-      // checksum compare then re-copies exactly the partitions whose
-      // content differs (non-null values in the new column, or any
-      // other drift), and partitions where the new column is all-NULL
-      // keep their old files — readable as nulls forever. A
-      // non-nullable addition needs no special case: its values are
-      // non-null in every row, so every partition drifts and re-copies
-      // through the same path. Removed or type-changed columns stay
-      // fatal — their checksums would compare different value spaces.
-      if (destFs.exists(destPath)) {
-        // Nullability is normalized away: parquet round-trips don't
-        // preserve it faithfully (readers mark columns nullable), so
-        // only name/type drift is a real incompatibility here.
-        def dataSchema(fields: Seq[org.apache.spark.sql.types.StructField]) =
-          org.apache.spark.sql.types.StructType(
-            fields.filterNot(f => keys.contains(f.name))
-              .map(_.copy(nullable = true)))
-        val drift = graft.sources.CatalogOps.schemaDiff(
-          dataSchema(src.schema.fields.toSeq),
-          dataSchema(spark.read.option("basePath", destRoot)
-            .parquet(destRoot).schema.fields.toSeq))
-        val breaking = drift.filterNot(_._2 == "added")
-        if (breaking.nonEmpty) {
-          checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
-          return TableResult(table, TableStatus.Failed, 0, 0, 0L, Nil,
-            Some("schema drift vs destination (full re-migration " +
-              "required): " + breaking.map { case (c, kind, s, d) =>
-                s"$c $kind" +
-                  (if (s.nonEmpty || d.nonEmpty) s" (src=$s dst=$d)" else "")
-              }.mkString("; ")))
-        }
-      }
-      // Data columns are read with the SOURCE fields — this is also what
-      // backfills a benignly-added column as NULL on the dest side.
-      def destSums(df: DataFrame) = graft.operators.Validate.checksumByPartition(
-        df.select((keys ++ dataCols).map(col): _*), keys, dataCols)
-      val dstState: Map[PartitionId, (Long, Long)] =
-        if (!destFs.exists(destPath)) Map.empty
-        else destSums(CopyService.readHive(spark, destRoot, src.schema, keys))
-      val drifted = srcState.keys.toSeq
-        .filter(p => !dstState.get(p).contains(srcState(p)))
-        .sortBy(_.render)
-      val orphans = (dstState.keySet -- srcState.keySet).toSeq.sortBy(_.render)
-      checkpoint.initTable(table.db, table.table)
-      // Validate each re-copied partition by CONTENT, not just count: a
-      // "changed" partition with equal counts whose overwrite silently
-      // failed would pass a count-only gate while still serving stale rows.
-      val run = copyInWaves(table, src, withKeys, keys, destRoot, drifted,
-        srcState, (_: (Long, Long))._1, (0L, 0L))(destSums)
-      run.failure.foreach { case (part, srcSum, dstSum) =>
-        checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
-        return TableResult(table, TableStatus.Failed, drifted.size,
-          run.marked, run.rows, run.checks,
-          Some(s"count/checksum mismatch for partition ${part.render}: " +
-            s"src=$srcSum dst=$dstSum"))
-      }
-      CopyService.dropAbortedWrites(spark, destRoot)
-      if (dropOrphans) orphans.foreach(p =>
-        CopyService.dropPartitionDir(spark, destRoot, keys, p))
-      checkpoint.markStatus(table.db, table.table, TableStatus.Completed)
-      TableResult(table, TableStatus.Completed, drifted.size,
-        run.marked, run.rows, run.checks)
-    } catch {
-      case e: Exception =>
-        checkpoint.markStatus(table.db, table.table, TableStatus.Failed)
-        TableResult(table, TableStatus.Failed, 0, 0, 0L, Nil, Some(e.getMessage))
-    } finally lock.release()
+      dropOrphans: Boolean = false): TableResult = underLock(table) {
+    val withKeys = withKeyColumns(src, keys, keyExprs)
+    val dataCols = src.columns.toSeq.filterNot(keys.contains)
+    val srcState = graft.operators.Validate.checksumByPartition(
+      withKeys, keys, dataCols)
+    val destPath = new Path(destRoot)
+    val destFs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Schema gate BEFORE any data compare: a drifted data-column set
+    // or type makes per-partition checksums meaningless (and a
+    // partial re-copy would leave a mixed-schema destination), so
+    // structural drift fails fast with the diff instead of surfacing
+    // as a confusing read/checksum error. Partition key columns are
+    // excluded — they are strings in the hive layout by design.
+    //
+    // EXCEPT benign evolution: a column ADDED at the source
+    // auto-migrates. The destination is read with the SOURCE schema,
+    // so untouched partitions surface the new column as NULL (parquet
+    // schema projection backfills missing columns — file-source reads
+    // force nullability regardless of the declared field), the
+    // checksum compare then re-copies exactly the partitions whose
+    // content differs (non-null values in the new column, or any
+    // other drift), and partitions where the new column is all-NULL
+    // keep their old files — readable as nulls forever. A
+    // non-nullable addition needs no special case: its values are
+    // non-null in every row, so every partition drifts and re-copies
+    // through the same path. Removed or type-changed columns stay
+    // fatal — their checksums would compare different value spaces.
+    if (destFs.exists(destPath)) {
+      // Nullability is normalized away: parquet round-trips don't
+      // preserve it faithfully (readers mark columns nullable), so
+      // only name/type drift is a real incompatibility here.
+      def dataSchema(fields: Seq[org.apache.spark.sql.types.StructField]) =
+        org.apache.spark.sql.types.StructType(
+          fields.filterNot(f => keys.contains(f.name))
+            .map(_.copy(nullable = true)))
+      val drift = graft.sources.CatalogOps.schemaDiff(
+        dataSchema(src.schema.fields.toSeq),
+        dataSchema(spark.read.option("basePath", destRoot)
+          .parquet(destRoot).schema.fields.toSeq))
+      val breaking = drift.filterNot(_._2 == "added")
+      if (breaking.nonEmpty)
+        throw Migrator.GateFailed(TableResult(table, TableStatus.Failed,
+          0, 0, 0L, Nil, Some("schema drift vs destination (full re-migration " +
+            "required): " + breaking.map { case (c, kind, s, d) =>
+              s"$c $kind" +
+                (if (s.nonEmpty || d.nonEmpty) s" (src=$s dst=$d)" else "")
+            }.mkString("; "))))
+    }
+    // Data columns are read with the SOURCE fields — this is also what
+    // backfills a benignly-added column as NULL on the dest side.
+    def destSums(df: DataFrame) = graft.operators.Validate.checksumByPartition(
+      df.select((keys ++ dataCols).map(col): _*), keys, dataCols)
+    val dstState: Map[PartitionId, (Long, Long)] =
+      if (!destFs.exists(destPath)) Map.empty
+      else destSums(CopyService.readHive(spark, destRoot, src.schema, keys))
+    val drifted = srcState.keys.toSeq
+      .filter(p => !dstState.get(p).contains(srcState(p)))
+      .sortBy(_.render)
+    val orphans = (dstState.keySet -- srcState.keySet).toSeq.sortBy(_.render)
+    checkpoint.initTable(table.db, table.table)
+    // Validate each re-copied partition by CONTENT, not just count: a
+    // "changed" partition with equal counts whose overwrite silently
+    // failed would pass a count-only gate while still serving stale rows.
+    val run = copyInWaves(table, src, withKeys, keys, destRoot, drifted,
+      srcState, (_: (Long, Long))._1, (0L, 0L))(destSums)
+    for ((part, srcSum, dstSum) <- run.failure)
+      throw Migrator.GateFailed(TableResult(table, TableStatus.Failed,
+        drifted.size, run.marked, run.rows, run.checks,
+        Some(s"count/checksum mismatch for partition ${part.render}: " +
+          s"src=$srcSum dst=$dstSum")))
+    CopyService.dropAbortedWrites(spark, destRoot)
+    if (dropOrphans) orphans.foreach(p =>
+      CopyService.dropPartitionDir(spark, destRoot, keys, p))
+    checkpoint.markStatus(table.db, table.table, TableStatus.Completed)
+    TableResult(table, TableStatus.Completed, drifted.size,
+      run.marked, run.rows, run.checks)
   }
 
   /** Migrate a CATALOG table by name, resolving a VIEW indirection
@@ -389,6 +376,10 @@ final class Migrator(
 }
 
 object Migrator {
+
+  /** A failed gate: abort the lifecycle and report `result`. */
+  private final case class GateFailed(result: TableResult)
+      extends Exception(result.error.orNull)
 
   /** What a wave loop did: its checks, the rows and partitions it
     * checkpointed, and the first partition that failed its gate with its

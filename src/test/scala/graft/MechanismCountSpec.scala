@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * layer cache standing artifacts only through
   * [[graft.sources.ArtifactRegistry]], and catalog metadata is read
   * only through [[graft.sources.CatalogOps]] — with no pre-epoch
-  * adoption path left in either epoch store, and no reliable-checkpoint
-  * or early-stop mode in the iterative loops.
+  * adoption path left in either epoch store, no reliable-checkpoint
+  * or early-stop mode in the iterative loops, one set-lookup wave
+  * filter and one failure exit in the migrator.
   */
 class MechanismCountSpec extends AnyFunSuite {
 
@@ -50,6 +51,19 @@ class MechanismCountSpec extends AnyFunSuite {
         "hasAdoptionMarker", "graft.epoch.adopted").foreach { t =>
       assert(mentioning(t).isEmpty, s"$t in ${mentioning(t)}")
     }
+  }
+
+  test("no OR-fold of per-partition predicates in src/main") {
+    Seq("anyOf", "partitionPredicate(keys, _)", "reduce(_ || _)")
+      .foreach(t => assert(mentioning(t).isEmpty, s"$t in ${mentioning(t)}"))
+  }
+
+  test("Migrator stamps TableStatus.Failed at one site") {
+    val migrator = java.nio.file.Files.readString(
+      new java.io.File(root, "graft/orchestrate/Migrator.scala").toPath)
+    val stamps = "markStatus\\([^)]*TableStatus\\.Failed\\)".r
+      .findAllIn(migrator).size
+    assert(stamps == 1, s"$stamps markStatus(…, Failed) sites")
   }
 
   test("no reliable checkpoint, checkpoint cadence or early stop in src/main") {

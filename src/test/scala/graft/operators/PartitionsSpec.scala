@@ -19,7 +19,7 @@ class PartitionsSpec extends SparkFunSuite {
 
   test("partitionPredicate arity mismatch is an error") {
     assertThrows[IllegalArgumentException](
-      Partitions.partitionPredicate(Seq("dt", "channel"), PartitionId.single("x")))
+      Partitions.partitionPredicate(Seq("dt", "channel"), Seq(PartitionId.single("x"))))
   }
 
   test("enumeratePartitions is distinct, ordered, complete") {
@@ -36,7 +36,7 @@ class PartitionsSpec extends SparkFunSuite {
     val counts = Partitions.countsByPartition(withKey, Seq("part"))
     // spot-check 3 partitions: filter count == groupBy count; total adds up
     parts.take(3).foreach { p =>
-      val pred = Partitions.partitionPredicate(Seq("part"), p)
+      val pred = Partitions.partitionPredicate(Seq("part"), Seq(p))
       assert(withKey.filter(pred).count() == counts(p))
     }
     assert(counts.values.sum == lineitem.count())
@@ -61,10 +61,30 @@ class PartitionsSpec extends SparkFunSuite {
       val df = rows.toDF("k1", "k2")
       val parts = Partitions.enumeratePartitions(df, Seq("k1", "k2"))
       parts.size == rows.distinct.size && parts.forall { p =>
-        val pred = Partitions.partitionPredicate(Seq("k1", "k2"), p)
+        val pred = Partitions.partitionPredicate(Seq("k1", "k2"), Seq(p))
         df.filter(pred).count() ==
           rows.count(r => r == ((p.values.head, p.values(1))))
       }
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("property: countsInOrder sorts as orderBy does, NULL and non-BMP keys included") {
+    val s = graft.SparkTestBase.spark
+    import s.implicits._
+    // U+FF5A sorts after U+1D538 in UTF-16 (String.compareTo) but before
+    // it in UTF-8 byte order, which is Spark's
+    val value = Gen.option(Gen.oneOf("a", "B", "ｚ", "𝔸", "𝔸a", ""))
+    val prop = Prop.forAll(Gen.nonEmptyListOf(Gen.zip(value, value))) { rows =>
+      val df = rows.toDF("k1", "k2")
+      val expected = df.distinct().orderBy("k1", "k2").collect()
+        .map(r => PartitionId(Seq(r.getString(0), r.getString(1)))).toSeq
+      val got = Partitions.countsInOrder(df, Seq("k1", "k2"))
+      got.map(_._1) == expected &&
+        got.forall { case (p, n) => n == rows.count(r =>
+          r == ((Option(p.values.head), Option(p.values(1))))) }
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(15), prop)

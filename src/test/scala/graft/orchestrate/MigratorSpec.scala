@@ -639,6 +639,8 @@ class MigratorSpec extends SparkFunSuite {
     val (twelve, twentyFour) = (jobsToMigrate(12), jobsToMigrate(24))
     assert(twelve == twentyFour,
       s"jobs must not grow with partitions: 12 → $twelve, 24 → $twentyFour")
+    // enumerate+count 2, wave write 1, read-back 2, full-table count 2
+    assert(twelve <= 7, s"one-wave migrateTable ran $twelve jobs, more than 7")
   }
 
   test("dq drift gate: stable rerun exits 0, injected drifted column exits 1") {
