@@ -139,7 +139,6 @@ final case class MigrationConfig(
     table: String = "",
     sourcePath: String = "",
     destPath: String = "",
-    partitionKeys: Seq[String] = Nil,
     insertIntervalSec: Double = 0.0,
     resume: Boolean = true,
     checkpointPath: String = "migration_progress.json",

@@ -23,6 +23,25 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** MinHash-LSH band geometry: `MinhashBands` bands of
+    * `MinhashRowsPerBand` minima, k = 12 hash functions.
+    */
+  val MinhashBands = 6
+  val MinhashRowsPerBand = 2
+
+  /** Bucket count the standing band and shingle indexes are written
+    * with; append and compaction read it back from the catalog.
+    */
+  val IndexBuckets = 8
+
+  /** The bucket count a standing index's live epoch table was written
+    * with — catalog metadata, no Spark job.
+    */
+  private def bucketsOf(spark: org.apache.spark.sql.SparkSession,
+      live: graft.model.TableRef): Int =
+    graft.sources.CatalogOps.storageOf(spark, live).buckets.getOrElse(
+      throw new IllegalStateException(s"${live.qualified} is not bucketed"))
+
   /** Exploded (id, shingle) pairs — the inverted-index relation.
     *
     * Tokenization is materialized as its own projection first: inlining
@@ -70,14 +89,14 @@ object Dedup {
       .filter(col("jac") >= threshold)
   }
 
-  /** MinHash band keys: k = bands*rowsPerBand hash functions derived
-    * from ONE md5 per shingle (Kirsch–Mitzenmacher double hashing),
-    * signature = per-i min, band key = concat of the band's minima.
+  /** MinHash band keys: k = [[MinhashBands]]·[[MinhashRowsPerBand]]
+    * hash functions derived from ONE md5 per shingle (Kirsch–Mitzenmacher
+    * double hashing), signature = per-i min, band key = concat of the
+    * band's minima.
     * Returns (id, band, key).
     */
-  def minhashBands(df: DataFrame, idCol: String, textCol: String,
-      bands: Int = 6, rowsPerBand: Int = 2): DataFrame =
-    bandsFromRelation(shingleRelation(df, idCol, textCol), bands, rowsPerBand)
+  def minhashBands(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    bandsFromRelation(shingleRelation(df, idCol, textCol))
 
   /** Band keys from a prebuilt (id, shingle) relation.
     *
@@ -105,9 +124,8 @@ object Dedup {
     * orders of magnitude more than the recomputed hashes. Band keys then
     * explode from an inline array (no further shuffle).
     */
-  def bandsFromRelation(rel: DataFrame,
-      bands: Int, rowsPerBand: Int): DataFrame = {
-    val k = bands * rowsPerBand
+  def bandsFromRelation(rel: DataFrame): DataFrame = {
+    val k = MinhashBands * MinhashRowsPerBand
     // Fused md5 pair (graft.plans.Md5HashPair): one digest yields both
     // 32-bit halves with the exact conv/substring-chain values the
     // oracle SQL spells — no hex string, no conv round-trip.
@@ -119,8 +137,9 @@ object Dedup {
     val minCols = (0 until k).map(i =>
       min(col("h1") + lit(i.toLong) * col("h2")).as(s"m$i"))
     val sigs = hashed.groupBy(col("id")).agg(minCols.head, minCols.tail: _*)
-    val bandStructs = (0 until bands).map { b =>
-      val keyCols = (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}"))
+    val bandStructs = (0 until MinhashBands).map { b =>
+      val keyCols = (0 until MinhashRowsPerBand)
+        .map(r => col(s"m${b * MinhashRowsPerBand + r}"))
       struct(lit(b).as("band"), concat_ws("|", keyCols: _*).as("key"))
     }
     sigs.select(col("id"), explode(array(bandStructs: _*)).as("bk"))
@@ -174,7 +193,7 @@ object Dedup {
     * rather than stage-count-bound.
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, bands: Int = 6, rowsPerBand: Int = 2): DataFrame = {
+      threshold: Double): DataFrame = {
     // Deliberately NO persist and NO eager materialization: the shingle
     // relation is map-only lineage off the corpus scan, so recomputing it
     // per consumer is a few extra scans of source parquet — cheaper at any
@@ -185,7 +204,7 @@ object Dedup {
     // its shuffle via ReuseExchange (both sides canonicalize identically),
     // so signatures are still computed once.
     val rel = shingleRelation(df, idCol, textCol)
-    val cand = lshCandidates(bandsFromRelation(rel, bands, rowsPerBand))
+    val cand = lshCandidates(bandsFromRelation(rel))
     jaccardForCandidates(rel, cand, threshold)
   }
 
@@ -201,12 +220,11 @@ object Dedup {
     * count. Output: (id_a = batch doc, id_b = corpus doc, jac).
     */
   def minhashNearDupsAgainst(batch: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, threshold: Double,
-      bands: Int = 6, rowsPerBand: Int = 2): DataFrame = {
+      idCol: String, textCol: String, threshold: Double): DataFrame = {
     val relB = shingleRelation(batch, idCol, textCol)
     val relC = shingleRelation(corpus, idCol, textCol)
-    val cand = bandsFromRelation(relB, bands, rowsPerBand).as("x")
-      .join(bandsFromRelation(relC, bands, rowsPerBand).as("y"),
+    val cand = bandsFromRelation(relB).as("x")
+      .join(bandsFromRelation(relC).as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
@@ -222,24 +240,23 @@ object Dedup {
     * Append each ingested batch's bands to keep the index current.
     */
   def writeBandIndex(df: DataFrame, idCol: String, textCol: String,
-      table: graft.model.TableRef, bands: Int = 6, rowsPerBand: Int = 2,
-      buckets: Int = 8): Unit =
+      table: graft.model.TableRef): Unit =
     graft.sources.CatalogOps.publishEpoch(df.sparkSession, table) { eRef =>
       graft.sources.CatalogOps.writeBucketed(
-        minhashBands(df, idCol, textCol, bands, rowsPerBand),
-        eRef, bucketCols = Seq("band", "key"), numBuckets = buckets,
+        minhashBands(df, idCol, textCol),
+        eRef, bucketCols = Seq("band", "key"), numBuckets = IndexBuckets,
         sortCols = Seq("band", "key"))
     }
 
   /** Grow a [[writeBandIndex]] index by an ingested batch: append the
     * batch's OWN band rows (the batch-sized signature pass only — the
-    * standing corpus is never re-signed) with the same bucket spec, so
-    * the index stays bucket-joinable over old and new rows alike. Call
-    * after the batch's near-dup check admits it to the corpus.
+    * standing corpus is never re-signed) with the bucket spec read off
+    * the live epoch table, so the index stays bucket-joinable over old
+    * and new rows alike. Call after the batch's near-dup check admits
+    * it to the corpus.
     */
   def appendToBandIndex(batch: DataFrame, idCol: String, textCol: String,
-      table: graft.model.TableRef, bands: Int = 6, rowsPerBand: Int = 2,
-      buckets: Int = 8): Unit =
+      table: graft.model.TableRef): Unit =
     // single-writer lock across resolve+append: serializes concurrent
     // appenders (two uncoordinated saveAsTable appends may interleave)
     // AND excludes a compaction from reading the epoch mid-append
@@ -250,10 +267,11 @@ object Dedup {
       // valid corpus states); resolving the epoch also fails fast when
       // the index was never built (appendBucketed would otherwise CREATE
       // a batch-sized table under the epoch name)
+      val live = graft.sources.CatalogOps.liveEpochTable(batch.sparkSession, table)
       graft.sources.CatalogOps.appendBucketed(
-        minhashBands(batch, idCol, textCol, bands, rowsPerBand),
-        graft.sources.CatalogOps.liveEpochTable(batch.sparkSession, table),
-        bucketCols = Seq("band", "key"), numBuckets = buckets,
+        minhashBands(batch, idCol, textCol), live,
+        bucketCols = Seq("band", "key"),
+        numBuckets = bucketsOf(batch.sparkSession, live),
         sortCols = Seq("band", "key"))
     }
 
@@ -278,12 +296,12 @@ object Dedup {
     * cycles in SoakSpec.
     */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
-      table: graft.model.TableRef, buckets: Int = 8,
-      retain: Int = 1): Unit =
-    compactBucketedIndex(spark, table, Seq("band", "key"), buckets, retain)
+      table: graft.model.TableRef, retain: Int = 1): Unit =
+    compactBucketedIndex(spark, table, Seq("band", "key"), retain)
 
   /** The [[compactBandIndex]] mechanics for ANY bucketed standing index
-    * (band index, shingle index): one file per bucket, bucket spec —
+    * (band index, shingle index): one file per bucket, bucket spec (the
+    * count read off the live epoch table's catalog entry) —
     * and therefore the exchange-free join property — preserved,
     * epoch-view publish (atomic, concurrent-reader-safe). `retain`
     * sizes the grace window: the number of superseded epochs kept for
@@ -293,7 +311,7 @@ object Dedup {
     */
   def compactBucketedIndex(spark: org.apache.spark.sql.SparkSession,
       table: graft.model.TableRef, bucketCols: Seq[String],
-      buckets: Int, retain: Int = 1): Unit =
+      retain: Int = 1): Unit =
       graft.sources.IndexLock.withWriterLock(spark, table.qualified) {
     // writer lock spans resolve+rewrite+publish: an append landing
     // inside the live epoch AFTER the compaction's read would vanish
@@ -301,8 +319,9 @@ object Dedup {
     // atomic against other writers (readers stay lock-free on epochs).
     // read the CURRENT epoch's rows, not the view: the view would
     // re-resolve during the write and must keep serving readers anyway
-    val live = spark.table(
-      graft.sources.CatalogOps.liveEpochTable(spark, table).qualified)
+    val liveRef = graft.sources.CatalogOps.liveEpochTable(spark, table)
+    val live = spark.table(liveRef.qualified)
+    val buckets = bucketsOf(spark, liveRef)
     graft.sources.CatalogOps.publishEpoch(spark, table, retain) { eRef =>
       // Repartition on the COMPUTED bucket id (pmod(murmur3, n) — the
       // bucket formula itself), not on the raw columns: an exchange on
@@ -329,14 +348,13 @@ object Dedup {
     */
   def minhashNearDupsAgainstIndex(batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      indexTable: graft.model.TableRef,
-      bands: Int = 6, rowsPerBand: Int = 2): DataFrame = {
+      indexTable: graft.model.TableRef): DataFrame = {
     val spark = batch.sparkSession
     // the index name is an epoch VIEW: analysis resolves it to an
     // immutable epoch table, so a concurrent compaction cannot tear
     // this probe (it publishes a NEW epoch and re-points the view)
     val relB = shingleRelation(batch, idCol, textCol)
-    val cand = bandsFromRelation(relB, bands, rowsPerBand).as("x")
+    val cand = bandsFromRelation(relB).as("x")
       .join(spark.table(indexTable.qualified).as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
@@ -356,13 +374,13 @@ object Dedup {
     * [[compactBucketedIndex]] with `Seq("shingle")`.
     */
   def writeShingleIndex(train: DataFrame, idCol: String, textCol: String,
-      table: graft.model.TableRef, buckets: Int = 8): Unit =
+      table: graft.model.TableRef): Unit =
     graft.sources.CatalogOps.publishEpoch(train.sparkSession, table) {
       eRef =>
         graft.sources.CatalogOps.writeBucketed(
           shingleRelation(train, idCol, textCol)
             .select("shingle").distinct(),
-          eRef, bucketCols = Seq("shingle"), numBuckets = buckets,
+          eRef, bucketCols = Seq("shingle"), numBuckets = IndexBuckets,
           sortCols = Seq("shingle"))
     }
 
@@ -374,16 +392,16 @@ object Dedup {
     * standing index.
     */
   def appendToShingleIndex(batch: DataFrame, idCol: String,
-      textCol: String, table: graft.model.TableRef,
-      buckets: Int = 8): Unit =
+      textCol: String, table: graft.model.TableRef): Unit =
     graft.sources.IndexLock.withWriterLock(
         batch.sparkSession, table.qualified) {
       // batches land INSIDE the live epoch table (same contract as the
       // band index; resolution fails fast if the index was never built)
+      val live = graft.sources.CatalogOps.liveEpochTable(batch.sparkSession, table)
       graft.sources.CatalogOps.appendBucketed(
         shingleRelation(batch, idCol, textCol).select("shingle").distinct(),
-        graft.sources.CatalogOps.liveEpochTable(batch.sparkSession, table),
-        bucketCols = Seq("shingle"), numBuckets = buckets,
+        live, bucketCols = Seq("shingle"),
+        numBuckets = bucketsOf(batch.sparkSession, live),
         sortCols = Seq("shingle"))
     }
 
@@ -676,24 +694,20 @@ object Dedup {
     * cosine the way [[Similarity.nearDupPairs]] does, and vectors stay
     * OUT of the pair join until scoring (norms precomputed per row).
     *
-    * Output: one row per vector — (vec_id, cell, witness, keep),
+    * `centroids` is trained model state held by the caller (the
+    * standing-model convention): the [[Similarity.trainCentroidsLiteral]]
+    * output for this corpus at `nlist` cells, or keep/prune decisions
+    * drift from the oracle replay ([[Similarity.checkedCentroids]]
+    * rejects the detectable mismatches).
+    *
+    * Output: one row per vector — (vid, cell, witness, keep),
     * `witness` null ⇔ keep.
     */
-  def semanticDedup(emb: DataFrame, tau: Double, nlist: Int = 16,
-      iters: Int = 2, idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      centroids: Option[DataFrame] = None): DataFrame = {
+  def semanticDedup(emb: DataFrame, tau: Double, centroids: DataFrame,
+      nlist: Int = 16): DataFrame = {
     import graft.plans.FloatVecOps.{floatDot, floatNorm2}
-    // `centroids`: pre-trained (nlist, iters) model state from the
-    // caller's per-JVM registry (the standing-model convention) — MUST
-    // be the literal [[Similarity.trainCentroidsLiteral]] output for
-    // the same (corpus, nlist, iters) or keep/prune decisions drift
-    // from the oracle replay (checkedCentroids rejects the detectable
-    // mismatches). Re-training here per invocation was the operator's
-    // dominant cost on warm reruns.
-    val cents = Similarity.checkedCentroids(centroids, emb, nlist, iters,
-      idCol, vecCol)
-    val assigned = Similarity.assignCells(emb, cents, idCol, vecCol)
+    val cents = Similarity.checkedCentroids(centroids, nlist)
+    val assigned = Similarity.assignCells(emb, cents)
       .select(col("vid"), col("cell"), col("cvec"),
         sqrt(floatNorm2(col("cvec"))).as("nrm"))
     val a = assigned.select(col("cell"), col("vid").as("id_a"),
@@ -715,7 +729,8 @@ object Dedup {
         col("witness").isNull.as("keep"))
   }
 
-  /** Cell count for [[semanticDedupAuto]]: `⌈√(n·r/2)⌉` clamped to
+  /** Cell count for [[semanticDedup]] at corpus size `n`
+    * (`d_semantic_auto`): `⌈√(n·r/2)⌉` clamped to
     * `[minNlist, maxNlist]`, with `r` = the cost of verifying one
     * in-cell pair relative to one assignment cosine.
     *
@@ -742,20 +757,6 @@ object Dedup {
       math.ceil(math.sqrt(n.toDouble * verifyCostRatio / 2.0)).toInt))
   }
 
-  /** [[semanticDedup]] with the cell count CHOSEN FOR THE CORPUS
-    * ([[chooseNlist]]) instead of the fixed teaching default. EAGER at
-    * plan-build time twice over: the corpus is counted here (the
-    * cell-count input), and Lloyd training then runs inside
-    * [[Similarity.trainCentroidsLiteral]] — the same
-    * train-then-search contract, so don't build these speculatively.
-    * At the oracle SF the count resolves `nlist` to the same 16 cells
-    * as [[semanticDedup]]'s default, which is what keeps this variant
-    * hash-checkable against the identical DuckDB replay.
-    */
-  def semanticDedupAuto(emb: DataFrame, tau: Double, iters: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    semanticDedup(emb, tau, chooseNlist(emb.count()), iters, idCol, vecCol)
-
   /** INCREMENTAL [[semanticDedup]]: an arriving batch checked against a
     * standing corpus — the semantic twin of [[minhashNearDupsAgainst]].
     * Cells come from the CORPUS's seeded centroids (the
@@ -769,15 +770,14 @@ object Dedup {
     * Output: one row per BATCH vector — (vid, cell, witness, keep).
     */
   def semanticDedupAgainst(corpus: DataFrame, batch: DataFrame,
-      tau: Double, nlist: Int = 16, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      tau: Double, nlist: Int = 16): DataFrame = {
     // Shared seed rule (fails fast if the corpus ids don't cover
     // [0, nlist) — an id-shifted slice would otherwise silently yield
     // an empty centroid set and an empty result).
-    val cents = Similarity.seedCentroidsLiteral(corpus, nlist, idCol, vecCol)
+    val cents = Similarity.seedCentroidsLiteral(corpus, nlist)
     semanticWitness(
-      Similarity.assignCells(corpus, cents, idCol, vecCol),
-      Similarity.assignCells(batch, cents, idCol, vecCol), tau)
+      Similarity.assignCells(corpus, cents),
+      Similarity.assignCells(batch, cents), tau)
   }
 
   /** [[semanticDedupAgainst]] over a PERSISTED [[Similarity
@@ -790,10 +790,9 @@ object Dedup {
     * reading only the touched inverted lists.
     */
   def semanticDedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, tau: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      path: String, batch: DataFrame, tau: Double): DataFrame = {
     val cents = spark.read.parquet(s"$path/centroids")
-    val bAss = Similarity.assignCells(batch, cents, idCol, vecCol)
+    val bAss = Similarity.assignCells(batch, cents)
     val cells = bAss.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
     val cAss = spark.read.parquet(

@@ -6,7 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType, FloatType, IntegerType,
   StructField, StructType}
 
-/** Similarity search over embedding columns (`Array[Float]`).
+/** Similarity search over embedding columns (`Array[Float]`). Every
+  * vector relation an operator takes or stores has the
+  * `embeddings(vec_id, embedding)` schema, and the fixed formats (PQ
+  * geometry, signature width, LSH probe dims, plane seed, RRF constant)
+  * are the named constants below.
   *
   * Two paths, per the scale brief:
   *  - [[bruteForceTopK]] — exact cosine top-k. The baseline; O(q·n)
@@ -29,6 +33,23 @@ object Similarity {
   // accumulator type is exact for |values| < 10^25.
   private val TermType = DecimalType(25, 12)
   private val AccType = DecimalType(37, 12)
+
+  /** Decimal places of every hash-compared cosine and mean. */
+  val Decimals = 6
+
+  /** Width of the `embeddings(vec_id, embedding)` vectors, and so of
+    * the full sign signature: one bit per dimension.
+    */
+  val SigBits = 64
+
+  /** Product-quantization geometry: `PqM` subspaces of `PqD` dims each
+    * (PqM·PqD = [[SigBits]]). Stored codebooks and codes carry it.
+    */
+  val PqM = 8
+  val PqD = 8
+
+  /** Reciprocal-rank-fusion constant c of [[rrfFuse]]. */
+  val RrfC = 60
 
   /** Exact-decimal dot product of two float-array columns: terms are
     * order-independent decimals, so parallel/sequential accumulation
@@ -59,16 +80,15 @@ object Similarity {
       (acc + (v.cast("double") * v.cast("double")).cast(TermType)).cast(AccType))
 
   /** Cosine similarity, rounded for stable cross-engine comparison. */
-  def cosineExact(a: Column, b: Column, scale: Int = 6): Column =
-    round(dotExact(a, b) / (sqrt(norm2Exact(a)) * sqrt(norm2Exact(b))), scale)
+  def cosineExact(a: Column, b: Column): Column =
+    round(dotExact(a, b) / (sqrt(norm2Exact(a)) * sqrt(norm2Exact(b))), Decimals)
 
   /** Exact top-k neighbors for each query vector.
     * `queries` is small (broadcast); `corpus` scans once.
     */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"))
-    val c = corpus.select(col(idCol).as("vid"), col(vecCol).as("cvec"))
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val c = corpus.select(col("vec_id").as("vid"), col("embedding").as("cvec"))
     val scored = c.join(broadcast(q), col("qid") =!= col("vid"))
       .select(col("qid"), col("vid"),
         cosineExact(col("qvec"), col("cvec")).as("cos"))
@@ -81,7 +101,8 @@ object Similarity {
   /** Reciprocal-rank fusion (Cormack et al. 2009) of two per-query
     * rankings — the standard way to combine a lexical and a vector
     * retriever into one hybrid result without score calibration:
-    * rrf(d) = Σ_r 1/(c + rank_r(d)) over the rankings that contain d.
+    * rrf(d) = Σ_r 1/(c + rank_r(d)) over the rankings that contain d,
+    * c = [[RrfC]].
     * Inputs are slim (qid, id, rank) top-k lists, so the full-outer
     * merge and re-rank touch at most 2k rows per query regardless of
     * corpus size — the fusion stage is free at 100 TB; all cost lives
@@ -89,13 +110,13 @@ object Similarity {
     * is two IEEE double terms added in fixed (a, b) order, so both
     * engines agree bit-for-bit. Ties break by id.
     */
-  def rrfFuse(a: DataFrame, b: DataFrame, k: Int, c: Int = 60): DataFrame = {
+  def rrfFuse(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
     val fused = a.select(col("qid"), col("id"), col("rank").as("rank_a"))
       .join(b.select(col("qid"), col("id"), col("rank").as("rank_b")),
         Seq("qid", "id"), "full_outer")
       .select(col("qid"), col("id"),
-        (coalesce(lit(1.0) / (lit(c.toDouble) + col("rank_a")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(c.toDouble) + col("rank_b")), lit(0.0)))
+        (coalesce(lit(1.0) / (lit(RrfC.toDouble) + col("rank_a")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(RrfC.toDouble) + col("rank_b")), lit(0.0)))
           .as("rrf"))
     val w = Window.partitionBy(col("qid")).orderBy(col("rrf").desc, col("id"))
     fused.withColumn("rank", row_number().over(w))
@@ -135,14 +156,13 @@ object Similarity {
     * DuckDB's rint there. Ties break by id.
     */
   def mmrRerank(corpus: DataFrame, queries: DataFrame, n: Int, k: Int,
-      lambdaTenths: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      lambdaTenths: Int): DataFrame = {
     require(lambdaTenths >= 0 && lambdaTenths <= 10,
       s"lambdaTenths must be in [0, 10], got $lambdaTenths")
     val spark = corpus.sparkSession
     import spark.implicits._
     // ONE retrieval pass; q·n rows of model state
-    val cand = bruteForceTopK(corpus, queries, n, idCol, vecCol)
+    val cand = bruteForceTopK(corpus, queries, n)
       .select(col("qid"), col("vid"), col("cos")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val candDf = cand.toDF("qid", "vid", "cos")
@@ -150,8 +170,8 @@ object Similarity {
     // the scan), never a second retrieval
     val ids = cand.map(_._2).distinct
     val e = corpus
-      .filter(col(idCol).isin(ids: _*))
-      .select(col(idCol).as("eid"), col(vecCol).as("evec"))
+      .filter(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("eid"), col("embedding").as("evec"))
     val va = candDf.select(col("qid"), col("vid").as("va"))
       .join(broadcast(e), col("va") === col("eid"))
       .select(col("qid"), col("va"), col("evec").as("veca"))
@@ -207,20 +227,20 @@ object Similarity {
     concat(dims.map(d =>
       when(element_at(vec, d) > 0f, "1").otherwise("0")): _*)
 
-  /** Default probe dimensions: one per 8-dim stripe of a 64-dim vector. */
-  val DefaultLshDims: Seq[Int] = Seq(1, 9, 17, 25, 33, 41, 49, 57)
+  /** Sign-LSH probe dimensions of [[signLshTopK]]: one per 8-dim
+    * stripe of a 64-dim vector.
+    */
+  val LshDims: Seq[Int] = Seq(1, 9, 17, 25, 33, 41, 49, 57)
 
   /** Approximate top-k: exact rerank restricted to the query's bucket.
     * Trades recall for a ~2^bits scan cut; same output shape as
     * [[bruteForceTopK]].
     */
-  def signLshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      dims: Seq[Int] = DefaultLshDims,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-      signBucket(col(vecCol), dims).as("qbucket"))
-    val c = corpus.select(col(idCol).as("vid"), col(vecCol).as("cvec"),
-      signBucket(col(vecCol), dims).as("cbucket"))
+  def signLshTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qvec"),
+      signBucket(col("embedding"), LshDims).as("qbucket"))
+    val c = corpus.select(col("vec_id").as("vid"), col("embedding").as("cvec"),
+      signBucket(col("embedding"), LshDims).as("cbucket"))
     val scored = c.join(broadcast(q),
         col("qbucket") === col("cbucket") && col("qid") =!= col("vid"))
       .select(col("qid"), col("vid"),
@@ -260,62 +280,50 @@ object Similarity {
     * is the persistable "index" — amortize it across query batches.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 16, nProbe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfSearch(corpus, queries, k, nProbe,
-      seedCentroids(corpus, nlist, idCol, vecCol), idCol, vecCol)
+      nlist: Int = 16, nProbe: Int = 4): DataFrame =
+    ivfSearch(corpus, queries, k, nProbe, seedCentroids(corpus, nlist))
 
-  /** [[ivfTopK]] with TRAINED centroids: `iters` rounds of deterministic
-    * Lloyd k-means ([[trainCentroids]]) replace the lowest-id seeds, so
-    * cells approximate the corpus's actual cluster structure and
+  /** [[ivfTopK]] with TRAINED centroids: rounds of deterministic Lloyd
+    * k-means ([[trainCentroids]]) replace the lowest-id seeds, so cells
+    * approximate the corpus's actual cluster structure and
     * recall-per-probe improves (the caveat the untrained index
     * documents). Identical search shape; only the index quality changes.
+    *
+    * `centroids` is trained model state — the [[trainCentroidsLiteral]]
+    * output for this corpus at `nlist` cells, held by the caller (the
+    * FAISS lifecycle trains once and searches many); anything else
+    * drifts the cells from the oracle replay, and [[checkedCentroids]]
+    * rejects the detectable mismatches.
     */
   def ivfTopKTrained(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 16, nProbe: Int = 4, iters: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      centroids: Option[DataFrame] = None): DataFrame =
-    // `centroids`: pre-trained (nlist, iters) model state from the
-    // caller's per-JVM registry (the semanticDedup convention) — MUST
-    // be the literal [[trainCentroidsLiteral]] output for the same
-    // (corpus, nlist, iters) or the cell structure drifts from the
-    // oracle replay ([[checkedCentroids]] rejects the detectable
-    // mismatches). Without it every invocation re-runs the Lloyd
-    // chain — the FAISS lifecycle trains once and searches many.
-    ivfSearch(corpus, queries, k, nProbe,
-      checkedCentroids(centroids, corpus, nlist, iters, idCol, vecCol),
-      idCol, vecCol)
+      centroids: DataFrame, nlist: Int = 16, nProbe: Int = 4): DataFrame =
+    ivfSearch(corpus, queries, k, nProbe, checkedCentroids(centroids, nlist))
 
   /** Caller-supplied trained centroids, checked before they drive a
-    * search — or, when absent, trained here via [[trainCentroidsLiteral]].
-    * Model state handed to an operator is validated, not trusted: the
-    * relation must have the [[CentroidSchema]] and be a collected local
-    * relation of 1 to `nlist` rows (training keeps at most `nlist`
-    * cells, fewer when the corpus has fewer seeds or a Lloyd cell
-    * empties) whose cell ids lie in [0, `nlist`). All checks read the
-    * plan, so no Spark job runs.
+    * search. Model state handed to an operator is validated, not
+    * trusted: the relation must have the [[CentroidSchema]] and be a
+    * collected local relation of 1 to `nlist` rows (training keeps at
+    * most `nlist` cells, fewer when the corpus has fewer seeds or a
+    * Lloyd cell empties) whose cell ids lie in [0, `nlist`). All checks
+    * read the plan, so no Spark job runs.
     */
-  private[graft] def checkedCentroids(centroids: Option[DataFrame],
-      corpus: DataFrame, nlist: Int, iters: Int, idCol: String,
-      vecCol: String): DataFrame = centroids match {
-    case None => trainCentroidsLiteral(corpus, nlist, iters, idCol, vecCol)
-    case Some(c) =>
-      require(c.schema.map(f => f.name -> f.dataType) ==
-          CentroidSchema.map(f => f.name -> f.dataType),
-        s"centroids: schema ${c.schema.simpleString} is not the trained " +
-          s"centroid schema ${CentroidSchema.simpleString}")
-      val rows = c.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          l.data
-        case p => throw new IllegalArgumentException("centroids: expected " +
-          s"the collected local relation of trainCentroidsLiteral, got ${p.nodeName}")
-      }
-      require(rows.nonEmpty && rows.length <= nlist,
-        s"centroids: ${rows.length} rows for nlist = $nlist")
-      require(rows.forall(r => !r.isNullAt(0) &&
-          r.getInt(0) >= 0 && r.getInt(0) < nlist),
-        s"centroids: a cid outside [0, $nlist)")
-      c
+  private[graft] def checkedCentroids(c: DataFrame, nlist: Int): DataFrame = {
+    require(c.schema.map(f => f.name -> f.dataType) ==
+        CentroidSchema.map(f => f.name -> f.dataType),
+      s"centroids: schema ${c.schema.simpleString} is not the trained " +
+        s"centroid schema ${CentroidSchema.simpleString}")
+    val rows = c.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data
+      case p => throw new IllegalArgumentException("centroids: expected " +
+        s"the collected local relation of trainCentroidsLiteral, got ${p.nodeName}")
+    }
+    require(rows.nonEmpty && rows.length <= nlist,
+      s"centroids: ${rows.length} rows for nlist = $nlist")
+    require(rows.forall(r => !r.isNullAt(0) &&
+        r.getInt(0) >= 0 && r.getInt(0) < nlist),
+      s"centroids: a cid outside [0, $nlist)")
+    c
   }
 
   /** [[trainCentroids]] COLLECTED to a literal relation — nlist·dims
@@ -330,18 +338,18 @@ object Similarity {
     * bit-identical (floats round-trip exactly through collect), so
     * results and oracle hashes are unchanged.
     */
-  def trainCentroidsLiteral(corpus: DataFrame, nlist: Int, iters: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def trainCentroidsLiteral(corpus: DataFrame, nlist: Int,
+      iters: Int): DataFrame = {
     // EAGER by contract: Lloyd training runs HERE, at plan-build time,
     // not when the returned relation is first executed — callers build
     // search plans against model state that already exists (the FAISS
     // train-then-search lifecycle). Building a plan you never execute
     // still pays for training; don't construct these speculatively.
-    val trained = trainCentroids(corpus, nlist, iters, idCol, vecCol)
+    val trained = trainCentroids(corpus, nlist, iters)
     val rows = trained.collect()
     require(rows.nonEmpty,
       s"trainCentroidsLiteral: training produced no centroids — the " +
-        s"corpus has no $idCol in [0, $nlist); the lowest-id seed rule " +
+        s"corpus has no vec_id in [0, $nlist); the lowest-id seed rule " +
         "needs ids starting at 0 (re-key, or seed explicitly)")
     corpus.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), trained.schema)
@@ -350,10 +358,9 @@ object Similarity {
   /** Training-free deterministic centroids: the `nlist` lowest-id
     * vectors (see [[ivfTopK]]'s scaladoc for the rationale).
     */
-  private[graft] def seedCentroids(corpus: DataFrame, nlist: Int,
-      idCol: String, vecCol: String): DataFrame =
-    corpus.filter(col(idCol) < nlist)
-      .select(col(idCol).cast("int").as("cid"), col(vecCol).as("centvec"))
+  private[graft] def seedCentroids(corpus: DataFrame, nlist: Int): DataFrame =
+    corpus.filter(col("vec_id") < nlist)
+      .select(col("vec_id").cast("int").as("cid"), col("embedding").as("centvec"))
 
   /** [[seedCentroids]] COLLECTED (nlist rows of model state) and
     * VALIDATED: the lowest-id seed rule silently yields a short or
@@ -363,12 +370,12 @@ object Similarity {
     * error. Collecting lets us fail fast at plan-build time with the
     * id-contract spelled out. EAGER, like [[trainCentroidsLiteral]].
     */
-  private[graft] def seedCentroidsLiteral(corpus: DataFrame, nlist: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val seeds = seedCentroids(corpus, nlist, idCol, vecCol)
+  private[graft] def seedCentroidsLiteral(corpus: DataFrame,
+      nlist: Int): DataFrame = {
+    val seeds = seedCentroids(corpus, nlist)
     val rows = seeds.collect()
     require(rows.nonEmpty,
-      s"seedCentroids: no $idCol in [0, $nlist) — the lowest-id seed " +
+      s"seedCentroids: no vec_id in [0, $nlist) — the lowest-id seed " +
         "rule requires ids starting at 0; re-key the corpus or pass " +
         "explicit centroids")
     if (rows.length < nlist) {
@@ -377,7 +384,7 @@ object Similarity {
       // contract is broken and every downstream cell would silently be
       // fat or missing. The existence probe is a pushed-filter scan
       // that stops at the first matching row — never a full pass.
-      require(corpus.filter(col(idCol) >= nlist).isEmpty,
+      require(corpus.filter(col("vec_id") >= nlist).isEmpty,
         s"seedCentroids: only ${rows.length} of $nlist seed ids present " +
           s"but ids ≥ $nlist exist — the id space has gaps below $nlist; " +
           "re-key the corpus or pass explicit centroids")
@@ -408,12 +415,11 @@ object Similarity {
     * Output: [[CentroidSchema]] — feed to the probe/rerank via
     * [[ivfTopKTrained]].
     */
-  def trainCentroids(corpus: DataFrame, nlist: Int, iters: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def trainCentroids(corpus: DataFrame, nlist: Int, iters: Int): DataFrame = {
     import graft.plans.FloatVecOps.{floatDot, floatNorm2}
-    var cents = seedCentroids(corpus, nlist, idCol, vecCol)
-    val base = corpus.select(col(idCol).as("vid"), col(vecCol).as("cvec"),
-      sqrt(floatNorm2(col(vecCol))).as("vnrm"))
+    var cents = seedCentroids(corpus, nlist)
+    val base = corpus.select(col("vec_id").as("vid"), col("embedding").as("cvec"),
+      sqrt(floatNorm2(col("embedding"))).as("vnrm"))
     (0 until iters).foreach { _ =>
       val centsN = cents.select(col("cid"), col("centvec"),
         sqrt(floatNorm2(col("centvec"))).as("cnrm"))
@@ -451,14 +457,13 @@ object Similarity {
     * rounded codegen-float cosine, ties toward the smaller cell id —
     * the shared build step of the inline and persisted IVF paths.
     */
-  def assignCells(corpus: DataFrame, cents: DataFrame,
-      idCol: String, vecCol: String): DataFrame = {
+  def assignCells(corpus: DataFrame, cents: DataFrame): DataFrame = {
     import graft.plans.FloatVecOps.{floatDot, floatNorm2}
     val centsN = cents.select(col("cid"), col("centvec"),
       sqrt(floatNorm2(col("centvec"))).as("cnrm"))
     corpus
-      .select(col(idCol).as("vid"), col(vecCol).as("cvec"),
-        sqrt(floatNorm2(col(vecCol))).as("vnrm"))
+      .select(col("vec_id").as("vid"), col("embedding").as("cvec"),
+        sqrt(floatNorm2(col("embedding"))).as("vnrm"))
       .join(broadcast(centsN))
       .select(col("vid"), col("cvec"),
         col("cid"),
@@ -474,10 +479,10 @@ object Similarity {
     * Queries are few — the per-pair exact fold is fine at q·nlist
     * pairs, and produces the same doubles as the hash-agg path.
     */
-  private def probeCells(queries: DataFrame, cents: DataFrame, nProbe: Int,
-      idCol: String, vecCol: String): DataFrame = {
+  private def probeCells(queries: DataFrame, cents: DataFrame,
+      nProbe: Int): DataFrame = {
     val qw = Window.partitionBy(col("qid")).orderBy(col("acos").desc, col("cid"))
-    queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"))
+    queries.select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       .join(broadcast(cents))
       .select(col("qid"), col("qvec"), col("cid"),
         cosineExact(col("qvec"), col("centvec")).as("acos"))
@@ -500,10 +505,8 @@ object Similarity {
   }
 
   private def ivfSearch(corpus: DataFrame, queries: DataFrame, k: Int,
-      nProbe: Int, cents: DataFrame,
-      idCol: String, vecCol: String): DataFrame =
-    rerankCells(assignCells(corpus, cents, idCol, vecCol),
-      probeCells(queries, cents, nProbe, idCol, vecCol), k)
+      nProbe: Int, cents: DataFrame): DataFrame =
+    rerankCells(assignCells(corpus, cents), probeCells(queries, cents, nProbe), k)
 
   /** Persist the IVF index: centroids (tiny) plus the corpus assignment
     * laid out `partitionBy(cell)` — one directory per inverted list.
@@ -513,13 +516,12 @@ object Similarity {
     * generation; at 100 TB this (like the MinHash band index) is the
     * standing artifact arriving queries hit.
     */
-  def writeIvfIndex(corpus: DataFrame, path: String, nlist: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val cents = seedCentroids(corpus, nlist, idCol, vecCol)
+  def writeIvfIndex(corpus: DataFrame, path: String, nlist: Int = 16): Unit = {
+    val cents = seedCentroids(corpus, nlist)
     cents.write.mode("overwrite").parquet(s"$path/centroids")
     graft.sources.EpochDir.publish(corpus.sparkSession, s"$path/cells") {
       target =>
-        assignCells(corpus, cents, idCol, vecCol)
+        assignCells(corpus, cents)
           .write.mode("overwrite").partitionBy("cell").parquet(target)
     }
   }
@@ -532,8 +534,7 @@ object Similarity {
     * incremental dedup path partition-prune over old and new rows
     * alike. The batch pays only its own assignment pass.
     */
-  def appendToIvfIndex(batch: DataFrame, path: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+  def appendToIvfIndex(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
     // single-writer lock across resolve+append (keyed on the cells
     // store, same key compaction publishes under): serializes
@@ -545,7 +546,7 @@ object Similarity {
       // both valid corpus states)
       val live = graft.sources.EpochDir.live(spark, s"$path/cells")
       val cents = spark.read.parquet(s"$path/centroids")
-      assignCells(batch, cents, idCol, vecCol)
+      assignCells(batch, cents)
         .write.mode("append").partitionBy("cell").parquet(live)
     }
   }
@@ -558,9 +559,7 @@ object Similarity {
     * Same results as [[ivfTopK]] over the same corpus.
     */
   def ivfTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
-      k: Int, nProbe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      atEpoch: Option[Long] = None): DataFrame = {
+      k: Int, nProbe: Int = 4, atEpoch: Option[Long] = None): DataFrame = {
     // resolve the live epoch ONCE: the whole search plans against its
     // immutable file paths, so a concurrent compaction (which publishes
     // a NEW epoch and never touches this one) cannot tear the read.
@@ -572,7 +571,7 @@ object Similarity {
       .map(e => graft.sources.EpochDir.at(spark, s"$path/cells", e))
       .getOrElse(graft.sources.EpochDir.live(spark, s"$path/cells"))
     val cents = spark.read.parquet(s"$path/centroids")
-    val qprobes = probeCells(queries, cents, nProbe, idCol, vecCol)
+    val qprobes = probeCells(queries, cents, nProbe)
     val cells = qprobes.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
     val assigned = spark.read.parquet(live)
@@ -580,17 +579,16 @@ object Similarity {
     rerankCells(assigned, qprobes, k)
   }
 
-  /** Subvector split for the mm×dd PQ geometry: (idCol, m, sv) with
-    * `sv` the m-th dd-dim slice of the vector — the shared front of
-    * training, encoding, and the LUT build.
+  /** Subvector split for the [[PqM]]×[[PqD]] geometry: (vec_id, m, sv)
+    * with `sv` the m-th PqD-dim slice of the vector — the shared front
+    * of training, encoding, and the LUT build.
     */
-  private[graft] def pqSubvecs(df: DataFrame, mm: Int, dd: Int,
-      idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol), posexplode(array((0 until mm).map(m =>
-      slice(col(vecCol), m * dd + 1, dd)): _*)).as(Seq("m", "sv")))
+  private[graft] def pqSubvecs(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), posexplode(array((0 until PqM).map(m =>
+      slice(col("embedding"), m * PqD + 1, PqD)): _*)).as(Seq("m", "sv")))
 
   /** Argmin PQ codebook assignment over pre-split subvectors:
-    * (idCol, m, cid, sv). The n·M·K distance pass runs the codegen
+    * (vec_id, m, cid, sv). The n·M·K distance pass runs the codegen
     * float kernel ([[graft.plans.FloatVecOps.floatSqDist]]); its
     * round-6 value feeds only the ARGMIN (round-6 double and round-6
     * exact decimal agree on the winner), ties to the lower centroid
@@ -598,29 +596,26 @@ object Similarity {
     * layer and the persisted-index growth path both call it, so the
     * two can never drift.
     */
-  private[graft] def pqAssignSubs(subs: DataFrame, cents: DataFrame,
-      idCol: String): DataFrame = {
+  private[graft] def pqAssignSubs(subs: DataFrame, cents: DataFrame): DataFrame = {
     import graft.plans.FloatVecOps.floatSqDist
     subs.join(broadcast(cents), "m")
-      .select(col(idCol), col("m"), col("sv"), col("cid"),
+      .select(col("vec_id"), col("m"), col("sv"), col("cid"),
         round(floatSqDist(col("sv"), col("cv")), 6).as("adist"))
-      .groupBy(idCol, "m")
+      .groupBy("vec_id", "m")
       .agg(min(struct(col("adist"), col("cid"))).as("mn"),
         first(col("sv")).as("sv"))
-      .select(col(idCol), col("m"), col("mn.cid").as("cid"), col("sv"))
+      .select(col("vec_id"), col("m"), col("mn.cid").as("cid"), col("sv"))
   }
 
   /** PQ-encode a vector relation against GIVEN codebooks (m, cid, cv):
-    * one broadcast argmin pass → (idCol, m, cid) code rows, mm·⌈log₂K⌉
+    * one broadcast argmin pass → (vec_id, m, cid) code rows, PqM·⌈log₂K⌉
     * bits of payload per vector. This is the encode-against-stored-
     * model step of an ingest pipeline — codebooks are model state
     * (train once, on a sample at 100 TB), the corpus pays one map-side
     * pass.
     */
-  def pqEncode(df: DataFrame, cents: DataFrame, mm: Int = 8, dd: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqAssignSubs(pqSubvecs(df, mm, dd, idCol, vecCol), cents, idCol)
-      .select(col(idCol), col("m"), col("cid"))
+  def pqEncode(df: DataFrame, cents: DataFrame): DataFrame =
+    pqAssignSubs(pqSubvecs(df), cents).select(col("vec_id"), col("m"), col("cid"))
 
   /** Decode PQ codes back to vectors: each vector is its subspace
     * codebook entries concatenated in subspace order. Codes × broadcast
@@ -628,36 +623,34 @@ object Similarity {
     * (coarse cell assignment, recall baselines) — the ADC search paths
     * never call it.
     */
-  def pqReconstruct(codes: DataFrame, cents: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+  def pqReconstruct(codes: DataFrame, cents: DataFrame): DataFrame =
     codes.join(broadcast(cents), Seq("m", "cid"))
-      .groupBy(col(idCol))
+      .groupBy(col("vec_id"))
       .agg(flatten(transform(
         array_sort(collect_list(struct(col("m"), col("cv")))),
-        x => x.getField("cv"))).as(vecCol))
+        x => x.getField("cv"))).as("embedding"))
 
   /** Per-query ADC lookup tables — the FAISS asymmetric-distance trick
     * (Jégou et al. 2011, "Product Quantization for Nearest Neighbor
     * Search"): for each (query, subspace m, codebook entry cid), the
     * exact-decimal partial dot of the query's m-th subvector with that
     * entry, plus the entry's partial squared norm. The cosine of a query
-    * against ANY code-reconstructed vector is then `mm` byte-indexed
+    * against ANY code-reconstructed vector is then [[PqM]] byte-indexed
     * lookups summed — the corpus's original floats are never touched.
     *
-    * Output is q·mm·K rows (3·8·16 = 384 at demo geometry) — broadcast
+    * Output is q·PqM·K rows (3·8·16 = 384 at demo geometry) — broadcast
     * state, same size class as the codebooks themselves.
     *
     * Hash-exactness: the decimal terms are EXACT (TermType rounds each
-    * double product once; accumulation never rounds), so summing `mm`
+    * double product once; accumulation never rounds), so summing PqM
     * per-subspace partials reproduces bit-for-bit the 64-term fold that
     * [[cosineExact]] computes over the full reconstruction — ADC results
     * hash-match the reconstruction path by associativity, not by luck.
     */
-  def pqLut(queries: DataFrame, cents: DataFrame, mm: Int, dd: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qsubs = queries.select(col(idCol).as("qid"),
-      posexplode(array((0 until mm).map(m =>
-        slice(col(vecCol), m * dd + 1, dd)): _*)).as(Seq("m", "qsv")))
+  def pqLut(queries: DataFrame, cents: DataFrame): DataFrame = {
+    val qsubs = queries.select(col("vec_id").as("qid"),
+      posexplode(array((0 until PqM).map(m =>
+        slice(col("embedding"), m * PqD + 1, PqD)): _*)).as(Seq("m", "qsv")))
     qsubs.join(broadcast(cents), "m")
       .select(col("qid"), col("m"), col("cid"),
         dotExactDec(col("qsv"), col("cv")).as("pdot"),
@@ -667,7 +660,7 @@ object Similarity {
   /** (qid, vid, cos) ADC scores for every (query, coded vector) pair:
     * the corpus-side scan reads ONLY the (vec_id, m, cid) code rows —
     * no reconstruction join, no float arrays — joins the broadcast
-    * [[pqLut]] and map-side-combines the `mm` decimal partials per
+    * [[pqLut]] and map-side-combines the PqM decimal partials per
     * pair into one slim row. Values are bit-identical to
     * `cosineExact(query, reconstruction)` (see [[pqLut]]).
     *
@@ -677,13 +670,12 @@ object Similarity {
     * 100 TB this is the pass that makes billion-vector search read
     * gigabytes, not terabytes.
     */
-  def adcScores(codes: DataFrame, cents: DataFrame, queries: DataFrame,
-      mm: Int = 8, dd: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val lut = pqLut(queries, cents, mm, dd, idCol, vecCol)
-    val qn = queries.select(col(idCol).as("qid"),
-      sqrt(norm2Exact(col(vecCol))).as("qnrm"))
-    codes.select(col(idCol).as("vid"), col("m"), col("cid"))
+  def adcScores(codes: DataFrame, cents: DataFrame,
+      queries: DataFrame): DataFrame = {
+    val lut = pqLut(queries, cents)
+    val qn = queries.select(col("vec_id").as("qid"),
+      sqrt(norm2Exact(col("embedding"))).as("qnrm"))
+    codes.select(col("vec_id").as("vid"), col("m"), col("cid"))
       .join(broadcast(lut), Seq("m", "cid"))
       .filter(col("qid") =!= col("vid"))
       .groupBy("qid", "vid")
@@ -696,13 +688,12 @@ object Similarity {
 
   /** ADC top-k over PQ codes: [[adcScores]] + the per-query rank
     * window. Same output contract as `bruteForceTopK(recon, queries)`
-    * — identical rows, identical hashes — at `mm` lookup-adds per pair
+    * — identical rows, identical hashes — at PqM lookup-adds per pair
     * instead of a 3×64-term decimal fold over reconstructed arrays.
     */
   def adcTopK(codes: DataFrame, cents: DataFrame, queries: DataFrame,
-      k: Int, mm: Int = 8, dd: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val scored = adcScores(codes, cents, queries, mm, dd, idCol, vecCol)
+      k: Int): DataFrame = {
+    val scored = adcScores(codes, cents, queries)
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -724,21 +715,20 @@ object Similarity {
     * to BUILD the index (assignment), amortized across query batches.
     */
   def adcIvfTopK(codes: DataFrame, cents: DataFrame, recon: DataFrame,
-      queries: DataFrame, k: Int, nlist: Int = 16, nProbe: Int = 4,
-      mm: Int = 8, dd: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val coarse = seedCentroids(recon, nlist, idCol, vecCol)
-    val assigned = assignCells(recon, coarse, idCol, vecCol)
+      queries: DataFrame, k: Int, nlist: Int = 16,
+      nProbe: Int = 4): DataFrame = {
+    val coarse = seedCentroids(recon, nlist)
+    val assigned = assignCells(recon, coarse)
       .select(col("vid"), col("cell"))
-    val qprobes = probeCells(queries, coarse, nProbe, idCol, vecCol)
+    val qprobes = probeCells(queries, coarse, nProbe)
       .select(col("qid"), col("cell"))
     val pairs = assigned.join(broadcast(qprobes), Seq("cell"))
       .filter(col("qid") =!= col("vid"))
       .select(col("qid"), col("vid"))
-    val lut = pqLut(queries, cents, mm, dd, idCol, vecCol)
-    val qn = queries.select(col(idCol).as("qid"),
-      sqrt(norm2Exact(col(vecCol))).as("qnrm"))
-    val scored = codes.select(col(idCol).as("vid"), col("m"), col("cid"))
+    val lut = pqLut(queries, cents)
+    val qn = queries.select(col("vec_id").as("qid"),
+      sqrt(norm2Exact(col("embedding"))).as("qnrm"))
+    val scored = codes.select(col("vec_id").as("vid"), col("m"), col("cid"))
       .join(pairs, "vid")
       .join(broadcast(lut), Seq("qid", "m", "cid"))
       .groupBy("qid", "vid")
@@ -779,17 +769,16 @@ object Similarity {
     * [[appendToIvfPqIndex]].
     */
   def writeIvfPqIndex(codes: DataFrame, cents: DataFrame,
-      path: String, nlist: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+      path: String, nlist: Int = 16): Unit = {
     val spark = codes.sparkSession
-    codes.select(col(idCol).as("vid"), col("m"), col("cid"))
+    codes.select(col("vec_id"), col("m"), col("cid"))
       .write.mode("overwrite").parquet(s"$path/codes_staging")
     val staged = spark.read.parquet(s"$path/codes_staging")
-    val recon = pqReconstruct(staged, cents, "vid", vecCol)
-    val coarse = seedCentroidsLiteral(recon, nlist, "vid", vecCol)
+    val recon = pqReconstruct(staged, cents)
+    val coarse = seedCentroidsLiteral(recon, nlist)
     coarse.write.mode("overwrite").parquet(s"$path/coarse")
     cents.write.mode("overwrite").parquet(s"$path/codebooks")
-    val assigned = assignCells(recon, coarse, "vid", vecCol)
+    val assigned = assignCells(recon, coarse)
       .select(col("vid"), col("cell"))
     // `_batch = -1` marks base-build rows; an ingest with a batch id
     // writes its own `_batch=<id>` leaf so replays are idempotent
@@ -797,7 +786,8 @@ object Similarity {
     // directory depth only — cell pruning is untouched (cell stays the
     // first level) and search reads ignore the column.
     graft.sources.EpochDir.publish(spark, s"$path/codes") { target =>
-      staged.join(assigned, "vid")
+      staged.select(col("vec_id").as("vid"), col("m"), col("cid"))
+        .join(assigned, "vid")
         .withColumn("_batch", lit(-1L))
         .write.mode("overwrite").partitionBy("cell", "_batch")
         .parquet(target)
@@ -805,18 +795,6 @@ object Similarity {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes_staging"), true)
-  }
-
-  /** PQ geometry (mm subspaces × dd dims) read off stored codebooks —
-    * the codebooks are the single source of truth, so callers can
-    * never hand the append/search paths a geometry that disagrees
-    * with the codes already in the index (wrong values would silently
-    * mix codes over a different subspace split into the same layout).
-    */
-  private def pqGeometryOf(cbooks: DataFrame): (Int, Int) = {
-    val r = cbooks.agg(max(col("m")).as("mx"),
-      max(size(col("cv"))).as("dd")).head()
-    (r.getInt(0) + 1, r.getInt(1))
   }
 
   /** Grow a [[writeIvfPqIndex]] index by an ingested batch: encode the
@@ -830,8 +808,8 @@ object Similarity {
     * and the standing index never rewrites. Spec-proven equal to a
     * full rebuild over the combined corpus (IvfIndexSpec).
     *
-    * Geometry comes from the STORED codebooks ([[pqGeometryOf]]), never
-    * the caller, and the batch's lowest id must clear the stored nlist:
+    * The geometry is the one every index is written with ([[PqM]] ×
+    * [[PqD]]), and the batch's lowest id must clear the stored nlist:
     * [[seedCentroidsLiteral]] seeds the coarse quantizer from the
     * LOWEST ids, so an appended id below nlist would make a later full
     * rebuild pick different seeds than the grown index — voiding the
@@ -847,8 +825,7 @@ object Similarity {
     * semantics (one-off batch growth; caller owns retry hygiene).
     */
   def appendToIvfPqIndex(batch: DataFrame, path: String,
-      batchId: Option[Long] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+      batchId: Option[Long] = None): Unit =
       graft.sources.IndexLock.withWriterLock(
         batch.sparkSession, s"$path/codes") {
     val spark = batch.sparkSession
@@ -856,20 +833,18 @@ object Similarity {
     val live = graft.sources.EpochDir.live(spark, s"$path/codes")
     val coarse = spark.read.parquet(s"$path/coarse")
     val cbooks = spark.read.parquet(s"$path/codebooks")
-    val (mm, dd) = pqGeometryOf(cbooks)
-    val minIdRow = batch.agg(min(col(idCol).cast("long"))).head()
+    val minIdRow = batch.agg(min(col("vec_id").cast("long"))).head()
     if (minIdRow.isNullAt(0)) return // empty batch (idle micro-batch)
     val nlist = coarse.count()
     require(minIdRow.getLong(0) >= nlist,
-      s"appendToIvfPqIndex: batch min $idCol ${minIdRow.getLong(0)} is " +
+      s"appendToIvfPqIndex: batch min vec_id ${minIdRow.getLong(0)} is " +
         s"below the stored nlist ($nlist) — appended ids must not enter " +
         "the lowest-id coarse-seed set, or a full rebuild would choose " +
         "different seeds than the grown index")
-    val codes = pqEncode(batch, cbooks, mm, dd, idCol, vecCol)
-    val recon = pqReconstruct(codes, cbooks, idCol, vecCol)
-    val assigned = assignCells(recon, coarse, idCol, vecCol)
+    val codes = pqEncode(batch, cbooks)
+    val assigned = assignCells(pqReconstruct(codes, cbooks), coarse)
       .select(col("vid"), col("cell"))
-    val rows = codes.select(col(idCol).as("vid"), col("m"), col("cid"))
+    val rows = codes.select(col("vec_id").as("vid"), col("m"), col("cid"))
       .join(assigned, "vid")
       .withColumn("_batch", lit(batchId.getOrElse(-1L)))
     batchId match {
@@ -967,7 +942,6 @@ object Similarity {
     */
   def adcIvfTopKIndexed(spark: SparkSession, path: String,
       queries: DataFrame, k: Int, nProbe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       atEpoch: Option[Long] = None): DataFrame = {
     // resolve the live epoch ONCE: the whole search plans against its
     // immutable file paths, so a concurrent compaction (which publishes
@@ -981,14 +955,13 @@ object Similarity {
       .getOrElse(graft.sources.EpochDir.live(spark, s"$path/codes"))
     val coarse = spark.read.parquet(s"$path/coarse")
     val cbooks = spark.read.parquet(s"$path/codebooks")
-    val (mm, dd) = pqGeometryOf(cbooks)
-    val qprobes = probeCells(queries, coarse, nProbe, idCol, vecCol)
+    val qprobes = probeCells(queries, coarse, nProbe)
       .select(col("qid"), col("cell"))
     val cells = qprobes.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val lut = pqLut(queries, cbooks, mm, dd, idCol, vecCol)
-    val qn = queries.select(col(idCol).as("qid"),
-      sqrt(norm2Exact(col(vecCol))).as("qnrm"))
+    val lut = pqLut(queries, cbooks)
+    val qn = queries.select(col("vec_id").as("qid"),
+      sqrt(norm2Exact(col("embedding"))).as("qnrm"))
     val scored = spark.read.parquet(liveCodes)
       .filter(col("cell").isin(cells: _*))
       .join(broadcast(qprobes), Seq("cell"))
@@ -1018,15 +991,14 @@ object Similarity {
     * mean embeddings for pseudo-labeling, drift monitoring, or seeding
     * a coarse quantizer from labeled strata.
     */
-  def meanPool(df: DataFrame, groupCols: Seq[String],
-      vecCol: String = "embedding", scale: Int = 6): DataFrame =
+  def meanPool(df: DataFrame, groupCols: Seq[String]): DataFrame =
     df.select(groupCols.map(col) :+
-        posexplode(col(vecCol)).as(Seq("pos", "v")): _*)
+        posexplode(col("embedding")).as(Seq("pos", "v")): _*)
       .groupBy(groupCols.map(col) :+ col("pos"): _*)
       .agg(sum(col("v").cast("double").cast(TermType)).as("s"),
         count(lit(1)).as("n"))
       .select(groupCols.map(col) :+ col("pos") :+
-        round(col("s").cast("double") / col("n").cast("double"), scale)
+        round(col("s").cast("double") / col("n").cast("double"), Decimals)
           .as("m"): _*)
 
   /** Per-dimension stats for SQ8 scalar quantization: (pos, mn, mx) with
@@ -1034,8 +1006,8 @@ object Similarity {
     * O(dims) output rows regardless of corpus size. At 100 TB, train on
     * a sample exactly as with [[trainCentroids]].
     */
-  def sq8Stats(corpus: DataFrame, vecCol: String = "embedding"): DataFrame =
-    corpus.select(posexplode(col(vecCol)).as(Seq("pos", "v")))
+  def sq8Stats(corpus: DataFrame): DataFrame =
+    corpus.select(posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy("pos")
       .agg(min(col("v").cast("double")).as("mn"),
         max(col("v").cast("double")).as("mx"))
@@ -1086,9 +1058,9 @@ object Similarity {
       lit(0).cast(AccType), (acc, v) => (acc + v).cast(AccType))
       .cast("double")
 
-  /** Full 64-bit sign signature: one '0'/'1' char per dimension. */
-  def signSignature(vec: Column, dim: Int = 64): Column =
-    concat((1 to dim).map(i =>
+  /** Full [[SigBits]]-bit sign signature: one '0'/'1' char per dimension. */
+  def signSignature(vec: Column): Column =
+    concat((1 to SigBits).map(i =>
       when(element_at(vec, i) > 0f, "1").otherwise("0")): _*)
 
   /** Expected candidate recall of banded sign-LSH for a pair at cosine
@@ -1128,8 +1100,8 @@ object Similarity {
   /** Pick the band geometry for [[nearDupPairs]] at a given scale —
     * the executable form of the [[bandRecall]] calculus.
     *
-    * Enumerates the full partitions of a `sigBits`-bit signature
-    * (bands × bandBits = sigBits, the shape [[signSignature]] hashes)
+    * Enumerates the full partitions of the [[SigBits]]-bit signature
+    * (bands × bandBits = SigBits, the shape [[signSignature]] hashes)
     * and returns the one minimizing expected candidate pairs
     * ~ bands · n²/2 / 2^bandBits (uniform-bucket estimate) subject to
     * bandRecall(threshold, bands, bandBits) ≥ recallTarget. Ties (and
@@ -1149,16 +1121,13 @@ object Similarity {
     *                   when even the best feasible geometry exceeds it,
     *                   that geometry is still returned with
     *                   `withinBudget = false`
-    * @param sigBits    signature width in dims/bits (default 64, the
-    *                   [[signSignature]] default)
     */
   def chooseGeometry(n: Long, threshold: Double, recallTarget: Double,
-      candidateBudget: Double = Double.PositiveInfinity,
-      sigBits: Int = 64): Geometry = {
+      candidateBudget: Double = Double.PositiveInfinity): Geometry = {
     require(n > 0 && threshold > -1.0 && threshold < 1.0, "bad inputs")
     require(recallTarget > 0.0 && recallTarget <= 1.0, "bad recall target")
-    val options = (1 to sigBits).filter(sigBits % _ == 0).reverse.flatMap { bits =>
-      val bands = sigBits / bits
+    val options = (1 to SigBits).filter(SigBits % _ == 0).reverse.flatMap { bits =>
+      val bands = SigBits / bits
       val recall = bandRecall(threshold, bands, bits)
       val cands = bands.toDouble * n.toDouble * n.toDouble / 2.0 /
         math.pow(2.0, bits.toDouble)
@@ -1167,7 +1136,7 @@ object Similarity {
       else None
     }
     require(options.nonEmpty,
-      s"no $sigBits-bit banding reaches recall $recallTarget at threshold " +
+      s"no $SigBits-bit banding reaches recall $recallTarget at threshold " +
         s"$threshold — lower the threshold's recall target or use IVF probing")
     options.minBy(_.expectedCandidates) // .reverse above = ties prefer more bits
   }
@@ -1175,7 +1144,7 @@ object Similarity {
   /** [[chooseGeometry]]'s WIDTH-SCALED sibling: geometry for
     * [[nearDupPairsWide]], where the signature is `bands·bandBits`
     * seeded Rademacher hyperplanes ([[rademacherPlanes]]) rather than a
-    * partition of the raw `dim` sign bits — so `bandBits` can keep
+    * partition of the raw [[SigBits]] sign bits — so `bandBits` can keep
     * growing with the corpus instead of stopping at `log₂` of the
     * vector width.
     *
@@ -1236,6 +1205,12 @@ object Similarity {
       options.minBy(_.expectedCandidates))
   }
 
+  /** Seed of the [[nearDupPairsWide]] hyperplanes — one constant
+    * shared by the operator and the oracle-SQL generator, so the two
+    * can never derive different planes.
+    */
+  val WidePlaneSeed = 42L
+
   /** Seeded Rademacher (±1) hyperplane matrix — collected model state
     * in the [[trainCentroidsLiteral]] size class: `bits` planes × `dim`
     * entries, sign p,j drawn from the splitmix64 finalizer of
@@ -1243,8 +1218,7 @@ object Similarity {
     * round, and the oracle-SQL generator all derive the SAME planes
     * from `(bits, dim, seed)` — no RNG state, no shipped files.
     */
-  def rademacherPlanes(bits: Int, dim: Int,
-      seed: Long = 42L): Array[Array[Byte]] = {
+  def rademacherPlanes(bits: Int, dim: Int, seed: Long): Array[Array[Byte]] = {
     require(bits > 0 && dim > 0, "bad plane shape")
     def mix(x: Long): Long = {
       var z = x + 0x9E3779B97F4A7C15L
@@ -1270,20 +1244,20 @@ object Similarity {
     * index ([[graft.operators.Dedup.writeBandIndex]]).
     */
   def nearDupPairsWide(df: DataFrame, threshold: Double, prefilter: Double,
-      geometry: Geometry, seed: Long = 42L, dim: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      geometry: Geometry): DataFrame = {
     import graft.plans.FloatVecOps.{floatNorm2, rademacherSig}
-    val planes = rademacherPlanes(geometry.bands * geometry.bandBits, dim, seed)
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      rademacherSig(col(vecCol), planes).as("sig"),
-      sqrt(floatNorm2(col(vecCol))).as("nrm"))
+    val planes = rademacherPlanes(geometry.bands * geometry.bandBits,
+      SigBits, WidePlaneSeed)
+    val base = df.select(col("vec_id").as("id"), col("embedding").as("vec"),
+      rademacherSig(col("embedding"), planes).as("sig"),
+      sqrt(floatNorm2(col("embedding"))).as("nrm"))
     bandedPairs(base, geometry.bands, geometry.bandBits, threshold, prefilter)
   }
 
   /** Embedding near-duplicate pairs via OR-amplified banded sign-LSH —
     * the 100-TB shape (round 1 was an all-pairs theta join; this replaces
-    * it). Every vector's 64-bit sign signature splits into `bands` bands
-    * of `bandBits` bits; a pair is a CANDIDATE iff at least one band
+    * it). Every vector's 64-bit sign signature splits into
+    * `geometry.bands` bands of `geometry.bandBits` bits; a pair is a CANDIDATE iff at least one band
     * matches exactly. Candidates come from a self-join on slim
     * (band, key) tuples — a hash-equality shuffle join, never n² — then
     * join their vectors back and pay the cheap codegen double-cosine
@@ -1296,19 +1270,17 @@ object Similarity {
     * 1 − (1 − p⁴)¹⁶ (≈0.93 at cos 0.4, →1 as cos→1: the closer a pair,
     * the surer its capture — the right trade for near-dup detection).
     * The oracle reproduces the same candidate rule, so output is
-    * deterministic. Pick `bands`/`bandBits` for YOUR n and threshold
-    * with [[chooseGeometry]] (or pass its result to the [[Geometry]]
-    * overload).
+    * deterministic. The geometry for YOUR n and threshold comes from
+    * [[chooseGeometry]].
     */
   def nearDupPairs(df: DataFrame, threshold: Double, prefilter: Double,
-      bands: Int = 16, bandBits: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      geometry: Geometry): DataFrame = {
     import graft.plans.FloatVecOps.floatNorm2
     // Norms computed once per ROW; vectors stay OUT of the candidate join.
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      signSignature(col(vecCol), bands * bandBits).as("sig"),
-      sqrt(floatNorm2(col(vecCol))).as("nrm"))
-    bandedPairs(base, bands, bandBits, threshold, prefilter)
+    val base = df.select(col("vec_id").as("id"), col("embedding").as("vec"),
+      signSignature(col("embedding")).as("sig"),
+      sqrt(floatNorm2(col("embedding"))).as("nrm"))
+    bandedPairs(base, geometry.bands, geometry.bandBits, threshold, prefilter)
   }
 
   /** Shared band-join + verify pipeline of [[nearDupPairs]] /
@@ -1339,10 +1311,4 @@ object Similarity {
         cosineExact(col("va"), col("vb")).as("cos"))
       .filter(col("cos") >= threshold)
   }
-
-  /** [[nearDupPairs]] with a [[chooseGeometry]]-selected geometry. */
-  def nearDupPairs(df: DataFrame, threshold: Double, prefilter: Double,
-      geometry: Geometry, idCol: String, vecCol: String): DataFrame =
-    nearDupPairs(df, threshold, prefilter, geometry.bands, geometry.bandBits,
-      idCol, vecCol)
 }

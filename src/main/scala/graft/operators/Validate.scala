@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.PartitionId
@@ -66,33 +66,4 @@ object Validate {
       src: Map[PartitionId, (Long, Long)],
       dst: Map[PartitionId, (Long, Long)]): Boolean =
     (src.keySet ++ dst.keySet).forall(p => src.get(p) == dst.get(p))
-}
-
-/** Skew mitigation for hot-key aggregation: two-phase salted aggregate.
-  * At 100 TB a handful of hot keys (one language, one event_type) can
-  * pin a single reducer; salting fans each key across `saltBuckets`
-  * partial aggregates, then combines — trading one extra (tiny) shuffle
-  * for bounded per-task input. AQE's skew handling covers joins; this
-  * covers aggregation.
-  */
-object Salting {
-
-  /** Salted count: exactly `df.groupBy(key).count()` but skew-proof. */
-  def saltedCount(df: DataFrame, key: String, saltBuckets: Int = 32): DataFrame =
-    df.withColumn("_salt", (rand(seed = 7) * saltBuckets).cast("int"))
-      .groupBy(col(key), col("_salt"))
-      .agg(count(lit(1)).as("partial"))
-      .groupBy(col(key))
-      .agg(sum(col("partial")).as("count"))
-
-  /** Salted sum of an arbitrary (associative) aggregate expression pair:
-    * partial then final — generic two-phase shape.
-    */
-  def saltedSum(df: DataFrame, key: String, value: Column,
-      saltBuckets: Int = 32): DataFrame =
-    df.withColumn("_salt", (rand(seed = 7) * saltBuckets).cast("int"))
-      .groupBy(col(key), col("_salt"))
-      .agg(sum(value).as("partial"))
-      .groupBy(col(key))
-      .agg(sum(col("partial")).as("sum"))
 }

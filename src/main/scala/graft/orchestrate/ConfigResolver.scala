@@ -122,7 +122,6 @@ object ConfigResolver {
       table = pick("table", ""),
       sourcePath = pick("source", ""),
       destPath = pick("dest", ""),
-      partitionKeys = pick("keys", "").split(",").map(_.trim).filter(_.nonEmpty).toSeq,
       insertIntervalSec = pick("insert-interval", "0").toDouble,
       resume = pick("resume", "true").toBoolean,
       checkpointPath = pick("checkpoint", "migration_progress.json"),
@@ -131,7 +130,7 @@ object ConfigResolver {
 
   /** `--key value` pairs → map (unknown keys rejected). */
   def parseArgs(argv: Array[String]): Map[String, String] = {
-    val known = Set("mode", "db", "table", "source", "dest", "keys",
+    val known = Set("mode", "db", "table", "source", "dest",
       "insert-interval", "resume", "checkpoint", "lock-dir", "report-dir",
       "partition-expr", "config", "drop-orphans", "min-completeness",
       "baseline", "drift-tolerance", "psi-cols", "psi-threshold",

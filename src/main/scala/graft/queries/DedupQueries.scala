@@ -75,19 +75,10 @@ object DedupQueries {
   private lazy val IncrementalSql: String =
     s"""WITH ${shingleCte()},
       |cut AS (SELECT max(doc_id) - 99 AS c FROM documents),
-      |base AS (SELECT doc_id,
-      |    CAST(('0x' || substring(md5(shingle), 1, 8)) AS BIGINT) AS h1,
-      |    CAST(('0x' || substring(md5(shingle), 9, 8)) AS BIGINT) AS h2
-      |  FROM sh),
-      |hashes AS (SELECT doc_id, hi.i AS i, h1 + hi.i * h2 AS h
-      |  FROM base, generate_series(0, 11) AS hi(i)),
-      |bands AS (SELECT doc_id, i // 2 AS band,
-      |    min(CASE WHEN i % 2 = 0 THEN h END) AS m0,
-      |    min(CASE WHEN i % 2 = 1 THEN h END) AS m1
-      |  FROM hashes GROUP BY 1, 2),
+      |$minhashBandCtes,
       |cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
       |  FROM bands x JOIN bands y
-      |    ON x.band = y.band AND x.m0 = y.m0 AND x.m1 = y.m1, cut
+      |    ON $minhashBandMatch, cut
       |  WHERE x.doc_id >= cut.c AND y.doc_id < cut.c),
       |$jaccardCte
       |SELECT c.id_a, c.id_b, j.jac
@@ -124,6 +115,30 @@ object DedupQueries {
       |  JOIN sz sa ON ia = sa.doc_id
       |  JOIN sz sb ON ib = sb.doc_id)""".stripMargin
 
+  /** Oracle CTEs `base` → `hashes` → `bands(doc_id, band, m0, m1, …)`:
+    * the Kirsch–Mitzenmacher signature at [[Dedup.MinhashBands]] ×
+    * [[Dedup.MinhashRowsPerBand]], one `m<r>` minimum per band row.
+    */
+  private lazy val minhashBandCtes: String = {
+    import Dedup.{MinhashBands => b, MinhashRowsPerBand => r}
+    val mins = (0 until r)
+      .map(j => s"    min(CASE WHEN i % $r = $j THEN h END) AS m$j")
+      .mkString(",\n")
+    s"""base AS (SELECT doc_id,
+       |    CAST(('0x' || substring(md5(shingle), 1, 8)) AS BIGINT) AS h1,
+       |    CAST(('0x' || substring(md5(shingle), 9, 8)) AS BIGINT) AS h2
+       |  FROM sh),
+       |hashes AS (SELECT doc_id, hi.i AS i, h1 + hi.i * h2 AS h
+       |  FROM base, generate_series(0, ${b * r - 1}) AS hi(i)),
+       |bands AS (SELECT doc_id, i // $r AS band,
+       |""".stripMargin + mins + "\n  FROM hashes GROUP BY 1, 2)"
+  }
+
+  /** Join condition of two `bands` rows in the same bucket. */
+  private lazy val minhashBandMatch: String =
+    ("x.band = y.band" +: (0 until Dedup.MinhashRowsPerBand)
+      .map(j => s"x.m$j = y.m$j")).mkString(" AND ")
+
   /** Shared oracle CTE chain reproducing `Dedup.minhashNearDups`:
     * shingles → Kirsch–Mitzenmacher signatures → 6×2 bands → bucket
     * candidates → exact-Jaccard. Consumers select from `cand`/`jac`
@@ -133,19 +148,10 @@ object DedupQueries {
     */
   private[queries] val minhashPairCtes: String =
     s"""${shingleCte()},
-       |base AS (SELECT doc_id,
-       |    CAST(('0x' || substring(md5(shingle), 1, 8)) AS BIGINT) AS h1,
-       |    CAST(('0x' || substring(md5(shingle), 9, 8)) AS BIGINT) AS h2
-       |  FROM sh),
-       |hashes AS (SELECT doc_id, hi.i AS i, h1 + hi.i * h2 AS h
-       |  FROM base, generate_series(0, 11) AS hi(i)),
-       |bands AS (SELECT doc_id, i // 2 AS band,
-       |    min(CASE WHEN i % 2 = 0 THEN h END) AS m0,
-       |    min(CASE WHEN i % 2 = 1 THEN h END) AS m1
-       |  FROM hashes GROUP BY 1, 2),
+       |$minhashBandCtes,
        |cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
        |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.m0 = y.m0 AND x.m1 = y.m1
+       |    ON $minhashBandMatch
        |      AND x.doc_id < y.doc_id),
        |$jaccardCte""".stripMargin
 

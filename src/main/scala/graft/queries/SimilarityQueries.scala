@@ -125,19 +125,13 @@ object SimilarityQueries {
     * by the s_ann_lsh index and the s_ann_recall metric so the two can
     * never drift apart.
     */
-  private def lshBucketSql(v: String): String = Similarity.DefaultLshDims
+  private def lshBucketSql(v: String): String = Similarity.LshDims
     .map(d => s"(CASE WHEN $v[$d] > 0 THEN '1' ELSE '0' END)")
     .mkString(" || ")
 
   /** Oracle CTE: exact-decimal cosine for candidate (qid, vid) pairs laid
     * out by the enclosing query as cand(qid, vid, qvec, cvec).
     */
-  /** Seed of the wide-geometry Rademacher planes — one constant shared
-    * by the `s_embed_neardup_wide` query and its oracle generator, so
-    * the two sides can never derive different hyperplanes.
-    */
-  private val WidePlaneSeed = 42L
-
   private val cosCte: String =
     """terms AS (SELECT qid, vid,
       |    CAST(CAST(qvec[i] AS DOUBLE) * CAST(cvec[i] AS DOUBLE)
@@ -184,7 +178,7 @@ object SimilarityQueries {
     val geom = Similarity.chooseGeometryWide(
       n = 500L, threshold = 0.9, recallTarget = 0.9)
     val planes = Similarity.rademacherPlanes(
-      geom.bands * geom.bandBits, 64, WidePlaneSeed)
+      geom.bands * geom.bandBits, Similarity.SigBits, Similarity.WidePlaneSeed)
     val sig = planes.map { row =>
       val sum = row.zipWithIndex.map { case (sgn, j) =>
         val term = s"CAST(embedding[${j + 1}] AS DOUBLE)"
@@ -256,9 +250,16 @@ object SimilarityQueries {
     // scale-safe sibling finishes in 14.7 s on the 12 GB executors.
     // That contrast is the point — do not "fix" this query; use the
     // sibling at scale.
-    "s_embed_neardup" -> ((s, dir) =>
-      Similarity.nearDupPairs(emb(s, dir), threshold = 0.4, prefilter = 0.35)
-        .orderBy("id_a", "id_b")),
+    "s_embed_neardup" -> ((s, dir) => {
+      // chooseGeometry at the DEMO threshold itself lands on 16 × 4
+      val geom = Similarity.chooseGeometry(
+        n = embCount(s, dir), threshold = 0.4, recallTarget = 0.9)
+      require(geom.bands == 16 && geom.bandBits == 4,
+        s"oracle SQL assumes the 16×4 banding; chooseGeometry picked $geom")
+      Similarity.nearDupPairs(emb(s, dir), threshold = 0.4, prefilter = 0.35,
+        geom)
+        .orderBy("id_a", "id_b")
+    }),
 
     // SemDeDup-style SEMANTIC dedup (lives here rather than in
     // DedupQueries so its oracle shares the Lloyd-training CTEs with
@@ -266,10 +267,9 @@ object SimilarityQueries {
     // prune any vector with a τ-similar smaller-id neighbor IN ITS
     // CELL. Pairing is cluster-bounded (Σ|cell|²/2, never n²/2).
     "d_semantic" -> ((s, dir) =>
-      // centroids from the per-JVM trained-model registry (same
-      // (nlist=16, iters=2) literal the operator would train itself)
+      // centroids from the per-JVM trained-model registry
       graft.operators.Dedup.semanticDedup(emb(s, dir), tau = 0.4,
-          centroids = Some(trainedCentsOf(s, dir)))
+          centroids = trainedCentsOf(s, dir))
         .select(col("vid").as("vec_id"), col("cell"), col("witness"),
           col("keep"))
         .orderBy("vec_id")),
@@ -289,7 +289,7 @@ object SimilarityQueries {
       // embCount is the parquet footer row count of the embeddings.
       val nl = graft.operators.Dedup.chooseNlist(embCount(s, dir))
       graft.operators.Dedup.semanticDedup(emb(s, dir), tau = 0.4,
-          nlist = nl, centroids = Some(trainedCentsN(s, dir, nl)))
+          centroids = trainedCentsN(s, dir, nl), nlist = nl)
         .select(col("vid").as("vec_id"), col("cell"), col("witness"),
           col("keep"))
         .orderBy("vec_id")
@@ -331,8 +331,7 @@ object SimilarityQueries {
         n = embCount(s, dir), threshold = 0.9, recallTarget = 0.9)
       require(geom.bands == 8 && geom.bandBits == 8,
         s"oracle SQL assumes the 8×8 banding; chooseGeometry picked $geom")
-      Similarity.nearDupPairs(e, threshold = 0.4, prefilter = 0.35,
-        geom, idCol = "vec_id", vecCol = "embedding")
+      Similarity.nearDupPairs(e, threshold = 0.4, prefilter = 0.35, geom)
         .orderBy("id_a", "id_b")
     }),
 
@@ -353,8 +352,7 @@ object SimilarityQueries {
       val e = emb(s, dir)
       val geom = Similarity.chooseGeometryWide(
         n = embCount(s, dir), threshold = 0.9, recallTarget = 0.9)
-      Similarity.nearDupPairsWide(e, threshold = 0.4, prefilter = 0.35,
-        geom, seed = WidePlaneSeed, idCol = "vec_id", vecCol = "embedding")
+      Similarity.nearDupPairsWide(e, threshold = 0.4, prefilter = 0.35, geom)
         .orderBy("id_a", "id_b")
     }),
 
@@ -443,8 +441,7 @@ object SimilarityQueries {
     "s_cluster_topics" -> ((s, dir) => {
       val e = emb(s, dir)
       val cents = trainedCentsOf(s, dir)
-      val assigned = Similarity
-        .assignCells(e, cents, "vec_id", "embedding")
+      val assigned = Similarity.assignCells(e, cents)
         .select(col("vid").as("doc_id"), col("cell"))
       val toks = Sources.table(s, dir, "documents")
         .join(assigned, "doc_id")
@@ -486,17 +483,18 @@ object SimilarityQueries {
       import s.implicits._
       val e = emb(s, dir)
       val cents = trainedCentsOf(s, dir)
-      def assigned = Similarity
-        .assignCells(e, cents, "vec_id", "embedding")
+      def assigned = Similarity.assignCells(e, cents)
         .select(col("vid"), col("cell"))
       val counts = assigned.groupBy("cell").agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
       val mn = counts.map(_._2).min
-      val thr = broadcast(counts.toDF("cell", "n_docs")
+      val thr = counts.toDF("cell", "n_docs")
         .select(col("cell"), col("n_docs"),
           floor(round(lit(mn.toDouble) / col("n_docs").cast("double"), 6)
-            * 256 + 0.5).cast("int").as("keep_thr")))
-      val kept = assigned.join(thr, "cell")
+            * 256 + 0.5).cast("int").as("keep_thr"))
+      // broadcast where the join can build it: a left outer join cannot
+      // build its left side, so a hint on `thr` there would be dead
+      val kept = assigned.join(broadcast(thr), "cell")
         .filter(graft.operators.TextAnalysis
           .hashBand256(col("vid"), "cb:") < col("keep_thr"))
         .groupBy("cell").agg(count(lit(1)).as("k"))
@@ -513,13 +511,11 @@ object SimilarityQueries {
     // (asserted in SimilaritySpec).
     "s_ann_ivf_trained" -> ((s, dir) => {
       val e = emb(s, dir)
-      // r20 opt: centroids from the per-JVM trained-model registry —
-      // the same (nlist=16, iters=2) literal the operator would train
-      // itself (the d_semantic treatment); re-training per invocation
-      // was the query's dominant cost on warm reruns.
+      // centroids from the per-JVM trained-model registry (the
+      // d_semantic treatment): training runs once per JVM, not per query
       Similarity.ivfTopKTrained(
         e, e.filter(col("vec_id").isin(QueryIds: _*)), k = 5,
-        centroids = Some(trainedCentsOf(s, dir)))
+        centroids = trainedCentsOf(s, dir))
         .orderBy("qid", "rank")
     }),
 
@@ -815,6 +811,7 @@ object SimilarityQueries {
     * `s_pq_ann` oracles so the two can never drift apart.
     */
   private def pqCtesSql: String = {
+    import Similarity.{PqD, PqM}
     def assignSql(cents: String, out: String): String =
       s"""d$out AS (SELECT s.vec_id AS vid, s.m, c.cid,
          |    round(CAST(sum(CAST(
@@ -822,15 +819,15 @@ object SimilarityQueries {
          |        (CAST(s.sv[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE))
          |      AS DECIMAL(25,12))) AS DOUBLE), 6) AS dist
          |  FROM subs s JOIN $cents c ON s.m = c.m,
-         |    generate_series(1, 8) AS t(i)
+         |    generate_series(1, $PqD) AS t(i)
          |  GROUP BY s.vec_id, s.m, c.cid),
          |$out AS (SELECT vid, m, cid, dist FROM (
          |    SELECT vid, m, cid, dist, row_number() OVER (
          |        PARTITION BY vid, m ORDER BY dist, cid) AS rn
          |      FROM d$out) WHERE rn = 1)""".stripMargin
     s"""subs AS (SELECT vec_id, t.m AS m,
-       |    embedding[(8 * t.m + 1):(8 * t.m + 8)] AS sv
-       |  FROM embeddings, generate_series(0, 7) AS t(m)),
+       |    embedding[($PqD * t.m + 1):($PqD * t.m + $PqD)] AS sv
+       |  FROM embeddings, generate_series(0, ${PqM - 1}) AS t(m)),
        |cents0 AS (SELECT CAST(vec_id AS INT) AS cid, m, sv AS cv
        |  FROM subs WHERE vec_id < 16),
        |${assignSql("cents0", "a0")},
@@ -839,7 +836,7 @@ object SimilarityQueries {
        |        AS DECIMAL(25,12))) AS DOUBLE)
        |      / CAST(count(*) AS DOUBLE), 6) AS REAL) AS mv
        |  FROM a0 a JOIN subs s ON s.vec_id = a.vid AND s.m = a.m,
-       |    generate_series(1, 8) AS t(i)
+       |    generate_series(1, $PqD) AS t(i)
        |  GROUP BY a.m, a.cid, i),
        |cents1 AS (SELECT m, cid, list(mv ORDER BY pos) AS cv
        |  FROM mmeans GROUP BY m, cid),
@@ -847,21 +844,19 @@ object SimilarityQueries {
   }
 
   /** PQ training + encoding shared by `s_pq_recon` / `s_pq_ann`:
-    * M=8 subspaces × 8 dims, K=16 centroids per subspace seeded from
-    * the lowest-id vectors and refined by one exact-decimal Lloyd
-    * round; assignment is round-6 exact-decimal squared L2 with ties
-    * to the lower centroid id. Returns (codes: (vec_id, m, cid, dist),
-    * trained codebooks: (m, cid, cv)). Every step deterministic and
-    * oracle-reproducible; see the `s_pq_recon` entry for scale notes.
+    * [[Similarity.PqM]] subspaces × [[Similarity.PqD]] dims, K=16
+    * centroids per subspace seeded from the lowest-id vectors and
+    * refined by one exact-decimal Lloyd round; assignment is round-6
+    * exact-decimal squared L2 with ties to the lower centroid id.
+    * Returns (codes: (vec_id, m, cid, dist), trained codebooks:
+    * (m, cid, cv)). Every step deterministic and oracle-reproducible;
+    * see the `s_pq_recon` entry for scale notes.
     */
-  private val PqM = 8
-  private val PqD = 8
   private val PqK = 16
 
-  /** Corpus split into the M=8 per-subspace 8-dim subvectors
-    * ([[Similarity.pqSubvecs]] at the demo geometry). */
-  private def subvecs(df: DataFrame): DataFrame =
-    Similarity.pqSubvecs(df, PqM, PqD, "vec_id", "embedding")
+  /** Corpus split into the per-subspace subvectors
+    * ([[Similarity.pqSubvecs]]). */
+  private def subvecs(df: DataFrame): DataFrame = Similarity.pqSubvecs(df)
 
   /** Argmin codebook assignment: (vec_id, m, cid, sv) — delegates to
     * the operator-level [[Similarity.pqAssignSubs]] (the single source
@@ -869,7 +864,7 @@ object SimilarityQueries {
     * the query layer and the index can never drift).
     */
   private def pqAssign(subs: DataFrame, cents: DataFrame): DataFrame =
-    Similarity.pqAssignSubs(subs, cents, "vec_id")
+    Similarity.pqAssignSubs(subs, cents)
 
   private def pqEncode(e: DataFrame): (DataFrame, DataFrame) = {
     // The exact-decimal distance is recomputed for the n·M winners only,
@@ -925,7 +920,8 @@ object SimilarityQueries {
     * one-time build logs its cost like every other standing artifact.
     */
   private val PqCodebooks =
-    new Kind[Seq[org.apache.spark.sql.Row]](s"PQ codebooks (M=$PqM, K=$PqK)")
+    new Kind[Seq[org.apache.spark.sql.Row]](
+      s"PQ codebooks (M=${Similarity.PqM}, K=$PqK)")
   private def pqCodebooksOf(s: SparkSession, dir: String): DataFrame = {
     val rows = ArtifactRegistry(PqCodebooks, dir)(
       trainedCents(emb(s, dir)).collect().toSeq)
@@ -1187,8 +1183,8 @@ object SimilarityQueries {
         |rl10 AS (SELECT qid, id, rank FROM rl WHERE rank <= 10),
         |fused AS (SELECT COALESCE(v.qid, l.qid) AS qid,
         |    COALESCE(v.vid, l.id) AS id,
-        |    COALESCE(1.0 / (60.0 + CAST(v.rank AS DOUBLE)), 0.0)
-        |      + COALESCE(1.0 / (60.0 + CAST(l.rank AS DOUBLE)), 0.0) AS rrf
+        |    COALESCE(1.0 / (${Similarity.RrfC.toDouble} + CAST(v.rank AS DOUBLE)), 0.0)
+        |      + COALESCE(1.0 / (${Similarity.RrfC.toDouble} + CAST(l.rank AS DOUBLE)), 0.0) AS rrf
         |  FROM rv10 v FULL OUTER JOIN rl10 l
         |    ON v.qid = l.qid AND v.vid = l.id),
         |rr AS (SELECT qid, id, rrf, row_number() OVER (PARTITION BY qid
@@ -1280,7 +1276,7 @@ object SimilarityQueries {
     "s_embed_neardup" -> {
       // Same candidate rule as the Spark side: 64-char sign signature,
       // 16 bands × 4 bits, candidate iff ANY band matches exactly.
-      val sig = (1 to 64)
+      val sig = (1 to Similarity.SigBits)
         .map(i => s"(CASE WHEN embedding[$i] > 0 THEN '1' ELSE '0' END)")
         .mkString(" || ")
       val anyBand = (0 until 16)
@@ -1300,7 +1296,7 @@ object SimilarityQueries {
     },
     "s_embed_neardup_scaled" -> {
       // 8 bands × 8 bits over the same 64-char sign signature.
-      val sig = (1 to 64)
+      val sig = (1 to Similarity.SigBits)
         .map(i => s"(CASE WHEN embedding[$i] > 0 THEN '1' ELSE '0' END)")
         .mkString(" || ")
       val anyBand = (0 until 8)

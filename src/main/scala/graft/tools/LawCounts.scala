@@ -45,7 +45,7 @@ object LawCounts {
     * (2 rounds) — the semantic-dedup verify budget. */
   private def cellPairs(e: DataFrame, nlist: Int): Long = {
     val cents = Similarity.trainCentroidsLiteral(e, nlist, 2)
-    Similarity.assignCells(e, cents, "vec_id", "embedding")
+    Similarity.assignCells(e, cents)
       .groupBy("cell").count()
       .agg(sum(col("count") * (col("count") - lit(1)) / lit(2)).cast("long"))
       .head().getLong(0)
@@ -67,15 +67,15 @@ object LawCounts {
     val wGeom = Similarity.chooseGeometryWide(nEmb, threshold = 0.9,
       recallTarget = 0.9)
     val wPlanes = Similarity.rademacherPlanes(
-      wGeom.bands * wGeom.bandBits, 64, 42L)
+      wGeom.bands * wGeom.bandBits, Similarity.SigBits, Similarity.WidePlaneSeed)
     val autoNlist = Dedup.chooseNlist(nEmb)
     Counts(sfDir, docs.count(), rel.count(),
-      // d_minhash's exact stages: 6 bands x 2 rows, verify at 0.5
-      Dedup.lshCandidates(Dedup.bandsFromRelation(rel, 6, 2)).count(),
+      // d_minhash's exact stages: its band geometry, verify at 0.5
+      Dedup.lshCandidates(Dedup.bandsFromRelation(rel)).count(),
       Dedup.minhashNearDups(docs, "doc_id", "text", 0.5).count(),
       nEmb, s"${geom.bands}x${geom.bandBits}",
-      bandCandidates(sig(Similarity.signSignature(col("embedding"),
-        geom.bands * geom.bandBits)), geom.bands, geom.bandBits),
+      bandCandidates(sig(Similarity.signSignature(col("embedding"))),
+        geom.bands, geom.bandBits),
       // d_semantic's verify budget: the query's own 16 cells
       cellPairs(e, 16),
       s"${wGeom.bands}x${wGeom.bandBits}",

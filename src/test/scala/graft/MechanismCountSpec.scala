@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * only through [[graft.sources.CatalogOps]] — with no pre-epoch
   * adoption path left in either epoch store, no reliable-checkpoint
   * or early-stop mode in the iterative loops, one set-lookup wave
-  * filter and one failure exit in the migrator.
+  * filter and one failure exit in the migrator — and the vector and
+  * dedup operators read one vector schema and own their fixed formats.
   */
 class MechanismCountSpec extends AnyFunSuite {
 
@@ -64,6 +65,47 @@ class MechanismCountSpec extends AnyFunSuite {
     val stamps = "markStatus\\([^)]*TableStatus\\.Failed\\)".r
       .findAllIn(migrator).size
     assert(stamps == 1, s"$stamps markStatus(…, Failed) sites")
+  }
+
+  private val vectorOps =
+    Seq("graft/operators/Similarity.scala", "graft/operators/Dedup.scala")
+
+  private def read(path: String): String =
+    java.nio.file.Files.readString(new java.io.File(root, path).toPath)
+
+  /** (def name, parameter) for every defaulted parameter in `src`. */
+  private def defaulted(src: String): Seq[(String, String)] = {
+    val defAt = "def\\s+(\\w+)".r.findAllMatchIn(src).map(m => m.start -> m.group(1)).toSeq
+    "(\\w+)\\s*:\\s*[\\w\\[\\]]+\\s*=(?![=>])".r.findAllMatchIn(src).toSeq.flatMap { m =>
+      defAt.takeWhile(_._1 < m.start).lastOption.map(_._2 -> m.group(1))
+    }
+  }
+
+  test("vector operators read embeddings(vec_id, embedding): no idCol/vecCol") {
+    assert(!read("graft/operators/Similarity.scala").contains("idCol"))
+    vectorOps.foreach(f => assert(!read(f).contains("vecCol"), s"vecCol in $f"))
+    // Dedup's text operators keep the document schema (idCol, textCol)
+    val dedup = read("graft/operators/Dedup.scala")
+    assert("idCol: String(?!,\\s*textCol)".r.findAllIn(dedup).isEmpty,
+      "an idCol without its textCol in Dedup.scala")
+  }
+
+  test("no PQ, MinHash or signature geometry default in the vector operators") {
+    val fixed = Set("mm", "dd", "rowsPerBand", "sigBits", "dim", "seed", "scale", "c")
+    vectorOps.foreach { f =>
+      val hits = defaulted(read(f)).filter { case (d, p) =>
+        fixed(p) || (p == "bands" && d != "simhashBandedPairs") || p == "buckets"
+      }
+      assert(hits.isEmpty, s"fixed-format defaults in $f: $hits")
+    }
+  }
+
+  test("PQ geometry and the wide-plane seed are defined only in Similarity.scala") {
+    val definers = sources.filter(f =>
+      "val\\s+(PqM|PqD|WidePlaneSeed)\\b".r
+        .findFirstIn(java.nio.file.Files.readString(f.toPath)).isDefined)
+      .map(rel)
+    assert(definers == Seq("graft/operators/Similarity.scala"), definers)
   }
 
   test("no reliable checkpoint, checkpoint cadence or early stop in src/main") {

@@ -61,8 +61,6 @@ class ReachabilitySpec extends AnyFunSuite {
       "IVFPQ compaction, kept with the IVF compaction CrossProcessSoak runs",
     "Dedup.semanticDedupAgainstIndex" ->
       "incremental semantic dedup over a persisted (growable) IVF index",
-    "Dedup.semanticDedupAuto" ->
-      "semanticDedup at chooseNlist cells; d_semantic_auto inlines the same",
     "CatalogOps.createBackupTable" ->
       "catalog-table twin of the reference's DDL lifecycle (A5-A14)",
     "CatalogOps.insertPartition" ->
@@ -82,11 +80,7 @@ class ReachabilitySpec extends AnyFunSuite {
     "DataQuality.completenessViolations" ->
       "the dq completeness gate over a profile; no main gates on dq yet",
     "Multimodal.resizeImages" ->
-      "batched image resize before vision features; no query resizes yet",
-    "Salting.saltedCount" ->
-      "two-phase salted count for hot-key aggregation",
-    "Salting.saltedSum" ->
-      "two-phase salted sum for hot-key aggregation")
+      "batched image resize before vision features; no query resizes yet")
 
   private val mainRoot = new File("src/main/scala")
   private val benchRoot = new File("perfbench/src")

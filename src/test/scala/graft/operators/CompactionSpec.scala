@@ -63,7 +63,7 @@ class CompactionSpec extends SparkFunSuite {
       assert(filesBefore > 8,
         s"appends should have accreted >8 files, found $filesBefore")
 
-      Dedup.compactBandIndex(s, idxT, buckets = 8)
+      Dedup.compactBandIndex(s, idxT)
       val filesAfter = dataFiles(epochLoc(idxT)).size
       assert(filesAfter == 8, s"expected 8 bucket files, got $filesAfter")
 
@@ -80,7 +80,7 @@ class CompactionSpec extends SparkFunSuite {
       try {
         s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         val cand = Dedup.bandsFromRelation(
-          Dedup.shingleRelation(batch, "doc_id", "text"), 6, 2).as("x")
+          Dedup.shingleRelation(batch, "doc_id", "text")).as("x")
           .join(s.table(idxT.qualified).as("y"),
             col("x.band") === col("y.band") && col("x.key") === col("y.key"))
         cand.collect()
@@ -130,7 +130,7 @@ class CompactionSpec extends SparkFunSuite {
 
   test("compactIvfPqIndex: one file per cell, ADC search unchanged") {
     val cbooks = Similarity
-      .pqSubvecs(emb.filter(col("vec_id") < 16), 8, 8, "vec_id", "embedding")
+      .pqSubvecs(emb.filter(col("vec_id") < 16))
       .select(col("vec_id").cast("int").as("cid"), col("m"),
         col("sv").as("cv"))
     val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
@@ -226,7 +226,7 @@ class CompactionSpec extends SparkFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(during == before, "debris epoch must be invisible to readers")
       // the next OPTIMIZE republishes over the debris and flips
-      Dedup.compactBandIndex(s, idxT, buckets = 8)
+      Dedup.compactBandIndex(s, idxT)
       assert(CatalogOps.currentEpoch(s, idxT).contains(1L))
       val healed = Dedup.minhashNearDupsAgainstIndex(
         batch, corpus, "doc_id", "text", 0.5, idxT)

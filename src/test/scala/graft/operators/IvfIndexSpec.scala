@@ -63,7 +63,7 @@ class IvfIndexSpec extends SparkFunSuite {
   // is irrelevant to index-mechanics equivalence, and seeds keep the
   // fixture cheap).
   private lazy val cbooks = Similarity
-    .pqSubvecs(emb.filter(col("vec_id") < 16), 8, 8, "vec_id", "embedding")
+    .pqSubvecs(emb.filter(col("vec_id") < 16))
     .select(col("vec_id").cast("int").as("cid"), col("m"),
       col("sv").as("cv"))
   private def rows(df: org.apache.spark.sql.DataFrame) =

@@ -8,6 +8,8 @@ class LlmOpsSpec extends SparkFunSuite {
 
   private lazy val docs = spark.read.parquet(s"$sf0001/documents.parquet")
   private lazy val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+  /** 16 bands × 4 bits: the banding chooseGeometry picks at cos 0.4. */
+  private lazy val demoGeometry = Similarity.chooseGeometry(500L, 0.4, 0.9)
 
   // ---- Dedup ----
 
@@ -100,7 +102,7 @@ class LlmOpsSpec extends SparkFunSuite {
       try {
         s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         val cand = Dedup.bandsFromRelation(
-          Dedup.shingleRelation(wave2, "doc_id", "text"), 6, 2).as("x")
+          Dedup.shingleRelation(wave2, "doc_id", "text")).as("x")
           .join(s.table(idxT.qualified).as("y"),
             col("x.band") === col("y.band") && col("x.key") === col("y.key"))
         cand.collect()
@@ -137,7 +139,7 @@ class LlmOpsSpec extends SparkFunSuite {
       try {
         s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         val cand = Dedup.bandsFromRelation(
-          Dedup.shingleRelation(batch, "doc_id", "text"), 6, 2).as("x")
+          Dedup.shingleRelation(batch, "doc_id", "text")).as("x")
           .join(s.table(idxT.qualified).as("y"),
             col("x.band") === col("y.band") && col("x.key") === col("y.key"))
         cand.collect()
@@ -335,7 +337,8 @@ class LlmOpsSpec extends SparkFunSuite {
     Seq(1, 2, 4).foreach { np =>
       val seeded = hits(Similarity.ivfTopK(df, q, k = 5, nlist = 16,
         nProbe = np).collect())
-      val trained = hits(Similarity.ivfTopKTrained(df, q, k = 5, nlist = 16,
+      val trained = hits(Similarity.ivfTopKTrained(df, q, k = 5,
+        Similarity.trainCentroidsLiteral(df, 16, 2), nlist = 16,
         nProbe = np).collect())
       assert(trained > seeded,
         s"nProbe=$np: trained $trained !> seeded $seeded (of ${truth.size})")
@@ -353,7 +356,7 @@ class LlmOpsSpec extends SparkFunSuite {
   }
 
   test("nearDupPairs symmetric bound: all pairs above threshold") {
-    val pairs = Similarity.nearDupPairs(emb, 0.4, 0.35).collect()
+    val pairs = Similarity.nearDupPairs(emb, 0.4, 0.35, demoGeometry).collect()
     assert(pairs.nonEmpty)
     assert(pairs.forall(r => r.getDouble(2) >= 0.4 && r.getLong(0) < r.getLong(1)))
   }
@@ -367,7 +370,7 @@ class LlmOpsSpec extends SparkFunSuite {
     val v = (1 to 64).map(i => (if (i % 3 == 0) -1.0f else 1.0f) * i / 64f)
     val w = (1 to 64).map(i => (if (i % 5 == 0) -1.0f else 1.0f) * (65 - i) / 64f)
     val df = Seq((1L, v), (2L, v), (3L, w)).toDF("vec_id", "embedding")
-    val pairs = Similarity.nearDupPairs(df, 0.99, 0.9).collect()
+    val pairs = Similarity.nearDupPairs(df, 0.99, 0.9, demoGeometry).collect()
     assert(pairs.length == 1)
     assert(pairs.head.getLong(0) == 1L && pairs.head.getLong(1) == 2L)
     assert(pairs.head.getDouble(2) == 1.0)
@@ -822,15 +825,14 @@ class LlmOpsSpec extends SparkFunSuite {
     assertThrows[IllegalArgumentException] {
       Similarity.chooseGeometry(1000L, -0.99, 0.999)
     }
-    // geometry feeds straight into the operator: same pairs as the
-    // explicit 16×4 call on a real frame
+    // only the banding drives the operator: same pairs as a hand-built
+    // 16×4 geometry on a real frame
     val vecs = emb.limit(200)
-    val viaGeom = Similarity
-      .nearDupPairs(vecs, 0.4, 0.35, demo, "vec_id", "embedding")
+    def pairsOf(g: Similarity.Geometry) = Similarity
+      .nearDupPairs(vecs, 0.4, 0.35, g)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val explicit = Similarity
-      .nearDupPairs(vecs, 0.4, 0.35, 16, 4, "vec_id", "embedding")
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaGeom = pairsOf(demo)
+    val explicit = pairsOf(Similarity.Geometry(16, 4, 0.0, 0.0, withinBudget = true))
     assert(viaGeom == explicit && viaGeom.nonEmpty)
   }
 

@@ -12,6 +12,10 @@ class SemanticDedupSpec extends SparkFunSuite {
 
   private def vec(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
 
+  /** The 16-cell, 2-round trained centroids every query passes. */
+  private def trained16(emb: org.apache.spark.sql.DataFrame) =
+    Similarity.trainCentroidsLiteral(emb, 16, 2)
+
   test("keep rule: pruned iff a τ-similar smaller-id neighbor shares the cell") {
     val s = spark; import s.implicits._
     // Two orthogonal families; ids 0 and 1 seed the two cells.
@@ -23,7 +27,8 @@ class SemanticDedupSpec extends SparkFunSuite {
       (4L, vec(0.70, 0.71, 0.1, 0)), // between families, no near-dup
       (5L, vec(0.99, 0.141, 0, 0))  // near-dup of BOTH 0 and 2
     ).toDF("vec_id", "embedding")
-    val out = Dedup.semanticDedup(data, tau = 0.98, nlist = 2, iters = 2)
+    val out = Dedup.semanticDedup(data, tau = 0.98,
+        centroids = Similarity.trainCentroidsLiteral(data, 2, 2), nlist = 2)
       .collect().map(r => r.getAs[Long]("vid") ->
         (r.getAs[Boolean]("keep"), Option(r.getAs[java.lang.Long]("witness"))))
       .toMap
@@ -40,7 +45,7 @@ class SemanticDedupSpec extends SparkFunSuite {
   test("invariants on real embeddings: witnesses are in-cell, smaller, and τ-similar; kept rows have none") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val tau = 0.4
-    val out = Dedup.semanticDedup(emb, tau = tau)
+    val out = Dedup.semanticDedup(emb, tau = tau, trained16(emb))
     // Independent all-pairs reference (no LSH/cell shortcut in the
     // checker beyond the cell-equality the semantics require).
     val cells = out.select(col("vid"), col("cell"))
@@ -68,7 +73,7 @@ class SemanticDedupSpec extends SparkFunSuite {
 
   test("deterministic: two runs produce identical rows") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    def run() = Dedup.semanticDedup(emb, tau = 0.4)
+    def run() = Dedup.semanticDedup(emb, tau = 0.4, trained16(emb))
       .orderBy("vid").collect().toSeq
     assert(run() == run())
   }
@@ -86,7 +91,7 @@ class SemanticDedupSpec extends SparkFunSuite {
     val cells = out.select(col("vid"), col("cell"))
     val cents = corpus.filter(col("vec_id") < 16)
       .select(col("vec_id").cast("int").as("cid"), col("embedding").as("centvec"))
-    val cAss = Similarity.assignCells(corpus, cents, "vec_id", "embedding")
+    val cAss = Similarity.assignCells(corpus, cents)
       .select(col("vid").as("cid_v"), col("cell"), col("cvec"))
     val bSide = emb.select(col("vec_id").as("vid"), col("embedding").as("bv"))
       .join(cells, "vid")
@@ -195,12 +200,14 @@ class SemanticDedupSpec extends SparkFunSuite {
     assertThrows[IllegalArgumentException] { Dedup.chooseNlist(-1L) }
   }
 
-  test("semanticDedupAuto == semanticDedup(16) at the oracle corpus size") {
+  test("d_semantic_auto == semanticDedup(16) at the oracle corpus size") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("vid").collect().map(_.toString).toSeq
-    assert(rows(Dedup.semanticDedupAuto(emb, tau = 0.4)) ==
-      rows(Dedup.semanticDedup(emb, tau = 0.4)))
+      df.collect().map(_.toString).toSeq
+    val auto = graft.queries.SimilarityQueries.defs("d_semantic_auto")(
+      spark, sf0001)
+    assert(rows(auto) ==
+      rows(Dedup.semanticDedup(emb, tau = 0.4, trained16(emb)).orderBy("vid")))
   }
 
   test("plan shape: pair search shuffles on cell, no cartesian product") {
@@ -208,7 +215,7 @@ class SemanticDedupSpec extends SparkFunSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = Dedup.semanticDedup(emb, tau = 0.4)
+      val plan = Dedup.semanticDedup(emb, tau = 0.4, trained16(emb))
         .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"),
         s"pairing must be cell-bounded, not all-pairs:\n$plan")

@@ -89,7 +89,7 @@ class ShingleIndexSpec extends SparkFunSuite {
       val before = Dedup.contaminationAgainstIndex(
         split("test"), "doc_id", "text", idxT)
       val want = rows(before)
-      Dedup.compactBucketedIndex(s, idxT, Seq("shingle"), buckets = 8)
+      Dedup.compactBucketedIndex(s, idxT, Seq("shingle"))
       val loc = new java.io.File(new java.net.URI(
         s.sql(s"DESC FORMATTED ${graft.sources.CatalogOps
             .liveEpochTable(s, idxT).qualified}")

@@ -41,7 +41,7 @@ class SoakSpec extends SparkFunSuite {
 
   test("IVFPQ index: interleaved append x compact x search stays rebuild-exact") {
     val cbooks = Similarity
-      .pqSubvecs(emb.filter(col("vec_id") < 16), 8, 8, "vec_id", "embedding")
+      .pqSubvecs(emb.filter(col("vec_id") < 16))
       .select(col("vec_id").cast("int").as("cid"), col("m"),
         col("sv").as("cv"))
     val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
@@ -99,7 +99,7 @@ class SoakSpec extends SparkFunSuite {
           docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
           "doc_id", "text", idxT)
         if (i % 2 == 1) {
-          Dedup.compactBandIndex(s, idxT, buckets = 8)
+          Dedup.compactBandIndex(s, idxT)
           val loc = localFile(
             s.sql(s"DESC FORMATTED ${CatalogOps
                 .liveEpochTable(s, idxT).qualified}")
@@ -191,7 +191,7 @@ class SoakSpec extends SparkFunSuite {
       // the pin: one OPTIMIZE at the snapshot boundary; the returned
       // epoch is the just-RETIRED one — immutable by construction
       val pin = CatalogOps.pinSnapshot(s, idxT)(
-        Dedup.compactBandIndex(s, idxT, buckets = 8))
+        Dedup.compactBandIndex(s, idxT))
       assert(CatalogOps.currentEpoch(s, idxT).exists(_ > pin))
       def pinnedRows() = CatalogOps.tableAtEpoch(s, idxT, pin)
         .collect().toSeq.map(_.toSeq).groupBy(identity)
@@ -235,7 +235,7 @@ class SoakSpec extends SparkFunSuite {
 
   test("pinSnapshot (dir-backed): IVFPQ pin frozen across appends; live grows") {
     val cbooks = Similarity
-      .pqSubvecs(emb.filter(col("vec_id") < 16), 8, 8, "vec_id", "embedding")
+      .pqSubvecs(emb.filter(col("vec_id") < 16))
       .select(col("vec_id").cast("int").as("cid"), col("m"),
         col("sv").as("cv"))
     val path = tmpDir("ivfpq_pin")
@@ -311,7 +311,7 @@ class SoakSpec extends SparkFunSuite {
 
   test("IVFPQ index: live search loop across 20 compaction cycles — no errors, no torn reads") {
     val cbooks = Similarity
-      .pqSubvecs(emb.filter(col("vec_id") < 16), 8, 8, "vec_id", "embedding")
+      .pqSubvecs(emb.filter(col("vec_id") < 16))
       .select(col("vec_id").cast("int").as("cid"), col("m"),
         col("sv").as("cv"))
     val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
@@ -347,7 +347,7 @@ class SoakSpec extends SparkFunSuite {
       val want = probe()
       assert(want.nonEmpty)
       val n = concurrentSoak(want, () => probe(),
-        () => Dedup.compactBandIndex(s, idxT, buckets = 8), cycles = 20)
+        () => Dedup.compactBandIndex(s, idxT), cycles = 20)
       assert(n >= 20, s"only $n probes across 20 compactions")
       assert(probe() == want)
       assert(CatalogOps.currentEpoch(s, idxT).exists(_ >= 20L))
@@ -361,7 +361,7 @@ class SoakSpec extends SparkFunSuite {
     // publishes — and strand only at retain+1, the documented edge of
     // the widened grace window.
     val cbooks = Similarity
-      .pqSubvecs(emb.filter(col("vec_id") < 16), 8, 8, "vec_id", "embedding")
+      .pqSubvecs(emb.filter(col("vec_id") < 16))
       .select(col("vec_id").cast("int").as("cid"), col("m"),
         col("sv").as("cv"))
     val path = tmpDir("ivfpq_retain_soak")

@@ -34,24 +34,4 @@ class ValidateSpec extends SparkFunSuite {
     assert(!Validate.checksumsMatch(src, dst))
     assert(!Validate.checksumsMatch(dst, src))
   }
-
-  test("saltedCount equals plain groupBy count") {
-    val events = graft.sources.Sources.table(spark, sf0001, "events")
-    val plain = events.groupBy("event_type").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Salting.saltedCount(events, "event_type")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
-
-  test("saltedSum equals plain decimal sum") {
-    val li0 = spark.read.parquet(s"$sf0001/lineitem.parquet")
-    val dec = col("l_quantity").cast(org.apache.spark.sql.types.DataTypes
-      .createDecimalType(18, 2))
-    val plain = li0.groupBy("l_returnflag").agg(sum(dec).as("sum"))
-      .collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
-    val salted = Salting.saltedSum(li0, "l_returnflag", dec)
-      .collect().map(r => r.getString(0) -> r.getDecimal(1)).toMap
-    assert(salted == plain)
-  }
 }

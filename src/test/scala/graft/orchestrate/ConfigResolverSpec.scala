@@ -22,14 +22,19 @@ class ConfigResolverSpec extends AnyFunSuite {
     val conf = writeFile(
       "db = filedb",
       "table = filetable",
-      "insert-interval = 2.5",
-      "keys = a, b")
+      "insert-interval = 2.5")
     val cfg = ConfigResolver.resolve(Map("config" -> conf), env = Map.empty)
     assert(cfg.db == "filedb")
     assert(cfg.table == "filetable")
     assert(cfg.insertIntervalSec == 2.5)
-    assert(cfg.partitionKeys == Seq("a", "b"))
     assert(cfg.mode == "single") // untouched key falls to default
+  }
+
+  test("--keys is rejected on the CLI: no setting reads partition keys") {
+    val ex = intercept[IllegalArgumentException] {
+      ConfigResolver.parseArgs(Array("--table", "t", "--keys", "a,b"))
+    }
+    assert(ex.getMessage == "unknown option --keys")
   }
 
   test("precedence: CLI beats env beats file beats default") {

@@ -162,8 +162,8 @@ class SimilarityQueriesSpec extends SparkFunSuite {
     // corpus or when a Lloyd cell empties
     val short = rel(rows.take(15).toSeq)
     for (c <- Seq(good, short)) {
-      Similarity.ivfTopKTrained(e, q, k = 5, centroids = Some(c))
-      Dedup.semanticDedup(e, tau = 0.4, centroids = Some(c))
+      Similarity.ivfTopKTrained(e, q, k = 5, centroids = c)
+      Dedup.semanticDedup(e, tau = 0.4, centroids = c)
     }
     val long = rel(rows.toSeq :+ rows(3))
     val empty = rel(Nil)
@@ -177,12 +177,12 @@ class SimilarityQueriesSpec extends SparkFunSuite {
       var err: IllegalArgumentException = null
       val jobs = jobsDuring {
         err = intercept[IllegalArgumentException](Similarity.ivfTopKTrained(
-          e, q, k = 5, nlist = 16, centroids = Some(bad)))
+          e, q, k = 5, centroids = bad, nlist = 16))
       }
       assert(err.getMessage.contains(why), err.getMessage)
       assert(jobs == 0, s"$jobs job(s) ran before the check failed")
       intercept[IllegalArgumentException](
-        Dedup.semanticDedup(e, tau = 0.4, nlist = 16, centroids = Some(bad)))
+        Dedup.semanticDedup(e, tau = 0.4, centroids = bad, nlist = 16))
     }
   }
 
@@ -194,7 +194,8 @@ class SimilarityQueriesSpec extends SparkFunSuite {
       .filter(col("vec_id") < 10).write.parquet(s"$dir/embeddings.parquet")
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     assert(SimilarityQueries.trainedCentsN(spark, dir, 16).count() < 16)
-    val want = graft.operators.Dedup.semanticDedup(e, tau = 0.4)
+    val want = graft.operators.Dedup.semanticDedup(e, tau = 0.4,
+        centroids = graft.operators.Similarity.trainCentroidsLiteral(e, 16, 2))
       .select(col("vid").as("vec_id"), col("cell"), col("witness"),
         col("keep"))
       .orderBy("vec_id").collect().toSeq
