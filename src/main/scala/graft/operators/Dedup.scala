@@ -30,17 +30,9 @@ object Dedup {
   val MinhashRowsPerBand = 2
 
   /** Bucket count the standing band and shingle indexes are written
-    * with; append and compaction read it back from the catalog.
+    * with.
     */
   val IndexBuckets = 8
-
-  /** The bucket count a standing index's live epoch table was written
-    * with — catalog metadata, no Spark job.
-    */
-  private def bucketsOf(spark: org.apache.spark.sql.SparkSession,
-      live: graft.model.TableRef): Int =
-    graft.sources.CatalogOps.storageOf(spark, live).buckets.getOrElse(
-      throw new IllegalStateException(s"${live.qualified} is not bucketed"))
 
   /** Exploded (id, shingle) pairs — the inverted-index relation.
     *
@@ -213,11 +205,11 @@ object Dedup {
     * that makes continuous ingestion affordable at 100 TB: the band
     * join is batch-bands × corpus-bands — work proportional to the
     * BATCH, not to corpus², and in production the corpus band table is
-    * a PERSISTED index (computed once per document ever, appended as
-    * batches land; here it is derived inline so the query stays
-    * self-contained). Candidates then pay exact-Jaccard verification
-    * against the union shingle relation, bounded by the candidate
-    * count. Output: (id_a = batch doc, id_b = corpus doc, jac).
+    * a PERSISTED index ([[writeBandIndex]]; here it is derived inline
+    * so the query stays self-contained). Candidates then pay
+    * exact-Jaccard verification against the union shingle relation,
+    * bounded by the candidate count. Output: (id_a = batch doc,
+    * id_b = corpus doc, jac).
     */
   def minhashNearDupsAgainst(batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double): DataFrame = {
@@ -237,106 +229,13 @@ object Dedup {
     * is the expensive stage), then every arriving batch's band join
     * reads it with ZERO exchange on the index side: the bucket layout
     * IS the join partitioning, so only the (small) batch shuffles.
-    * Append each ingested batch's bands to keep the index current.
     */
   def writeBandIndex(df: DataFrame, idCol: String, textCol: String,
       table: graft.model.TableRef): Unit =
-    graft.sources.CatalogOps.publishEpoch(df.sparkSession, table) { eRef =>
-      graft.sources.CatalogOps.writeBucketed(
-        minhashBands(df, idCol, textCol),
-        eRef, bucketCols = Seq("band", "key"), numBuckets = IndexBuckets,
-        sortCols = Seq("band", "key"))
-    }
-
-  /** Grow a [[writeBandIndex]] index by an ingested batch: append the
-    * batch's OWN band rows (the batch-sized signature pass only — the
-    * standing corpus is never re-signed) with the bucket spec read off
-    * the live epoch table, so the index stays bucket-joinable over old
-    * and new rows alike. Call after the batch's near-dup check admits
-    * it to the corpus.
-    */
-  def appendToBandIndex(batch: DataFrame, idCol: String, textCol: String,
-      table: graft.model.TableRef): Unit =
-    // single-writer lock across resolve+append: serializes concurrent
-    // appenders (two uncoordinated saveAsTable appends may interleave)
-    // AND excludes a compaction from reading the epoch mid-append
-    graft.sources.IndexLock.withWriterLock(
-        batch.sparkSession, table.qualified) {
-      // batches land INSIDE the live epoch table — appends never create
-      // epochs (a concurrent reader sees pre- or post-append rows, both
-      // valid corpus states); resolving the epoch also fails fast when
-      // the index was never built (appendBucketed would otherwise CREATE
-      // a batch-sized table under the epoch name)
-      val live = graft.sources.CatalogOps.liveEpochTable(batch.sparkSession, table)
-      graft.sources.CatalogOps.appendBucketed(
-        minhashBands(batch, idCol, textCol), live,
-        bucketCols = Seq("band", "key"),
-        numBuckets = bucketsOf(batch.sparkSession, live),
-        sortCols = Seq("band", "key"))
-    }
-
-  /** OPTIMIZE for the standing band index: [[appendToBandIndex]] lands
-    * one file per bucket per ingested batch, so after B batches every
-    * bucket join opens B files per bucket — at 100 TB with
-    * minute-level ingest that is the classic small-files death spiral
-    * (open/seek overhead dwarfs scan bytes). Rewrites the table to ONE
-    * file per bucket while PRESERVING the (band, key) bucket spec —
-    * the repartition uses the same hash the bucket layout does, so
-    * each writer task holds exactly one bucket — and compaction
-    * therefore changes file counts, never join partitioning: the
-    * compacted index still band-joins with zero index-side exchange
-    * (spec-asserted in CompactionSpec). Publish is a NEW EPOCH table
-    * behind the index VIEW ([[graft.sources.CatalogOps.publishEpoch]]):
-    * the compacted copy materializes fully, then the view re-points in
-    * one atomic catalog op — no table is ever renamed, so CONCURRENT
-    * READERS are safe: a probe planned against epoch N keeps its files
-    * while N+1 publishes (one superseded epoch is retained as grace)
-    * and returns the pre-compaction result; the next probe resolves
-    * N+1. Spec-asserted under a live probe loop across ≥20 compaction
-    * cycles in SoakSpec.
-    */
-  def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
-      table: graft.model.TableRef, retain: Int = 1): Unit =
-    compactBucketedIndex(spark, table, Seq("band", "key"), retain)
-
-  /** The [[compactBandIndex]] mechanics for ANY bucketed standing index
-    * (band index, shingle index): one file per bucket, bucket spec (the
-    * count read off the live epoch table's catalog entry) —
-    * and therefore the exchange-free join property — preserved,
-    * epoch-view publish (atomic, concurrent-reader-safe). `retain`
-    * sizes the grace window: the number of superseded epochs kept for
-    * in-flight readers (choose ≥ ceil(slowest-query / OPTIMIZE
-    * cadence); default 1 — a reader strands only if it lags two
-    * publishes).
-    */
-  def compactBucketedIndex(spark: org.apache.spark.sql.SparkSession,
-      table: graft.model.TableRef, bucketCols: Seq[String],
-      retain: Int = 1): Unit =
-      graft.sources.IndexLock.withWriterLock(spark, table.qualified) {
-    // writer lock spans resolve+rewrite+publish: an append landing
-    // inside the live epoch AFTER the compaction's read would vanish
-    // from the compacted successor — the lock makes read-to-publish
-    // atomic against other writers (readers stay lock-free on epochs).
-    // read the CURRENT epoch's rows, not the view: the view would
-    // re-resolve during the write and must keep serving readers anyway
-    val liveRef = graft.sources.CatalogOps.liveEpochTable(spark, table)
-    val live = spark.table(liveRef.qualified)
-    val buckets = bucketsOf(spark, liveRef)
-    graft.sources.CatalogOps.publishEpoch(spark, table, retain) { eRef =>
-      // Repartition on the COMPUTED bucket id (pmod(murmur3, n) — the
-      // bucket formula itself), not on the raw columns: an exchange on
-      // the raw columns is ELIMINATED because the bucketed scan already
-      // satisfies that distribution, leaving the accreted file grouping
-      // in charge of output file count. The bucket-id key can't be
-      // elided, keeps every bucket whole within one writer task, and so
-      // yields exactly one file per bucket.
-      graft.sources.CatalogOps.writeBucketed(
-        live.repartition(buckets, pmod(hash(bucketCols.map(col): _*),
-          lit(buckets))),
-        eRef, bucketCols = bucketCols, numBuckets = buckets,
-        sortCols = bucketCols)
-    }
-  }
+    graft.sources.CatalogOps.writeBucketed(
+      minhashBands(df, idCol, textCol),
+      table, bucketCols = Seq("band", "key"), numBuckets = IndexBuckets,
+      sortCols = Seq("band", "key"))
 
   /** Incremental near-dups of `batch` against a PERSISTED band index
     * (written by [[writeBandIndex]]) — the production shape of
@@ -350,9 +249,6 @@ object Dedup {
       idCol: String, textCol: String, threshold: Double,
       indexTable: graft.model.TableRef): DataFrame = {
     val spark = batch.sparkSession
-    // the index name is an epoch VIEW: analysis resolves it to an
-    // immutable epoch table, so a concurrent compaction cannot tear
-    // this probe (it publishes a NEW epoch and re-points the view)
     val relB = shingleRelation(batch, idCol, textCol)
     val cand = bandsFromRelation(relB).as("x")
       .join(spark.table(indexTable.qualified).as("y"),
@@ -369,51 +265,23 @@ object Dedup {
     * against (the `t_contamination` semantics with the train-side
     * shingle pass already paid). Bucketing makes the contamination
     * join exchange-free on the index side: only the (small) arriving
-    * eval batch shuffles. Built once per train-corpus generation;
-    * growth is [[appendToShingleIndex]], OPTIMIZE is
-    * [[compactBucketedIndex]] with `Seq("shingle")`.
+    * eval batch shuffles. Built once per train-corpus generation.
     */
   def writeShingleIndex(train: DataFrame, idCol: String, textCol: String,
       table: graft.model.TableRef): Unit =
-    graft.sources.CatalogOps.publishEpoch(train.sparkSession, table) {
-      eRef =>
-        graft.sources.CatalogOps.writeBucketed(
-          shingleRelation(train, idCol, textCol)
-            .select("shingle").distinct(),
-          eRef, bucketCols = Seq("shingle"), numBuckets = IndexBuckets,
-          sortCols = Seq("shingle"))
-    }
-
-  /** Grow a [[writeShingleIndex]] index by newly-admitted train
-    * documents: append the batch's own distinct shingles with the same
-    * bucket spec. Cross-batch duplicate shingles are tolerated — the
-    * read path re-distincts over the bucketed scan, which the bucket
-    * layout makes exchange-free — so appends never need to probe the
-    * standing index.
-    */
-  def appendToShingleIndex(batch: DataFrame, idCol: String,
-      textCol: String, table: graft.model.TableRef): Unit =
-    graft.sources.IndexLock.withWriterLock(
-        batch.sparkSession, table.qualified) {
-      // batches land INSIDE the live epoch table (same contract as the
-      // band index; resolution fails fast if the index was never built)
-      val live = graft.sources.CatalogOps.liveEpochTable(batch.sparkSession, table)
-      graft.sources.CatalogOps.appendBucketed(
-        shingleRelation(batch, idCol, textCol).select("shingle").distinct(),
-        live, bucketCols = Seq("shingle"),
-        numBuckets = bucketsOf(batch.sparkSession, live),
-        sortCols = Seq("shingle"))
-    }
+    graft.sources.CatalogOps.writeBucketed(
+      shingleRelation(train, idCol, textCol).select("shingle").distinct(),
+      table, bucketCols = Seq("shingle"), numBuckets = IndexBuckets,
+      sortCols = Seq("shingle"))
 
   /** Benchmark-contamination of an arriving batch against the PERSISTED
     * train-shingle index: per batch document, the fraction of its
     * distinct shingles present anywhere in the standing train split —
     * `t_contamination`'s output contract with the train side read off
     * the index. Exchange shape (plan-asserted in ShingleIndexSpec):
-    * the index-side distinct AND the join both ride the bucketed
-    * scan's (shingle) distribution — the only shingle exchange is the
-    * batch's own, and the per-document rollup shuffles batch-sized id
-    * keys. At 100 TB the standing index is the big side and never
+    * the join rides the bucketed scan's (shingle) distribution — the
+    * only shingle exchange is the batch's own, and the per-document
+    * rollup shuffles batch-sized id keys. At 100 TB the standing index is the big side and never
     * moves.
     */
   def contaminationAgainstIndex(batch: DataFrame, idCol: String,
@@ -424,8 +292,9 @@ object Dedup {
     // rollup instead of scanning and re-shingling the batch once per
     // aggregate.
     val rel = shingleRelation(batch, idCol, textCol)
-    val train = spark.table(table.qualified).select("shingle").distinct()
-      .withColumn("hit", lit(1))
+    // the index holds each shingle once ([[writeShingleIndex]]), so the
+    // left join matches at most one index row per batch shingle
+    val train = spark.table(table.qualified).withColumn("hit", lit(1))
     rel.join(train, Seq("shingle"), "left")
       .groupBy("id")
       .agg(count(lit(1)).as("total"),
@@ -439,7 +308,7 @@ object Dedup {
     * al. 2022, "Deduplicating Training Data Makes Language Models
     * Better", re-shaped from suffix arrays to a distributed
     * hash-gram inverted index): find maximal character spans of length
-    * ≥ `gramLen` that appear in ≥ `minDocs` distinct documents.
+    * ≥ `gramLen` that appear in ≥ 2 distinct documents.
     * Doc-level Jaccard misses these — a unique document quoting a
     * duplicated paragraph keeps its span.
     *
@@ -447,26 +316,23 @@ object Dedup {
     *  1. char `gramLen`-grams with (doc, pos) — the corpus×gramLen
     *     position inflation is the documented cost of substring dedup;
     *     it is map-only off the scan.
-    *  2. groupBy gram hash, keep hashes in ≥ minDocs docs (map-side
-    *     combined; the md5 keys shuffle, positions do not).
-    *  3. join positions back on the duplicated hashes (shuffle bounded
-    *     by duplicated-position count).
-    *  4. merge overlapping/adjacent duplicated gram starts per doc into
+    *  2. keep the grams whose hash occurs in two docs: min(id) !=
+    *     max(id) over a window keyed by the hash (one exchange, no
+    *     join-back).
+    *  3. merge overlapping/adjacent duplicated gram starts per doc into
     *     maximal spans — gaps-and-islands with TWO windows over ONE
     *     (doc → pos) exchange.
     * Output: (id, span_id, span_start, span_end, span_len), 1-based
     * inclusive character offsets.
     */
   def duplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-      gramLen: Int = 30, minDocs: Int = 2): DataFrame = {
+      gramLen: Int = 30): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // Gram identity travels as a 128-bit xxhash64 pair on the minDocs=2
-    // fast path (see below; md5 was measured at 4.5 s of the operator's
-    // 13 s at sf0.1 before being dropped for the raw gram, and the raw
-    // gram in turn made the window exchange sort 30-char strings —
-    // xxhash64 is a ~ns codegen hash and two longs sort/shuffle for a
-    // third of the bytes). The general minDocs path still groups the
-    // raw gram (countDistinct needs the exact key relation anyway).
+    // Gram identity travels as a 128-bit xxhash64 pair (see below; md5
+    // was measured at 4.5 s of the operator's 13 s at sf0.1 before
+    // being dropped for the raw gram, and the raw gram in turn made the
+    // window exchange sort 30-char strings — xxhash64 is a ~ns codegen
+    // hash and two longs sort/shuffle for a third of the bytes).
     val grams = df.select(col(idCol).as("id"), col(textCol).as("text"))
       .select(col("id"),
         explode(when(length(col("text")) >= gramLen,
@@ -475,45 +341,35 @@ object Dedup {
         col("text"))
       .select(col("id"), col("pos"),
         col("text").substr(col("pos"), lit(gramLen)).as("h"))
-    // minDocs=2 (the common case): a gram is duplicated iff
-    // min(id) != max(id) over its key — computed as a WINDOW over h,
-    // not a groupBy+join-back. Gram keys are nearly all unique, so a
-    // hash aggregate builds a corpus-sized hash map per task for
-    // nothing (measured: the agg+join formulation spent 2/3 of the
-    // operator's wall-clock there); the window is sort-based — one
-    // exchange on h, a streaming per-partition sort, no join, and the
-    // gram pass runs ONCE instead of twice.
-    val dp =
-      if (minDocs == 2) {
-        // Group on a 128-bit hash of the gram, not the 30-char gram
-        // itself (guide §2.3 "narrower types"): the window exchanges
-        // and SORTS every gram row, and two longs shuffle/compare for
-        // a third of the raw key's bytes. Two independent xxhash64
-        // draws (plain, and length-prefixed) give a 2⁻¹²⁸-class
-        // collision probability — ~10⁻²⁰ even at 10¹⁰ grams, the same
-        // accept-the-hash class as the md5 keys the dedup family
-        // already groups on — and the DuckDB oracle still groups RAW
-        // substrings, so any collision that ever mattered would fail
-        // the hash compare (verified sf0.001/0.01/0.1 this round).
-        val wH = Window.partitionBy(col("h1"), col("h2"))
-        grams
-          // project the raw gram away BEFORE the exchange — only the
-          // two longs (and id, pos) cross the wire
-          .select(col("id"), col("pos"),
-            xxhash64(col("h")).as("h1"),
-            xxhash64(lit(0x9e3779b9L), col("h")).as("h2"))
-          .withColumn("lo", min(col("id")).over(wH))
-          .withColumn("hi", max(col("id")).over(wH))
-          .filter(col("lo") =!= col("hi"))
-          .select("id", "pos")
-      } else {
-        val dup = grams.groupBy("h")
-          .agg(countDistinct(col("id")).as("nd"))
-          .filter(col("nd") >= minDocs)
-          .select("h")
-        // one gram per (id, pos), one matching dup key → already unique
-        grams.join(dup, "h").select("id", "pos")
-      }
+    // A gram is duplicated iff min(id) != max(id) over its key —
+    // computed as a WINDOW over the key, not a groupBy+join-back. Gram
+    // keys are nearly all unique, so a hash aggregate builds a
+    // corpus-sized hash map per task for nothing (measured: the
+    // agg+join formulation spent 2/3 of the operator's wall-clock
+    // there); the window is sort-based — one exchange on the key, a
+    // streaming per-partition sort, no join, and the gram pass runs
+    // ONCE instead of twice.
+    //
+    // The key is a 128-bit hash of the gram, not the 30-char gram
+    // itself (guide §2.3 "narrower types"): the window exchanges and
+    // SORTS every gram row, and two longs shuffle/compare for a third
+    // of the raw key's bytes. Two independent xxhash64 draws (plain,
+    // and length-prefixed) give a 2⁻¹²⁸-class collision probability —
+    // ~10⁻²⁰ even at 10¹⁰ grams, the same accept-the-hash class as the
+    // md5 keys the dedup family already groups on — and the DuckDB
+    // oracle still groups RAW substrings, so any collision that ever
+    // mattered would fail the hash compare.
+    val wH = Window.partitionBy(col("h1"), col("h2"))
+    val dp = grams
+      // project the raw gram away BEFORE the exchange — only the two
+      // longs (and id, pos) cross the wire
+      .select(col("id"), col("pos"),
+        xxhash64(col("h")).as("h1"),
+        xxhash64(lit(0x9e3779b9L), col("h")).as("h2"))
+      .withColumn("lo", min(col("id")).over(wH))
+      .withColumn("hi", max(col("id")).over(wH))
+      .filter(col("lo") =!= col("hi"))
+      .select("id", "pos")
     val w = Window.partitionBy(col("id")).orderBy(col("pos"))
     val flagged = dp
       .withColumn("brk",
@@ -795,8 +651,7 @@ object Dedup {
     val bAss = Similarity.assignCells(batch, cents)
     val cells = bAss.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val cAss = spark.read.parquet(
-      graft.sources.EpochDir.live(spark, s"$path/cells"))
+    val cAss = spark.read.parquet(s"$path/cells")
       .filter(col("cell").isin(cells: _*))
     semanticWitness(cAss, bAss, tau)
   }

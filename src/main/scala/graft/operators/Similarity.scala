@@ -519,11 +519,8 @@ object Similarity {
   def writeIvfIndex(corpus: DataFrame, path: String, nlist: Int = 16): Unit = {
     val cents = seedCentroids(corpus, nlist)
     cents.write.mode("overwrite").parquet(s"$path/centroids")
-    graft.sources.EpochDir.publish(corpus.sparkSession, s"$path/cells") {
-      target =>
-        assignCells(corpus, cents)
-          .write.mode("overwrite").partitionBy("cell").parquet(target)
-    }
+    assignCells(corpus, cents)
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
   }
 
   /** Grow a [[writeIvfIndex]] index by an ingested batch: assign the
@@ -532,23 +529,14 @@ object Similarity {
     * and append them into the partitionBy(cell) layout — each batch
     * row lands in its cell's directory, so probed searches and the
     * incremental dedup path partition-prune over old and new rows
-    * alike. The batch pays only its own assignment pass.
+    * alike. The batch pays only its own assignment pass. A plain
+    * append: one writer at a time, and a reader that lists the cells
+    * mid-append may see part of the batch.
     */
   def appendToIvfIndex(batch: DataFrame, path: String): Unit = {
-    val spark = batch.sparkSession
-    // single-writer lock across resolve+append (keyed on the cells
-    // store, same key compaction publishes under): serializes
-    // concurrent appenders and keeps a compaction from reading the
-    // epoch mid-append
-    graft.sources.IndexLock.withWriterLock(spark, s"$path/cells") {
-      // batches land INSIDE the live epoch — appends never create
-      // epochs (a concurrent reader sees pre- or post-append listing,
-      // both valid corpus states)
-      val live = graft.sources.EpochDir.live(spark, s"$path/cells")
-      val cents = spark.read.parquet(s"$path/centroids")
-      assignCells(batch, cents)
-        .write.mode("append").partitionBy("cell").parquet(live)
-    }
+    val cents = batch.sparkSession.read.parquet(s"$path/centroids")
+    assignCells(batch, cents)
+      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
   }
 
   /** ANN over a PERSISTED [[writeIvfIndex]] index: probe cells come
@@ -559,22 +547,12 @@ object Similarity {
     * Same results as [[ivfTopK]] over the same corpus.
     */
   def ivfTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
-      k: Int, nProbe: Int = 4, atEpoch: Option[Long] = None): DataFrame = {
-    // resolve the live epoch ONCE: the whole search plans against its
-    // immutable file paths, so a concurrent compaction (which publishes
-    // a NEW epoch and never touches this one) cannot tear the read.
-    // `atEpoch` pins the read to a SPECIFIC committed snapshot instead
-    // (EpochDir.at) — the reproducible-run protocol: results are
-    // identical across re-runs no matter what publishes in between,
-    // inside the retain window.
-    val live = atEpoch
-      .map(e => graft.sources.EpochDir.at(spark, s"$path/cells", e))
-      .getOrElse(graft.sources.EpochDir.live(spark, s"$path/cells"))
+      k: Int, nProbe: Int = 4): DataFrame = {
     val cents = spark.read.parquet(s"$path/centroids")
     val qprobes = probeCells(queries, cents, nProbe)
     val cells = qprobes.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val assigned = spark.read.parquet(live)
+    val assigned = spark.read.parquet(s"$path/cells")
       .filter(col("cell").isin(cells: _*))
     rerankCells(assigned, qprobes, k)
   }
@@ -593,8 +571,8 @@ object Similarity {
     * round-6 value feeds only the ARGMIN (round-6 double and round-6
     * exact decimal agree on the winner), ties to the lower centroid
     * id. The single source of truth for PQ assignment — the query
-    * layer and the persisted-index growth path both call it, so the
-    * two can never drift.
+    * layer's encoder and [[pqEncode]] both call it, so the two can
+    * never drift.
     */
   private[graft] def pqAssignSubs(subs: DataFrame, cents: DataFrame): DataFrame = {
     import graft.plans.FloatVecOps.floatSqDist
@@ -780,18 +758,9 @@ object Similarity {
     cents.write.mode("overwrite").parquet(s"$path/codebooks")
     val assigned = assignCells(recon, coarse)
       .select(col("vid"), col("cell"))
-    // `_batch = -1` marks base-build rows; an ingest with a batch id
-    // writes its own `_batch=<id>` leaf so replays are idempotent
-    // (see [[appendToIvfPqIndex]]). The second partition level changes
-    // directory depth only — cell pruning is untouched (cell stays the
-    // first level) and search reads ignore the column.
-    graft.sources.EpochDir.publish(spark, s"$path/codes") { target =>
-      staged.select(col("vec_id").as("vid"), col("m"), col("cid"))
-        .join(assigned, "vid")
-        .withColumn("_batch", lit(-1L))
-        .write.mode("overwrite").partitionBy("cell", "_batch")
-        .parquet(target)
-    }
+    staged.select(col("vec_id").as("vid"), col("m"), col("cid"))
+      .join(assigned, "vid")
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes_staging"), true)
@@ -802,39 +771,26 @@ object Similarity {
     * ingest, or every stored code would decode differently) and assign
     * cells from the batch's RECONSTRUCTION against the STORED coarse
     * centroids (cells must not move, or every inverted list would need
-    * rebuilding) — the same invariants as [[appendToIvfIndex]], now
-    * for both quantizer levels. Each batch row lands in its cell's
+    * rebuilding) — the same invariants as [[appendToIvfIndex]], for
+    * both quantizer levels. Each batch row lands in its cell's
     * directory; the batch pays one encode pass + one assignment pass,
     * and the standing index never rewrites. Spec-proven equal to a
-    * full rebuild over the combined corpus (IvfIndexSpec).
+    * full rebuild over the combined corpus (IvfIndexSpec). A plain
+    * append, like [[appendToIvfIndex]].
     *
-    * The geometry is the one every index is written with ([[PqM]] ×
-    * [[PqD]]), and the batch's lowest id must clear the stored nlist:
+    * The batch's lowest id must clear the stored nlist:
     * [[seedCentroidsLiteral]] seeds the coarse quantizer from the
     * LOWEST ids, so an appended id below nlist would make a later full
     * rebuild pick different seeds than the grown index — voiding the
-    * spec-proven rebuild equivalence. The guard costs one min() over
-    * the batch (O(batch), map-side).
-    *
-    * Delivery: pass `batchId` (e.g. the Structured Streaming batch id)
-    * to make the write IDEMPOTENT — rows land under
-    * `cell=<c>/_batch=<id>/` via dynamic partition overwrite, so a
-    * replayed micro-batch OVERWRITES its own leaf directories instead
-    * of appending duplicates (deterministic encode ⇒ identical rows).
-    * Without a batchId, rows land under `_batch=-1` with plain append
-    * semantics (one-off batch growth; caller owns retry hygiene).
+    * rebuild equivalence. The guard costs one min() over the batch
+    * (O(batch), map-side). An empty batch is a no-op.
     */
-  def appendToIvfPqIndex(batch: DataFrame, path: String,
-      batchId: Option[Long] = None): Unit =
-      graft.sources.IndexLock.withWriterLock(
-        batch.sparkSession, s"$path/codes") {
+  def appendToIvfPqIndex(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
-    // batches land INSIDE the live epoch (appends never create epochs)
-    val live = graft.sources.EpochDir.live(spark, s"$path/codes")
     val coarse = spark.read.parquet(s"$path/coarse")
     val cbooks = spark.read.parquet(s"$path/codebooks")
     val minIdRow = batch.agg(min(col("vec_id").cast("long"))).head()
-    if (minIdRow.isNullAt(0)) return // empty batch (idle micro-batch)
+    if (minIdRow.isNullAt(0)) return
     val nlist = coarse.count()
     require(minIdRow.getLong(0) >= nlist,
       s"appendToIvfPqIndex: batch min vec_id ${minIdRow.getLong(0)} is " +
@@ -844,88 +800,10 @@ object Similarity {
     val codes = pqEncode(batch, cbooks)
     val assigned = assignCells(pqReconstruct(codes, cbooks), coarse)
       .select(col("vid"), col("cell"))
-    val rows = codes.select(col("vec_id").as("vid"), col("m"), col("cid"))
+    codes.select(col("vec_id").as("vid"), col("m"), col("cid"))
       .join(assigned, "vid")
-      .withColumn("_batch", lit(batchId.getOrElse(-1L)))
-    batchId match {
-      case Some(_) =>
-        rows.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell", "_batch").parquet(live)
-      case None =>
-        rows.write.mode("append")
-          .partitionBy("cell", "_batch").parquet(live)
-    }
+      .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
   }
-
-  /** OPTIMIZE for the cell-partitioned vector indexes: each
-    * [[appendToIvfIndex]] / [[appendToIvfPqIndex]] batch lands its own
-    * small files inside every cell directory it touches, so after B
-    * batches a probed search opens O(B) files per probed cell — the
-    * small-files spiral that eventually dominates open/seek time at
-    * 100 TB ingest cadence. Rewrites the cell data to FEW, SIZE-BOUNDED
-    * files per cell, PRESERVING the partitionBy(cell) layout:
-    *  - the repartitionByRange on (cell, vid) keeps each cell's rows on
-    *    as few tasks as the size budget allows (cold cells share a
-    *    task → one file each) while a HOT cell spans several vid
-    *    ranges — so compaction output scales with data, never "one
-    *    arbitrarily large task and file per hot cell";
-    *  - `maxRecordsPerFile` caps every emitted file, hot or cold —
-    *    spec-asserted over a deliberately skewed cell in
-    *    CompactionSpec, together with the preserved pruning.
-    * A `_batch` ingest level (IVFPQ codes) is collapsed to `-1`:
-    * compaction is the batch-history horizon, so it requires quiesced
-    * WRITERS as well as readers.
-    *
-    * Publish is a NEW EPOCH ([[graft.sources.EpochDir]]): the
-    * compacted copy lands beside the live epoch and commits via its
-    * `_SUCCESS` marker; no live file ever moves, so CONCURRENT READERS
-    * are safe — a search planned against epoch N keeps its files while
-    * N+1 publishes (one superseded epoch is retained as grace) and
-    * returns the pre-compaction result; the next open resolves N+1.
-    * Spec-asserted under a live search loop across ≥20 compaction
-    * cycles in SoakSpec. A crash mid-write leaves an uncommitted epoch
-    * the resolver never sees and the next publish overwrites. (On
-    * object stores this is also rename-free — pure write + delete —
-    * so raw S3A needs no rename-capable layer anymore.)
-    */
-  def compactCellIndex(spark: SparkSession, dir: String,
-      maxRecordsPerFile: Long = 4L * 1024 * 1024,
-      retain: Int = 1): Unit =
-      graft.sources.IndexLock.withWriterLock(spark, dir) {
-    // writer lock spans resolve+rewrite+publish: an append landing in
-    // the live epoch after this read would vanish from the compacted
-    // successor — the lock makes read-to-publish atomic against other
-    // writers (readers stay lock-free on epochs)
-    val live = spark.read.parquet(graft.sources.EpochDir.live(spark, dir))
-    val total = live.count()
-    val nParts = math.max(1L,
-      math.ceil(total.toDouble / maxRecordsPerFile).toLong).toInt
-    val hasBatch = live.columns.contains("_batch")
-    val ranged = live.repartitionByRange(nParts, col("cell"), col("vid"))
-    val (out, partCols) =
-      if (hasBatch) (ranged.withColumn("_batch", lit(-1L)),
-        Seq("cell", "_batch"))
-      else (ranged, Seq("cell"))
-    graft.sources.EpochDir.publish(spark, dir, retain) { target =>
-      out.write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .partitionBy(partCols: _*).parquet(target)
-    }
-  }
-
-  /** [[compactCellIndex]] over a [[writeIvfIndex]] index. `retain`
-    * sizes the grace window (superseded epochs kept for in-flight
-    * readers; default 1).
-    */
-  def compactIvfIndex(spark: SparkSession, path: String,
-      retain: Int = 1): Unit =
-    compactCellIndex(spark, s"$path/cells", retain = retain)
-
-  /** [[compactCellIndex]] over a [[writeIvfPqIndex]] index. */
-  def compactIvfPqIndex(spark: SparkSession, path: String,
-      retain: Int = 1): Unit =
-    compactCellIndex(spark, s"$path/codes", retain = retain)
 
   /** ANN over a PERSISTED [[writeIvfPqIndex]] index — the full FAISS
     * IndexIVFPQ read path: probe cells come from the stored coarse
@@ -941,18 +819,7 @@ object Similarity {
     * exactly; floats round-trip parquet bit-for-bit).
     */
   def adcIvfTopKIndexed(spark: SparkSession, path: String,
-      queries: DataFrame, k: Int, nProbe: Int = 4,
-      atEpoch: Option[Long] = None): DataFrame = {
-    // resolve the live epoch ONCE: the whole search plans against its
-    // immutable file paths, so a concurrent compaction (which publishes
-    // a NEW epoch and never touches this one) cannot tear the read.
-    // `atEpoch` pins the read to a SPECIFIC committed snapshot
-    // (EpochDir.at — the reproducible-run protocol; coarse/codebooks
-    // are immutable model state, so pinning the code store pins the
-    // whole search).
-    val liveCodes = atEpoch
-      .map(e => graft.sources.EpochDir.at(spark, s"$path/codes", e))
-      .getOrElse(graft.sources.EpochDir.live(spark, s"$path/codes"))
+      queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
     val coarse = spark.read.parquet(s"$path/coarse")
     val cbooks = spark.read.parquet(s"$path/codebooks")
     val qprobes = probeCells(queries, coarse, nProbe)
@@ -962,7 +829,7 @@ object Similarity {
     val lut = pqLut(queries, cbooks)
     val qn = queries.select(col("vec_id").as("qid"),
       sqrt(norm2Exact(col("embedding"))).as("qnrm"))
-    val scored = spark.read.parquet(liveCodes)
+    val scored = spark.read.parquet(s"$path/codes")
       .filter(col("cell").isin(cells: _*))
       .join(broadcast(qprobes), Seq("cell"))
       .filter(col("qid") =!= col("vid"))

@@ -12,8 +12,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   * 3600 s acquire timeout polling every 5 s (lock.py:27-57), plus an
   * `is_locked` probe that garbage-collects stale lock files left by dead
   * pids (lock.py:76-101). The live reference code acquires without a
-  * finally-release (SURVEY.md A39 quirk); here [[withLock]] guarantees
-  * release (designed fix).
+  * finally-release (SURVEY.md A39 quirk); here the caller releases in a
+  * finally (Migrator's `underLock`, the designed fix).
   *
   * ONE OPEN FD PER LOCK FILE PER PROCESS — the load-bearing rule.
   * `FileChannel` locks are POSIX record locks on Linux, and POSIX drops
@@ -24,9 +24,11 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   * the held lock at the OS level, so two PROCESSES could both "hold"
   * the lock — in-JVM tests stayed green because the JVM arbitrates
   * same-process contention in its own lock table, masking the loss.
-  * Found by CrossProcessSoakSpec (two real JVMs corrupted one epoch
-  * store); mechanism isolated by a two-process probe: tryLock excludes
-  * correctly until a second fd is opened and closed. Therefore:
+  * Found by a two-JVM soak over a shared index store (two real JVMs
+  * both wrote under the lock; TableLockCrossProcessSpec now holds two
+  * JVMs to disjoint hold intervals); mechanism isolated by a
+  * two-process probe: tryLock excludes correctly until a second fd is
+  * opened and closed. Therefore:
   *  - same-JVM contention is arbitrated by a process-wide GATE (one
   *    `ReentrantLock` per absolute lock path) — waiting threads never
   *    open the file at all;
@@ -119,11 +121,10 @@ final class TableLock(lockDir: String, db: String, table: String,
 
   /** Acquire with timeout/retry (lock.py:27-57). Returns false on timeout.
     * Two levels: the process-wide gate first (same-JVM threads queue
-    * here, fd-free), then the flock (cross-process). Reentrancy is the
-    * CALLER's tier (graft.sources.IndexLock keys it on the canonical
-    * index identity) — a same-thread re-acquire at this tier would open
-    * a second fd on a file whose lock this process holds, so it fails
-    * loud instead of silently dropping the lock.
+    * here, fd-free), then the flock (cross-process). The lock is not
+    * reentrant: a same-thread re-acquire would open a second fd on a
+    * file whose lock this process holds, so it times out instead of
+    * silently dropping the lock.
     */
   def acquire(): Boolean = {
     Files.createDirectories(path.getParent)
@@ -188,20 +189,13 @@ final class TableLock(lockDir: String, db: String, table: String,
     if (channel != null) { channel.close(); channel = null }
     if (gated) { gated = false; gate.unlock() }
   }
-
-  /** Scoped acquire/release — the finally the reference forgot. */
-  def withLock[A](body: => A): A = {
-    if (!acquire())
-      throw new IllegalStateException(s"timeout acquiring lock for $db.$table")
-    try body finally release()
-  }
 }
 
 object TableLock {
   /** Process-wide gates, one per ABSOLUTE lock path: same-JVM
     * arbitration that never touches the file. Entries are one small
-    * object per distinct lock file (tables + standing indexes — a
-    * bounded set); they live for the JVM.
+    * object per distinct lock file (one per table — a bounded set);
+    * they live for the JVM.
     */
   private val gates =
     new java.util.concurrent.ConcurrentHashMap[String,

@@ -43,9 +43,6 @@ object DedupQueries {
   /** Standing corpus band index for `d_incremental_indexed`, built
     * once per JVM per dataset (nonce-scoped name, tracked warehouse
     * files).
-    * The index name is an epoch VIEW ([[graft.sources.CatalogOps
-    * .publishEpoch]]); the live epoch TABLE owns the files Scratch
-    * tracks — queries never compact, so e0 is this JVM's only epoch.
     */
   private val BandIndex =
     new Kind[graft.model.TableRef]("d_incremental_indexed band index")
@@ -60,8 +57,7 @@ object DedupQueries {
       val corpus = d.crossJoin(broadcast(cut))
         .filter(col("doc_id") < col("cut")).drop("cut")
       Dedup.writeBandIndex(corpus, "doc_id", "text", t)
-      graft.sources.Scratch.trackTable(s,
-        graft.sources.CatalogOps.liveEpochTable(s, t))
+      graft.sources.Scratch.trackTable(s, t)
       t
     }
 
@@ -228,8 +224,7 @@ object DedupQueries {
     // the production shape: writeBandIndex pays the corpus signature
     // pass once per generation (standing per-JVM build, logged), and
     // each arriving batch probes it with ZERO index-side exchange (the
-    // bucketed layout IS the join partitioning). The index name is an
-    // epoch VIEW, so a republish can run concurrently with these probes.
+    // bucketed layout IS the join partitioning).
     // Oracle: identical to d_incremental — the index path must
     // reproduce the inline computation bit-for-bit, now checked by the
     // driver gate and not just the spec.
@@ -250,8 +245,7 @@ object DedupQueries {
     // merge. Catches duplicated passages inside otherwise-unique
     // documents — the mode doc-level Jaccard and MinHash both miss.
     "d_spans" -> ((s, dir) =>
-      Dedup.duplicatedSpans(docsF(s, dir), "doc_id", "text",
-        gramLen = 30, minDocs = 2)
+      Dedup.duplicatedSpans(docsF(s, dir), "doc_id", "text", gramLen = 30)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id", "span_start")),
 

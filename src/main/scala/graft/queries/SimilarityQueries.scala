@@ -860,8 +860,8 @@ object SimilarityQueries {
 
   /** Argmin codebook assignment: (vec_id, m, cid, sv) — delegates to
     * the operator-level [[Similarity.pqAssignSubs]] (the single source
-    * of truth the persisted-index growth path also encodes with, so
-    * the query layer and the index can never drift).
+    * of truth [[Similarity.pqEncode]] also encodes with, so the query
+    * layer and the index can never drift).
     */
   private def pqAssign(subs: DataFrame, cents: DataFrame): DataFrame =
     Similarity.pqAssignSubs(subs, cents)

@@ -46,11 +46,7 @@ object TextQueries {
         d.filter(TA.hashSplit(col("doc_id")) === "train"),
         "doc_id", "text", t)
       // nonce-scoped warehouse files die with the JVM like tmp scratch
-      // (the index name is an epoch VIEW — track the live epoch TABLE,
-      // which owns the files; queries never compact, so e0 is the only
-      // epoch this JVM creates)
-      graft.sources.Scratch.trackTable(s,
-        graft.sources.CatalogOps.liveEpochTable(s, t))
+      graft.sources.Scratch.trackTable(s, t)
       t
     }
 
@@ -362,23 +358,24 @@ object TextQueries {
     // global token frequencies ranked with each rank's CUMULATIVE share
     // of all token occurrences, i.e. "a vocab truncated at rank r
     // covers cum_share of the corpus". The heavy work (corpus-sized
-    // explode + count) is one map-side-combined shuffle; the ranking
-    // window then runs over the VOCABULARY domain, which is orders of
-    // magnitude smaller than the corpus (~1e5-1e6 types at 100 TB —
-    // fine for a single ordered partition, and the standard shape for
-    // frequency-cutoff vocab builds).
+    // explode + count) is one map-side-combined shuffle. Rank and
+    // running share of the first 30 ranks depend only on the 30
+    // largest counts and the total, so a top-30 cut on the total order
+    // (cnt desc, token) runs before the single-partition ranking
+    // window, which then sorts 30 rows instead of the whole vocabulary;
+    // the total still sums every count.
     "t_vocab" -> ((s, dir) => {
       val counts = docs(s, dir)
         .select(explode(split(col("text"), " ")).as("token"))
         .groupBy("token").agg(count(lit(1)).as("cnt"))
       val w = Window.orderBy(col("cnt").desc, col("token"))
-      counts.crossJoin(broadcast(counts.agg(sum(col("cnt")).as("total"))))
+      counts.orderBy(col("cnt").desc, col("token")).limit(30)
+        .crossJoin(broadcast(counts.agg(sum(col("cnt")).as("total"))))
         .withColumn("rank", row_number().over(w))
         .withColumn("cum_share",
           round(sum(col("cnt")).over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
             .cast("double") / col("total").cast("double"), 6))
-        .filter(col("rank") <= 30)
         .select(col("rank"), col("token"), col("cnt"), col("cum_share"))
         .orderBy("rank")
     }),

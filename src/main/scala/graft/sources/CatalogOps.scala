@@ -27,163 +27,6 @@ object CatalogOps {
   def tableExists(spark: SparkSession, ref: TableRef): Boolean =
     spark.catalog.tableExists(s"${ref.db}.${ref.table}")
 
-  // --- Epoch views: the catalog twin of [[EpochDir]] ------------------
-  //
-  // A standing bucketed index (band index, shingle index) is published
-  // as a VIEW named `ref` over an immutable epoch TABLE `ref__e<N>`.
-  // Readers keep using `spark.table(ref)` — view resolution happens at
-  // analysis time, so every query plans against an epoch table whose
-  // files never move; compaction writes `__e<N+1>` and atomically
-  // re-points the view (CREATE OR REPLACE VIEW is one catalog op),
-  // which can never strand an in-flight reader the way the previous
-  // rename-aside table swap could (a swap moves the files a planned
-  // query is about to open). One superseded epoch is retained as grace
-  // for readers that resolved just before the flip; a crash mid-write
-  // leaves an unreferenced epoch table the next publish drops and
-  // rewrites.
-
-  // The base index name must never carry the `__e<digits>` infix —
-  // [[publishEpoch]] enforces it, so an epoch table name parses back to
-  // exactly one (base, epoch) pair.
-  private val EpochSuffix = "__e(\\d+)".r
-
-  private def requireEpochSafeName(ref: TableRef): Unit =
-    require(EpochSuffix.findFirstIn(ref.table).isEmpty,
-      s"epoch index name '${ref.table}' contains the reserved " +
-        "'__e<digits>' infix — epoch resolution would be ambiguous; " +
-        "pick a different index name")
-
-  def epochRef(ref: TableRef, n: Long): TableRef =
-    TableRef(ref.db, s"${ref.table}__e$n")
-
-  /** Fails when `ref` is bound to a plain TABLE rather than the epoch
-    * VIEW — the pre-epoch layout, which no epoch reader or writer
-    * touches.
-    */
-  private def rejectPlainTable(spark: SparkSession, ref: TableRef): Unit =
-    if (spark.catalog.getTable(ref.db, ref.table).tableType != "VIEW")
-      throw new IllegalStateException(
-        s"index ${ref.qualified} exists as a plain TABLE — the " +
-          "pre-epoch layout; drop it and rebuild the index under the " +
-          "epoch-view layout")
-
-  /** The epoch number the index view currently points at (None if the
-    * view does not exist — index never built), read off the epoch
-    * table the view's analyzed plan reads.
-    */
-  def currentEpoch(spark: SparkSession, ref: TableRef): Option[Long] =
-    if (!tableExists(spark, ref)) None
-    else {
-      rejectPlainTable(spark, ref)
-      EpochSuffix.findFirstMatchIn(resolveToBaseTable(spark, ref).table)
-        .map(_.group(1).toLong)
-    }
-
-  /** The live epoch TABLE behind the index view — for writers
-    * (appends go INSIDE the live epoch) and for metadata introspection
-    * (views have no location).
-    */
-  def liveEpochTable(spark: SparkSession, ref: TableRef): TableRef = {
-    val n = currentEpoch(spark, ref).getOrElse(
-      throw new IllegalStateException(
-        s"liveEpochTable: index view ${ref.qualified} does not exist"))
-    epochRef(ref, n)
-  }
-
-  /** Publish a new epoch: `write` materializes the epoch table, then
-    * the view flips to it atomically and epochs older than the
-    * `retain` just-superseded ones are dropped (size `retain` to the
-    * slowest concurrent reader; default ONE superseded epoch of
-    * grace). Used by both the initial build (epoch 0) and every
-    * rebuild/compaction. A name bound to a plain TABLE is refused.
-    *
-    * Crash rule: a table already bound to the new epoch's name can only
-    * be left by a publish that died before its view flip, so it is
-    * dropped before the write.
-    */
-  def publishEpoch(spark: SparkSession, ref: TableRef, retain: Int = 1)
-      (write: TableRef => Unit): Unit =
-      IndexLock.withWriterLock(spark, ref.qualified) {
-    require(retain >= 1, s"publishEpoch: retain must be >= 1 ($retain)")
-    requireEpochSafeName(ref)
-    val next = currentEpoch(spark, ref).map(_ + 1).getOrElse(0L)
-    dropTable(spark, epochRef(ref, next))
-    write(epochRef(ref, next))
-    spark.sql(s"CREATE OR REPLACE VIEW ${ref.qualified} AS " +
-      s"SELECT * FROM ${epochRef(ref, next).qualified}")
-    // grace: keep `retain` superseded epochs for in-flight readers;
-    // drop older ones (plus any crashed-write debris below the live
-    // epoch)
-    epochs(spark, ref).filter(_ < next - retain)
-      .foreach(n => dropTable(spark, epochRef(ref, n)))
-  }
-
-  /** Committed epoch numbers of a catalog index (epoch tables still
-    * present), ascending — the snapshots a reader can pin to.
-    */
-  def epochs(spark: SparkSession, ref: TableRef): Seq[Long] = {
-    val prefix = s"${ref.table}__e"
-    if (!spark.catalog.databaseExists(ref.db)) Nil
-    else spark.catalog.listTables(ref.db).collect().toSeq
-      .filter(t => t.tableType != "VIEW" && t.name.startsWith(prefix))
-      .map(_.name.stripPrefix(prefix))
-      .filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toLong).sorted
-  }
-
-  /** The index AT a specific epoch — the snapshot-pinned read for
-    * reproducible runs (see [[EpochDir.at]] for the protocol): record
-    * [[currentEpoch]] when the run starts and read through this, and
-    * the run replays against the exact index snapshot regardless of
-    * concurrent publishes, inside the retain window. Fails loud when
-    * the epoch is gone.
-    */
-  def tableAtEpoch(spark: SparkSession, ref: TableRef,
-      epoch: Long): DataFrame = {
-    val e = epochRef(ref, epoch)
-    if (!tableExists(spark, e))
-      throw new IllegalArgumentException(
-        s"epoch $epoch of ${ref.qualified} is not present " +
-          s"(committed: ${epochs(spark, ref).mkString(", ")}) — purged " +
-          "past the retain window or never published; size `retain` to " +
-          "the slowest pinned run")
-    spark.table(e.qualified)
-  }
-
-  /** BIT-EXACT snapshot pin for a catalog epoch-view index — the
-    * [[EpochDir.pinSnapshot]] twin: runs `publishRun` (an OPTIMIZE that
-    * ends in [[publishEpoch]] of this ref, e.g.
-    * [[graft.operators.Dedup.compactBandIndex]]) under the writer lock
-    * and returns the epoch number that was LIVE at entry — now
-    * superseded, hence immutable. Read it back with [[tableAtEpoch]]
-    * for the duration of the pinned run; it survives `retain` further
-    * publishes.
-    */
-  def pinSnapshot(spark: SparkSession, ref: TableRef)
-      (publishRun: => Unit): Long =
-      IndexLock.withWriterLock(spark, ref.qualified) {
-    val pin = currentEpoch(spark, ref).getOrElse(
-      throw new IllegalArgumentException(
-        s"pinSnapshot: index ${ref.qualified} does not exist — nothing to pin"))
-    publishRun
-    val now = currentEpoch(spark, ref)
-    require(now.exists(_ > pin),
-      s"pinSnapshot: publishRun did not publish a new epoch of " +
-        s"${ref.qualified} (live ${now.orNull} after, pin $pin) — pass " +
-        "an OPTIMIZE that calls publishEpoch on this index")
-    pin
-  }
-
-  /** Tear down an epoch-view index: the view and every epoch table. */
-  def dropEpochIndex(spark: SparkSession, ref: TableRef): Unit = {
-    spark.sql(s"DROP VIEW IF EXISTS ${ref.qualified}")
-    val prefix = s"${ref.table}__e"
-    spark.catalog.listTables(ref.db).collect()
-      .filter(t => t.name.startsWith(prefix) &&
-        t.name.stripPrefix(prefix).forall(_.isDigit))
-      .foreach(t => dropTable(spark, TableRef(ref.db, t.name)))
-  }
-
   /** Resolve a name that may be a VIEW — possibly a view over a view —
     * to the single base TABLE its plan reads: the Spark-catalog analog
     * of the reference's Distributed-engine resolution (reference:
@@ -228,16 +71,11 @@ object CatalogOps {
       .map(_.name).toSeq
 
   /** Where a catalog entry's files live (None for a view, which has no
-    * storage) and its bucket count (None when unbucketed), read from the
-    * session catalog's table metadata.
+    * storage), read from the session catalog's table metadata.
     */
-  final case class Storage(location: Option[java.net.URI], buckets: Option[Int])
-
-  def storageOf(spark: SparkSession, ref: TableRef): Storage = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      TableIdentifier(ref.table, Some(ref.db)))
-    Storage(meta.storage.locationUri, meta.bucketSpec.map(_.numBuckets))
-  }
+  def storageOf(spark: SparkSession, ref: TableRef): Option[java.net.URI] =
+    spark.sessionState.catalog.getTableMetadata(
+      TableIdentifier(ref.table, Some(ref.db))).storage.locationUri
 
   /** Structural schema introspection (replaces SHOW CREATE + regex). */
   def schemaOf(spark: SparkSession, ref: TableRef): StructType =
@@ -285,7 +123,7 @@ object CatalogOps {
     val partClause =
       if (partitionKeys.nonEmpty) s" PARTITIONED BY (${partitionKeys.mkString(", ")})"
       else ""
-    spark.sql(s"DROP TABLE IF EXISTS ${backup.qualified}")
+    dropTable(spark, backup)
     spark.sql(
       s"CREATE TABLE ${backup.qualified} USING parquet$partClause$locClause " +
         s"AS SELECT * FROM ${src.qualified} WHERE 1=0")
@@ -350,24 +188,6 @@ object CatalogOps {
       sortCols: Seq[String] = Nil): Unit = {
     require(bucketCols.nonEmpty, "bucketCols must be non-empty")
     val w = df.write.mode("overwrite")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    val ws =
-      if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
-    ws.format("parquet").saveAsTable(table.qualified)
-  }
-
-  /** Append to an existing [[writeBucketed]] table with the SAME bucket
-    * spec (Spark validates the spec against the catalog and rejects a
-    * mismatch — the appended files land bucketed, so downstream
-    * bucket-joins keep their zero-exchange property over old AND new
-    * data). The growth path of a standing index: each ingested batch
-    * appends its own rows instead of recomputing the corpus.
-    */
-  def appendBucketed(df: DataFrame, table: TableRef,
-      bucketCols: Seq[String], numBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
-    require(bucketCols.nonEmpty, "bucketCols must be non-empty")
-    val w = df.write.mode("append")
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
     val ws =
       if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w

@@ -80,7 +80,7 @@ object Scratch {
   /** [[track]] the storage location of a nonce-named catalog TABLE. */
   def trackTable(spark: org.apache.spark.sql.SparkSession,
       ref: graft.model.TableRef): Unit =
-    CatalogOps.storageOf(spark, ref).location.foreach(l => track(l.getPath))
+    CatalogOps.storageOf(spark, ref).foreach(l => track(l.getPath))
 
   /** Deterministic-within-JVM scratch NAME for (tag, key) — a valid
     * identifier, usable as a catalog table name as well as a path
@@ -113,10 +113,11 @@ object Scratch {
   // so user data, live standing indexes, and warehouse tables (none of
   // which are ever named by [[name]]) can never match. Two further
   // guards: entries carrying THIS JVM's nonce are skipped (they are
-  // live for this process and die with it), and an entry that somehow
-  // contains a committed epoch directory (`e<N>/_SUCCESS` — a standing
-  // index misplaced under a scratch name) is skipped loudly rather
-  // than swept. Dry-run is the default; deletion is opt-in.
+  // live for this process and die with it), and an entry that contains
+  // a committed epoch directory (`e<N>/_SUCCESS` — the layout older
+  // builds published standing indexes in, misplaced under a scratch
+  // name) is skipped loudly rather than swept. Dry-run is the default;
+  // deletion is opt-in.
 
   /** The [[name]] contract as a matcher (tag may itself contain
     * underscores, so anchor on the two trailing hex groups).
@@ -160,19 +161,6 @@ object Scratch {
       EpochChild.findFirstIn(k.getPath.getName).isDefined &&
       fs.exists(new org.apache.hadoop.fs.Path(k.getPath, "_SUCCESS")))
 
-  /** CATALOG twin of [[vacuum]]: sweep a scratch DATABASE (the
-    * `graft_scratch` convention) for leaked scratch tables — crashed
-    * JVMs leave their nonce's catalog entries (and warehouse dirs)
-    * behind, since the shutdown hook only removes tracked paths. A
-    * candidate is any table/view whose BASE name (the `__e<N>` epoch
-    * suffix stripped, so a scratch index's epoch tables and view group
-    * with it) matches the naming contract; entries carrying THIS JVM's
-    * nonce are skipped. Age is the max warehouse-dir mtime across the
-    * group's tables (a view alone has no storage and rides its epoch
-    * tables' age). Deletion drops the whole group — view first, then
-    * tables — so a scratch index never loses its epochs while its view
-    * stays resolvable. Dry-run default, same verdicts as [[vacuum]].
-    */
   /** Default mtime stat for [[vacuumCatalog]]: warehouse-location
     * mtime through the HADOOP filesystem; `None` = location genuinely
     * absent. Injectable so the spec can force the THROWING branch (an
@@ -181,13 +169,27 @@ object Scratch {
   private[sources] def statTableMtime(
       spark: org.apache.spark.sql.SparkSession, ref: graft.model.TableRef)
       : Option[Long] =
-    CatalogOps.storageOf(spark, ref).location.flatMap { l =>
+    CatalogOps.storageOf(spark, ref).flatMap { l =>
       val p = new org.apache.hadoop.fs.Path(l)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) Some(fs.getFileStatus(p).getModificationTime)
       else None
     }
 
+  /** CATALOG twin of [[vacuum]]: sweep a scratch DATABASE (the
+    * `graft_scratch` convention) for leaked scratch tables — crashed
+    * JVMs leave their nonce's catalog entries (and warehouse dirs)
+    * behind, since the shutdown hook only removes tracked paths. A
+    * candidate is any table/view whose BASE name (the `__e<N>` epoch
+    * suffix stripped, so the epoch tables and view an older build
+    * published a scratch index as group with it) matches the naming
+    * contract; entries carrying THIS JVM's nonce are skipped. Age is
+    * the max warehouse-dir mtime across the group's tables (a view
+    * alone has no storage and rides its epoch tables' age). Deletion
+    * drops the whole group — view first, then tables — so a scratch
+    * index never loses its epochs while its view stays resolvable.
+    * Dry-run default, same verdicts as [[vacuum]].
+    */
   def vacuumCatalog(spark: org.apache.spark.sql.SparkSession, db: String,
       olderThanHours: Double, apply: Boolean,
       nowMs: Long = System.currentTimeMillis(),
@@ -253,8 +255,7 @@ object Scratch {
     *
     * Retention sizing: age measures the last WRITE, and a long-running
     * READER does not refresh it — size `olderThanHours` above the
-    * longest job that could still be reading another process's scratch
-    * (same stance as the epoch `retain` window).
+    * longest job that could still be reading another process's scratch.
     */
   def vacuum(rootDir: String, olderThanHours: Double, apply: Boolean,
       nowMs: Long = System.currentTimeMillis()): Seq[VacuumEntry] = {

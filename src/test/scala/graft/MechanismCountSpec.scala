@@ -6,11 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * built only by [[GraftSession]], the query layer and the source
   * layer cache standing artifacts only through
   * [[graft.sources.ArtifactRegistry]], and catalog metadata is read
-  * only through [[graft.sources.CatalogOps]] — with no pre-epoch
-  * adoption path left in either epoch store, no reliable-checkpoint
-  * or early-stop mode in the iterative loops, one set-lookup wave
-  * filter and one failure exit in the migrator — and the vector and
-  * dedup operators read one vector schema and own their fixed formats.
+  * only through [[graft.sources.CatalogOps]] — with no epoch store,
+  * index lock or compaction left (standing indexes are written by
+  * plain overwrite; only the two vector indexes grow, by plain
+  * append), no reliable-checkpoint or early-stop mode in
+  * the iterative loops, one set-lookup wave filter and one failure exit
+  * in the migrator — and the vector and dedup operators read one vector
+  * schema and own their fixed formats.
   */
 class MechanismCountSpec extends AnyFunSuite {
 
@@ -52,6 +54,13 @@ class MechanismCountSpec extends AnyFunSuite {
         "hasAdoptionMarker", "graft.epoch.adopted").foreach { t =>
       assert(mentioning(t).isEmpty, s"$t in ${mentioning(t)}")
     }
+  }
+
+  test("no epoch publish, index lock, band/shingle growth or compaction in src/main") {
+    Seq("EpochDir", "IndexLock", "publishEpoch", "liveEpochTable",
+        "appendToBandIndex", "appendToShingleIndex", "compactCellIndex",
+        "compactBucketedIndex", "atEpoch", "_batch")
+      .foreach(t => assert(mentioning(t).isEmpty, s"$t in ${mentioning(t)}"))
   }
 
   test("no OR-fold of per-partition predicates in src/main") {

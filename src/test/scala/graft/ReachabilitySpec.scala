@@ -31,16 +31,6 @@ class ReachabilitySpec extends AnyFunSuite {
   import ReachabilitySpec.Def
 
   private val allowlist: Map[String, String] = Map(
-    "EpochDir.pinSnapshot" ->
-      "multi-epoch pin kept for migration publish on epoch stores",
-    "EpochDir.epochs" ->
-      "committed-epoch listing a pinned reader records its snapshot from",
-    "CatalogOps.pinSnapshot" ->
-      "catalog twin of the epoch pin, kept with the epoch views",
-    "CatalogOps.tableAtEpoch" ->
-      "epoch-view snapshot read, kept with the epoch views",
-    "CatalogOps.dropEpochIndex" ->
-      "epoch-view teardown, kept with the epoch views",
     "PartitionId.parse" ->
       "inverse of render: the checkpoint's partition strings read back",
     "TableLock.isLocked" ->
@@ -49,18 +39,12 @@ class ReachabilitySpec extends AnyFunSuite {
       "JDBC reader for the reference's source system; no CLI mode reads JDBC",
     "SparkEntry.entry" ->
       "SparkEntry's flagship query, part of its entry contract (rows > 0)",
-    "Dedup.appendToBandIndex" ->
-      "band-index growth, kept with its soak and rebuild-equivalence specs",
-    "Dedup.appendToShingleIndex" ->
-      "shingle-index growth, kept with the band-index growth path",
-    "Dedup.compactBandIndex" ->
-      "band-index compaction, kept with the band-index growth path",
+    "Similarity.appendToIvfIndex" ->
+      "IVF growth, kept with the incremental dedup over a standing index",
     "Similarity.appendToIvfPqIndex" ->
-      "IVFPQ growth, kept with the IVF growth CrossProcessSoak runs",
-    "Similarity.compactIvfPqIndex" ->
-      "IVFPQ compaction, kept with the IVF compaction CrossProcessSoak runs",
+      "IVFPQ growth, kept with the IVF growth path",
     "Dedup.semanticDedupAgainstIndex" ->
-      "incremental semantic dedup over a persisted (growable) IVF index",
+      "incremental semantic dedup probing a standing IVF index",
     "CatalogOps.createBackupTable" ->
       "catalog-table twin of the reference's DDL lifecycle (A5-A14)",
     "CatalogOps.insertPartition" ->

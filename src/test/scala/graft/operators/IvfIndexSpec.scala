@@ -36,28 +36,6 @@ class IvfIndexSpec extends SparkFunSuite {
     assert(probed <= 12 && probed < 16, s"probed $probed cells")
   }
 
-  test("atEpoch pins a search to its snapshot across publish+append (reproducible runs)") {
-    val path = tmpDir("ivf_pin")
-    Similarity.writeIvfIndex(emb.filter(col("vec_id") < 300), path,
-      nlist = 16)
-    val e0 = graft.sources.EpochDir.epochs(spark, s"$path/cells").last
-    val want = rows(Similarity.ivfTopKIndexed(spark, path, queries,
-      k = 5, nProbe = 4, atEpoch = Some(e0)))
-    // a compaction publishes the next epoch (freezing e0 — epochs are
-    // immutable once superseded), then batch growth lands in the NEW
-    // live epoch
-    Similarity.compactIvfIndex(spark, path)
-    Similarity.appendToIvfIndex(emb.filter(col("vec_id") >= 300), path)
-    // the pinned search replays EXACTLY; the live search sees the
-    // grown corpus (different result set at the same k)
-    assert(rows(Similarity.ivfTopKIndexed(spark, path, queries,
-      k = 5, nProbe = 4, atEpoch = Some(e0))) == want,
-      "the pinned snapshot must replay identically after publish+append")
-    assert(rows(Similarity.ivfTopKIndexed(spark, path, queries,
-      k = 5, nProbe = 4)) != want,
-      "the live search must see the grown corpus")
-  }
-
   // Deterministic PQ model for the IVFPQ cases: seed codebooks are the
   // 16 lowest-id vectors' subvectors (no Lloyd round — codebook quality
   // is irrelevant to index-mechanics equivalence, and seeds keep the
@@ -77,11 +55,8 @@ class IvfIndexSpec extends SparkFunSuite {
     Similarity.writeIvfPqIndex(codes, cbooks, path)
 
     // the persisted layout is codes-only: no float arrays in the cells
-    // (`_batch` is the ingest-idempotence partition level, not data)
-    val stored = spark.read.parquet(
-      graft.sources.EpochDir.live(spark, s"$path/codes"))
-    assert(stored.schema.fieldNames.toSet ==
-      Set("vid", "m", "cid", "cell", "_batch"),
+    val stored = spark.read.parquet(s"$path/codes")
+    assert(stored.schema.fieldNames.toSet == Set("vid", "m", "cid", "cell"),
       s"code files must hold only code rows: ${stored.schema}")
 
     val indexed = Similarity.adcIvfTopKIndexed(spark, path, queries,
@@ -121,8 +96,7 @@ class IvfIndexSpec extends SparkFunSuite {
     val b = Similarity.adcIvfTopKIndexed(spark, rebuilt, queries, k = 5)
     assert(rows(a).nonEmpty && rows(a) == rows(b))
     // the grown index must actually contain the appended wave
-    val grownVids = spark.read.parquet(
-      graft.sources.EpochDir.live(spark, s"$grown/codes"))
+    val grownVids = spark.read.parquet(s"$grown/codes")
       .select("vid").distinct().count()
     assert(grownVids == emb.count(), s"grown index holds $grownVids vids")
   }
@@ -140,7 +114,7 @@ class IvfIndexSpec extends SparkFunSuite {
       Similarity.appendToIvfPqIndex(invader, path)
     }
     assert(ex.getMessage.contains("coarse-seed"), ex.getMessage)
-    // an empty batch is a quiet no-op (idle streaming micro-batch)
+    // an empty batch is a quiet no-op
     Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") < 0), path)
   }
 }

@@ -71,50 +71,6 @@ class LlmOpsSpec extends SparkFunSuite {
     assert(inc == full)
   }
 
-  test("appendToBandIndex: grown index equals a from-scratch rebuild for the next batch") {
-    import org.apache.spark.sql.functions.col
-    val s = spark
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_test")
-    val idxT = graft.model.TableRef("graft_test", "band_idx_grow")
-    // corpus → ingest wave1 (appending its bands) → check wave2 against
-    // the GROWN index; must equal the inline check against corpus∪wave1
-    val corpus = docs.filter(col("doc_id") < 300)
-    val wave1 = docs.filter(col("doc_id") >= 300 && col("doc_id") < 400)
-    val wave2 = docs.filter(col("doc_id") >= 400)
-    try {
-      Dedup.writeBandIndex(corpus, "doc_id", "text", idxT)
-      Dedup.appendToBandIndex(wave1, "doc_id", "text", idxT)
-      val grown = corpus.unionByName(wave1)
-      val viaIndex = Dedup.minhashNearDupsAgainstIndex(
-        wave2, grown, "doc_id", "text", 0.5, idxT)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val inline = Dedup.minhashNearDupsAgainst(
-        wave2, grown, "doc_id", "text", 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(viaIndex.nonEmpty && viaIndex == inline)
-      // at least one confirmed pair must involve an appended (wave1) doc,
-      // or the growth path wasn't actually exercised
-      assert(viaIndex.exists { case (_, b) => b >= 300 && b < 400 },
-        s"no pair against appended docs in $viaIndex")
-      // appended rows kept the bucket layout: the index-side scan still
-      // bucket-joins (SelectedBucketsCount) over old AND new files
-      val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val cand = Dedup.bandsFromRelation(
-          Dedup.shingleRelation(wave2, "doc_id", "text")).as("x")
-          .join(s.table(idxT.qualified).as("y"),
-            col("x.band") === col("y.band") && col("x.key") === col("y.key"))
-        cand.collect()
-        val plan = cand.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-        assert(plan.contains("SelectedBucketsCount"), plan)
-        assert("hashpartitioning\\(band".r.findAllMatchIn(plan).length == 1,
-          s"grown index must still join without its own exchange:\n$plan")
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally graft.sources.CatalogOps.dropEpochIndex(s, idxT)
-  }
-
   test("persisted band index: same near-dups, index side never shuffles") {
     import org.apache.spark.sql.functions.col
     val s = spark
@@ -152,7 +108,7 @@ class LlmOpsSpec extends SparkFunSuite {
           .findAllMatchIn(plan).length
         assert(exchanges == 1, s"expected 1 band exchange, plan:\n$plan")
       } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally graft.sources.CatalogOps.dropEpochIndex(s, idxT)
+    } finally graft.sources.CatalogOps.dropTable(s, idxT)
   }
 
   test("connectedComponents: chain + separate pair + symmetry, min-id labels") {

@@ -47,7 +47,7 @@ class SpansSpec extends SparkFunSuite {
       (2L, s"unrelated prefix text $shared and a tail"),
       (3L, "completely different content with no overlap at all here"))
     val got = Dedup.duplicatedSpans(docs.toDF("doc_id", "text"),
-      "doc_id", "text", gramLen = 10, minDocs = 2)
+      "doc_id", "text", gramLen = 10)
       .collect().map(r => (r.getLong(0), r.getInt(2), r.getInt(3))).toSet
     assert(got == bruteSpans(docs, 10))
     // both docs 1 and 2 carry exactly one span covering the passage
@@ -68,27 +68,12 @@ class SpansSpec extends SparkFunSuite {
       }))
     val prop = Prop.forAll(corpus) { docs =>
       val got = Dedup.duplicatedSpans(docs.toDF("doc_id", "text"),
-        "doc_id", "text", gramLen = 5, minDocs = 2)
+        "doc_id", "text", gramLen = 5)
         .collect().map(r => (r.getLong(0), r.getInt(2), r.getInt(3))).toSet
       got == bruteSpans(docs, 5)
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(res.passed, res.status.toString)
-  }
-
-  test("minDocs=3 (countDistinct path) drops pairs-only duplication") {
-    val s = graft.SparkTestBase.spark
-    import s.implicits._
-    val docs = Seq(
-      (1L, "shared in three documents here plus one two"),
-      (2L, "shared in three documents here plus other things"),
-      (3L, "shared in three documents here plus more words"),
-      (4L, "pairwise overlap xyzzy plugh qwerty abcd"),
-      (5L, "pairwise overlap xyzzy plugh qwerty efgh"))
-    val got3 = Dedup.duplicatedSpans(docs.toDF("doc_id", "text"),
-      "doc_id", "text", gramLen = 10, minDocs = 3)
-      .collect().map(_.getLong(0)).toSet
-    assert(got3 == Set(1L, 2L, 3L))
   }
 }

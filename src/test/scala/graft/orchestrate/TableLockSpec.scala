@@ -1,7 +1,8 @@
 package graft.orchestrate
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,5 +61,31 @@ class TableLockSpec extends AnyFunSuite {
     assert(Files.exists(holder.path))
     holder.release()
     assert(!prober.isLocked)
+  }
+
+  test("mutual exclusion across threads") {
+    val dir = freshDir
+    val inside = new AtomicInteger
+    val maxInside = new AtomicInteger
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    // one TableLock per thread, one lock file: the process-wide gate
+    // must admit a single holder at a time
+    val threads = (1 to 4).map(_ => new Thread(() =>
+      try {
+        val lock = new TableLock(dir, "db", "t", timeoutSec = 60,
+          retrySec = 0.05)
+        assert(lock.acquire(), "acquire timed out")
+        try {
+          val n = inside.incrementAndGet()
+          maxInside.updateAndGet(m => math.max(m, n))
+          Thread.sleep(100)
+          inside.decrementAndGet()
+        } finally lock.release()
+      } catch { case t: Throwable => errs.add(t) }))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errs.isEmpty, s"lock contention errored: ${errs.peek()}")
+    assert(maxInside.get() == 1,
+      s"${maxInside.get()} holders inside the critical section at once")
   }
 }

@@ -185,8 +185,9 @@ class ScratchVacuumSpec extends SparkFunSuite {
       // a crashed JVM's plain scratch table…
       val dead = s"graft_tmp_${Hash}_$DeadNonce"
       Seq(1L).toDF("k").write.mode("overwrite").saveAsTable(s"$db.$dead")
-      // …and its scratch INDEX (epoch table + view — the
-      // d_incremental_indexed layout); the group must drop TOGETHER
+      // …and its scratch INDEX (epoch table + view — the layout older
+      // builds published d_incremental_indexed in); the group must
+      // drop TOGETHER
       val deadIdx = s"graft_idx_${Hash}_$DeadNonce"
       Seq(2L).toDF("k").write.mode("overwrite")
         .saveAsTable(s"$db.${deadIdx}__e0")
