@@ -154,10 +154,7 @@ object Bench {
     // references — a window-carrying query like j_asof_nearest benched
     // as scan+filter only (measured flat at 10× data, the tell). Running
     // the query's executed plan materializes every output column, which
-    // is what a caller consuming the result pays. The legacy count
-    // protocol stays selectable for cross-round bridging
-    // (SPARK_GRAFT_ACTION=count; BASELINE.md records the bridge totals).
-    val legacyCount = sys.env.get("SPARK_GRAFT_ACTION").contains("count")
+    // is what a caller consuming the result pays.
     // A query that throws is a BENCH FAILURE, not a fast sample: its
     // error is recorded per-query in the artifact and the run exits
     // nonzero (the silent-catch version recorded time-to-fail as a
@@ -174,9 +171,8 @@ object Bench {
       try {
         if (injectFail(name))
           throw new RuntimeException("injected failure (test hook)")
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        if (legacyCount) { df.count(); () }
-        else { df.queryExecution.toRdd.count(); () }
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+        ()
       }
       catch { case e: Throwable =>
         errors.getOrElseUpdate(name, e.toString.take(300))

@@ -12,9 +12,6 @@ package graft.model
   */
 final case class TableRef(db: String, table: String) {
   def qualified: String = s"$db.$table"
-  /** Backup-name derivation (reference: services/migration.py:48-51). */
-  def backup(suffix: String = "_backup_s3"): TableRef =
-    TableRef(db, table + suffix)
 }
 
 /** One partition of a table: the values of the partition-key columns, in
@@ -51,27 +48,6 @@ object PartitionId {
   def renderValues(values: Seq[String]): String =
     if (values.lengthCompare(1) == 0) renderOne(values.head)
     else values.map(renderOne).mkString("(", ",", ")")
-
-  /** Parse a ClickHouse `system.parts.partition` string back into typed
-    * values. Composite tuples are tokenized with the reference's regex
-    * `'[^']*'|[^,]+` so quoted values containing commas survive
-    * (reference: services/partition.py:40-47).
-    */
-  def parse(raw: String): PartitionId = {
-    val trimmed = raw.trim
-    if (trimmed.startsWith("(") && trimmed.endsWith(")")) {
-      val inner = trimmed.substring(1, trimmed.length - 1)
-      val tok = "'[^']*'|[^,]+".r
-      val vals = tok.findAllIn(inner).map(_.trim).map(unquote).toSeq
-      PartitionId(vals)
-    } else PartitionId(Seq(unquote(trimmed)))
-  }
-
-  private def unquote(v: String): String =
-    if (v == "NULL") null
-    else if (v.length >= 2 && v.startsWith("'") && v.endsWith("'"))
-      v.substring(1, v.length - 1)
-    else v
 }
 
 /** Per-partition validation record (reference: services/migration.py:483-490

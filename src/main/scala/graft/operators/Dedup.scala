@@ -597,13 +597,10 @@ object Dedup {
     * 1.25G cell pairs, exactly 100× per decade, which at the third
     * decade turned an 11 s query into 407 s). Minimizing
     * `n·nlist + r·n²/(2·nlist)` gives `nlist* = √(n·r/2)`, so the
-    * total grows as `n^1.5` — the best a flat centroid list can do;
-    * truly linear ingest belongs to the persisted-index incremental
-    * path ([[semanticDedupAgainstIndex]]), whose per-batch cost rides
-    * the batch, not the corpus. The floor keeps small corpora on the
-    * oracle-replayed 16-cell recipe ([[semanticDedup]]'s default); the
-    * cap bounds the collected centroid literal (4096·dim floats ≈ 1 MB
-    * broadcast).
+    * total grows as `n^1.5` — the best a flat centroid list can do.
+    * The floor keeps small corpora on the oracle-replayed 16-cell
+    * recipe ([[semanticDedup]]'s default); the cap bounds the collected
+    * centroid literal (4096·dim floats ≈ 1 MB broadcast).
     */
   def chooseNlist(n: Long, verifyCostRatio: Double = 0.5,
       minNlist: Int = 16, maxNlist: Int = 4096): Int = {
@@ -631,43 +628,12 @@ object Dedup {
     // [0, nlist) — an id-shifted slice would otherwise silently yield
     // an empty centroid set and an empty result).
     val cents = Similarity.seedCentroidsLiteral(corpus, nlist)
-    semanticWitness(
-      Similarity.assignCells(corpus, cents),
-      Similarity.assignCells(batch, cents), tau)
-  }
-
-  /** [[semanticDedupAgainst]] over a PERSISTED [[Similarity
-    * .writeIvfIndex]] index: the corpus-side scan partition-prunes to
-    * the cells the batch actually occupies (the batch's distinct cell
-    * ids are collected at plan-build time — ≤ nlist small ints, index
-    * metadata, never row data — exactly [[Similarity.ivfTopKIndexed]]'s
-    * probe-cell collect). At 100 TB this is the difference between
-    * re-reading the whole corpus assignment per ingested batch and
-    * reading only the touched inverted lists.
-    */
-  def semanticDedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, tau: Double): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val bAss = Similarity.assignCells(batch, cents)
-    val cells = bAss.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val cAss = spark.read.parquet(s"$path/cells")
-      .filter(col("cell").isin(cells: _*))
-    semanticWitness(cAss, bAss, tau)
-  }
-
-  /** Shared pair-search of the incremental semantic-dedup variants:
-    * for each target (batch) vector, the smallest τ-similar witness id
-    * among the witness-side (corpus) vectors sharing its cell. Same
-    * codegen-prefilter + exact-decimal-cosine shape as
-    * [[semanticDedup]]; both assignments carry (vid, cell, cvec).
-    */
-  private def semanticWitness(witSide: DataFrame, tgtSide: DataFrame,
-      tau: Double): DataFrame = {
     import graft.plans.FloatVecOps.{floatDot, floatNorm2}
-    val a = witSide.select(col("cell"), col("vid").as("id_a"),
-      col("cvec").as("va"), sqrt(floatNorm2(col("cvec"))).as("na"))
-    val b = tgtSide.select(col("cell"), col("vid").as("id_b"),
+    val a = Similarity.assignCells(corpus, cents).select(col("cell"),
+      col("vid").as("id_a"), col("cvec").as("va"),
+      sqrt(floatNorm2(col("cvec"))).as("na"))
+    val bAss = Similarity.assignCells(batch, cents)
+    val b = bAss.select(col("cell"), col("vid").as("id_b"),
       col("cvec").as("vb"), sqrt(floatNorm2(col("cvec"))).as("nb"))
     val cheap = round(floatDot(col("va"), col("vb")) / (col("na") * col("nb")), 8)
     val witness = a.join(b, Seq("cell"))
@@ -677,7 +643,7 @@ object Dedup {
       .filter(col("cos") >= tau)
       .groupBy(col("id_b").as("vid"))
       .agg(min(col("id_a")).as("witness"))
-    tgtSide.select(col("vid"), col("cell"))
+    bAss.select(col("vid"), col("cell"))
       .join(witness, Seq("vid"), "left")
       .select(col("vid"), col("cell"), col("witness"),
         col("witness").isNull.as("keep"))

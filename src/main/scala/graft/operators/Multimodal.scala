@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: opaque `binary` payloads with typed
-  * metadata, batched decode / feature-extract / resize / frame-sample.
+  * metadata, batched decode / feature-extract / frame-sample.
   *
   * Three REAL decoder paths, all JDK-built-in (zero external
   * dependencies): `javax.imageio` for images (PNG/JPEG/GIF/BMP —
@@ -127,58 +127,6 @@ object Multimodal {
             info.frames.length * 1000f / info.durationMs else 0f)
       case _ => new Array[Float](8)
     }
-
-  final case class ResizedMedia(
-      media_id: Long,
-      payload: Array[Byte],
-      width: Int,
-      height: Int)
-
-  /** Batched image resize: decode → bilinear rescale to
-    * `targetW`×`targetH` → re-encode PNG, one decoder/encoder pair per
-    * partition (same lifecycle as [[decodeFeatures]]). The standard
-    * normalize-resolution step before vision-model feature extraction.
-    * Non-image kinds and undecodable payloads yield a NULL payload with
-    * zero dims — data, not a task failure, consistent with the decode
-    * contract. Pure software Java2D path, so output bytes are
-    * deterministic for a given input.
-    */
-  def resizeImages(media: DataFrame, targetW: Int, targetH: Int)(
-      implicit spark: SparkSession): Dataset[ResizedMedia] = {
-    import spark.implicits._
-    media.select("media_id", "meta.kind", "payload").mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val id = r.getLong(0)
-        val kind = r.getString(1)
-        val payload = if (r.isNullAt(2)) Array.empty[Byte] else r.getAs[Array[Byte]](2)
-        val out: Array[Byte] =
-          if (!kind.startsWith("image/") || payload.isEmpty) null
-          else {
-            val img =
-              try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-              catch { case scala.util.control.NonFatal(_) => null }
-            if (img == null) null
-            else {
-              val dst = new java.awt.image.BufferedImage(
-                targetW, targetH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-              val g = dst.createGraphics()
-              try {
-                g.setRenderingHint(
-                  java.awt.RenderingHints.KEY_INTERPOLATION,
-                  java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-                g.drawImage(img, 0, 0, targetW, targetH, null)
-              } finally g.dispose()
-              val baos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(dst, "png", baos)
-              baos.toByteArray
-            }
-          }
-        if (out == null) ResizedMedia(id, null, 0, 0)
-        else ResizedMedia(id, out, targetW, targetH)
-      }
-    }
-  }
 
   final case class MediaHash(media_id: Long, ahash: String)
 

@@ -29,20 +29,6 @@ import graft.model.PartitionId
   */
 object Partitions {
 
-  /** Normalize a partition-key expression: `(dt, channel)` → Seq(dt, channel)
-    * (reference: services/partition.py:22-25, 49).
-    */
-  def parsePartitionKey(raw: String): Seq[String] = {
-    val trimmed = raw.trim
-    if (trimmed.isEmpty)
-      throw new IllegalArgumentException("table has no partition key configured")
-    val inner =
-      if (trimmed.startsWith("(") && trimmed.endsWith(")"))
-        trimmed.substring(1, trimmed.length - 1)
-      else trimmed
-    inner.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
   /** Typed predicate selecting exactly the rows of `parts` with one set
     * lookup per row (reference: services/partition.py:29-75 builds one
     * partition's predicate as a SQL string; its arity check stays a real

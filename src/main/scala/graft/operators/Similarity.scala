@@ -523,22 +523,6 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
   }
 
-  /** Grow a [[writeIvfIndex]] index by an ingested batch: assign the
-    * batch's vectors against the index's STORED centroids (cells must
-    * not move on ingest, or every inverted list would need rebuilding)
-    * and append them into the partitionBy(cell) layout — each batch
-    * row lands in its cell's directory, so probed searches and the
-    * incremental dedup path partition-prune over old and new rows
-    * alike. The batch pays only its own assignment pass. A plain
-    * append: one writer at a time, and a reader that lists the cells
-    * mid-append may see part of the batch.
-    */
-  def appendToIvfIndex(batch: DataFrame, path: String): Unit = {
-    val cents = batch.sparkSession.read.parquet(s"$path/centroids")
-    assignCells(batch, cents)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-  }
-
   /** ANN over a PERSISTED [[writeIvfIndex]] index: probe cells come
     * from the stored centroids, and the cell scan is partition-pruned
     * to the probed cell ids. The probe-cell list is collected at
@@ -743,8 +727,7 @@ object Similarity {
     * staged (64×-compressed) rows instead of re-evaluating the lazy
     * encode plan per consumer — at 100 TB one extra write+read of the
     * compressed codes beats three map passes over the float corpus.
-    * Build is once per corpus generation; growth is
-    * [[appendToIvfPqIndex]].
+    * Build is once per corpus generation.
     */
   def writeIvfPqIndex(codes: DataFrame, cents: DataFrame,
       path: String, nlist: Int = 16): Unit = {
@@ -764,45 +747,6 @@ object Similarity {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes_staging"), true)
-  }
-
-  /** Grow a [[writeIvfPqIndex]] index by an ingested batch: encode the
-    * batch against the STORED codebooks (codebooks must not move on
-    * ingest, or every stored code would decode differently) and assign
-    * cells from the batch's RECONSTRUCTION against the STORED coarse
-    * centroids (cells must not move, or every inverted list would need
-    * rebuilding) — the same invariants as [[appendToIvfIndex]], for
-    * both quantizer levels. Each batch row lands in its cell's
-    * directory; the batch pays one encode pass + one assignment pass,
-    * and the standing index never rewrites. Spec-proven equal to a
-    * full rebuild over the combined corpus (IvfIndexSpec). A plain
-    * append, like [[appendToIvfIndex]].
-    *
-    * The batch's lowest id must clear the stored nlist:
-    * [[seedCentroidsLiteral]] seeds the coarse quantizer from the
-    * LOWEST ids, so an appended id below nlist would make a later full
-    * rebuild pick different seeds than the grown index — voiding the
-    * rebuild equivalence. The guard costs one min() over the batch
-    * (O(batch), map-side). An empty batch is a no-op.
-    */
-  def appendToIvfPqIndex(batch: DataFrame, path: String): Unit = {
-    val spark = batch.sparkSession
-    val coarse = spark.read.parquet(s"$path/coarse")
-    val cbooks = spark.read.parquet(s"$path/codebooks")
-    val minIdRow = batch.agg(min(col("vec_id").cast("long"))).head()
-    if (minIdRow.isNullAt(0)) return
-    val nlist = coarse.count()
-    require(minIdRow.getLong(0) >= nlist,
-      s"appendToIvfPqIndex: batch min vec_id ${minIdRow.getLong(0)} is " +
-        s"below the stored nlist ($nlist) — appended ids must not enter " +
-        "the lowest-id coarse-seed set, or a full rebuild would choose " +
-        "different seeds than the grown index")
-    val codes = pqEncode(batch, cbooks)
-    val assigned = assignCells(pqReconstruct(codes, cbooks), coarse)
-      .select(col("vid"), col("cell"))
-    codes.select(col("vec_id").as("vid"), col("m"), col("cid"))
-      .join(assigned, "vid")
-      .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
   }
 
   /** ANN over a PERSISTED [[writeIvfPqIndex]] index — the full FAISS

@@ -23,32 +23,6 @@ object FunctionQueries {
   private def tF(s: SparkSession, dir: String, n: String, key: String) =
     Sources.fannedTable(s, dir, n, key)
 
-  /** Per-JVM scratch ROOT backing f_struct's write→read round trip:
-    * created on first use and recursively deleted by one JVM shutdown
-    * hook — so neither bench's two in-JVM passes nor its isolated child
-    * JVMs leave parquet copies behind in /tmp.
-    */
-  private lazy val fStructRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_f_struct_")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p
-  }
-
-  /** Scratch dir for ONE f_struct evaluation: keyed per thread under the
-    * shared root, so concurrent builder invocations in the same JVM
-    * (parallel bench/verify runs) each overwrite their own subdir
-    * instead of racing on one path; cleanup stays the single root hook.
-    */
-  private def fStructDir: String =
-    java.nio.file.Files.createDirectories(
-      fStructRoot.resolve(s"t${Thread.currentThread().getId}")).toString
-
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // String functions over part names.
     "f_string" -> ((s, dir) =>
@@ -217,12 +191,13 @@ object FunctionQueries {
     // survive the same storage path arrays/maps already do. The oracle
     // computes the identical aggregate from the flat base table, so
     // every struct hop (build → write → read → field access) is
-    // hash-verified, not just smoke-tested. The write goes to a PER-JVM
-    // scratch dir (one dir reused by every builder invocation, removed
-    // by a shutdown hook), so bench's repeated passes and isolated
-    // child JVMs no longer accumulate parquet copies in /tmp.
+    // hash-verified, not just smoke-tested. The write goes to a Scratch
+    // dir keyed per dataset and thread: concurrent builder invocations
+    // in one JVM each overwrite their own dir, repeat passes reuse it,
+    // and it is deleted at JVM exit.
     "f_struct" -> ((s, dir) => {
-      val out = fStructDir
+      val out = graft.sources.Scratch.dir("fstruct",
+        s"$dir#${Thread.currentThread().getId}")
       t(s, dir, "customer")
         .select(col("c_custkey"),
           struct(

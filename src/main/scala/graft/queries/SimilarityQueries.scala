@@ -117,7 +117,8 @@ object SimilarityQueries {
     ArtifactRegistry(IvfPqIndex, dir) {
       val centsL = pqCodebooksOf(s, dir)
       val path = graft.sources.Scratch.dir("ivfpq", dir)
-      Similarity.writeIvfPqIndex(pqCodes(emb(s, dir), centsL), centsL, path)
+      Similarity.writeIvfPqIndex(Similarity.pqEncode(emb(s, dir), centsL),
+        centsL, path)
       path
     }
 
@@ -625,7 +626,7 @@ object SimilarityQueries {
     "s_pq_ann" -> ((s, dir) => {
       val e = emb(s, dir)
       val centsL = pqCodebooksOf(s, dir)
-      Similarity.adcTopK(pqCodes(e, centsL), centsL,
+      Similarity.adcTopK(Similarity.pqEncode(e, centsL), centsL,
         e.filter(col("vec_id").isin(QueryIds: _*)), k = 5)
         .orderBy("qid", "rank")
     }),
@@ -646,8 +647,8 @@ object SimilarityQueries {
       val e = emb(s, dir)
       val q = e.filter(col("vec_id").isin(QueryIds: _*))
       val centsL = pqCodebooksOf(s, dir)
-      val widened = Similarity.adcTopK(pqCodes(e, centsL), centsL, q,
-        k = PqWiden).select(col("qid"), col("vid"))
+      val widened = Similarity.adcTopK(Similarity.pqEncode(e, centsL),
+        centsL, q, k = PqWiden).select(col("qid"), col("vid"))
       val qv = e.select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val cv = e.select(col("vec_id").as("vid"), col("embedding").as("cvec"))
       val scored = widened.join(broadcast(qv), "qid").join(cv, "vid")
@@ -674,7 +675,7 @@ object SimilarityQueries {
     "s_ann_ivf_pq" -> ((s, dir) => {
       val e = emb(s, dir)
       val centsL = pqCodebooksOf(s, dir)
-      val codes = pqCodes(e, centsL)
+      val codes = Similarity.pqEncode(e, centsL)
       Similarity.adcIvfTopK(codes, centsL, reconOf(codes, centsL),
         e.filter(col("vec_id").isin(QueryIds: _*)), k = 5)
         .orderBy("qid", "rank")
@@ -935,11 +936,6 @@ object SimilarityQueries {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.FloatType)))))
   }
-
-  /** Codes via one broadcast argmin pass against literal codebooks —
-    * the encode step once training state is in hand. */
-  private def pqCodes(e: DataFrame, centsLit: DataFrame): DataFrame =
-    pqAssign(subvecs(e), centsLit).select("vec_id", "m", "cid")
 
   /** Collected [[Similarity.sq8Stats]] as (mns, mxs) literal seqs in
     * 0-based dimension order — O(dims) driver rows.

@@ -4,23 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.StructType
 
-import graft.model.{PartitionId, TableRef}
+import graft.model.TableRef
 
-/** Catalog-table operations — the reference's DDL/introspection surface
-  * re-expressed on `spark.catalog` / Spark SQL:
-  *
-  *  - existence check (reference: clickhouse_migrator/services/
-  *    migration.py:424-426 queries system.tables) → [[tableExists]]
-  *  - table enumeration excluding views (migration.py:548-550 `NOT IN
-  *    ('View','MaterializedView')`) → [[listDataTables]]
-  *  - DDL introspection `SHOW CREATE` (migration.py:21-46; the
-  *    reference treats the DDL as an opaque string and regex-rewrites it,
-  *    A27/A28) → [[schemaOf]] + [[createBackupTable]]: schema cloning is
-  *    STRUCTURAL here — the storage-policy regex splice collapses to a
-  *    location/format option
-  *  - CREATE/DROP/RENAME (migration.py:420-421, 520-524) →
-  *    [[createBackupTable]] / [[dropTable]] / [[renameTable]]
-  *  - ALTER … DROP PARTITION (migration.py:498-503) → [[dropPartition]]
+/** Catalog-table operations on `spark.catalog` / Spark SQL: existence
+  * (reference: clickhouse_migrator/services/migration.py:424-426 queries
+  * system.tables) → [[tableExists]], view-to-base resolution, storage
+  * lookup, structural schema drift and bucketed writes. The reference's
+  * DDL lifecycle (SHOW CREATE, CREATE/DROP/RENAME, DROP PARTITION) has
+  * no catalog twin: the migrator runs those steps on path tables
+  * through CopyService.
   */
 object CatalogOps {
 
@@ -64,22 +56,12 @@ object CatalogOps {
     }
   }
 
-  /** All non-view tables in a database (A9). */
-  def listDataTables(spark: SparkSession, db: String): Seq[String] =
-    spark.catalog.listTables(db).collect()
-      .filter(t => t.tableType != "VIEW")
-      .map(_.name).toSeq
-
   /** Where a catalog entry's files live (None for a view, which has no
     * storage), read from the session catalog's table metadata.
     */
   def storageOf(spark: SparkSession, ref: TableRef): Option[java.net.URI] =
     spark.sessionState.catalog.getTableMetadata(
       TableIdentifier(ref.table, Some(ref.db))).storage.locationUri
-
-  /** Structural schema introspection (replaces SHOW CREATE + regex). */
-  def schemaOf(spark: SparkSession, ref: TableRef): StructType =
-    spark.table(ref.qualified).schema
 
   /** Structural schema drift between a source and an existing target —
     * the introspection an INCREMENTAL re-sync runs before copying data
@@ -108,70 +90,6 @@ object CatalogOps {
       }
     (added ++ removed ++ changed).sortBy(_._1)
   }
-
-  /** Create the backup table: same structure, parquet format, optionally
-    * partitioned and at an explicit location — the structural equivalent
-    * of the reference's DDL rewrite to an S3 storage policy (A27/A28).
-    */
-  def createBackupTable(
-      spark: SparkSession,
-      src: TableRef,
-      backup: TableRef,
-      partitionKeys: Seq[String] = Nil,
-      location: Option[String] = None): Unit = {
-    val locClause = location.map(l => s" LOCATION '$l'").getOrElse("")
-    val partClause =
-      if (partitionKeys.nonEmpty) s" PARTITIONED BY (${partitionKeys.mkString(", ")})"
-      else ""
-    dropTable(spark, backup)
-    spark.sql(
-      s"CREATE TABLE ${backup.qualified} USING parquet$partClause$locClause " +
-        s"AS SELECT * FROM ${src.qualified} WHERE 1=0")
-  }
-
-  def dropTable(spark: SparkSession, ref: TableRef): Unit =
-    spark.sql(s"DROP TABLE IF EXISTS ${ref.qualified}")
-
-  /** RENAME — paired with drop it reproduces the reference's swap
-    * (migration.py:520-524); prefer CopyService.publish for path tables.
-    */
-  def renameTable(spark: SparkSession, from: TableRef, to: TableRef): Unit =
-    spark.sql(s"ALTER TABLE ${from.qualified} RENAME TO ${to.table}")
-
-  /** ALTER TABLE … DROP PARTITION with a typed partition spec (A14/A31 —
-    * the reference's quoting heuristic becomes structural rendering).
-    */
-  def dropPartition(spark: SparkSession, ref: TableRef,
-      keys: Seq[String], part: PartitionId): Unit = {
-    val spec = keys.zip(part.values)
-      .map { case (k, v) => s"$k = '${v.replace("'", "''")}'" }
-      .mkString(", ")
-    spark.sql(s"ALTER TABLE ${ref.qualified} DROP IF EXISTS PARTITION ($spec)")
-  }
-
-  /** SHOW PARTITIONS → typed ids (catalog twin of
-    * Partitions.enumeratePartitions).
-    */
-  def listPartitions(spark: SparkSession, ref: TableRef,
-      keys: Seq[String]): Seq[PartitionId] =
-    spark.sql(s"SHOW PARTITIONS ${ref.qualified}")
-      .collect()
-      .map { r =>
-        val spec = r.getString(0) // k1=v1/k2=v2
-        val values = spec.split("/").map(_.split("=", 2)(1))
-        PartitionId(values.toSeq)
-      }.toSeq.sortBy(_.render)
-
-  /** Insert one partition of data into a catalog table with dynamic
-    * partition overwrite (idempotent retry — the catalog twin of
-    * CopyService.copyPartition).
-    */
-  def insertPartition(spark: SparkSession, target: TableRef,
-      data: DataFrame): Unit =
-    data.write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .insertInto(target.qualified)
 
   /** Write a bucketed (optionally sort-within-bucket) catalog table:
     * rows hash-cluster into `numBuckets` files by `bucketCols`. Two

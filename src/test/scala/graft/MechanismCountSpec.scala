@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * layer cache standing artifacts only through
   * [[graft.sources.ArtifactRegistry]], and catalog metadata is read
   * only through [[graft.sources.CatalogOps]] — with no epoch store,
-  * index lock or compaction left (standing indexes are written by
-  * plain overwrite; only the two vector indexes grow, by plain
-  * append), no reliable-checkpoint or early-stop mode in
+  * index lock, growth or compaction left (standing indexes are written
+  * once, by plain overwrite), scratch directories and shutdown hooks
+  * only from [[graft.sources.Scratch]], no reliable-checkpoint or
+  * early-stop mode in
   * the iterative loops, one set-lookup wave filter and one failure exit
   * in the migrator — and the vector and dedup operators read one vector
   * schema and own their fixed formats.
@@ -58,9 +59,16 @@ class MechanismCountSpec extends AnyFunSuite {
 
   test("no epoch publish, index lock, band/shingle growth or compaction in src/main") {
     Seq("EpochDir", "IndexLock", "publishEpoch", "liveEpochTable",
-        "appendToBandIndex", "appendToShingleIndex", "compactCellIndex",
+        "appendTo", "semanticDedupAgainstIndex", "compactCellIndex",
         "compactBucketedIndex", "atEpoch", "_batch")
       .foreach(t => assert(mentioning(t).isEmpty, s"$t in ${mentioning(t)}"))
+  }
+
+  test("createTempDirectory and addShutdownHook appear only in sources/Scratch.scala") {
+    Seq("createTempDirectory", "addShutdownHook").foreach { t =>
+      assert(mentioning(t).forall(_ == "graft/sources/Scratch.scala"),
+        s"$t in ${mentioning(t)}")
+    }
   }
 
   test("no OR-fold of per-partition predicates in src/main") {

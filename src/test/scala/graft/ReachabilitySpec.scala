@@ -31,40 +31,12 @@ class ReachabilitySpec extends AnyFunSuite {
   import ReachabilitySpec.Def
 
   private val allowlist: Map[String, String] = Map(
-    "PartitionId.parse" ->
-      "inverse of render: the checkpoint's partition strings read back",
     "TableLock.isLocked" ->
       "lock probe the table-lock specs assert exclusion with",
     "Sources.clickhouseJdbc" ->
       "JDBC reader for the reference's source system; no CLI mode reads JDBC",
     "SparkEntry.entry" ->
-      "SparkEntry's flagship query, part of its entry contract (rows > 0)",
-    "Similarity.appendToIvfIndex" ->
-      "IVF growth, kept with the incremental dedup over a standing index",
-    "Similarity.appendToIvfPqIndex" ->
-      "IVFPQ growth, kept with the IVF growth path",
-    "Dedup.semanticDedupAgainstIndex" ->
-      "incremental semantic dedup probing a standing IVF index",
-    "CatalogOps.createBackupTable" ->
-      "catalog-table twin of the reference's DDL lifecycle (A5-A14)",
-    "CatalogOps.insertPartition" ->
-      "catalog-table twin of CopyService.copyPartition",
-    "CatalogOps.listPartitions" ->
-      "catalog-table twin of Partitions.enumeratePartitions",
-    "CatalogOps.dropPartition" ->
-      "catalog-table twin of the reference's DROP PARTITION (A14)",
-    "CatalogOps.renameTable" ->
-      "catalog-table twin of the reference's rename swap",
-    "CatalogOps.listDataTables" ->
-      "catalog-table enumeration excluding views (A9)",
-    "CatalogOps.schemaOf" ->
-      "structural schema introspection, the reference's SHOW CREATE",
-    "Partitions.parsePartitionKey" ->
-      "the reference's partition-key normalizer; the CLI takes split keys",
-    "DataQuality.completenessViolations" ->
-      "the dq completeness gate over a profile; no main gates on dq yet",
-    "Multimodal.resizeImages" ->
-      "batched image resize before vision features; no query resizes yet")
+      "SparkEntry's flagship query, part of its entry contract (rows > 0)")
 
   private val mainRoot = new File("src/main/scala")
   private val benchRoot = new File("perfbench/src")

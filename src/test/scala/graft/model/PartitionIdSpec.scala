@@ -2,7 +2,7 @@ package graft.model
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** FIXTURES.md §B1 cases: partition-value parsing/rendering semantics
+/** FIXTURES.md §B1 cases: partition-value rendering semantics
   * derived from the reference's quoting heuristics
   * (reference: clickhouse_migrator/services/partition.py:38-102).
   */
@@ -29,25 +29,7 @@ class PartitionIdSpec extends AnyFunSuite {
     assert(PartitionId(Seq("2024", "1")).render == "(2024,1)")
   }
 
-  test("parse single numeric") {
-    assert(PartitionId.parse("20240101") == PartitionId(Seq("20240101")))
-  }
-
-  test("parse composite tuple") {
-    assert(PartitionId.parse("('2024-01-01','novel')") ==
-      PartitionId(Seq("2024-01-01", "novel")))
-  }
-
-  test("parse composite with quoted comma does not split inside quotes") {
-    assert(PartitionId.parse("('2024-01-01','a,b')") ==
-      PartitionId(Seq("2024-01-01", "a,b")))
-  }
-
-  test("parse mixed-type tuple") {
-    assert(PartitionId.parse("(2024,1)") == PartitionId(Seq("2024", "1")))
-  }
-
-  test("render/parse round-trips") {
+  test("render is injective") {
     val cases = Seq(
       PartitionId(Seq("20240101")),
       PartitionId(Seq("2024-01-01")),
@@ -57,10 +39,9 @@ class PartitionIdSpec extends AnyFunSuite {
       PartitionId(Seq(null)),
       PartitionId(Seq("NULL")),
       PartitionId(Seq("2024-01-01", null)))
-    cases.foreach(p => assert(PartitionId.parse(p.render) == p))
-  }
-
-  test("backup name derivation") {
-    assert(TableRef("db", "t").backup() == TableRef("db", "t_backup_s3"))
+    // checkpoints store rendered strings and resume compares them, so
+    // distinct partitions must never render alike
+    assert(cases.map(_.render).distinct.size == cases.size,
+      cases.map(_.render))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkFunSuite
 
 /** One-pass schema-driven profiling: exact completeness/bounds on a
-  * hand-built frame, and the gate's violation selection.
+  * hand-built frame.
   */
 class DataQualitySpec extends SparkFunSuite {
 
@@ -28,14 +28,6 @@ class DataQualitySpec extends SparkFunSuite {
     assert(p("id") == ((4L, 0L, 1.0, "1", "4")))
     assert(p("tag") == ((4L, 1L, 0.75, "a", "c")))
     assert(p("score") == ((4L, 1L, 0.75, "10.0", "40.0")))
-  }
-
-  test("completeness gate flags only columns under the threshold") {
-    val prof = DataQuality.profile(frame)
-    val bad = DataQuality.completenessViolations(prof, 0.9)
-      .collect().map(_.getString(0)).toSet
-    assert(bad == Set("tag", "score"))
-    assert(DataQuality.completenessViolations(prof, 0.5).collect().isEmpty)
   }
 
   test("profile survives exotic column names and empty tables (ADVICE r11)") {

@@ -74,47 +74,4 @@ class IvfIndexSpec extends SparkFunSuite {
     val probed = inList.get.group(1).split(",").count(_.trim.nonEmpty)
     assert(probed <= 12 && probed < 16, s"probed $probed cells")
   }
-
-  test("appendToIvfPqIndex: grown index equals a full rebuild") {
-    // Split so the low ids (coarse seeds + codebook seeds) are in the
-    // base: seeds then agree between base-build and full-rebuild, and
-    // equality isolates the GROWTH mechanics (encode + assign against
-    // STORED model state) as the thing under test.
-    val base = emb.filter(col("vec_id") < 400)
-    val wave = emb.filter(col("vec_id") >= 400)
-
-    val grown = tmpDir("ivfpq_grown")
-    val baseCodes = Similarity.pqEncode(base, cbooks)
-    Similarity.writeIvfPqIndex(baseCodes, cbooks, grown)
-    Similarity.appendToIvfPqIndex(wave, grown)
-
-    val rebuilt = tmpDir("ivfpq_rebuilt")
-    val allCodes = Similarity.pqEncode(emb, cbooks)
-    Similarity.writeIvfPqIndex(allCodes, cbooks, rebuilt)
-
-    val a = Similarity.adcIvfTopKIndexed(spark, grown, queries, k = 5)
-    val b = Similarity.adcIvfTopKIndexed(spark, rebuilt, queries, k = 5)
-    assert(rows(a).nonEmpty && rows(a) == rows(b))
-    // the grown index must actually contain the appended wave
-    val grownVids = spark.read.parquet(s"$grown/codes")
-      .select("vid").distinct().count()
-    assert(grownVids == emb.count(), s"grown index holds $grownVids vids")
-  }
-
-  test("appendToIvfPqIndex: rejects ids that would invade the coarse-seed set") {
-    // The coarse quantizer seeds from the LOWEST ids; appending an id
-    // below the stored nlist would make a later full rebuild choose
-    // different seeds than the grown index, silently voiding rebuild
-    // equivalence — the append must fail fast instead.
-    val path = tmpDir("ivfpq_guard")
-    val base = emb.filter(col("vec_id") < 400)
-    Similarity.writeIvfPqIndex(Similarity.pqEncode(base, cbooks), cbooks, path)
-    val invader = emb.filter(col("vec_id") < 16)
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfPqIndex(invader, path)
-    }
-    assert(ex.getMessage.contains("coarse-seed"), ex.getMessage)
-    // an empty batch is a quiet no-op
-    Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") < 0), path)
-  }
 }

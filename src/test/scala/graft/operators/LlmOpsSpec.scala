@@ -108,7 +108,7 @@ class LlmOpsSpec extends SparkFunSuite {
           .findAllMatchIn(plan).length
         assert(exchanges == 1, s"expected 1 band exchange, plan:\n$plan")
       } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally graft.sources.CatalogOps.dropTable(s, idxT)
+    } finally s.sql(s"DROP TABLE IF EXISTS ${idxT.qualified}")
   }
 
   test("connectedComponents: chain + separate pair + symmetry, min-id labels") {
@@ -661,61 +661,6 @@ class LlmOpsSpec extends SparkFunSuite {
       assert(r.getInt(1) > 0)
       assert(r.getLong(2) <= 10L * r.getInt(1))
     }
-  }
-
-  test("resizeImages: solid color survives bilinear exactly; corrupt/non-image → null") {
-    implicit val s = graft.SparkTestBase.spark
-    import s.implicits._
-    // solid green 10×10 — bilinear of a constant field is the constant,
-    // so every output pixel must be EXACTLY green after the 10×10 → 3×3
-    // resize + PNG round trip
-    val img = new java.awt.image.BufferedImage(10, 10,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 10; y <- 0 until 10) img.setRGB(x, y, 0x00ff00)
-    val baos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", baos))
-    val rows = Seq(
-      (1L, baos.toByteArray, "image/png"),
-      (2L, Array[Byte](9, 9, 9), "image/png"),   // corrupt
-      (3L, "abc".getBytes("UTF-8"), "text/plain") // non-image kind
-    ).toDF("id", "bytes", "kind")
-    val media = rows.select(
-      col("id").as("media_id"), col("bytes").as("payload"),
-      struct(col("kind"), lit(0).as("width"), lit(0).as("height"),
-        lit(0L).as("duration_ms"), lit("x").as("codec")).as("meta"))
-    val by = Multimodal.resizeImages(media, 3, 3).collect()
-      .map(r => r.media_id -> r).toMap
-    assert(by(1L).width == 3 && by(1L).height == 3 && by(1L).payload != null)
-    val back = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(by(1L).payload))
-    assert(back.getWidth == 3 && back.getHeight == 3)
-    for (x <- 0 until 3; y <- 0 until 3)
-      assert((back.getRGB(x, y) & 0xffffff) == 0x00ff00, s"pixel ($x,$y)")
-    assert(by(2L).payload == null && by(2L).width == 0)
-    assert(by(3L).payload == null && by(3L).width == 0)
-  }
-
-  test("resizeImages: downscale means approximate the original image means") {
-    implicit val s = graft.SparkTestBase.spark
-    import s.implicits._
-    // left half red, right half blue 8×8 → 4×4: channel means stay ~0.5/0/0.5
-    val img = new java.awt.image.BufferedImage(8, 8,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 8; y <- 0 until 8)
-      img.setRGB(x, y, if (x < 4) 0xff0000 else 0x0000ff)
-    val baos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", baos))
-    val media = Multimodal.packBinary(
-      Seq((1L, baos.toByteArray)).toDF("id", "bytes"), "id", "bytes", "image/png")
-    val resized = Multimodal.resizeImages(media, 4, 4).collect().head
-    val feats = Multimodal.decodeFeatures(
-      Multimodal.packBinary(
-        Seq((1L, resized.payload)).toDF("id", "bytes"), "id", "bytes", "image/png"))
-      .collect().head.feature
-    assert(feats(0) == 4f && feats(1) == 4f)
-    assert(math.abs(feats(3) - 0.5f) < 0.05f) // meanR
-    assert(feats(4) < 0.05f)                  // meanG
-    assert(math.abs(feats(5) - 0.5f) < 0.05f) // meanB
   }
 
   test("sq8: codes in [0,255], reconstruction within half a step per dim") {

@@ -45,6 +45,6 @@ class ShingleIndexSpec extends SparkFunSuite {
         assert("hashpartitioning\\(shingle".r.findAllMatchIn(plan).length == 1,
           s"index must join without its own exchange:\n$plan")
       } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally graft.sources.CatalogOps.dropTable(s, idxT)
+    } finally s.sql(s"DROP TABLE IF EXISTS ${idxT.qualified}")
   }
 }

@@ -44,9 +44,10 @@ class CheckpointSpec extends AnyFunSuite {
     c.markPartition("db", "t", PartitionId.single("20240101"))
     val p = c.tableProgress("db", "t").get
     assert(p.completedPartitions == Seq("('2024-01-01','novel')", "20240101"))
-    // parses back to the same ids
-    assert(p.completedPartitions.map(PartitionId.parse).toSet == Set(
-      PartitionId(Seq("2024-01-01", "novel")), PartitionId(Seq("20240101"))))
+    // the stored strings are the ids' renders, which resume compares
+    assert(p.completedPartitions.toSet == Set(
+      PartitionId(Seq("2024-01-01", "novel")), PartitionId(Seq("20240101")))
+      .map(_.render))
   }
 
   test("uncompleted: running table skips done, completed table skips all") {

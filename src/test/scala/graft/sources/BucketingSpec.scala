@@ -51,7 +51,8 @@ class BucketingSpec extends SparkFunSuite {
         val got = joined.collect().map(r => (r.getString(0), r.getLong(1))).toMap
         assert(got == expected)
       } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally Seq(ordersT, custT).foreach(CatalogOps.dropTable(s, _))
+    } finally Seq(ordersT, custT).foreach(t =>
+      s.sql(s"DROP TABLE IF EXISTS ${t.qualified}"))
   }
 
   test("ORC round-trip preserves schema and rows") {
